@@ -47,11 +47,17 @@ tests/test_property_sharing.py + test_tumbling.py):
    timestamp: unbounded state at epoch timestamps, silent data loss at
    small ones) — see _evict;
 7. count windows trigger only when their end count has ARRIVED: the
-   reference's cend+1 count horizon (WindowManager.java:117-118, doubled
-   by the sliding trigger's own +1) emits a window missing its final
-   element whenever the finalized count ≡ size−1 (mod size) — see
-   _trigger_context_free; pinned in tests/test_tumbling.py::
-   test_count_phantom_window_not_emitted.
+   reference's cend+1 count horizon (WindowManager.java:117-118) emits a
+   window missing its final element whenever the finalized count
+   ≡ size−1 (mod size) — see _trigger_context_free; pinned in
+   tests/test_tumbling.py::test_count_phantom_window_not_emitted;
+8. a sliding window fires once its end is at or below the watermark, as
+   a tumbling window does: the reference's `end <= watermark + 1` fires
+   the window ending at watermark + 1 early and then AGAIN at the next
+   watermark (its lower bound is `end > lastWatermark`) — see
+   SlidingWindow.trigger_windows; pinned in
+   tests/test_property_sharing.py::
+   test_split_watermark_emits_each_window_once.
 """
 
 from __future__ import annotations
@@ -287,6 +293,22 @@ class _Collector:
 
     def trigger(self, window_id: int, start: int, end: int, measure: WindowMeasure) -> None:
         self.windows.append(WindowResult(window_id, start, end, measure, self.functions))
+
+
+def lower_windows(results: Sequence[WindowResult]) -> List[list]:
+    """Output rows ``[window_id, measure, start, end, *lowered]`` for the
+    triggered windows that cover at least one element, one lowered value
+    per aggregate function (None where the function saw no element). The
+    single lowering step of the batch and stream operators."""
+    rows = []
+    for w in results:
+        if not w.has_value:
+            continue
+        st = w.agg_state
+        vals = [fn.lower(p) if present else None
+                for fn, p, present in zip(st.functions, st.partials, st.present)]
+        rows.append([w.window_id, w.measure.value, w.start, w.end, *vals])
+    return rows
 
 
 class SliceStore:
@@ -838,10 +860,8 @@ class SlicingWindowOperator:
                         continue
                     s = self.store[index - 1]
                 # divergence fix #7: the reference passes cend + 1 as the
-                # count horizon (WindowManager.java:117-118), and its
-                # sliding trigger adds ANOTHER +1 (SlidingWindow.java
-                # triggerWindows's `<= currentWatermark + 1`). c_last is
-                # already the EXCLUSIVE element count, so the extra +1(+1)
+                # count horizon (WindowManager.java:117-118). c_last is
+                # already the EXCLUSIVE element count, so the extra +1
                 # emits a window missing its final element whenever the
                 # finalized count ≡ size−1 (mod size) — e.g. 49 elements,
                 # count-25 tumbling → phantom [25,50) with 24 elements.
@@ -850,11 +870,7 @@ class SlicingWindowOperator:
                 # triggers only once its end count has actually arrived
                 # (pinned by tests/test_tumbling.py::
                 # test_count_phantom_window_not_emitted).
-                cend = s.c_last
-                if isinstance(w, SlidingWindow):
-                    w.trigger_windows(collector, self.last_count, cend - 1)
-                else:
-                    w.trigger_windows(collector, self.last_count, cend)
+                w.trigger_windows(collector, self.last_count, s.c_last)
 
     def next_emission_ts(self) -> Optional[int]:
         """Earliest event time at which a watermark could trigger a new

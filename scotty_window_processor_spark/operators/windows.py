@@ -118,9 +118,14 @@ class SlidingWindow(Window):
         return record_stamp + self.slide - jmod(record_stamp, self.slide)
 
     def trigger_windows(self, collector, last_watermark: int, current_watermark: int) -> None:
+        # fires windows ending in (last_watermark, current_watermark], as
+        # TumblingWindow does. The reference's `<= currentWatermark + 1`
+        # (kernel divergence #8) also fires the window ending at
+        # current + 1, which the next call's `> last_watermark` bound then
+        # fires a second time.
         start = current_watermark - jmod(current_watermark + self.slide, self.slide)
         while start + self.size > last_watermark:
-            if start >= 0 and start + self.size <= current_watermark + 1:
+            if start >= 0 and start + self.size <= current_watermark:
                 collector.trigger(self.window_id, start, start + self.size, self.measure)
             start -= self.slide
 

@@ -41,7 +41,7 @@ from ..functions import (
     SumAggregation,
 )
 from . import adaptive_buckets
-from ..operators.kernel import SlicingWindowOperator
+from ..operators.kernel import SlicingWindowOperator, lower_windows
 from ..operators.windows import SessionWindow, SlidingWindow, TumblingWindow, Window, WindowMeasure
 
 # (output column name, spark type DDL, aggregate-function factory)
@@ -427,14 +427,4 @@ def _kernel_run(data, ts_ms, value, windows, aggs, lateness_ms, final_wm):
         elements = [dict(zip(names, row)) for row in zip(*(data[c] for c in names))]
         for element, t in zip(elements, ts_ms.tolist()):
             op.process_element(element, t)
-    results = op.process_watermark(final_wm)
-
-    rows = []
-    for w in results:
-        if not w.has_value:
-            continue
-        vals = []
-        for i in range(len(fns)):
-            vals.append(fns[i].lower(w.agg_state.partials[i]) if w.agg_state.present[i] else None)
-        rows.append([w.window_id, w.measure.value, w.start, w.end, *vals])
-    return rows
+    return lower_windows(op.process_watermark(final_wm))

@@ -128,7 +128,7 @@ def _make_handler(
 
         has_buf = buf is not None and len(buf) > 0
         # keep us precision internally; truncate only where the GroupState
-        # API requires ms (timers, and the ms-granular TTL comparison)
+        # API requires ms (timers); the TTL comparison below is us-exact
         last_r_us = (
             int(last_r[ts].to_numpy().astype("datetime64[us]").astype("int64")[0])
             if last_r is not None

@@ -8,11 +8,51 @@ KeyedScottyWindowOperator, flink-connector/.../KeyedScottyWindowOperator.java:15
       → exactly-once sink (streaming.sink)
 
 Per micro-batch, each key's new rows arrive as one Arrow batch; the handler
-restores the key's kernel from the Spark state store, feeds rows in
-event-time order, advances the kernel watermark to Spark's current
-event-time watermark, and emits the triggered windows. Spark's watermark
-(`GroupState.getCurrentWatermarkMs`) replaces Flink's
-`ctx.timerService().currentWatermark()`; state timeout cleans up idle keys.
+restores the key's kernel from the Spark state store, drops late rows
+(below), feeds the rest in event-time order, fires the kernel at the
+key's frontier and emits the triggered windows.
+Spark's watermark (`GroupState.getCurrentWatermarkMs`) replaces Flink's
+`ctx.timerService().currentWatermark()`; an event-time timer wakes keys
+with no new rows, and state removal cleans up idle keys.
+
+Key-local frontier. Scotty emits a window as soon as the watermark passes
+its end. `getCurrentWatermarkMs()` is the watermark the PREVIOUS
+micro-batch set, so firing only there makes every window a file closes
+wait for the next micro-batch. With the query's watermark delay `d`
+known, a key fires in the batch that carries its rows, at
+
+    frontier = max(W, m − d)
+
+where `W` is Spark's current watermark and `m` the key's max event time
+after this batch's rows (the kernel's `_max_event_time`). Spark's next
+watermark is the max event time over ALL keys minus `d`, so it is at
+least `m − d`: the frontier never runs ahead of the watermark Spark
+itself sets after this batch, and a timer-only call (no rows, `m`
+unchanged) fires at `W` as before.
+
+Late-row contract. Once a key has fired at frontier `f` (kept as the
+kernel's `last_watermark`), a row with `ts > f` can only fall into windows
+that have not fired: tumbling and sliding windows fire at `end ≤ f`,
+sessions at `end + gap < f`, and a row above `f` cannot join a fired
+session. A row with `ts ≤ f` may fall into one that has. So the handler
+drops every later row with `ts_ms ≤ f` (Spark's own `ts <= watermark`
+rule, at the kernel's ms grain) and counts it in the `late_rows`
+accumulator, instead of folding it into a slice whose windows were
+already emitted. Such a row lies at or below a watermark Spark has set
+(`W`), or trails its own key's max event time, hence the stream's, by at
+least `d`; either way Spark's watermark contract already says it "may or
+may not be aggregated". A key that has not fired yet drops nothing: its
+kernel is seeded at its earliest row only when it first fires.
+
+Why Spark does not drop these rows itself: Spark 4.1 runs with
+`spark.sql.streaming.statefulOperator.allowMultiple=true`, whose
+watermark propagation filters late rows in batch `N` against the
+watermark of batch `N − 1`, not against `W` of batch `N`. When data
+batches run back to back, batch `N + 1` can therefore deliver a row with
+`ts ∈ (W, f]`. With `frontier = W` (no delay given) the filter is a
+no-op: in batch `N` a key fires at most at `W_N`, and the late-row filter
+of every later batch uses a watermark of at least `W_N`, so no row at or
+below it reaches the handler.
 
 State encoding: TYPED Arrow structs (streaming.state_codec) whenever the
 function/window mix allows — scalars + array<struct> slices/sessions in
@@ -43,7 +83,7 @@ from ..functions import (
     MinAggregation,
     SumAggregation,
 )
-from ..operators.kernel import SlicingWindowOperator
+from ..operators.kernel import SlicingWindowOperator, lower_windows
 from ..operators.windows import Window, WindowMeasure
 
 STATE_SCHEMA = "kernel binary"  # pickle fallback (custom fns / count windows)
@@ -64,6 +104,16 @@ def apply_state_store_defaults(spark) -> None:
     key = "spark.sql.streaming.stateStore.providerClass"
     if not spark.conf.get(key, None):
         spark.conf.set(key, ROCKSDB_PROVIDER)
+
+
+def parse_watermark_delay_ms(spark, delay: str) -> int:
+    """`withWatermark`'s delay string in ms, parsed by Spark's own interval
+    parser and converted as EventTimeWatermark.getDelayMs does (a month
+    counts as 31 days)."""
+    jvm = spark.sparkContext._jvm
+    interval = jvm.org.apache.spark.sql.catalyst.util.IntervalUtils.fromIntervalString(delay)
+    return int(jvm.org.apache.spark.sql.catalyst.plans.logical.EventTimeWatermark.getDelayMs(interval))
+
 
 AggSpec = Tuple[str, str, Callable[[], AggregateFunction]]
 
@@ -191,11 +241,18 @@ def make_handler(
     out_fields: List[str],
     window_registry: str | None = None,
     registry_poll_s: float = 10.0,
+    watermark_delay_ms: int | None = None,
+    late_rows=None,
 ):
     """Build the applyInPandasWithState handler (pure function of config —
     shippable to executors via --py-files). With `window_registry`, the
     handler also merges the registry file's windows into every kernel it
-    touches — the live mid-stream addWindow path (streaming.registry)."""
+    touches — the live mid-stream addWindow path (streaming.registry).
+
+    `watermark_delay_ms` is the query's watermark delay: given, each key
+    fires at its key-local frontier (module docstring); None fires at
+    Spark's watermark only. `late_rows` is an accumulator that receives
+    the number of rows dropped by the late-row contract."""
     from .state_codec import decode_op, encode_op
 
     window_defs = list(windows)
@@ -266,36 +323,41 @@ def make_handler(
         emit_ms = int(_time.time() * 1000)
         # Materialize the key's WHOLE micro-batch before sorting: Spark
         # delivers a large group as MULTIPLE Arrow chunks in arrival order
-        # (bounded by arrow.maxRecordsPerBatch), so sorting/seeding per
-        # chunk would treat a later chunk's earlier timestamps as
-        # beyond-watermark late data on the key's first batch (dropped)
-        # and out-of-order surgery the single sort avoids.
+        # (bounded by arrow.maxRecordsPerBatch), so sorting per chunk would
+        # send a later chunk's earlier timestamps through the out-of-order
+        # surgery the single sort avoids.
         parts = [p for p in pdfs if not p.empty]
         if parts:
             pdf = parts[0] if len(parts) == 1 else pd.concat(parts, ignore_index=True)
             pdf = pdf.sort_values(ts_col, kind="mergesort")
             ts_ms = pdf[ts_col].to_numpy().astype("datetime64[ms]").astype("int64")
-            op.seed_watermark(int(ts_ms[0]) - 1)  # no-op after first batch
-            if value_col is not None:
-                elements = pdf[value_col].to_numpy()
-            else:
-                elements = pdf.to_dict("records")
-
-            feed_sorted_batch(op, elements, ts_ms, feed_kinds)
+            if op.last_watermark != -1:
+                # late-row contract (module docstring): a row at or below
+                # the frontier the key fired at may fall into an emitted
+                # window, so it is dropped and counted
+                late = int(ts_ms.searchsorted(op.last_watermark, side="right"))
+                if late:
+                    if late_rows is not None:
+                        late_rows.add(late)
+                    pdf, ts_ms = pdf.iloc[late:], ts_ms[late:]
+            if len(ts_ms):
+                if value_col is not None:
+                    elements = pdf[value_col].to_numpy()
+                else:
+                    elements = pdf.to_dict("records")
+                feed_sorted_batch(op, elements, ts_ms, feed_kinds)
 
         wm = state.getCurrentWatermarkMs()
+        frontier = wm
+        if watermark_delay_ms is not None:
+            frontier = max(wm, op._max_event_time - watermark_delay_ms)
         rows = []
-        if wm > 0:
-            results = op.process_watermark(wm)
-            fns = [factory() for _, _, factory in agg_specs]
-            for w in results:
-                if not w.has_value:
-                    continue
-                vals = [
-                    fns[i].lower(w.agg_state.partials[i]) if w.agg_state.present[i] else None
-                    for i in range(len(fns))
-                ]
-                rows.append([key[0], w.window_id, w.measure.value, w.start, w.end, emit_ms, *vals])
+        if frontier > 0:
+            if op.last_watermark == -1 and not op.store.is_empty:
+                # first firing: enumerate windows from the key's earliest row
+                op.seed_watermark(min(s.t_first for s in op.store.slices) - 1)
+            rows = [[key[0], *r[:4], emit_ms, *r[4:]]
+                    for r in lower_windows(op.process_watermark(frontier))]
 
         nxt = op.next_emission_ts()
         if (nxt is None and op.store.is_empty and not op.has_count_measure) or op.quiesced(wm):
@@ -333,7 +395,10 @@ def scotty_stream(
 ) -> DataFrame:
     """Streaming windowed aggregation with slice sharing across all
     `windows`. Returns the streaming result DataFrame (attach a sink with
-    streaming.sink.exactly_once_parquet_sink or .writeStream).
+    streaming.sink.exactly_once_parquet_sink or .writeStream). Its
+    `late_rows` attribute is an accumulator that counts the rows the
+    operator dropped by the late-row contract (module docstring); read
+    `.value` on the driver.
 
     `window_registry` names a control file (streaming.registry) whose
     TIME-measure windows are merged into every key's kernel at runtime —
@@ -341,7 +406,9 @@ def scotty_stream(
     (the reference's live addWindow, WindowManager.java:124-143), no
     restart or state loss; executors re-stat the file at most every
     `registry_poll_s` seconds."""
-    apply_state_store_defaults(stream_df.sparkSession)
+    spark = stream_df.sparkSession
+    apply_state_store_defaults(spark)
+    late_rows = spark.sparkContext.accumulator(0)
     if value is not None:
         # column-prune BEFORE the state shuffle: in value mode the handler
         # reads only (key, ts, value), so payload columns (transcript text
@@ -353,13 +420,15 @@ def scotty_stream(
     handler = make_handler(
         key, ts, value, windows, aggs, lateness_ms, [f.name for f in schema.fields],
         window_registry=window_registry, registry_poll_s=registry_poll_s,
+        watermark_delay_ms=parse_watermark_delay_ms(spark, watermark_delay),
+        late_rows=late_rows,
     )
     state_schema = (
         typed_state_schema(len(aggs))
         if typed_state_eligible(windows, aggs, value)
         else STATE_SCHEMA
     )
-    return (
+    result = (
         stream_df.withWatermark(ts, watermark_delay)
         .groupBy(key)
         .applyInPandasWithState(
@@ -370,6 +439,8 @@ def scotty_stream(
             timeoutConf=GroupStateTimeout.EventTimeTimeout,
         )
     )
+    result.late_rows = late_rows
+    return result
 
 
 def scotty_stream_global(
@@ -389,6 +460,7 @@ def scotty_stream_global(
     windows with associative functions prefer the keyed operator plus a
     downstream window-level combine."""
     tagged = stream_df.withColumn("_g", F.lit(1))
-    return scotty_stream(
-        tagged, "_g", ts, value, windows, aggs, watermark_delay, lateness_ms
-    ).drop("_g")
+    keyed = scotty_stream(tagged, "_g", ts, value, windows, aggs, watermark_delay, lateness_ms)
+    result = keyed.drop("_g")
+    result.late_rows = keyed.late_rows
+    return result

@@ -134,3 +134,58 @@ def test_sharing_invariant_full_mixes_in_order(specs, raw):
 @given(specs=fixed_windows_strategy, raw=stream_strategy)
 def test_sharing_invariant_fixed_windows_with_disorder(specs, raw):
     _run_property(specs, raw, disorder=True)
+
+
+# Early firing (streaming.processor's key-local frontier): a kernel fired
+# at a frontier b and later at W >= b, with only rows above b fed in
+# between (the stream handler drops the rest as late), must emit exactly
+# the windows one firing at W emits over the same rows — each once.
+@settings(max_examples=150, deadline=None)
+@given(
+    specs=windows_strategy,
+    raw=stream_strategy,
+    disorder=st.booleans(),
+    split=st.floats(0.0, 1.0),
+    delay=st.integers(0, 60),
+)
+def test_split_watermark_emits_each_window_once(specs, raw, disorder, split, delay):
+    specs = list(dict.fromkeys(specs))
+    lateness = 50
+    ts, stream, first_ts = 0, [], None
+    for v, gap, back in raw:
+        ts += gap
+        if first_ts is None:
+            first_ts = ts
+        stream.append((v, max(first_ts, ts - (7 if (back and disorder) else 0))))
+    # like the handler: the early firing follows at least one row and
+    # happens only at a positive frontier
+    k = max(1, int(split * len(stream)))
+    b = max(1, max(t for _, t in stream[:k]) - delay)
+    kept = stream[:k] + [(v, t) for v, t in stream[k:] if t > b]
+    wm_final = ts + 10_000
+
+    def kernel():
+        op = SlicingWindowOperator(max_lateness=lateness)
+        op.add_aggregation(SumAggregation())
+        op.add_aggregation(CountAggregation())
+        for i, spec in enumerate(specs):
+            op.add_window(_mk(spec, wid=i))
+        op.seed_watermark(stream[0][1] - 1)
+        return op
+
+    split_op, out = kernel(), []
+    for v, t in kept[:k]:
+        split_op.process_element(v, t)
+    out += split_op.process_watermark(b)
+    for v, t in kept[k:]:
+        split_op.process_element(v, t)
+    out += split_op.process_watermark(wm_final)
+
+    once_op = kernel()
+    for v, t in kept:
+        once_op.process_element(v, t)
+    once = _emit(once_op.process_watermark(wm_final))
+
+    split_emit = _emit(out)
+    assert split_emit == once
+    assert len({r[:3] for r in split_emit}) == len(split_emit)
