@@ -25,4 +25,14 @@ DataFrame plans and keeps only the slice-store semantics in vectorized
 per-key kernels.
 """
 
+import sys
+
 __version__ = "0.1.0"
+
+# inside a Spark Python worker (pyspark is loaded and a task is running),
+# stop re-reading the zip archives' directories on every task (see _zipmemo)
+_tc = sys.modules.get("pyspark.taskcontext")
+if _tc is not None and _tc.TaskContext.get() is not None:
+    from scotty_window_processor_spark import _zipmemo
+
+    _zipmemo.install()

@@ -3,7 +3,9 @@
 Complements the exactly-once sink's per-partition lineage manifests
 (streaming.sink): lineage answers *what data was committed*, this module
 answers *how the operator behaved* — input rate, processing rate, state
-rows/bytes, watermark progress — persisted per micro-batch as JSON files
+rows/bytes, rows Spark dropped as late, state update/removal/commit
+times and the state store's custom metrics (RocksDB), watermark
+progress — persisted per micro-batch as JSON files
 a monitoring job can tail.
 
 Spark already computes every number we need in StreamingQueryProgress;
@@ -45,7 +47,10 @@ def _trim(progress: Dict[str, Any]) -> Dict[str, Any]:
             sk: op.get(sk)
             for sk in (
                 "operatorName", "numRowsTotal", "numRowsUpdated",
-                "numRowsRemoved", "memoryUsedBytes", "numShufflePartitions",
+                "numRowsRemoved", "numRowsDroppedByWatermark",
+                "memoryUsedBytes", "numShufflePartitions",
+                "allUpdatesTimeMs", "allRemovalsTimeMs", "commitTimeMs",
+                "customMetrics",
             )
         }
         for op in progress.get("stateOperators") or []

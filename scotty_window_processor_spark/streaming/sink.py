@@ -14,17 +14,15 @@ records per micro-batch partition and idempotent re-delivery on restart:
 - downstream consumers read ``read_committed`` to see only manifested
   batches.
 
+The lineage comes from the committed files themselves, with no Spark job:
+each non-empty data file's parquet footer gives its row count, and its
+row-group statistics give ``min(w_start)`` and ``max(w_end)``. Reading the
+batch back with Spark instead cost two jobs per micro-batch on the path
+to ``committed_at_ms``.
+
 The reference has no sink at all (demo `print()`, benchmark no-op —
 SURVEY.md §2.3); exactly-once semantics here come from Spark's
 checkpointed offset tracking + idempotent writes.
-
-Iceberg: the north_rule words the sink as an Iceberg table. This container
-ships NO Iceberg runtime (no iceberg-spark-runtime jar anywhere on the
-image, and installs are not permitted), so parquet + the lineage manifest
-is the documented stand-in — the ``table_format`` knob switches the write
-to ``format("iceberg")`` on a cluster that has the runtime, where the
-batch_id-keyed overwrite maps to Iceberg's replacePartitions commit. The
-waiver is recorded in BENCH/BASELINE.md.
 """
 
 from __future__ import annotations
@@ -33,29 +31,38 @@ import json
 import os
 import time
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+
+
+def _file_lineage(path: str) -> dict:
+    """Rows, ``min(w_start)`` and ``max(w_end)`` of one parquet file, from
+    its footer."""
+    meta = pq.read_metadata(path)
+    out = {"rows": meta.num_rows}
+    if meta.num_rows == 0:
+        return out
+    index = {meta.schema.column(i).path: i for i in range(meta.num_columns)}
+    for key, col, which, pick in (("min_w_start", "w_start", "min", min),
+                                  ("max_w_end", "w_end", "max", max)):
+        stats = [meta.row_group(g).column(index[col]).statistics
+                 for g in range(meta.num_row_groups)]
+        if any(st is None or not st.has_min_max for st in stats):
+            raise ValueError(f"{path}: a row group has no {col} statistics")
+        out[key] = pick(getattr(st, which) for st in stats)
+    return out
 
 
 class ExactlyOnceParquetSink:
-    def __init__(
-        self,
-        out_dir: str,
-        partition_cols: list[str] | None = None,
-        table_format: str = "parquet",
-        max_manifest_files: int = 4096,
-    ):
+    def __init__(self, out_dir: str, max_manifest_files: int = 4096):
         self.out_dir = out_dir
-        self.partition_cols = partition_cols or []
-        self.table_format = table_format
         # per-file lineage detail cap (guide §5: the driver should not
         # assemble unbounded collections): a pathological small-files
-        # batch would otherwise collect one row per data file into the
-        # driver manifest. Batch TOTALS are always computed server-side
-        # in one aggregate; the per-file list is truncated at this cap
-        # with an explicit files_total/files_listed marker. The
-        # exactly-once replay contract only uses path + rows, so a
-        # truncated manifest commits identically.
+        # batch would otherwise list one entry per data file in the
+        # manifest. Batch TOTALS cover every file; the per-file list is
+        # truncated at this cap with an explicit files_total/files_listed
+        # marker. The exactly-once replay contract only uses path + rows,
+        # so a truncated manifest commits identically.
         self.max_manifest_files = max_manifest_files
         self.lineage_dir = os.path.join(out_dir, "_lineage")
 
@@ -65,52 +72,25 @@ class ExactlyOnceParquetSink:
 
         path = os.path.join(self.out_dir, f"batch_id={batch_id}")
         # overwrite THIS batch's directory only: replays are idempotent
-        writer = batch_df.write.mode("overwrite").format(self.table_format)
-        if self.partition_cols:
-            writer = writer.partitionBy(*self.partition_cols)
-        writer.save(path)
+        batch_df.write.mode("overwrite").parquet(path)
 
-        spark = batch_df.sparkSession
-        # read back with the SAME format: an Iceberg path keeps superseded
-        # data files from earlier snapshots, so a raw parquet read would
-        # double-count exactly in the crash-replay case this sink exists for
-        written = spark.read.format(self.table_format).load(path)
-        # lineage at PARTITION granularity (north_rule): one row per
-        # committed data file (= one write task partition), aggregated in a
-        # single pass — the batch totals are the partition sums
-        per_file = written.groupBy(F.input_file_name().alias("file")).agg(
-            F.count(F.lit(1)).alias("rows"),
-            F.min("w_start").alias("min_w_start"),
-            F.max("w_end").alias("max_w_end"),
-        )
-        # batch totals roll up SERVER-side (one tiny row to the driver);
-        # the per-file detail is capped (see __init__)
-        tot = per_file.agg(
-            F.count(F.lit(1)).alias("files"),
-            F.sum("rows").alias("rows"),
-            F.min("min_w_start").alias("min_w_start"),
-            F.max("max_w_end").alias("max_w_end"),
-        ).collect()[0]
-        cap = self.max_manifest_files
-        parts = per_file.orderBy("file").limit(cap).collect()
+        # lineage at PARTITION granularity (north_rule): one entry per
+        # non-empty committed data file (= one write task partition); the
+        # batch totals are the partition sums
+        parts = []
+        for name in sorted(os.listdir(path)):
+            if name.endswith(".parquet") and not name.startswith((".", "_")):
+                part = _file_lineage(os.path.join(path, name))
+                if part["rows"]:
+                    parts.append({"file": name, **part})
         manifest = {
             "batch_id": batch_id,
-            "rows": tot["rows"] or 0,
-            "min_w_start": tot["min_w_start"],
-            "max_w_end": tot["max_w_end"],
-            "files_total": tot["files"],
-            "files_listed": len(parts),
-            "partitions": [
-                {
-                    # strip the batch directory prefix: file ids stay valid
-                    # if the table is relocated
-                    "file": p["file"].split(f"batch_id={batch_id}/", 1)[-1],
-                    "rows": p["rows"],
-                    "min_w_start": p["min_w_start"],
-                    "max_w_end": p["max_w_end"],
-                }
-                for p in parts
-            ],
+            "rows": sum(p["rows"] for p in parts),
+            "min_w_start": min((p["min_w_start"] for p in parts), default=None),
+            "max_w_end": max((p["max_w_end"] for p in parts), default=None),
+            "files_total": len(parts),
+            "files_listed": min(len(parts), self.max_manifest_files),
+            "partitions": parts[: self.max_manifest_files],
             "committed_at_ms": int(time.time() * 1000),
             "path": path,
         }
@@ -127,12 +107,7 @@ class ExactlyOnceParquetSink:
             from pyspark.sql.types import StructType
 
             return spark.createDataFrame([], StructType([]))
-        if self.table_format == "parquet":
-            return spark.read.parquet(*paths)
-        out = spark.read.format(self.table_format).load(paths[0])
-        for p in paths[1:]:
-            out = out.unionAll(spark.read.format(self.table_format).load(p))
-        return out
+        return spark.read.parquet(*paths)
 
     def lineage(self) -> list[dict]:
         out = []

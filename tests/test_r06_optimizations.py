@@ -203,11 +203,41 @@ def test_sink_manifest_bounded_on_many_files(spark, tmp_path):
         )
         .repartition(20)  # many files in one batch
     )
+    sc = spark.sparkContext
+    # one sink call runs the same Spark jobs as the bare write: the lineage
+    # is read from the committed files' footers, not by Spark jobs
+    sc.setJobGroup("bare_write", "bare write")
+    df.write.mode("overwrite").parquet(str(tmp_path / "bare"))
+    sc.setJobGroup("sink_call", "sink call")
     sink(df, batch_id=0)
+    sc.setLocalProperty("spark.jobGroup.id", None)
+    tracker = sc.statusTracker()
+    assert len(tracker.getJobIdsForGroup("sink_call")) == len(tracker.getJobIdsForGroup("bare_write")) > 0
+
     m = sink.lineage()[0]
     assert m["rows"] == 200
     assert m["files_total"] >= 20 > 5 == m["files_listed"] == len(m["partitions"])
-    # totals are server-side rollups, independent of the truncated detail
+    # totals cover every file, independent of the truncated detail
     assert m["min_w_start"] == 0 and m["max_w_end"] == 200 * 1000
+    # the manifest equals a Spark read-back of the batch directory
+    back = (
+        spark.read.parquet(m["path"])
+        .groupBy(F.input_file_name().alias("file"))
+        .agg(F.count(F.lit(1)).alias("rows"), F.min("w_start").alias("lo"), F.max("w_end").alias("hi"))
+        .collect()
+    )
+    assert len(back) == m["files_total"]
+    assert (m["rows"], m["min_w_start"], m["max_w_end"]) == (
+        sum(r["rows"] for r in back), min(r["lo"] for r in back), max(r["hi"] for r in back))
+    per_file = {r["file"].rsplit("/", 1)[-1]: (r["rows"], r["lo"], r["hi"]) for r in back}
+    for p in m["partitions"]:
+        assert per_file[p["file"]] == (p["rows"], p["min_w_start"], p["max_w_end"])
     # replay contract unchanged: committed data readable in full
+    assert sink.read_committed(spark).count() == 200
+
+    # an empty batch commits a manifest with no files and no window range
+    sink(df.where(F.col("user_id") < 0), batch_id=1)
+    e = sink.lineage()[1]
+    assert (e["rows"], e["files_total"], e["files_listed"], e["partitions"]) == (0, 0, 0, [])
+    assert e["min_w_start"] is None and e["max_w_end"] is None
     assert sink.read_committed(spark).count() == 200

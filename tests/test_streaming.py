@@ -540,6 +540,15 @@ def test_stream_metrics_recorder(spark, transcript_files, tmp_path):
         op["numRowsTotal"] > 0 for r in recs for op in r["stateOperators"]
     ), "no state-operator metrics recorded"
     assert any((r["eventTime"] or {}).get("watermark") for r in recs)
+    # per state operator: Spark's late-row drops, the update/removal/commit
+    # times and the state store's own metrics are kept
+    ops = [op for r in recs for op in r["stateOperators"]]
+    for op in ops:
+        for k in ("numRowsDroppedByWatermark", "allUpdatesTimeMs", "allRemovalsTimeMs",
+                  "commitTimeMs"):
+            assert isinstance(op[k], int), (k, op)
+        assert isinstance(op["customMetrics"], dict)
+    assert any(op["customMetrics"] for op in ops)
     keys = [(r["id"], r["batchId"]) for r in recs]
     assert len(keys) == len(set(keys))
 
