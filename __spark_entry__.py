@@ -86,10 +86,11 @@ def entry(spark: SparkSession) -> DataFrame:
 
 def q_tumbling_1h(spark, sf_dir):
     _utc(spark)
-    from scotty_window_processor_spark.plans.windowed import tumbling_aggregate
+    from scotty_window_processor_spark.operators import TumblingWindow, WindowMeasure
+    from scotty_window_processor_spark.plans.windowed import window_aggregate
 
-    return tumbling_aggregate(
-        _events(spark, sf_dir), "user_id", "ts", "1 hour",
+    return window_aggregate(
+        _events(spark, sf_dir), "user_id", "ts", TumblingWindow(WindowMeasure.TIME, 3_600_000),
         {"n": F.count(F.lit(1)), "sum_value": F.round(F.sum("value"), 2)},
     )
 
@@ -113,10 +114,11 @@ def q_sliding_1h_15m(spark, sf_dir):
 
 def q_session_30m(spark, sf_dir):
     _utc(spark)
-    from scotty_window_processor_spark.plans.windowed import session_aggregate
+    from scotty_window_processor_spark.operators import SessionWindow, WindowMeasure
+    from scotty_window_processor_spark.plans.windowed import window_aggregate
 
-    return session_aggregate(
-        _events(spark, sf_dir), "user_id", "ts", "30 minutes",
+    return window_aggregate(
+        _events(spark, sf_dir), "user_id", "ts", SessionWindow(WindowMeasure.TIME, 30 * 60_000),
         {"n": F.count(F.lit(1)), "sum_value": F.round(F.sum("value"), 2)},
     )
 

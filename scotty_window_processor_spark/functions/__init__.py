@@ -20,7 +20,7 @@ from __future__ import annotations
 
 import bisect
 import math
-from typing import Any, Generic, TypeVar
+from typing import Any, Callable, Generic, Tuple, TypeVar
 
 In = TypeVar("In")
 P = TypeVar("P")
@@ -70,6 +70,11 @@ class AggregateFunction(Generic[In, P, Out]):
     # exact per-element path for functions without one.
     bulk_lift_values = None
     bulk_lift_records = None
+
+
+# One output column of a windowed aggregation, as every operator takes it:
+# (output column name, Spark type DDL, aggregate-function factory).
+AggSpec = Tuple[str, str, Callable[[], AggregateFunction]]
 
 
 class ReduceAggregateFunction(AggregateFunction[In, In, In]):

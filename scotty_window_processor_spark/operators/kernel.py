@@ -65,7 +65,14 @@ from __future__ import annotations
 import bisect
 from typing import Any, List, Optional, Sequence
 
-from ..functions import AggregateFunction
+from ..functions import (
+    AggregateFunction,
+    CountAggregation,
+    MaxAggregation,
+    MeanAggregation,
+    MinAggregation,
+    SumAggregation,
+)
 from .windows import (
     JLONG_MAX,
     JLONG_MIN,
@@ -411,6 +418,37 @@ class SliceStore:
         return self.slices[i]
 
 
+# The numpy segment reduction that lifts each standard aggregate in
+# SlicingWindowOperator.process_in_order_bulk. Keyed by exact type, so a
+# subclass with its own lift never inherits a reduction name.
+NAMED_LIFTS = {
+    SumAggregation: "sum",
+    CountAggregation: "count",
+    MinAggregation: "min",
+    MaxAggregation: "max",
+    MeanAggregation: "mean",
+}
+
+
+def bulk_lift_kinds(fns: Sequence[AggregateFunction], value_mode: bool = True) -> Optional[list]:
+    """Per-function segment lift for ``process_in_order_bulk``: the
+    reduction name from ``NAMED_LIFTS`` for a standard aggregate over a
+    value array, else the function's own ``bulk_lift_values`` (value mode)
+    or ``bulk_lift_records`` (record mode, columnar dicts) callable. None
+    if any function has neither: the caller feeds element by element.
+    All-names (no callable) is the numpy-reducible surface that the
+    vectorized batch tier and the typed stream state cover."""
+    kinds = []
+    for fn in fns:
+        kind = NAMED_LIFTS.get(type(fn)) if value_mode else None
+        if kind is None:
+            kind = fn.bulk_lift_values if value_mode else fn.bulk_lift_records
+        if kind is None:
+            return None
+        kinds.append(kind)
+    return kinds
+
+
 class SlicingWindowOperator:
     """Single-key slicing window operator: the full kernel facade.
 
@@ -687,9 +725,8 @@ class SlicingWindowOperator:
     # -- bulk in-order path -----------------------------------------------
     def bulk_eligible(self) -> bool:
         """The vectorized in-order path applies when slice record buffers
-        are not needed (no count windows) and every partial is a plain
-        numpy reduction (checked by the caller against the function
-        types)."""
+        are not needed (no count windows) and every function has a
+        segment lift (checked by the caller with ``bulk_lift_kinds``)."""
         return not self.has_count_measure and self.has_time_measure
 
     def process_in_order_bulk(self, values, ts_arr, lift_kinds, element_at=None) -> None:
@@ -697,9 +734,9 @@ class SlicingWindowOperator:
 
         Preconditions (caller-enforced): ``ts_arr`` sorted ascending,
         ``ts_arr[0] >= self._max_event_time`` (in-order w.r.t. operator
-        state), ``bulk_eligible()``, and ``lift_kinds[i]`` ∈
-        {sum,count,min,max,mean} for numpy-reducible functions OR a
-        callable ``(values, seg_start, seg_end) -> lifted partial``
+        state), ``bulk_eligible()``, and ``lift_kinds`` from
+        ``bulk_lift_kinds``: per function a ``NAMED_LIFTS`` reduction name
+        OR a callable ``(values, seg_start, seg_end) -> lifted partial``
         (segment lift for custom functions — e.g. quantile histograms,
         payload tallies; by associativity ``combine(p, bulk_lift(seg))``
         equals folding ``lift_and_combine`` over the segment).

@@ -22,7 +22,7 @@ Scale notes:
 
 from __future__ import annotations
 
-from typing import Callable, List, Optional, Sequence, Tuple
+from typing import Optional, Sequence
 
 import pandas as pd
 
@@ -31,7 +31,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..functions import (
-    AggregateFunction,
+    AggSpec,
     CountAggregation,
     HistogramQuantileAggregation,
     MaxAggregation,
@@ -41,18 +41,9 @@ from ..functions import (
     SumAggregation,
 )
 from . import adaptive_buckets
-from ..operators.kernel import SlicingWindowOperator, lower_windows
+from ..operators.kernel import SlicingWindowOperator, bulk_lift_kinds, lower_windows
 from ..operators.windows import SessionWindow, SlidingWindow, TumblingWindow, Window, WindowMeasure
-
-# (output column name, spark type DDL, aggregate-function factory)
-AggSpec = Tuple[str, str, Callable[[], AggregateFunction]]
-
-_NUMPY_FAST = {
-    SumAggregation: ("sum", None),
-    CountAggregation: ("count", None),
-    MinAggregation: ("min", None),
-    MaxAggregation: ("max", None),
-}
+from .windowed import window_aggregate
 
 
 def _final_watermark(max_ts: int, windows: Sequence[Window], lateness: int) -> int:
@@ -125,9 +116,13 @@ def scotty_window_aggregate(
         time_windows = [w for w in windows if w.measure == WindowMeasure.TIME
                         and isinstance(w, (TumblingWindow, SlidingWindow, SessionWindow))]
         rest = [w for w in windows if w not in time_windows]
-        agg_names = [name for name, _, _ in aggs]
         parts = [
-            _catalyst_window_plan(df, key, ts, w, _catalyst_aggs(aggs, value), agg_names)
+            window_aggregate(df, key, ts, w, catalyst_exprs).select(
+                key,
+                F.lit(w.window_id).cast("long").alias("window_id"),
+                F.lit("time").alias("measure"),
+                "w_start", "w_end", *catalyst_exprs,
+            )
             for w in time_windows
         ]
         if rest:
@@ -271,9 +266,9 @@ def scotty_global_aggregate(
 
 
 def _catalyst_aggs(aggs: Sequence[AggSpec], value: str):
-    """Map standard aggregate functions to Catalyst expressions, or None
-    if any function has no built-in equivalent."""
-    out = []
+    """Map standard aggregate functions to Catalyst expressions by output
+    name, or None if any function has no built-in equivalent."""
+    out = {}
     for name, ddl, factory in aggs:
         fn = factory()
         if isinstance(fn, CountAggregation):
@@ -307,32 +302,8 @@ def _catalyst_aggs(aggs: Sequence[AggSpec], value: str):
             )
         else:
             return None
-        out.append(expr.cast(ddl).alias(name))
+        out[name] = expr.cast(ddl)
     return out
-
-
-def _catalyst_window_plan(
-    df: DataFrame, key: str, ts: str, w: Window, agg_exprs, agg_names
-) -> DataFrame:
-    """One built-in window family as a pure Catalyst plan."""
-    if isinstance(w, SessionWindow):
-        win = F.session_window(F.col(ts), f"{w.gap} milliseconds")
-    elif isinstance(w, SlidingWindow):
-        win = F.window(F.col(ts), f"{w.size} milliseconds", f"{w.slide} milliseconds")
-    else:
-        win = F.window(F.col(ts), f"{w.size} milliseconds")
-    return (
-        df.groupBy(F.col(key), win.alias("w"))
-        .agg(*agg_exprs)
-        .select(
-            F.col(key),
-            F.lit(w.window_id).cast("long").alias("window_id"),
-            F.lit("time").alias("measure"),
-            F.unix_millis(F.col("w.start").cast("timestamp")).alias("w_start"),
-            F.unix_millis(F.col("w.end").cast("timestamp")).alias("w_end"),
-            *[F.col(n) for n in agg_names],
-        )
-    )
 
 
 def _fast_path_eligible(windows: Sequence[Window], aggs: Sequence[AggSpec]) -> bool:
@@ -357,35 +328,8 @@ def _fast_path_eligible(windows: Sequence[Window], aggs: Sequence[AggSpec]) -> b
                 return False
         else:
             return False
-    return all(
-        type(spec[2]()) in _NUMPY_FAST or isinstance(spec[2](), MeanAggregation) for spec in aggs
-    )
-
-
-def _bulk_lift_kinds(fns, value_mode: bool):
-    """Per-function segment-lift spec for the vectorized in-order path:
-    a numpy-reduction name for the standard aggregates, the function's
-    own ``bulk_lift_values``/``bulk_lift_records`` callable for custom
-    functions that declare one, or None (whole list) to route the group
-    through the exact per-element loop."""
-    kinds = []
-    for fn in fns:
-        if value_mode:
-            named = _NUMPY_FAST.get(type(fn))
-            if named is not None:
-                kinds.append(named[0])
-            elif isinstance(fn, MeanAggregation):
-                kinds.append("mean")
-            elif fn.bulk_lift_values is not None:
-                kinds.append(fn.bulk_lift_values)
-            else:
-                return None
-        else:
-            if fn.bulk_lift_records is not None:
-                kinds.append(fn.bulk_lift_records)
-            else:
-                return None
-    return kinds
+    kinds = bulk_lift_kinds([factory() for _, _, factory in aggs])
+    return kinds is not None and all(isinstance(k, str) for k in kinds)
 
 
 def _kernel_run(data, ts_ms, value, windows, aggs, lateness_ms, final_wm):
@@ -401,7 +345,7 @@ def _kernel_run(data, ts_ms, value, windows, aggs, lateness_ms, final_wm):
         op.add_window(w)
 
     op.seed_watermark(int(ts_ms[0]) - 1)
-    kinds = _bulk_lift_kinds(fns, value is not None) if op.bulk_eligible() else None
+    kinds = bulk_lift_kinds(fns, value is not None) if op.bulk_eligible() else None
     if kinds is not None:
         # one key group is in-order by construction (sorted by ts), so the
         # whole run takes the vectorized segment path: the exact kernel

@@ -26,7 +26,7 @@ from typing import Dict, Optional, Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..operators.windows import SessionWindow, Window
+from ..operators.windows import SessionWindow, Window, WindowMeasure
 
 
 def with_salt(
@@ -175,7 +175,8 @@ def presplit_session_aggregate(
     (BENCH/hotkey_ceiling.md: ≈T/2M s for a T-turn key — a 10^9-turn
     conversation is minutes on one task no matter how many executors).
 
-    Three stages, same emitted sessions as ``session_aggregate``:
+    Three stages, same emitted sessions as the one-pass
+    ``window_aggregate`` over a ``SessionWindow``:
 
     1. Bucket rows by ``floor(ts / bucket_ms)`` and run gaps-and-islands
        WITHIN each (key, bucket) — the shuffle/sort key is (key, bucket),
@@ -202,7 +203,7 @@ def presplit_session_aggregate(
 
     Output: (key, w_start = epoch-ms first event, w_end = epoch-ms last
     event + gap, *finals) — identical shape and semantics to
-    ``session_aggregate`` / the reference's SessionWindow trigger
+    the one-pass session plan / the reference's SessionWindow trigger
     (SessionWindow.java:118-133)."""
     from pyspark.sql.window import Window as SW
 
@@ -296,7 +297,8 @@ def routed_session_aggregate(
     """Cost-based routing for session aggregation: keys past the
     presplit break-even go through ``presplit_session_aggregate``
     (intra-key parallel), everything else through the one-pass unsalted
-    ``session_aggregate`` — the engine applies its own escape hatch.
+    session plan (``windowed.window_aggregate``) — the engine applies
+    its own escape hatch.
 
     ``aggs`` is the one-pass aggregate dict (cold path);
     ``partials``/``finals`` the two-level equivalent (hot path). The
@@ -319,8 +321,9 @@ def routed_session_aggregate(
     NULL keys route cold (``isin`` is never true for NULL, and the
     explicit null-check keeps them out of the hot scan's complement
     leak)."""
-    from .windowed import session_aggregate
+    from .windowed import window_aggregate
 
+    session = SessionWindow(WindowMeasure.TIME, gap_ms)
     if hot_keys is None:
         n = df.count()
         if n == 0:
@@ -338,12 +341,10 @@ def routed_session_aggregate(
             ]
     hot_keys = list(hot_keys)
     if not hot_keys:
-        return session_aggregate(df, key, ts, f"{int(gap_ms)} milliseconds", aggs)
+        return window_aggregate(df, key, ts, session, aggs)
     cold = df.where(F.col(key).isNull() | ~F.col(key).isin(hot_keys))
     hot = df.where(F.col(key).isin(hot_keys))
-    return session_aggregate(
-        cold, key, ts, f"{int(gap_ms)} milliseconds", aggs
-    ).unionByName(
+    return window_aggregate(cold, key, ts, session, aggs).unionByName(
         presplit_session_aggregate(
             hot, key, ts, gap_ms, partials, finals, bucket_ms=bucket_ms
         )

@@ -24,6 +24,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
+from ..operators.windows import SessionWindow, SlidingWindow, Window, WindowMeasure
+
 
 def _epoch_ms(col: Column) -> Column:
     # cast handles timestamp_ntz inputs; callers pin session tz to UTC so
@@ -31,29 +33,29 @@ def _epoch_ms(col: Column) -> Column:
     return F.unix_millis(col.cast("timestamp"))
 
 
-def tumbling_aggregate(df: DataFrame, key: str, ts: str, size: str, aggs: Dict[str, Column]) -> DataFrame:
-    """Per-key tumbling windows of `size` (e.g. '1 hour'); epoch-aligned."""
-    w = F.window(F.col(ts), size)
-    return (
-        df.groupBy(F.col(key), w.alias("w"))
-        .agg(*[c.alias(n) for n, c in aggs.items()])
-        .select(
-            F.col(key),
-            _epoch_ms(F.col("w.start")).alias("w_start"),
-            _epoch_ms(F.col("w.end")).alias("w_end"),
-            *[F.col(n) for n in aggs],
-        )
-    )
+def window_aggregate(df: DataFrame, key: str, ts: str, w: Window, aggs: Dict[str, Column]) -> DataFrame:
+    """Per-key windows of one time-measure definition as one Catalyst plan.
 
+    - tumbling: ``F.window(size)``, epoch-aligned;
+    - sliding: ``F.window(size, slide)``, which expands each row into its
+      size/slide windows (Catalyst `Expand`) before one hash aggregate —
+      the bucket-per-window strategy the slicing kernel replaces when many
+      concurrent windows share slices;
+    - session: ``F.session_window(gap)`` (merging aggregate); session end =
+      last event ts + gap, matching the reference's SessionWindow trigger
+      (SessionWindow.java:118-133).
 
-def sliding_aggregate(df: DataFrame, key: str, ts: str, size: str, slide: str, aggs: Dict[str, Column]) -> DataFrame:
-    """Per-key sliding windows; each row expands into size/slide windows
-    (Catalyst `Expand`), then one hash aggregate — the bucket-per-window
-    strategy. The slicing kernel replaces this when many concurrent
-    windows share slices."""
-    w = F.window(F.col(ts), size, slide)
+    Emits ``key, w_start, w_end, *aggs`` with epoch-ms bounds."""
+    if w.measure != WindowMeasure.TIME:
+        raise ValueError("Catalyst window plans cover time-measure windows only")
+    if isinstance(w, SessionWindow):
+        win = F.session_window(F.col(ts), f"{w.gap} milliseconds")
+    elif isinstance(w, SlidingWindow):
+        win = F.window(F.col(ts), f"{w.size} milliseconds", f"{w.slide} milliseconds")
+    else:
+        win = F.window(F.col(ts), f"{w.size} milliseconds")
     return (
-        df.groupBy(F.col(key), w.alias("w"))
+        df.groupBy(F.col(key), win.alias("w"))
         .agg(*[c.alias(n) for n, c in aggs.items()])
         .select(
             F.col(key),
@@ -80,7 +82,7 @@ def sliding_aggregate_twolevel(
     partials are expanded into the size/slide overlapping windows and
     combined (guide §2.3 "aggregate before you shuffle").
 
-    The plain ``sliding_aggregate`` expands every RAW row size/slide
+    The one-level ``window_aggregate`` expands every RAW row size/slide
     times before the first aggregate (Catalyst Expand), so both the
     expand work and the per-map-partition partial-aggregate hash table
     scale with rows × overlap. Here they scale with rows (stage 1) +
@@ -119,23 +121,6 @@ def sliding_aggregate_twolevel(
             F.col("w_start"),
             (F.col("w_start") + F.lit(int(size_ms))).alias("w_end"),
             *[F.col(n) for n in finals],
-        )
-    )
-
-
-def session_aggregate(df: DataFrame, key: str, ts: str, gap: str, aggs: Dict[str, Column]) -> DataFrame:
-    """Per-key gap sessions via the built-in session_window (merging
-    aggregate); session end = last event ts + gap, matching the
-    reference's SessionWindow trigger (SessionWindow.java:118-133)."""
-    w = F.session_window(F.col(ts), gap)
-    return (
-        df.groupBy(F.col(key), w.alias("w"))
-        .agg(*[c.alias(n) for n, c in aggs.items()])
-        .select(
-            F.col(key),
-            _epoch_ms(F.col("w.start")).alias("w_start"),
-            _epoch_ms(F.col("w.end")).alias("w_end"),
-            *[F.col(n) for n in aggs],
         )
     )
 

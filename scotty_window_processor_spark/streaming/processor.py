@@ -66,7 +66,7 @@ made explicit by `typed_state_eligible`.
 from __future__ import annotations
 
 import pickle
-from typing import Any, Callable, Iterator, List, Sequence, Tuple
+from typing import Any, Iterator, List, Sequence, Tuple
 
 import pandas as pd
 
@@ -75,15 +75,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from ..functions import (
-    AggregateFunction,
-    CountAggregation,
-    MaxAggregation,
-    MeanAggregation,
-    MinAggregation,
-    SumAggregation,
-)
-from ..operators.kernel import SlicingWindowOperator, lower_windows
+from ..functions import AggSpec
+from ..operators.kernel import SlicingWindowOperator, bulk_lift_kinds, lower_windows
 from ..operators.windows import Window, WindowMeasure
 
 STATE_SCHEMA = "kernel binary"  # pickle fallback (custom fns / count windows)
@@ -113,53 +106,6 @@ def parse_watermark_delay_ms(spark, delay: str) -> int:
     jvm = spark.sparkContext._jvm
     interval = jvm.org.apache.spark.sql.catalyst.util.IntervalUtils.fromIntervalString(delay)
     return int(jvm.org.apache.spark.sql.catalyst.plans.logical.EventTimeWatermark.getDelayMs(interval))
-
-
-AggSpec = Tuple[str, str, Callable[[], AggregateFunction]]
-
-_BULK_KINDS = {
-    SumAggregation: "sum",
-    CountAggregation: "count",
-    MinAggregation: "min",
-    MaxAggregation: "max",
-    MeanAggregation: "mean",
-}
-
-
-def _bulk_kinds(aggs: Sequence[AggSpec]) -> list[str] | None:
-    """numpy lift kinds for the vectorized in-order path, or None if any
-    function needs the generic lift/combine path."""
-    kinds = []
-    for _, _, factory in aggs:
-        k = _BULK_KINDS.get(type(factory()))
-        if k is None:
-            return None
-        kinds.append(k)
-    return kinds
-
-
-def _feed_kinds(aggs: Sequence[AggSpec], value_col) -> list | None:
-    """Segment-lift spec for feed_sorted_batch, one entry per function: a
-    numpy-reduction NAME for the standard aggregates, or the function's
-    own ``bulk_lift_values`` callable for custom functions that declare
-    one (quantile histograms, payload tallies — same contract as the
-    batch tier, plans/scotty_batch._bulk_lift_kinds). None routes the key
-    through the exact per-element loop. Broader than _bulk_kinds: the
-    TYPED state codec still requires all-standard functions, but the
-    in-order bulk feed only needs segment associativity."""
-    if value_col is None:
-        return None
-    kinds = []
-    for _, _, factory in aggs:
-        fn = factory()
-        named = _BULK_KINDS.get(type(fn))
-        if named is not None:
-            kinds.append(named)
-        elif fn.bulk_lift_values is not None:
-            kinds.append(fn.bulk_lift_values)
-        else:
-            return None
-    return kinds
 
 
 def feed_sorted_batch(
@@ -209,12 +155,16 @@ def output_schema(key_name: str, key_type: T.DataType, aggs: Sequence[AggSpec]) 
 
 def typed_state_eligible(windows: Sequence[Window], aggs: Sequence[AggSpec], value_col) -> bool:
     """Typed (Arrow-struct) state covers time-measure windows with
-    numpy-reducible functions over a value column — the hot path. Count
-    windows (per-slice record buffers) and custom lift/combine/lower
-    partials keep the pickled-kernel state cell, explicitly."""
+    numpy-reducible functions (every segment lift a reduction name) over
+    a value column — the hot path. Count windows (per-slice record
+    buffers) and custom lift/combine/lower partials keep the
+    pickled-kernel state cell, explicitly."""
+    if value_col is None:
+        return False
+    kinds = bulk_lift_kinds([factory() for _, _, factory in aggs])
     return (
-        value_col is not None
-        and _bulk_kinds(aggs) is not None
+        kinds is not None
+        and all(isinstance(k, str) for k in kinds)
         and all(w.measure == WindowMeasure.TIME for w in windows)
     )
 
@@ -258,8 +208,13 @@ def make_handler(
     window_defs = list(windows)
     agg_specs = list(aggs)
 
-    bulk_kinds = _bulk_kinds(agg_specs) if value_col is not None else None
-    feed_kinds = _feed_kinds(agg_specs, value_col)
+    # segment lifts over the value column (record-mode keys take the
+    # per-element loop); with typed state they are all reduction names,
+    # which the state codec encodes partials by
+    feed_kinds = (
+        bulk_lift_kinds([factory() for _, _, factory in agg_specs])
+        if value_col is not None else None
+    )
     typed = typed_state_eligible(window_defs, agg_specs, value_col)
 
     def new_op(extra: Sequence[Window]) -> SlicingWindowOperator:
@@ -296,7 +251,7 @@ def make_handler(
             if typed:
                 scalars, sessions, slices = state.get
                 try:
-                    decode_op(op, bulk_kinds, scalars, sessions, slices)
+                    decode_op(op, feed_kinds, scalars, sessions, slices)
                 except IndexError:
                     # stale registry cache race: this state was encoded by
                     # a worker that had already picked up a newly added
@@ -310,7 +265,7 @@ def make_handler(
                     dyn = [w for w in _rr(window_registry, 0.0)
                            if w.window_id not in base_ids]
                     op = new_op(dyn)
-                    decode_op(op, bulk_kinds, scalars, sessions, slices)
+                    decode_op(op, feed_kinds, scalars, sessions, slices)
             else:
                 op = pickle.loads(state.get[0])
                 known = op.registered_window_ids
@@ -369,7 +324,7 @@ def make_handler(
             state.remove()
         else:
             if typed:
-                state.update(encode_op(op, bulk_kinds))
+                state.update(encode_op(op, feed_kinds))
             else:
                 state.update((pickle.dumps(op),))
             # wake when the watermark passes the next possible emission

@@ -1,17 +1,15 @@
 """Typed (Arrow-struct) encoding of the slicing kernel's per-key state.
 
-Shared by both streaming tiers:
-- streaming.processor (applyInPandasWithState) stores this layout in a
-  struct state column — scalars + array<struct> slices/sessions — so the
-  hot path never pickles a Python object graph (SURVEY hard-part #5);
-- streaming.tws (transformWithStateInPandas) stores the same rows in
-  typed ValueState/ListState.
+streaming.processor (applyInPandasWithState) stores this layout in a
+struct state column — scalars + array<struct> slices/sessions — so the
+hot path never pickles a Python object graph (SURVEY hard-part #5).
 
-The layout covers the numpy-reducible function surface (sum/count/min/
-max/mean) over time-measure windows: per function a (value, count, set)
-triple encodes the lift/combine partial. Count-measure windows (record
-buffers) and custom functions fall back to a pickled kernel blob —
-explicitly, not silently (see processor.make_handler).
+The layout covers the numpy-reducible function surface (the reduction
+names of operators.kernel.NAMED_LIFTS) over time-measure windows: per
+function a (value, count, set) triple encodes the lift/combine partial.
+Count-measure windows (record buffers) and custom functions fall back to
+a pickled kernel blob — explicitly, not silently (see
+processor.make_handler).
 """
 
 from __future__ import annotations

@@ -7,7 +7,7 @@ hot key an order of magnitude past the ceiling's 1M-turn probe — 10M
 turns in ~5,000-turn sessions spread over ~280 day-buckets — on top of a
 2M-turn uniform background, and times session aggregation via:
 
-- ``session_aggregate``          (unsalted builtin: the floor), and
+- ``window_aggregate``           (unsalted session builtin: the floor), and
 - ``presplit_session_aggregate`` (day buckets: intra-key parallel),
 
 both on the full dataset and on the hot key alone (the floor isolated).
@@ -63,7 +63,8 @@ def main():
 
     from bench import CPUS, build_spark
     from scotty_window_processor_spark.plans.skew import presplit_session_aggregate
-    from scotty_window_processor_spark.plans.windowed import session_aggregate
+    from scotty_window_processor_spark.operators import SessionWindow, WindowMeasure
+    from scotty_window_processor_spark.plans.windowed import window_aggregate
 
     spark = build_spark(CPUS)
     spark.sparkContext.setLogLevel("ERROR")
@@ -74,8 +75,8 @@ def main():
     hot_only = df.where(F.col("user_id") == -1)
 
     def run_base(d):
-        return session_aggregate(
-            d, "user_id", "ts", "30 minutes",
+        return window_aggregate(
+            d, "user_id", "ts", SessionWindow(WindowMeasure.TIME, GAP_MS),
             {"n": F.count(F.lit(1)), "sum_value": F.round(F.sum("value"), 2)},
         )
 

@@ -117,7 +117,7 @@ from scotty_window_processor_spark.functions import (  # noqa: E402
     RoleTextRollupString,
     ToolTallyString,
 )
-from scotty_window_processor_spark.plans.scotty_batch import _bulk_lift_kinds  # noqa: E402
+from scotty_window_processor_spark.operators.kernel import bulk_lift_kinds  # noqa: E402
 
 
 def _emit_payload(results):
@@ -165,7 +165,7 @@ def test_bulk_quantile_matches_per_element(mix, seed):
 
     a, fns_a = new_op()
     b, fns_b = new_op()
-    kinds = _bulk_lift_kinds(fns_b, value_mode=True)
+    kinds = bulk_lift_kinds(fns_b, value_mode=True)
     assert kinds is not None and callable(kinds[1])
 
     a.seed_watermark(int(ts[0]) - 1)
@@ -212,7 +212,7 @@ def test_bulk_records_matches_per_element(mix, seed):
 
     a, fns_a = new_op()
     b, fns_b = new_op()
-    kinds = _bulk_lift_kinds(fns_b, value_mode=False)
+    kinds = bulk_lift_kinds(fns_b, value_mode=False)
     assert kinds is not None and all(callable(k) for k in kinds)
 
     a.seed_watermark(int(ts[0]) - 1)

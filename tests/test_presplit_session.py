@@ -1,8 +1,9 @@
 """Parity suite for the session pre-split escape hatch
 (plans/skew.py::presplit_session_aggregate): time-bucketed pre-aggregation
 with gap-aware boundary stitch must emit EXACTLY the sessions of the
-unsalted ``session_aggregate`` path (the reference SessionWindow
-semantics, SessionWindow.java:118-133) for any bucket size — including
+unsalted one-pass plan, ``windowed.window_aggregate`` over a session
+window (the reference SessionWindow semantics,
+SessionWindow.java:118-133), for any bucket size — including
 buckets smaller than the gap, sessions spanning many buckets, exact-gap
 ties at bucket boundaries, and empty buckets."""
 
@@ -13,10 +14,12 @@ import pytest
 
 from pyspark.sql import functions as F
 
+from scotty_window_processor_spark.operators import SessionWindow, WindowMeasure
+
 from spark_fixtures import get_spark
 
 GAP_MS = 30 * 60_000
-GAP = "30 minutes"
+SESSION = SessionWindow(WindowMeasure.TIME, GAP_MS)
 T0 = datetime(2024, 1, 1, tzinfo=timezone.utc)
 
 
@@ -35,10 +38,10 @@ def _df(spark, rows):
 
 def _run_both(spark, df, bucket_ms):
     from scotty_window_processor_spark.plans.skew import presplit_session_aggregate
-    from scotty_window_processor_spark.plans.windowed import session_aggregate
+    from scotty_window_processor_spark.plans.windowed import window_aggregate
 
-    base = session_aggregate(
-        df, "user_id", "ts", GAP,
+    base = window_aggregate(
+        df, "user_id", "ts", SESSION,
         {"n": F.count(F.lit(1)), "sum_value": F.round(F.sum("value"), 2)},
     )
     pre = presplit_session_aggregate(
@@ -176,7 +179,7 @@ def _rows(res):
 def test_routed_parity_explicit_hot(spark):
     """Explicit hot list: hot keys go presplit, cold keys one-pass; the
     union equals the plain unsalted result on the full input."""
-    from scotty_window_processor_spark.plans.windowed import session_aggregate
+    from scotty_window_processor_spark.plans.windowed import window_aggregate
 
     rng = random.Random(7)
     rows = [(99, i * 1000, 1) for i in range(5000)]  # dense hot key
@@ -186,8 +189,8 @@ def test_routed_parity_explicit_hot(spark):
         for _ in range(rng.randrange(1, 8))
     ]
     df = _df(spark, rows)
-    base = session_aggregate(
-        df, "user_id", "ts", GAP,
+    base = window_aggregate(
+        df, "user_id", "ts", SESSION,
         {"n": F.count(F.lit(1)), "sum_value": F.round(F.sum("value"), 2)},
     )
     routed = _routed(spark, df, hot_keys=[99], bucket_ms=20 * 60_000)
@@ -197,14 +200,14 @@ def test_routed_parity_explicit_hot(spark):
 def test_routed_autodetect_routes_hot(spark):
     """Auto-detection (threshold forced low): the dense key is flagged
     and both arms run; result still equals the unsalted path."""
-    from scotty_window_processor_spark.plans.windowed import session_aggregate
+    from scotty_window_processor_spark.plans.windowed import window_aggregate
 
     rng = random.Random(17)
     rows = [(99, i * 1000, 1) for i in range(4000)]
     rows += [(u, rng.randrange(0, 86_400_000), 2) for u in range(30) for _ in range(3)]
     df = _df(spark, rows)
-    base = session_aggregate(
-        df, "user_id", "ts", GAP,
+    base = window_aggregate(
+        df, "user_id", "ts", SESSION,
         {"n": F.count(F.lit(1)), "sum_value": F.round(F.sum("value"), 2)},
     )
     routed = _routed(spark, df, hot_keys=None, min_hot_rows=500,
@@ -213,7 +216,7 @@ def test_routed_autodetect_routes_hot(spark):
 
 
 def test_routed_no_hot_falls_back_to_one_pass(spark):
-    """Nothing over the threshold: identical to session_aggregate and no
+    """Nothing over the threshold: identical to the one-pass plan and no
     presplit machinery in the plan (no _bkt column anywhere)."""
     rows = [(u, u * 1_000_000, 5) for u in range(20)]
     routed = _routed(spark, _df(spark, rows), hot_keys=[])

@@ -38,14 +38,15 @@ def _events(spark, n=4000, keys=23, seed=11):
 
 
 def test_sliding_twolevel_matches_onelevel(spark):
+    from scotty_window_processor_spark.operators import SlidingWindow, WindowMeasure
     from scotty_window_processor_spark.plans.windowed import (
-        sliding_aggregate,
         sliding_aggregate_twolevel,
+        window_aggregate,
     )
 
     df = _events(spark)
-    one = sliding_aggregate(
-        df, "user_id", "ts", "1 hour", "15 minutes",
+    one = window_aggregate(
+        df, "user_id", "ts", SlidingWindow(WindowMeasure.TIME, 3_600_000, 900_000),
         {"n": F.count(F.lit(1)), "sum_value": F.round(F.sum("value"), 2)},
     )
     two = sliding_aggregate_twolevel(

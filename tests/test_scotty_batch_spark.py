@@ -18,14 +18,15 @@ from scotty_window_processor_spark.operators import (
     WindowMeasure,
 )
 from scotty_window_processor_spark.plans.scotty_batch import scotty_window_aggregate
-from scotty_window_processor_spark.plans.windowed import (
-    session_aggregate,
-    sliding_aggregate,
-    tumbling_aggregate,
-)
+from scotty_window_processor_spark.plans.windowed import window_aggregate
 from scotty_window_processor_spark.sources import synthesize_transcripts
 
 from spark_fixtures import get_spark
+
+
+def _turns():
+    """The Catalyst side's aggregate in every kernel-vs-Catalyst test."""
+    return {"turns": F.count(F.lit(1)).cast("double")}
 
 
 @pytest.fixture(scope="module")
@@ -58,10 +59,11 @@ def test_tumbling_kernel_matches_catalyst(spark, transcripts):
         key="conv_id", ts="ts", value="one",
         windows=[TumblingWindow(WindowMeasure.TIME, size_ms)],
         aggs=[("turns", "double", CountAggregation)],
+        force_kernel=True,
     ).select("conv_id", "w_start", "w_end", "turns")
 
-    catalyst = tumbling_aggregate(
-        transcripts, "conv_id", "ts", "10 minutes", {"turns": F.count(F.lit(1)).cast("double")}
+    catalyst = window_aggregate(
+        transcripts, "conv_id", "ts", TumblingWindow(WindowMeasure.TIME, size_ms), _turns()
     )
     assert _normalize(kernel, ["turns"]) == _normalize(catalyst, ["turns"])
 
@@ -72,11 +74,11 @@ def test_sliding_kernel_matches_catalyst(spark, transcripts):
         key="conv_id", ts="ts", value="one",
         windows=[SlidingWindow(WindowMeasure.TIME, 600_000, 200_000)],
         aggs=[("turns", "double", CountAggregation)],
+        force_kernel=True,
     ).select("conv_id", "w_start", "w_end", "turns")
 
-    catalyst = sliding_aggregate(
-        transcripts, "conv_id", "ts", "10 minutes", "200 seconds",
-        {"turns": F.count(F.lit(1)).cast("double")},
+    catalyst = window_aggregate(
+        transcripts, "conv_id", "ts", SlidingWindow(WindowMeasure.TIME, 600_000, 200_000), _turns()
     )
     assert _normalize(kernel, ["turns"]) == _normalize(catalyst, ["turns"])
 
@@ -92,12 +94,13 @@ def test_multiwindow_sharing_matches_two_catalyst_runs(spark, transcripts):
             TumblingWindow(WindowMeasure.TIME, 1_800_000, window_id=2),
         ],
         aggs=[("turns", "double", CountAggregation)],
+        force_kernel=True,
     )
     small = shared.where(F.col("window_id") == 1).select("conv_id", "w_start", "w_end", "turns")
     large = shared.where(F.col("window_id") == 2).select("conv_id", "w_start", "w_end", "turns")
 
-    c_small = tumbling_aggregate(df, "conv_id", "ts", "10 minutes", {"turns": F.count(F.lit(1)).cast("double")})
-    c_large = tumbling_aggregate(df, "conv_id", "ts", "30 minutes", {"turns": F.count(F.lit(1)).cast("double")})
+    c_small = window_aggregate(df, "conv_id", "ts", TumblingWindow(WindowMeasure.TIME, 600_000), _turns())
+    c_large = window_aggregate(df, "conv_id", "ts", TumblingWindow(WindowMeasure.TIME, 1_800_000), _turns())
     assert _normalize(small, ["turns"]) == _normalize(c_small, ["turns"])
     assert _normalize(large, ["turns"]) == _normalize(c_large, ["turns"])
 
@@ -115,8 +118,8 @@ def test_session_kernel_matches_catalyst(spark, transcripts):
         force_kernel=True,
     ).select("conv_id", "w_start", "w_end", "turns")
 
-    catalyst = session_aggregate(
-        transcripts, "conv_id", "ts", "2 minutes", {"turns": F.count(F.lit(1)).cast("double")}
+    catalyst = window_aggregate(
+        transcripts, "conv_id", "ts", SessionWindow(WindowMeasure.TIME, gap_ms), _turns()
     )
     assert _normalize(kernel, ["turns"]) == _normalize(catalyst, ["turns"])
 
@@ -196,3 +199,19 @@ def test_global_aggregate_catalyst_vs_kernel(spark, transcripts):
     norm = lambda d: sorted(tuple(r) for r in d.collect())
     a, b = norm(fast), norm(slow)
     assert a and a == b
+
+
+def test_accumulator_reaches_driver_from_map_in_arrow(spark):
+    """The vectorized tier runs as ``mapInArrow``: a PySpark accumulator
+    added to inside that eval type's function reaches the driver, once
+    per row, so engine counters can report through it."""
+    rows = spark.sparkContext.accumulator(0)
+
+    def count_rows(batches):
+        for b in batches:
+            rows.add(b.num_rows)
+            yield b
+
+    df = spark.range(1000).repartition(4)
+    assert len(df.mapInArrow(count_rows, df.schema).collect()) == 1000
+    assert rows.value == 1000
