@@ -176,7 +176,9 @@ def q_count_tumbling_25(spark, sf_dir):
 
 def q_scotty_multiwindow(spark, sf_dir):
     """Two concurrent tumbling windows through ONE kernel pass (shared
-    slices) — the reference's aggregate-sharing headline."""
+    slices) — the reference's aggregate-sharing headline. force_kernel
+    pins tier 3: with two families and standard aggregates the planner
+    would run them as two Catalyst subplans."""
     _utc(spark)
     from scotty_window_processor_spark.functions import CountAggregation, SumAggregation
     from scotty_window_processor_spark.operators import TumblingWindow, WindowMeasure
@@ -189,6 +191,7 @@ def q_scotty_multiwindow(spark, sf_dir):
             TumblingWindow(WindowMeasure.TIME, 6 * SIZE_H, window_id=2),
         ],
         aggs=[("n", "long", CountAggregation), ("sum_value", "double", SumAggregation)],
+        force_kernel=True,
     )
     return out.select(
         "user_id", "window_id", "w_start", "w_end", "n", F.round("sum_value", 2).alias("sum_value")
@@ -239,6 +242,7 @@ def q_scotty_quantile_kernel(spark, sf_dir):
         _events(spark, sf_dir), key="user_id", ts="ts", value="value",
         windows=[TumblingWindow(WindowMeasure.TIME, 6 * SIZE_H)],
         aggs=[("n", "long", CountAggregation), ("median_value", "double", QuantileAggregation)],
+        force_kernel=True,
     )
     return out.select("user_id", "w_start", "w_end", "n", F.round("median_value", 2).alias("median_value"))
 
@@ -350,6 +354,7 @@ def q_scotty_global_kernel(spark, sf_dir):
         _events(spark, sf_dir), ts="ts", value="value",
         windows=[TumblingWindow(WindowMeasure.TIME, 6 * SIZE_H)],
         aggs=[("n", "long", CountAggregation), ("median_value", "double", QuantileAggregation)],
+        force_kernel=True,
     )
     return out.select("w_start", "w_end", "n", F.round("median_value", 2).alias("median_value"))
 

@@ -4,8 +4,11 @@ Everything here is declarative DataFrame/SQL first: Catalyst gets to push
 filters into the parquet scan, prune columns, broadcast small join sides,
 and keep the hot path inside whole-stage codegen. Python only appears in
 the kernel-backed multi-window operator (``scotty_batch``) and the
-multimodal stubs — always Arrow-batched per key group, never per row.
+multimodal stubs — always Arrow-batched, never per row.
 """
+
+from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 
 def shuffle_partitions(spark) -> int:
@@ -17,7 +20,7 @@ def shuffle_partitions(spark) -> int:
         return spark.sparkContext.defaultParallelism or 64
 
 
-_BUCKET_CAP = 32768  # stage task-count ceiling; override via buckets=
+_BUCKET_CAP = 32768  # stage task-count ceiling
 
 
 def adaptive_buckets(df) -> int:
@@ -44,7 +47,7 @@ def adaptive_buckets(df) -> int:
     flat within 2× of the optimum — so the estimate only has to land the
     right order of magnitude. Clamped to [max(shuffle.partitions,
     defaultParallelism), 32768]; at 100 TB the cap keeps the stage under
-    ~32k tasks (pass ``buckets=`` explicitly to override either way).
+    ~32k tasks.
     """
     spark = df.sparkSession
     lo = max(shuffle_partitions(spark), spark.sparkContext.defaultParallelism or 1)
@@ -62,3 +65,37 @@ def adaptive_buckets(df) -> int:
     target = max(batch, 65536)  # tiny-batch configs should not explode task count
     want = -(-rows_est // target)
     return int(min(max(lo, want), _BUCKET_CAP))
+
+
+def key_sorted_exchange(df, key: str, ts: str, value, arrival_order=None):
+    """The one exchange of both Python batch tiers: every row of a key in
+    one partition, sorted by (key, ts[, arrival_order]), so a partition
+    function cuts keys at value changes and never sorts in Python.
+
+    In value mode only the key, event time, value and tie break cross the
+    shuffle and the Arrow boundary (never the payload columns). The
+    partition count comes from ``adaptive_buckets``; an explicit
+    ``repartition(n, key)`` has the REPARTITION_BY_NUM origin, which AQE
+    does not coalesce by shuffle bytes (tiny for pruned columns) onto one
+    CPU-bound Python worker. The sort runs in Tungsten (parallel,
+    spill-safe)."""
+    order = [ts] + ([arrival_order] if arrival_order else [])
+    if value is not None:
+        df = df.select(*dict.fromkeys([key, ts, value, *order]))
+    return df.repartition(adaptive_buckets(df), F.col(key)).sortWithinPartitions(key, *order)
+
+
+def window_output_schema(key: str, key_type, aggs):
+    """Rows of every batch tier: (key, window_id, measure, w_start, w_end,
+    one column per ``AggSpec`` with its DDL type). The stream inserts
+    ``emit_ts`` after ``w_end``."""
+    return T.StructType(
+        [
+            T.StructField(key, key_type, True),
+            T.StructField("window_id", T.LongType(), False),
+            T.StructField("measure", T.StringType(), False),
+            T.StructField("w_start", T.LongType(), False),
+            T.StructField("w_end", T.LongType(), False),
+        ]
+        + [T.StructField(name, T._parse_datatype_string(ddl), True) for name, ddl, _ in aggs]
+    )

@@ -1,17 +1,19 @@
 """Kernel-backed multi-window shared aggregation over a batch DataFrame.
 
-This is the batch entry point into the slicing engine: one shuffle by key
-(`groupBy(key).applyInPandas`), then each key group flows through the
-general stream-slicing kernel as one Arrow batch. All concurrent window
-definitions — any mix of tumbling / sliding / session, time- or
-count-measured — share a single slice store per key, the reference's
-headline aggregate-sharing property (LazyAggregateStore.aggregate,
+This is the batch entry point into the slicing engine: one exchange by key
+(`plans.key_sorted_exchange`: `repartition(key)` + a Tungsten sort by key
+and ts, the same exchange the vectorized tier reads), then a
+`mapInPandas` over each partition runs every key's sorted run through the
+general stream-slicing kernel. All concurrent window definitions — any
+mix of tumbling / sliding / session, time- or count-measured — share a
+single slice store per key, the reference's headline aggregate-sharing
+property (LazyAggregateStore.aggregate,
 /root/reference/slicing/.../LazyAggregateStore.java:81-99), which Spark's
 built-in `F.window` cannot express (it duplicates rows per overlapping
 window instead).
 
 Scale notes:
-- the only shuffle is the groupBy(key); slice partials keep per-key state
+- the only shuffle is the key exchange; slice partials keep per-key state
   O(slices × functions), not O(rows);
 - the vectorized tier (thousands of keys per Arrow batch, numpy segment
   reductions, zero per-key Python) lives in `plans.vectorized_multi`;
@@ -24,24 +26,21 @@ from __future__ import annotations
 
 from typing import Optional, Sequence
 
+import numpy as np
 import pandas as pd
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
-from ..functions import (
-    AggSpec,
-    CountAggregation,
-    HistogramQuantileAggregation,
-    MaxAggregation,
-    MeanAggregation,
-    MinAggregation,
-    QuantileAggregation,
-    SumAggregation,
+from ..functions import AggSpec, QuantileAggregation
+from . import key_sorted_exchange, window_output_schema
+from ..operators.kernel import (
+    NAMED_LIFTS,
+    bulk_lift_kinds,
+    feed_sorted,
+    lower_windows,
+    new_operator,
 )
-from . import adaptive_buckets
-from ..operators.kernel import SlicingWindowOperator, bulk_lift_kinds, lower_windows
 from ..operators.windows import SessionWindow, SlidingWindow, TumblingWindow, Window, WindowMeasure
 from .windowed import window_aggregate
 
@@ -89,6 +88,8 @@ def scotty_window_aggregate(
 
     Output: (key, window_id, measure, w_start, w_end, <one column per agg>).
     Time windows report epoch-ms bounds; count windows report ordinal bounds.
+    The result's ``tiers`` attribute maps each window_id to the tier that
+    computes it: "catalyst", "vectorized" or "kernel".
     """
     catalyst_exprs = _catalyst_aggs(aggs, value) if value is not None else None
     if force_kernel:
@@ -125,6 +126,7 @@ def scotty_window_aggregate(
             )
             for w in time_windows
         ]
+        tiers = {w.window_id: "catalyst" for w in time_windows}
         if rest:
             parts.append(
                 scotty_window_aggregate(
@@ -132,70 +134,49 @@ def scotty_window_aggregate(
                     prefer_catalyst=False,
                 )
             )
+            tiers.update(parts[-1].tiers)
         if parts:
             out = parts[0]
             for p in parts[1:]:
                 out = out.unionAll(p)
+            out.tiers = tiers
             return out
-
-    key_field = df.schema[key]
-    out_schema = T.StructType(
-        [
-            T.StructField(key, key_field.dataType, True),
-            T.StructField("window_id", T.LongType(), False),
-            T.StructField("measure", T.StringType(), False),
-            T.StructField("w_start", T.LongType(), False),
-            T.StructField("w_end", T.LongType(), False),
-        ]
-        + [T.StructField(name, T._parse_datatype_string(ddl), True) for name, ddl, _ in aggs]
-    )
 
     window_defs = list(windows)
     agg_specs = list(aggs)
-    sort_cols = [ts] + ([arrival_order] if arrival_order else [])
-    use_fast = (
-        not force_kernel and value is not None and _fast_path_eligible(window_defs, agg_specs)
-    )
-
-    if use_fast:
-        # tier 2: bucketed multi-key vectorization — thousands of keys per
-        # Arrow batch, zero per-key Python (see plans.vectorized_multi)
+    if not force_kernel and value is not None and _fast_path_eligible(window_defs, agg_specs):
+        # tier 2: multi-key vectorization — thousands of keys per Arrow
+        # batch, zero per-key Python (see plans.vectorized_multi)
         from .vectorized_multi import multikey_window_aggregate
 
-        return multikey_window_aggregate(
-            df, key, ts, value, window_defs, agg_specs, arrival_order
-        )
+        out = multikey_window_aggregate(df, key, ts, value, window_defs, agg_specs, arrival_order)
+        out.tiers = {w.window_id: "vectorized" for w in window_defs}
+        return out
 
-    def run(pdf: pd.DataFrame) -> pd.DataFrame:
-        # one hash BUCKET of keys per call (not one key): per-group Arrow +
-        # pandas dispatch dominates when keys are small (2000 single-key
-        # groups ≈ 4s of pure overhead at sf0.1), so the shuffle key is a
-        # bucket and the per-key kernel loop runs inside one batch — same
-        # economics as the vectorized tier (plans.vectorized_multi).
-        if pdf.empty:
-            return pd.DataFrame({f.name: pd.Series(dtype="object") for f in out_schema.fields})
-        pdf = pdf.drop(columns=["_b"]).sort_values([key] + sort_cols, kind="mergesort")
+    out_schema = window_output_schema(key, df.schema[key].dataType, agg_specs)
+    out_cols = [f.name for f in out_schema.fields[1:]]
+
+    def run(pdfs):
+        # one partition of the key-sorted exchange (thousands of keys, not
+        # one: per-group Arrow + pandas dispatch dominates when keys are
+        # small). Columns are extracted ONCE per partition and sliced per
+        # key — a zero-copy numpy view in value mode, list slices of
+        # already-boxed values in record mode.
+        parts = [p for p in pdfs if not p.empty]
+        if not parts:
+            return
+        pdf = parts[0] if len(parts) == 1 else pd.concat(parts, ignore_index=True)
         keys = pdf[key].to_numpy()
         ts_all = pdf[ts].to_numpy().astype("datetime64[ms]").astype("int64")
-        import numpy as np
-
-        # extract columns ONCE per bucket, slice per key group: per-group
-        # pandas .iloc + .tolist() paid one pandas dispatch + per-element
-        # boxing PER GROUP (15k key groups per sf1.0 pass) — bucket-level
-        # extraction boxes each value once and per-group list/array slices
-        # are plain pointer copies (r6; the value-mode slice is a
-        # zero-copy numpy view)
         if value is not None:
             vals_all = pdf[value].to_numpy()
-            cols_all = None
         else:
-            vals_all = None
             cols_all = {c: pdf[c].tolist() for c in pdf.columns}
 
         changes = np.nonzero(keys[1:] != keys[:-1])[0] + 1
         bounds = np.concatenate([[0], changes, [len(keys)]])
         outs = []
-        for s, e in zip(bounds[:-1], bounds[1:]):
+        for s, e in zip(bounds[:-1].tolist(), bounds[1:].tolist()):
             ts_ms = ts_all[s:e]
             final_wm = _final_watermark(int(ts_ms[-1]), window_defs, lateness_ms)
             if value is not None:
@@ -204,30 +185,15 @@ def scotty_window_aggregate(
                 data = {c: v[s:e] for c, v in cols_all.items()}
             rows = _kernel_run(data, ts_ms, value, window_defs, agg_specs, lateness_ms, final_wm)
             if rows:
-                out = pd.DataFrame(rows, columns=[f.name for f in out_schema.fields[1:]])
-                out.insert(0, key, keys[s])
-                outs.append(out)
-        if not outs:
-            return pd.DataFrame({f.name: pd.Series(dtype="object") for f in out_schema.fields})
-        return pd.concat(outs, ignore_index=True)
+                part = pd.DataFrame(rows, columns=out_cols)
+                part.insert(0, key, keys[s])
+                outs.append(part)
+        if outs:
+            yield pd.concat(outs, ignore_index=True)
 
-    if value is not None:
-        # column-prune before the shuffle: payload columns never cross Arrow
-        df = df.select(*dict.fromkeys([key, ts, value] + ([arrival_order] if arrival_order else [])))
-    # task size ≈ one Arrow batch (plans.adaptive_buckets) — the kernel
-    # stage is CPU-bound Python, so shuffle.partitions-sized buckets
-    # serialize it on big inputs (measured 2.4× on the flagship)
-    n_buckets = adaptive_buckets(df)
-    # explicit repartition(num, col) pins the bucket shuffle: its
-    # REPARTITION_BY_NUM origin is exempt from AQE partition coalescing,
-    # which would otherwise size the CPU-bound Python kernel stage by
-    # shuffle BYTES (tiny for pruned columns) and serialize it onto one
-    # worker; hash(_b) already satisfies the groupBy's clustered
-    # distribution, so no second exchange is added
-    bucketed = df.withColumn(
-        "_b", F.pmod(F.xxhash64(F.col(key)), F.lit(n_buckets))
-    ).repartition(n_buckets, F.col("_b"))
-    return bucketed.groupBy("_b").applyInPandas(run, out_schema)
+    out = key_sorted_exchange(df, key, ts, value, arrival_order).mapInPandas(run, out_schema)
+    out.tiers = {w.window_id: "kernel" for w in window_defs}
+    return out
 
 
 def scotty_global_aggregate(
@@ -262,28 +228,34 @@ def scotty_global_aggregate(
         tagged, "_g", ts, value, windows, aggs, lateness_ms, arrival_order,
         prefer_catalyst=prefer_catalyst, force_kernel=force_kernel,
     )
-    return out.drop("_g")
+    result = out.drop("_g")
+    result.tiers = out.tiers
+    return result
+
+
+# Catalyst built-in per NAMED_LIFTS reduction name.
+_CATALYST_REDUCTIONS = {
+    "count": lambda value: F.count(F.lit(1)),
+    "sum": F.sum,
+    "min": F.min,
+    "max": F.max,
+    "mean": F.avg,
+}
 
 
 def _catalyst_aggs(aggs: Sequence[AggSpec], value: str):
     """Map standard aggregate functions to Catalyst expressions by output
-    name, or None if any function has no built-in equivalent."""
+    name, or None if any function has no built-in equivalent. Matched by
+    exact type, as ``NAMED_LIFTS`` is: a subclass with its own lift (or
+    the sketch partial of ``HistogramQuantileAggregation``) is not the
+    built-in."""
     out = {}
     for name, ddl, factory in aggs:
         fn = factory()
-        if isinstance(fn, CountAggregation):
-            expr = F.count(F.lit(1))
-        elif isinstance(fn, SumAggregation):
-            expr = F.sum(value)
-        elif isinstance(fn, MinAggregation):
-            expr = F.min(value)
-        elif isinstance(fn, MaxAggregation):
-            expr = F.max(value)
-        elif isinstance(fn, MeanAggregation):
-            expr = F.avg(value)
-        elif isinstance(fn, QuantileAggregation) and not isinstance(
-            fn, HistogramQuantileAggregation
-        ):
+        kind = NAMED_LIFTS.get(type(fn))
+        if kind is not None:
+            expr = _CATALYST_REDUCTIONS[kind](value)
+        elif type(fn) is QuantileAggregation:
             # exact discrete quantile, pure JVM (guide §4: built-ins over
             # Python): the kernel's lower() returns the smallest v whose
             # cumulative count reaches max(1, ceil(q·total)) over the
@@ -291,8 +263,7 @@ def _catalyst_aggs(aggs: Sequence[AggSpec], value: str):
             # element at that rank of the sorted value multiset. ceil is
             # the same float64 op both sides; collect_list + array_sort
             # shuffle the same rows the kernel tier would, minus the
-            # Python boundary. (HistogramQuantile stays kernel-only: its
-            # partial is the bounded-state sketch, the point of that gate.)
+            # Python boundary.
             expr = F.try_element_at(
                 F.array_sort(F.collect_list(value)),
                 F.greatest(
@@ -333,42 +304,10 @@ def _fast_path_eligible(windows: Sequence[Window], aggs: Sequence[AggSpec]) -> b
 
 
 def _kernel_run(data, ts_ms, value, windows, aggs, lateness_ms, final_wm):
-    """One key group through the slicing kernel. ``data`` is the group's
-    pre-extracted payload — a numpy value slice in value mode, a dict of
-    column-list slices in record mode (extracted once per bucket by the
-    caller; see ``run``)."""
-    op = SlicingWindowOperator(max_lateness=lateness_ms)
-    fns = [factory() for _, _, factory in aggs]
-    for fn in fns:
-        op.add_aggregation(fn)
-    for w in windows:
-        op.add_window(w)
-
+    """One key's sorted run through the slicing kernel, fired by one final
+    watermark. ``data`` is the key's payload — a numpy value slice in value
+    mode, a dict of column-list slices in record mode."""
+    op = new_operator(windows, aggs, lateness_ms)
     op.seed_watermark(int(ts_ms[0]) - 1)
-    kinds = bulk_lift_kinds(fns, value is not None) if op.bulk_eligible() else None
-    if kinds is not None:
-        # one key group is in-order by construction (sorted by ts), so the
-        # whole run takes the vectorized segment path: the exact kernel
-        # only touches slice-edge/session-break elements, every other
-        # element is folded in by one segment lift per slice
-        if value is not None:
-            op.process_in_order_bulk(data, ts_ms, kinds)
-        else:
-            names = list(data)
-
-            def element_at(i):
-                return {c: data[c][i] for c in names}
-
-            op.process_in_order_bulk(data, ts_ms, kinds, element_at=element_at)
-    elif value is not None:
-        for element, t in zip(data, ts_ms.tolist()):
-            op.process_element(element, t)
-    else:
-        # dict records via zip of column lists — same rows as
-        # pdf.to_dict("records") at ~3x less per-row overhead (no Series
-        # boxing), and this IS the payload-aggregate hot loop's input
-        names = list(data)
-        elements = [dict(zip(names, row)) for row in zip(*(data[c] for c in names))]
-        for element, t in zip(elements, ts_ms.tolist()):
-            op.process_element(element, t)
+    feed_sorted(op, data, ts_ms, bulk_lift_kinds(op.functions, value is not None))
     return lower_windows(op.process_watermark(final_wm))

@@ -1,11 +1,13 @@
-"""Multi-key vectorized window aggregation (the Arrow/pandas tier).
+"""Multi-key vectorized window aggregation (the Arrow/numpy tier).
 
 Per-key `applyInPandas` pays per-group overhead (pandas dispatch, Arrow
 framing) that dominates when keys are small — the common transcripts
-shape (10^9 conversations × 10^2 turns). This tier instead shuffles by a
-HASH BUCKET of the key (`pmod(xxhash64(key), buckets)`), so each Arrow
-batch carries thousands of keys, and every window family reduces across
-ALL keys in the batch with numpy segment operations — zero per-key Python.
+shape (10^9 conversations × 10^2 turns). This tier instead takes the
+key-sorted exchange (`plans.key_sorted_exchange`: `repartition(key)` +
+a Tungsten sort by key and ts) and a `mapInArrow` over each partition, so
+each Arrow batch carries thousands of keys, and every window family
+reduces across ALL keys in the batch with numpy segment operations —
+zero per-key Python.
 
 Segment math (rows pre-sorted by key, ts):
 - tumbling/sliding: expand each row into its size/slide window starts,
@@ -15,10 +17,11 @@ Segment math (rows pre-sorted by key, ts):
 - count tumbling: positional index within key // n, kernel flush
   semantics (windows with end <= key_total+1).
 
-Scale: bucket count = shuffle partitions; each bucket is independent, so
-the stage parallelizes across executors/Python workers with no skew
-sensitivity beyond the hash (a single hot key still lands in one bucket —
-route truly hot keys through plans.skew salting first).
+Scale: the partition count is `plans.adaptive_buckets` (~one Arrow batch
+of rows per task); each partition is independent, so the stage
+parallelizes across executors/Python workers with no skew sensitivity
+beyond the hash (a single hot key still lands in one partition — route
+truly hot keys through plans.skew salting first).
 
 Emission parity with the slicing kernel is pinned by
 tests/test_scotty_batch_spark.py (same rows as the kernel tier).
@@ -26,62 +29,37 @@ tests/test_scotty_batch_spark.py (same rows as the kernel tier).
 
 from __future__ import annotations
 
-from typing import List, Sequence
+from typing import Sequence
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
 import pyarrow.compute as pc
 
 from pyspark.sql.pandas.types import to_arrow_schema
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
-from ..functions import (
-    CountAggregation,
-    MaxAggregation,
-    MeanAggregation,
-    MinAggregation,
-    SumAggregation,
-)
-from . import adaptive_buckets
-from ..operators.windows import SessionWindow, SlidingWindow, TumblingWindow, WindowMeasure
+from . import key_sorted_exchange, window_output_schema
+from ..operators.kernel import bulk_lift_kinds
+from ..operators.windows import SessionWindow, SlidingWindow, WindowMeasure
 
 
-def _segment_reduce(vals, seg_starts, seg_ends, aggs_fns):
-    """Columns of per-segment aggregates; segments contiguous & non-empty."""
+def _segment_reduce(vals, seg_starts, seg_ends, kinds):
+    """Per-segment aggregate columns, one per ``NAMED_LIFTS`` reduction
+    name in ``kinds``; segments contiguous & non-empty."""
     csum = np.concatenate([[0.0], np.cumsum(vals)])
     sums = csum[seg_ends] - csum[seg_starts]
     cnts = (seg_ends - seg_starts).astype("int64")
-    mins = maxs = None
-    if any(isinstance(f, (MinAggregation, MaxAggregation)) for f in aggs_fns):
-        # contiguous cover: reduceat over starts is exact (last segment
-        # ends at len(vals) because segments tile the sorted array)
-        mins = np.minimum.reduceat(vals, seg_starts)
-        maxs = np.maximum.reduceat(vals, seg_starts)
-    cols = []
-    for fn in aggs_fns:
-        if isinstance(fn, SumAggregation):
-            cols.append(sums)
-        elif isinstance(fn, CountAggregation):
-            cols.append(cnts)
-        elif isinstance(fn, MeanAggregation):
-            cols.append(sums / cnts)
-        elif isinstance(fn, MinAggregation):
-            cols.append(mins)
-        elif isinstance(fn, MaxAggregation):
-            cols.append(maxs)
-    return cols
-
-
-def _boundaries(group_ids):
-    """seg_starts/seg_ends of equal-value runs in a sorted array."""
-    change = np.nonzero(np.diff(group_ids))[0] + 1
-    seg_starts = np.concatenate([[0], change])
-    seg_ends = np.concatenate([change, [len(group_ids)]])
-    return seg_starts, seg_ends
+    cols = {"sum": sums, "count": cnts}
+    if "mean" in kinds:
+        cols["mean"] = sums / cnts
+    # contiguous cover: reduceat over starts is exact (last segment ends
+    # at len(vals) because segments tile the sorted array)
+    if "min" in kinds:
+        cols["min"] = np.minimum.reduceat(vals, seg_starts)
+    if "max" in kinds:
+        cols["max"] = np.maximum.reduceat(vals, seg_starts)
+    return [cols[k] for k in kinds]
 
 
 def multikey_rows(key_codes, ts_ms, vals, windows, agg_fns_factory):
@@ -91,7 +69,7 @@ def multikey_rows(key_codes, ts_ms, vals, windows, agg_fns_factory):
     numpy columns: key_code, window_id, measure, w_start, w_end, aggs...
     """
     out = []
-    fns = agg_fns_factory()
+    kinds = bulk_lift_kinds(agg_fns_factory())
 
     key_change = np.nonzero(np.diff(key_codes))[0] + 1
     key_starts = np.concatenate([[0], key_change])
@@ -107,7 +85,7 @@ def multikey_rows(key_codes, ts_ms, vals, windows, agg_fns_factory):
                 is_new[1:] = ~(same_key & within_gap)
             seg_starts = np.nonzero(is_new)[0]
             seg_ends = np.concatenate([seg_starts[1:], [len(ts_ms)]])
-            cols = _segment_reduce(vals, seg_starts, seg_ends, fns)
+            cols = _segment_reduce(vals, seg_starts, seg_ends, kinds)
             out.append(
                 dict(
                     key_code=key_codes[seg_starts],
@@ -136,10 +114,10 @@ def multikey_rows(key_codes, ts_ms, vals, windows, agg_fns_factory):
                 change[1:] = (np.diff(kc) != 0) | (np.diff(wi) != 0)
                 seg_starts = np.nonzero(change)[0]
                 seg_ends = np.concatenate([seg_starts[1:], [len(kc)]])
-                cols = _segment_reduce(v, seg_starts, seg_ends, fns)
+                cols = _segment_reduce(v, seg_starts, seg_ends, kinds)
             else:
                 seg_starts = seg_ends = np.array([], dtype=int)
-                cols = [np.array([])] * len(fns)
+                cols = [np.array([])] * len(kinds)
             out.append(
                 dict(
                     key_code=kc[seg_starts] if len(seg_starts) else kc,
@@ -169,7 +147,7 @@ def multikey_rows(key_codes, ts_ms, vals, windows, agg_fns_factory):
                 composite_change[1:] = (np.diff(kc) != 0) | (np.diff(w_start) != 0)
             seg_starts = np.nonzero(composite_change)[0]
             seg_ends = np.concatenate([seg_starts[1:], [len(kc)]])
-            cols = _segment_reduce(v, seg_starts, seg_ends, fns)
+            cols = _segment_reduce(v, seg_starts, seg_ends, kinds)
             out.append(
                 dict(
                     key_code=kc[seg_starts],
@@ -191,23 +169,12 @@ def multikey_window_aggregate(
     windows: Sequence,
     aggs: Sequence,
     arrival_order: str | None = None,
-    buckets: int | None = None,
 ) -> DataFrame:
-    """Bucketed multi-key vectorized windowed aggregation (see module doc)."""
-    key_field = df.schema[key]
-    out_schema = T.StructType(
-        [
-            T.StructField(key, key_field.dataType, True),
-            T.StructField("window_id", T.LongType(), False),
-            T.StructField("measure", T.StringType(), False),
-            T.StructField("w_start", T.LongType(), False),
-            T.StructField("w_end", T.LongType(), False),
-        ]
-        + [T.StructField(name, T._parse_datatype_string(ddl), True) for name, ddl, _ in aggs]
-    )
+    """Shared-exchange multi-key vectorized windowed aggregation (see
+    module doc)."""
+    out_schema = window_output_schema(key, df.schema[key].dataType, aggs)
     window_defs = list(windows)
     agg_specs = list(aggs)
-    agg_names = [name for name, _, _ in agg_specs]
 
     def make_fns():
         return [factory() for _, _, factory in agg_specs]
@@ -215,11 +182,10 @@ def multikey_window_aggregate(
     arrow_out = to_arrow_schema(out_schema)
 
     def run(batches) -> "pa.Table":
-        # Arrow-native partition handler (mapInArrow over partitions that
-        # Spark already repartitioned by key and Tungsten-sorted by
-        # (key, ts)): Python never sorts, never sees per-row objects —
-        # the key column is dictionary-encoded in C and everything else is
-        # O(n) numpy segment reductions.
+        # Arrow-native partition handler over the key-sorted exchange:
+        # Python never sorts, never sees per-row objects — the key column
+        # is dictionary-encoded in C and everything else is O(n) numpy
+        # segment reductions.
         batch_list = list(batches)  # mapInArrow yields RecordBatches
         if not batch_list:
             return
@@ -254,20 +220,4 @@ def multikey_window_aggregate(
         for piece in pieces:
             yield from piece.to_batches()
 
-    # project before the shuffle: only the key, event time, value and tie
-    # break cross the Arrow boundary (never the payload columns). The
-    # repartition+sortWithinPartitions runs in Tungsten (parallel,
-    # spill-safe) — the expensive ordering never happens in Python.
-    needed = [key, ts, value] + ([arrival_order] if arrival_order else [])
-    sort_cols = [key, ts] + ([arrival_order] if arrival_order else [])
-    pruned = df.select(*needed)
-    # task size ≈ one Arrow batch, NOT spark.sql.shuffle.partitions — the
-    # Arrow/numpy stage is CPU-bound, so undersized bucket counts serialize
-    # it (measured 2.4×, see plans.adaptive_buckets)
-    n_buckets = buckets or adaptive_buckets(pruned)
-    prepared = (
-        pruned
-        .repartition(n_buckets, F.col(key))
-        .sortWithinPartitions(*sort_cols)
-    )
-    return prepared.mapInArrow(run, out_schema)
+    return key_sorted_exchange(df, key, ts, value, arrival_order).mapInArrow(run, out_schema)

@@ -10,7 +10,12 @@ KeyedScottyWindowOperator, flink-connector/.../KeyedScottyWindowOperator.java:15
 Per micro-batch, each key's new rows arrive as one Arrow batch; the handler
 restores the key's kernel from the Spark state store, drops late rows
 (below), feeds the rest in event-time order, fires the kernel at the
-key's frontier and emits the triggered windows.
+key's frontier and emits the triggered windows. Building and feeding the
+kernel is shared with the batch kernel tier (`kernel.new_operator`,
+`kernel.feed_sorted`): rows before the key's event-time frontier take the
+exact per-element path, the in-order rest the segment bulk path — in
+value mode and in record mode (value=None: dict-of-columns rows, custom
+``bulk_lift_records`` lifts) alike.
 Spark's watermark (`GroupState.getCurrentWatermarkMs`) replaces Flink's
 `ctx.timerService().currentWatermark()`; an event-time timer wakes keys
 with no new rows, and state removal cleans up idle keys.
@@ -76,8 +81,9 @@ from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from ..functions import AggSpec
-from ..operators.kernel import SlicingWindowOperator, bulk_lift_kinds, lower_windows
+from ..operators.kernel import bulk_lift_kinds, feed_sorted, lower_windows, new_operator
 from ..operators.windows import Window, WindowMeasure
+from ..plans import window_output_schema
 
 STATE_SCHEMA = "kernel binary"  # pickle fallback (custom fns / count windows)
 
@@ -108,49 +114,10 @@ def parse_watermark_delay_ms(spark, delay: str) -> int:
     return int(jvm.org.apache.spark.sql.catalyst.plans.logical.EventTimeWatermark.getDelayMs(interval))
 
 
-def feed_sorted_batch(
-    op: SlicingWindowOperator, elements, ts_ms, bulk_kinds, min_bulk_custom: int = 64
-) -> None:
-    """Feed one ts-sorted micro-batch into a kernel: the out-of-order
-    prefix (before the operator's event-time frontier) takes the exact
-    per-element surgery path, the in-order suffix takes the vectorized
-    bulk path (the reference's StreamSlicer.java:50-51 in-order branch,
-    in segment form). Falls back to the per-element loop when the
-    function/window mix is not numpy-reducible — and, for CUSTOM segment
-    lifts (callable kinds), when the key's batch is shorter than
-    ``min_bulk_custom``: an np.unique/Counter per near-empty segment
-    costs more than a handful of per-element merges (measured 2× slower
-    on the replay gate's ~5-row key-batches), while the named numpy
-    reductions stay cheap at any size."""
-    if (
-        bulk_kinds is not None
-        and op.bulk_eligible()
-        and not (len(ts_ms) < min_bulk_custom and any(callable(k) for k in bulk_kinds))
-    ):
-        import numpy as np
-
-        frontier = op._max_event_time
-        split = int(np.searchsorted(ts_ms, max(frontier, ts_ms[0]), side="left"))
-        for j in range(split):
-            op.process_element(elements[j], int(ts_ms[j]))
-        op.process_in_order_bulk(elements[split:], ts_ms[split:], bulk_kinds)
-    else:
-        for element, t in zip(elements, ts_ms.tolist()):
-            op.process_element(element, int(t))
-
-
 def output_schema(key_name: str, key_type: T.DataType, aggs: Sequence[AggSpec]) -> T.StructType:
-    return T.StructType(
-        [
-            T.StructField(key_name, key_type, True),
-            T.StructField("window_id", T.LongType(), False),
-            T.StructField("measure", T.StringType(), False),
-            T.StructField("w_start", T.LongType(), False),
-            T.StructField("w_end", T.LongType(), False),
-            T.StructField("emit_ts", T.LongType(), False),
-        ]
-        + [T.StructField(name, T._parse_datatype_string(ddl), True) for name, ddl, _ in aggs]
-    )
+    """The batch tiers' window schema with ``emit_ts`` after ``w_end``."""
+    fields = window_output_schema(key_name, key_type, aggs).fields
+    return T.StructType(fields[:5] + [T.StructField("emit_ts", T.LongType(), False)] + fields[5:])
 
 
 def typed_state_eligible(windows: Sequence[Window], aggs: Sequence[AggSpec], value_col) -> bool:
@@ -208,27 +175,10 @@ def make_handler(
     window_defs = list(windows)
     agg_specs = list(aggs)
 
-    # segment lifts over the value column (record-mode keys take the
-    # per-element loop); with typed state they are all reduction names,
-    # which the state codec encodes partials by
-    feed_kinds = (
-        bulk_lift_kinds([factory() for _, _, factory in agg_specs])
-        if value_col is not None else None
-    )
+    # segment lifts for feed_sorted; with typed state they are all
+    # reduction names, which the state codec encodes partials by
+    feed_kinds = bulk_lift_kinds([factory() for _, _, factory in agg_specs], value_col is not None)
     typed = typed_state_eligible(window_defs, agg_specs, value_col)
-
-    def new_op(extra: Sequence[Window]) -> SlicingWindowOperator:
-        op = SlicingWindowOperator(max_lateness=lateness_ms)
-        for _, _, factory in agg_specs:
-            op.add_aggregation(factory())
-        # registry windows strictly AFTER the base list: the typed state
-        # codec indexes session contexts positionally, and the registry is
-        # append-only, so this keeps every previously-encoded ctx_idx valid
-        for w in window_defs:
-            op.add_window(w)
-        for w in extra:
-            op.add_window(w)
-        return op
 
     def handler(
         key: Tuple[Any], pdfs: Iterator[pd.DataFrame], state: GroupState
@@ -246,7 +196,8 @@ def make_handler(
                    if w.window_id not in base_ids]
         else:
             dyn = []
-        op = new_op(dyn)
+        # registry windows strictly AFTER the base list (new_operator)
+        op = new_operator(window_defs + dyn, agg_specs, lateness_ms)
         if state.exists:
             if typed:
                 scalars, sessions, slices = state.get
@@ -264,7 +215,7 @@ def make_handler(
 
                     dyn = [w for w in _rr(window_registry, 0.0)
                            if w.window_id not in base_ids]
-                    op = new_op(dyn)
+                    op = new_operator(window_defs + dyn, agg_specs, lateness_ms)
                     decode_op(op, feed_kinds, scalars, sessions, slices)
             else:
                 op = pickle.loads(state.get[0])
@@ -297,10 +248,10 @@ def make_handler(
                     pdf, ts_ms = pdf.iloc[late:], ts_ms[late:]
             if len(ts_ms):
                 if value_col is not None:
-                    elements = pdf[value_col].to_numpy()
+                    data = pdf[value_col].to_numpy()
                 else:
-                    elements = pdf.to_dict("records")
-                feed_sorted_batch(op, elements, ts_ms, feed_kinds)
+                    data = {c: pdf[c].tolist() for c in pdf.columns}
+                feed_sorted(op, data, ts_ms, feed_kinds)
 
         wm = state.getCurrentWatermarkMs()
         frontier = wm

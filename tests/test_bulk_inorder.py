@@ -1,7 +1,8 @@
 """Exact-parity check for the vectorized in-order path
-(SlicingWindowOperator.process_in_order_bulk) against the per-element
+(SlicingWindowOperator.process_in_order_bulk, driven by kernel.feed_sorted
+as the batch kernel tier and the stream drive it) against the per-element
 reference path, across randomized window mixes, disorder, sparse gaps and
-multi-batch feeding — mirrors how streaming/processor.py drives it.
+multi-batch feeding.
 """
 
 import random
@@ -18,11 +19,11 @@ from scotty_window_processor_spark.functions import (
 )
 from scotty_window_processor_spark.operators import (
     SessionWindow,
-    SlicingWindowOperator,
     SlidingWindow,
     TumblingWindow,
     WindowMeasure,
 )
+from scotty_window_processor_spark.operators.kernel import feed_sorted, new_operator
 
 KINDS = ["sum", "count", "min", "max", "mean"]
 FACTORIES = [SumAggregation, CountAggregation, MinAggregation, MaxAggregation, MeanAggregation]
@@ -39,12 +40,7 @@ WINDOW_MIXES = [
 
 
 def _new_op(windows, lateness=50):
-    op = SlicingWindowOperator(max_lateness=lateness)
-    for f in FACTORIES:
-        op.add_aggregation(f())
-    for w in windows:
-        op.add_window(w)
-    return op
+    return new_operator(windows, [(f.__name__, "double", f) for f in FACTORIES], lateness)
 
 
 def _emit(results):
@@ -96,10 +92,7 @@ def test_bulk_matches_per_element(mix, seed, sparse):
         b.seed_watermark(int(ts[0]) - 1)
         for v, t in zip(vals.tolist(), ts.tolist()):
             a.process_element(v, t)
-        split = int(np.searchsorted(ts, max(b._max_event_time, ts[0]), side="left"))
-        for j in range(split):
-            b.process_element(vals[j], int(ts[j]))
-        b.process_in_order_bulk(vals[split:], ts[split:], KINDS)
+        feed_sorted(b, vals, ts, KINDS)
         wm = int(ts.max()) - 30  # watermark trails the batch max
         emitted_a += _emit(a.process_watermark(wm))
         emitted_b += _emit(b.process_watermark(wm))
@@ -144,13 +137,10 @@ def test_bulk_quantile_matches_per_element(mix, seed):
     windows = WINDOW_MIXES[mix]
 
     def new_op():
-        op = SlicingWindowOperator(max_lateness=50)
-        fns = [CountAggregation(), QuantileAggregation(), SumAggregation()]
-        for f in fns:
-            op.add_aggregation(f)
-        for w in windows:
-            op.add_window(w)
-        return op, fns
+        op = new_operator(windows, [("n", "long", CountAggregation),
+                                    ("q", "double", QuantileAggregation),
+                                    ("s", "double", SumAggregation)], 50)
+        return op, op.functions
 
     rng = random.Random(seed)
     t = 0
@@ -172,7 +162,7 @@ def test_bulk_quantile_matches_per_element(mix, seed):
     b.seed_watermark(int(ts[0]) - 1)
     for v, tt in zip(vals.tolist(), ts.tolist()):
         a.process_element(v, tt)
-    b.process_in_order_bulk(vals, ts, kinds)
+    feed_sorted(b, vals, ts, kinds)
     final = int(ts[-1]) + 10_000
     assert _emit_payload(a.process_watermark(final)) == _emit_payload(b.process_watermark(final))
 
@@ -185,13 +175,10 @@ def test_bulk_records_matches_per_element(mix, seed):
     windows = WINDOW_MIXES[mix]
 
     def new_op():
-        op = SlicingWindowOperator(max_lateness=50)
-        fns = [CountAggregation(), ToolTallyString(), RoleTextRollupString()]
-        for f in fns:
-            op.add_aggregation(f)
-        for w in windows:
-            op.add_window(w)
-        return op, fns
+        op = new_operator(windows, [("n", "long", CountAggregation),
+                                    ("tools", "string", ToolTallyString),
+                                    ("roles", "string", RoleTextRollupString)], 50)
+        return op, op.functions
 
     rng = random.Random(seed)
     t = 0
@@ -219,9 +206,6 @@ def test_bulk_records_matches_per_element(mix, seed):
     b.seed_watermark(int(ts[0]) - 1)
     for r, tt in zip(rows, ts.tolist()):
         a.process_element(r, tt)
-    names = list(cols)
-    b.process_in_order_bulk(
-        cols, ts, kinds, element_at=lambda i: {c: cols[c][i] for c in names}
-    )
+    feed_sorted(b, cols, ts, kinds)
     final = int(ts[-1]) + 10_000
     assert _emit_payload(a.process_watermark(final)) == _emit_payload(b.process_watermark(final))

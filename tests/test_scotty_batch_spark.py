@@ -215,3 +215,72 @@ def test_accumulator_reaches_driver_from_map_in_arrow(spark):
     df = spark.range(1000).repartition(4)
     assert len(df.mapInArrow(count_rows, df.schema).collect()) == 1000
     assert rows.value == 1000
+
+
+def test_subclass_with_own_lift_is_not_planned_as_catalyst_builtin(spark):
+    """A ``SumAggregation`` subclass with its own ``lift`` is not ``sum``:
+    the default planner must not map it to ``F.sum`` (it matched by
+    ``isinstance``), so it emits the kernel tier's log sums."""
+    import math
+
+    class LogSum(SumAggregation):
+        def lift(self, v):
+            return math.log(v)
+
+    # 20 rows, values 1..20, two per second: two 10 s tumbling windows
+    df = spark.createDataFrame(
+        [("k", i * 500, float(i)) for i in range(1, 21)], "k string, ms long, value double",
+    ).select("k", (F.col("ms") / 1000).cast("timestamp").alias("ts"), "value")
+    args = dict(key="k", ts="ts", value="value",
+                windows=[TumblingWindow(WindowMeasure.TIME, 10_000, window_id=1)],
+                aggs=[("s", "double", LogSum)])
+    planned = scotty_window_aggregate(df, **args)
+    kernel = scotty_window_aggregate(df, **args, force_kernel=True)
+    norm = lambda d: sorted((r["w_start"], round(r["s"], 9)) for r in d.collect())
+    expected = [(0, round(sum(math.log(v) for v in range(1, 20)), 9)),
+                (10_000, round(math.log(20), 9))]
+    assert norm(planned) == norm(kernel) == expected
+    assert planned.tiers == {1: "kernel"}
+
+
+def test_kernel_tier_plan_is_one_key_exchange_into_map_in_pandas(spark, transcripts):
+    """The kernel tier reads the vectorized tier's exchange: one hash
+    exchange on the key, sorted within partitions, then ``mapInPandas``
+    — no bucket column, no grouped ``applyInPandas``."""
+    out = scotty_window_aggregate(
+        transcripts, key="conv_id", ts="ts", value="turn_idx",
+        windows=[TumblingWindow(WindowMeasure.TIME, 600_000, window_id=1)],
+        aggs=[("n", "long", CountAggregation)],
+        force_kernel=True,
+    )
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("Exchange hashpartitioning(") == 1
+    assert "Exchange hashpartitioning(conv_id" in plan
+    assert "MapInPandas" in plan
+    assert "FlatMapGroupsInPandas" not in plan
+    assert "Sort [conv_id" in plan
+
+
+def test_result_reports_tier_per_window(spark, transcripts):
+    """``tiers`` on the result names the tier of every window family, as
+    the planner chose it, also for the global operator."""
+    from scotty_window_processor_spark.plans.scotty_batch import scotty_global_aggregate
+
+    df = transcripts.withColumn("v", F.col("turn_idx").cast("double"))
+    aggs = [("n", "long", CountAggregation), ("s", "double", SumAggregation)]
+    tumbling = TumblingWindow(WindowMeasure.TIME, 600_000, window_id=1)
+    count = TumblingWindow(WindowMeasure.COUNT, 7, window_id=2)
+    time3 = [tumbling, SlidingWindow(WindowMeasure.TIME, 600_000, 300_000, window_id=3),
+             SessionWindow(WindowMeasure.TIME, 120_000, window_id=4)]
+    run = lambda windows, **kw: scotty_window_aggregate(
+        df, key="conv_id", ts="ts", value="v", windows=windows, aggs=aggs, **kw)
+
+    mixed = run([tumbling, count])
+    assert mixed.tiers == {1: "catalyst", 2: "vectorized"}
+    assert {r["window_id"] for r in mixed.select("window_id").distinct().collect()} == {1, 2}
+    assert run(time3).tiers == {1: "vectorized", 3: "vectorized", 4: "vectorized"}
+    assert run([tumbling, count], force_kernel=True).tiers == {1: "kernel", 2: "kernel"}
+    glob = lambda **kw: scotty_global_aggregate(df, ts="ts", value="v", windows=[tumbling],
+                                                aggs=aggs, **kw).tiers
+    assert glob() == {1: "catalyst"}
+    assert glob(force_kernel=True) == {1: "kernel"}

@@ -17,14 +17,20 @@ import pytest
 
 from pyspark.sql import functions as F
 
-from scotty_window_processor_spark.functions import CountAggregation, SumAggregation
+from scotty_window_processor_spark.functions import (
+    CountAggregation,
+    RoleTextRollupString,
+    SumAggregation,
+    ToolTallyString,
+)
 from scotty_window_processor_spark.operators import (
     SessionWindow,
     SlicingWindowOperator,
+    SlidingWindow,
     TumblingWindow,
     WindowMeasure,
 )
-from scotty_window_processor_spark.operators.kernel import lower_windows
+from scotty_window_processor_spark.operators.kernel import MIN_BULK_CUSTOM, lower_windows, new_operator
 from scotty_window_processor_spark.streaming.processor import make_handler, typed_state_eligible
 
 from spark_fixtures import get_spark
@@ -182,11 +188,7 @@ def test_session_and_count_mix_takes_pickled_path_and_is_exact():
     emitted += _call(handler, st, [])
     assert late.value == 0
 
-    op = SlicingWindowOperator(max_lateness=DELAY)
-    for _, _, factory in AGGS:
-        op.add_aggregation(factory())
-    for w in windows:
-        op.add_window(w)
+    op = new_operator(windows, AGGS, DELAY)
     ordered = BASE + np.sort(ts)
     op.seed_watermark(int(ordered[0]) - 1)
     for t in ordered.tolist():
@@ -194,6 +196,69 @@ def test_session_and_count_mix_takes_pickled_path_and_is_exact():
     expected = _relative(r[:5] for r in lower_windows(op.process_watermark(int(ordered[-1]) + FLUSH)))
     assert sorted(emitted) == sorted(expected)
     assert {w for w, *_ in emitted} == {1, 2}
+
+
+def test_record_mode_stream_takes_bulk_path_and_matches_batch_kernel_tier(monkeypatch):
+    """value=None keys feed dict-of-columns rows through the same driver
+    as the batch kernel tier: the in-order rest of each micro-batch takes
+    the bulk path with the functions' record lifts, the out-of-order
+    prefix goes element by element, and the rows equal one batch kernel
+    run over all rows."""
+    from scotty_window_processor_spark.plans.scotty_batch import _final_watermark, _kernel_run
+
+    windows = TIME_WINDOWS + [SlidingWindow(WindowMeasure.TIME, 2 * MIN, 30 * SEC, window_id=4)]
+    aggs = [("n", "long", CountAggregation), ("tools", "string", ToolTallyString),
+            ("roles", "string", RoleTextRollupString)]
+    rng = np.random.default_rng(11)
+    offsets = np.cumsum(rng.integers(1 * SEC, 4 * SEC, 240))  # distinct, ~10 min
+    first, second = offsets[:120], offsets[120:]
+    # the second batch starts with rows below the first batch's max event
+    # time but above the frontier (max − delay) the key fired at
+    prefix = first[-1] - np.array([20 * SEC, 10 * SEC, 5 * SEC]) + 1
+    assert len(second) >= MIN_BULK_CUSTOM and prefix.min() > first[-1] - DELAY
+
+    def frame(offs, idx):
+        return pd.DataFrame({
+            "k": "a", "ts": pd.to_datetime(BASE + offs, unit="ms"), "turn_idx": idx,
+            "role": [("user", "assistant")[i % 2] for i in idx],
+            "tool": [(None, "", "search", "exec")[i % 4] for i in idx],
+            "text": [f"t{i}" for i in idx],
+        })
+
+    batches = [frame(first, np.arange(120)),
+               frame(np.concatenate([second, prefix]), np.arange(120, 243))]
+    bulk_rows = []
+    bulk = SlicingWindowOperator.process_in_order_bulk
+
+    def counting_bulk(op, values, ts_arr, *args, **kwargs):
+        assert isinstance(values, dict)
+        bulk_rows.append(len(ts_arr))
+        return bulk(op, values, ts_arr, *args, **kwargs)
+
+    monkeypatch.setattr(SlicingWindowOperator, "process_in_order_bulk", counting_bulk)
+    fields = ["k", "window_id", "measure", "w_start", "w_end", "emit_ts", "n", "tools", "roles"]
+    late = Counter()
+    handler = make_handler("k", "ts", None, windows, aggs, DELAY, fields,
+                           watermark_delay_ms=DELAY, late_rows=late)
+    # Spark's watermark before each call: none, the first batch's max −
+    # delay, then far past the data (a timer-only flush)
+    marks = [0, BASE + int(first[-1]) - DELAY, BASE + int(offsets[-1]) + FLUSH]
+    st, emitted = FakeGroupState(), []
+    for pdf, wm in zip(batches + [batches[0].iloc[:0]], marks):
+        st.wm = wm
+        emitted += [tuple(r) for out in handler(("a",), iter([pdf]), st)
+                    for r in out.drop(columns=["k", "emit_ts"]).itertuples(index=False)]
+    assert late.value == 0
+    # the first batch in full, then the second batch's in-order rest
+    assert bulk_rows == [120, 120]
+
+    rows = pd.concat(batches).sort_values("ts", kind="mergesort")
+    ts_ms = rows["ts"].to_numpy().astype("datetime64[ms]").astype("int64")
+    data = {c: rows[c].tolist() for c in rows.columns}
+    expected = _kernel_run(data, ts_ms, None, windows, aggs, DELAY,
+                           _final_watermark(int(ts_ms[-1]), windows, DELAY))
+    assert sorted(emitted) == sorted(tuple(r) for r in expected)
+    assert {r[0] for r in emitted} == {1, 2, 3, 4}
 
 
 # ---------------------------------------------------------------------------
