@@ -2,12 +2,10 @@
 
 entry(spark)   — flagship: multi-window shared-slice aggregation over the
                  synthesized transcripts table (the engine's core workload).
-queries()      — one entry per implemented operator (SURVEY.md §2 + the
-                 training-data pipeline operators), each (spark, sf_dir) →
-                 DataFrame over the driver testdata tables.
-oracle_sql()   — DuckDB-checkable ANSI SQL equivalents. Omitted entries
-                 (xxhash64-based signatures, approximate ANN) get the
-                 weaker rows-only check.
+queries()      — one entry per implemented operator (SURVEY.md §2), each
+                 (spark, sf_dir) → DataFrame over the driver testdata
+                 tables.
+oracle_sql()   — DuckDB-checkable ANSI SQL equivalents, one per query.
 """
 
 from __future__ import annotations
@@ -31,14 +29,6 @@ def _utc(spark: SparkSession) -> None:
 
 def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/events.parquet")
-
-
-def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/documents.parquet")
-
-
-def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/embeddings.parquet")
 
 
 # --------------------------------------------------------------------------
@@ -468,58 +458,7 @@ def q_top_purchase_users(spark, sf_dir):
 
 
 # --------------------------------------------------------------------------
-# training-data pipeline operators (documents / embeddings)
-
-
-def q_dedup_exact(spark, sf_dir):
-    from scotty_window_processor_spark.plans.dedup import dedup_exact
-
-    return dedup_exact(_docs(spark, sf_dir))
-
-
-def q_dedup_ngram_jaccard(spark, sf_dir):
-    """Near-dup pairs by word-3-gram Jaccard. The shingle document-frequency
-    cap (df ≤ 50, mirrored by the oracle's WHERE df <= 50) is ON — at
-    scale a hot shingle otherwise generates O(df²) candidate pairs; the
-    plan and the oracle prune identically by construction."""
-    from scotty_window_processor_spark.plans.dedup import dedup_ngram_jaccard
-
-    return dedup_ngram_jaccard(_docs(spark, sf_dir), threshold=0.35, max_shingle_df=50)
-
-
-def q_dedup_minhash_lsh(spark, sf_dir):
-    from scotty_window_processor_spark.plans.dedup import dedup_minhash_lsh
-
-    return dedup_minhash_lsh(_docs(spark, sf_dir), k=32, bands=8, verify_threshold=0.35)
-
-
-def q_dedup_simhash(spark, sf_dir):
-    """max_hamming=3 matches the 4-table 15-bit-prefix pigeonhole recall
-    guarantee — any pair within Hamming ≤ 3 of a 60-bit simhash shares at
-    least one quarter, so recall is exact (not silently partial)."""
-    from scotty_window_processor_spark.plans.dedup import dedup_simhash
-
-    return dedup_simhash(_docs(spark, sf_dir), max_hamming=3)
-
-
-def q_dedup_cluster_canonical(spark, sf_dir):
-    """Transitive-closure dedup: fold the MinHash near-dup PAIRS into
-    per-doc cluster assignments (connected components, min-id canon) —
-    the "keep one doc per duplicate cluster" step a pair list alone
-    doesn't give you. Oracle: recursive min-label CTE over the identical
-    bit-exact pair SQL. The components loop runs Spark jobs at plan-build
-    time (label propagation + pointer jumping, localCheckpoint-bounded
-    lineage), same builder-executes pattern as the phased replay gates."""
-    from scotty_window_processor_spark.plans.dedup import (
-        dedup_cluster_canonical,
-        dedup_minhash_lsh,
-    )
-
-    docs = _docs(spark, sf_dir)
-    pairs = dedup_minhash_lsh(docs, k=32, bands=8, verify_threshold=0.35).select(
-        "id_a", "id_b"
-    )
-    return dedup_cluster_canonical(docs, pairs)
+# as-of joins and the transcript audit over `events`
 
 
 def q_asof_view_purchase(spark, sf_dir):
@@ -658,277 +597,6 @@ def q_stream_asof_view_purchase(spark, sf_dir):
     )
 
 
-def q_dedup_incremental(spark, sf_dir):
-    """Incremental dedup: documents with doc_id % 4 == 0 play the "new
-    ingest batch"; the rest are the "existing corpus", reduced to its
-    persisted signature index (id, sig) — the only corpus state touched.
-    The batch is shingled/hashed fresh, band-bucketed against the index,
-    and verified by MinHash signature agreement with an integer cut, so
-    the whole path (candidates AND estimate) is bit-exact vs the oracle's
-    identical sig CTEs. Pairs orient (new, corpus) or (new_lo, new_hi)."""
-    from scotty_window_processor_spark.plans.dedup import (
-        dedup_incremental,
-        minhash_signatures,
-    )
-
-    docs = _docs(spark, sf_dir)
-    new = docs.where(F.col("doc_id") % _INCR_NEW_MOD == 0)
-    old = docs.where(F.col("doc_id") % _INCR_NEW_MOD != 0)
-    index = minhash_signatures(old, "doc_id", "text", k=32, n=3)
-    return dedup_incremental(new, index, k=32, bands=8, threshold=0.35)
-
-
-_CHUNK_W, _CHUNK_OV = 64, 16
-
-
-def q_chunk_documents(spark, sf_dir):
-    """Per-doc overlapping context-window chunking (plans/chunk.py): one
-    narrow projection + one explode, NO shuffle — a pure map stage at any
-    scale. Every offset is integer arithmetic over the word count, so the
-    DuckDB oracle re-derives the exact layout (same normalized split
-    chain as the dedup oracles)."""
-    from scotty_window_processor_spark.plans.chunk import chunk_documents
-
-    return chunk_documents(
-        _docs(spark, sf_dir), chunk_words=_CHUNK_W, overlap_words=_CHUNK_OV
-    )
-
-
-def q_text_quality(spark, sf_dir):
-    from scotty_window_processor_spark.plans.text import quality_score
-
-    return quality_score(_docs(spark, sf_dir))
-
-
-def q_token_count(spark, sf_dir):
-    from scotty_window_processor_spark.plans.text import token_count
-
-    return token_count(_docs(spark, sf_dir))
-
-
-def q_language_id(spark, sf_dir):
-    from scotty_window_processor_spark.plans.text import language_id
-
-    return language_id(_docs(spark, sf_dir))
-
-
-def q_fingerprint(spark, sf_dir):
-    from scotty_window_processor_spark.plans.text import fingerprint
-
-    return fingerprint(_docs(spark, sf_dir))
-
-
-_SPLITS = {"train": 0.8, "val": 0.1, "test": 0.1}
-_DECON_THRESHOLD = 0.2
-_SHUF_SHARDS = 16
-_SAMPLE_CAP = 8
-_MIX_WEIGHTS = {"en": 0.4, "zh": 0.15, "es": 0.15, "de": 0.15, "fr": 0.15}
-_EXACT_K = 3
-_PACK_CTX = 2048
-_PACK_SHARDS = 16
-_WSAMPLE_SCALE = 4000  # weight = min(1, n_chars/4000) in exact millionths
-
-
-def q_dataset_split(spark, sf_dir):
-    """Deterministic content-addressed train/val/test split — the
-    leakage-control primitive of a training-data pipeline. The gate
-    aggregates per (split, lang) so the value hash depends on every
-    row's assignment while the output stays tiny. The split itself is a
-    zero-shuffle narrow projection (the CASE folds into the scan)."""
-    from scotty_window_processor_spark.plans.sampling import deterministic_split
-
-    return (
-        deterministic_split(_docs(spark, sf_dir), "doc_id", _SPLITS)
-        .groupBy("split", "lang")
-        .agg(F.count(F.lit(1)).alias("n_docs"), F.sum("n_chars").alias("sum_chars"))
-    )
-
-
-def q_stratified_sample(spark, sf_dir):
-    """Deterministic per-stratum cap sampling over (lang, source): one
-    tiny stratum-size aggregation broadcast back onto the corpus, then a
-    hash-threshold filter — the 100 TB side never shuffles. Aggregated
-    per stratum so the hash pins exact row membership."""
-    from scotty_window_processor_spark.plans.sampling import stratified_sample_cap
-
-    return (
-        stratified_sample_cap(
-            _docs(spark, sf_dir), ["lang", "source"], "doc_id", cap=_SAMPLE_CAP
-        )
-        .groupBy("lang", "source")
-        .agg(F.count(F.lit(1)).alias("n_kept"), F.sum("n_chars").alias("sum_chars"))
-    )
-
-
-def q_mixture_by_lang(spark, sf_dir):
-    """Domain-mixing downsample: reweight the corpus's lang composition
-    to target weights (largest subsample with no upsampling; bottleneck
-    lang passes whole). One tiny size agg + broadcast thresholds — the
-    corpus side never shuffles. Aggregated per lang so the value hash
-    pins exact row membership."""
-    from scotty_window_processor_spark.plans.sampling import downsample_to_mixture
-
-    return (
-        downsample_to_mixture(_docs(spark, sf_dir), "lang", _MIX_WEIGHTS, "doc_id")
-        .groupBy("lang")
-        .agg(F.count(F.lit(1)).alias("n_kept"), F.sum("n_chars").alias("sum_chars"))
-    )
-
-
-def q_stratified_sample_exact(spark, sf_dir):
-    """Exactly-k-per-stratum sample (eval-set construction): rank within
-    (lang, source) by (md5-60 bucket, doc_id) and keep rank <= k. The
-    hash-threshold prefilter bounds the rank shuffle to ~margin*k rows
-    per stratum; exactness is guaranteed by the fallback union. Emits
-    the sampled rows themselves — the strongest membership gate."""
-    from scotty_window_processor_spark.plans.sampling import stratified_sample_exact
-
-    return stratified_sample_exact(
-        _docs(spark, sf_dir), ["lang", "source"], "doc_id", k=_EXACT_K
-    ).select("lang", "source", "doc_id", "sample_rank", "n_chars")
-
-
-def q_pack_documents(spark, sf_dir):
-    """Deterministic concatenate-then-chunk sequence packing: hash-shard
-    the corpus, lay documents out per shard in content-addressed order,
-    and cut every _PACK_CTX length units. Emits the doc-level layout
-    (start offset, chunk index, boundary-cross flag) — membership AND
-    position gated row-for-row."""
-    from scotty_window_processor_spark.plans.packing import pack_sequences
-
-    return pack_sequences(
-        _docs(spark, sf_dir), "doc_id", "n_chars", _PACK_CTX, n_shards=_PACK_SHARDS
-    ).select("doc_id", "pack_shard", "pack_start", "pack_seq", "pack_cross")
-
-
-def q_weighted_sample(spark, sf_dir):
-    """Quality-weighted downsample: keep probability min(1, n_chars /
-    _WSAMPLE_SCALE), computed in exact integer millionths so membership
-    is engine-independent. Stateless zero-shuffle filter; aggregated per
-    (lang, source) so the hash pins exact membership."""
-    from scotty_window_processor_spark.plans.sampling import DENOM, weighted_sample
-
-    docs = _docs(spark, sf_dir)
-    w = F.least(
-        F.lit(DENOM).cast("long"), F.expr(f"n_chars * {DENOM} div {_WSAMPLE_SCALE}")
-    )
-    return (
-        weighted_sample(docs, "doc_id", w)
-        .groupBy("lang", "source")
-        .agg(F.count(F.lit(1)).alias("n_kept"), F.sum("n_chars").alias("sum_chars"))
-    )
-
-
-def q_decontaminate(spark, sf_dir):
-    """Benchmark decontamination: score every train-split document's
-    word-trigram overlap against the held-out test split (the
-    contamination check run before any LLM training job). Composes the
-    deterministic content-addressed split with the broadcast n-gram
-    probe; per-doc output (not aggregated) so the hash pins every
-    document's exact contamination score and flag."""
-    from scotty_window_processor_spark.plans.hygiene import decontaminate
-    from scotty_window_processor_spark.plans.sampling import deterministic_split
-
-    docs = deterministic_split(_docs(spark, sf_dir), "doc_id", _SPLITS)
-    ev = docs.where(F.col("split") == "test").select("doc_id", "text")
-    tr = docs.where(F.col("split") == "train").select("doc_id", "text")
-    out = decontaminate(tr, ev, n=3, threshold=_DECON_THRESHOLD)
-    return out.select(
-        "doc_id",
-        F.col("n_ngrams").cast("long").alias("n_ngrams"),
-        F.col("n_matched").cast("long").alias("n_matched"),
-        "contamination",
-        "contaminated",
-    )
-
-
-def _augmented_docs(spark, sf_dir):
-    """documents with PII-shaped spans deterministically injected as a
-    pure function of doc_id — the synthetic corpus has none, and the
-    identical concat runs in the oracle (_AUG_TEXT_SQL), so the scrubber
-    is exercised on non-trivial input without external data."""
-    did = F.col("doc_id")
-    aug = F.concat(
-        F.col("text"),
-        F.when(
-            did % 5 == 0,
-            F.concat(F.lit(" contact user"), did.cast("string"), F.lit("@example.com")),
-        ).otherwise(""),
-        F.when(
-            did % 7 == 0,
-            F.concat(
-                F.lit(" from 10."),
-                (did % 200).cast("string"),
-                F.lit(".0."),
-                (did % 250).cast("string"),
-            ),
-        ).otherwise(""),
-        F.when(
-            did % 11 == 0,
-            F.concat(
-                F.lit(" call 555-"),
-                F.lpad((did % 1000).cast("string"), 3, "0"),
-                F.lit("-0199"),
-            ),
-        ).otherwise(""),
-        F.when(
-            did % 13 == 0,
-            F.concat(
-                F.lit(" ssn 123-45-"), F.lpad((did % 10000).cast("string"), 4, "0")
-            ),
-        ).otherwise(""),
-    )
-    return _docs(spark, sf_dir).select("doc_id", aug.alias("text"))
-
-
-def q_pii_scrub(spark, sf_dir):
-    """PII counting + redaction over the deterministically augmented
-    corpus. Per-row output INCLUDING the redacted text, so the value
-    hash pins byte-exact redaction (the per-row text-equality bar the
-    north rule sets for transcripts, applied to the scrubber)."""
-    from scotty_window_processor_spark.plans.hygiene import pii_scrub
-
-    out = pii_scrub(_augmented_docs(spark, sf_dir))
-    return out.select(
-        "doc_id",
-        *[F.col(c).cast("long").alias(c) for c in ("n_email", "n_ssn", "n_phone", "n_ipv4")],
-        "clean_text",
-    )
-
-
-def q_repetition_signals(spark, sf_dir):
-    """Gopher-style repetition metrics per document (duplicate-word
-    fraction, modal word/bigram mass) — the quality-filter signals a
-    pretraining pipeline thresholds on. Per-doc output pins every
-    metric and both modal tokens (ties broken lexicographically on both
-    sides)."""
-    from scotty_window_processor_spark.plans.hygiene import repetition_signals
-
-    out = repetition_signals(_docs(spark, sf_dir))
-    return out.select(
-        "doc_id",
-        F.col("n_words").cast("long").alias("n_words"),
-        F.col("n_distinct_words").cast("long").alias("n_distinct_words"),
-        "dup_word_frac",
-        "top_word",
-        "top_word_frac",
-        "top_bigram",
-        "top_bigram_frac",
-    )
-
-
-def q_global_shuffle(spark, sf_dir):
-    """Deterministic content-addressed global training order: every doc
-    gets a (shard, pos) coordinate from the md5-60 order key. Per-row
-    output pins the entire permutation — shard assignment AND the exact
-    rank within every shard."""
-    from scotty_window_processor_spark.plans.sampling import global_shuffle
-
-    return global_shuffle(_docs(spark, sf_dir), "doc_id", n_shards=_SHUF_SHARDS).select(
-        "doc_id", "shard", "pos"
-    )
-
-
 def q_transcript_audit(spark, sf_dir):
     """Per-conversation ingestion-integrity audit (events as
     transcripts: user_id plays conv_id, event_id the stable turn order,
@@ -941,109 +609,6 @@ def q_transcript_audit(spark, sf_dir):
     )
 
     return transcript_integrity_audit(_events(spark, sf_dir))
-
-
-def q_ann_cosine_topk(spark, sf_dir):
-    from scotty_window_processor_spark.plans.similarity import cosine_topk_bruteforce
-
-    emb = _emb(spark, sf_dir)
-    return cosine_topk_bruteforce(emb, emb.where(F.col("vec_id") < 5), k=10)
-
-
-EMB_DIM = 64  # embeddings-table contract (TESTDATA.md): array<float> of 64
-
-
-def q_ann_cosine_lsh(spark, sf_dir):
-    from scotty_window_processor_spark.plans.similarity import cosine_topk_lsh
-
-    emb = _emb(spark, sf_dir)
-    return cosine_topk_lsh(emb, emb.where(F.col("vec_id") < 5), k=10, dim=EMB_DIM)
-
-
-def q_ann_cosine_ivf(spark, sf_dir):
-    """IVF-bucketed ANN (coarse quantizer + inverted lists): the scale
-    path named alongside LSH in the build brief. Deterministic corpus-head
-    centroids make the whole index DuckDB-reproducible; assignment is one
-    shuffle-free Arrow-batched matmul, candidates come from the
-    centroid-id equi-join."""
-    from scotty_window_processor_spark.plans.similarity import ann_cosine_ivf
-
-    emb = _emb(spark, sf_dir)
-    return ann_cosine_ivf(
-        emb, emb.where(F.col("vec_id") < 5), k=10, n_centroids=16, n_probe=2
-    )
-
-
-def q_embedding_near_dup(spark, sf_dir):
-    """Embedding-cosine near-duplicate pairs: LSH candidate generation +
-    exact cosine verify (same hyperplane family as ann_cosine_lsh, so the
-    oracle replays it bit-for-bit). max_bucket_size=128 is the measured
-    default from the r5 cap/recall sweep (BENCH/neardup_cap.md): recall
-    1.0 vs uncapped at sf1.0 (20k vecs) while bounding any bucket's
-    candidate contribution to 128^2/2 pairs; the cap is a deterministic
-    function of the bucket assignment, replicated in the oracle SQL."""
-    from scotty_window_processor_spark.plans.similarity import embedding_near_dup
-
-    return embedding_near_dup(
-        _emb(spark, sf_dir), threshold=0.2, dim=EMB_DIM, max_bucket_size=128
-    )
-
-
-def q_multimodal_decode(spark, sf_dir):
-    from scotty_window_processor_spark.plans.multimodal import attach_binary_payload, decode_metadata
-
-    return decode_metadata(attach_binary_payload(_docs(spark, sf_dir)))
-
-
-def q_multimodal_resize(spark, sf_dir):
-    """Image-resize plumbing (brief: decode / feature-extract / resize /
-    frame-sample): Arrow-batched mapInPandas over the image rows, binary
-    in → resized binary + target dims out, no shuffle. The resizer is the
-    documented deterministic stub (no PIL in this container) behind the
-    same swap seam as the decode codec; the gate hashes the resized bytes
-    so the whole byte-level contract is oracle-checked."""
-    from scotty_window_processor_spark.plans.multimodal import (
-        attach_binary_payload,
-        resize_images,
-    )
-
-    out = resize_images(attach_binary_payload(_docs(spark, sf_dir)))
-    return out.select(
-        "doc_id", "width", "height", F.md5(F.col("resized")).alias("resized_md5")
-    )
-
-
-def q_multimodal_features(spark, sf_dir):
-    """Feature-extraction plumbing: binary payload → fixed-dim vector per
-    row in one Arrow-batched mapInPandas stage (where an ONNX/torch
-    session would run per batch on a real cluster). Deterministic integer
-    stub features derived from the decoded metadata keep the gate exact;
-    the vector is CSV-flattened on both sides for a type-stable hash."""
-    from scotty_window_processor_spark.plans.multimodal import (
-        attach_binary_payload,
-        extract_features,
-    )
-
-    out = extract_features(attach_binary_payload(_docs(spark, sf_dir)))
-    return out.select(
-        "doc_id",
-        "media_type",
-        F.concat_ws(
-            ",", F.transform(F.col("features"), lambda x: x.cast("string"))
-        ).alias("features_csv"),
-    )
-
-
-def q_frame_sample(spark, sf_dir):
-    """Video frame-sampling fan-out over the decoded metadata (one row per
-    sampled frame index, partition-local explode)."""
-    from scotty_window_processor_spark.plans.multimodal import (
-        attach_binary_payload,
-        decode_metadata,
-        frame_sample,
-    )
-
-    return frame_sample(decode_metadata(attach_binary_payload(_docs(spark, sf_dir))), every_n=10)
 
 
 # --------------------------------------------------------------------------
@@ -1096,11 +661,10 @@ def _write_range_files(df, ts, n_files, src, idx0):
     import tempfile
 
     tmp = tempfile.mkdtemp(prefix="scotty_gate_chunks_")
-    # secondary sort on event_id (when present): for ts-tied duplicates
-    # the row stream_dedup_exact keeps is otherwise arrival-order
-    # dependent, while the oracle breaks ties by (ts, event_id) — current
-    # testdata has no such ties, but the stable key removes the hazard at
-    # any scale factor (ADVICE r5)
+    # secondary sort on event_id (when present): ts-tied rows otherwise
+    # arrive in an arbitrary order, while the oracles break ties by
+    # (ts, event_id) — current testdata has no such ties, but the stable
+    # key removes the hazard at any scale factor (ADVICE r5)
     sort_cols = [ts] + (["event_id"] if "event_id" in df.columns else [])
     (
         df.repartitionByRange(n_files, F.col(ts))
@@ -1686,31 +1250,6 @@ def q_cep_funnel(spark, sf_dir):
     )
 
 
-def q_stream_dedup_exact(spark, sf_dir):
-    """Streaming first-wins dedup on (user_id, event_type): Structured
-    Streaming's watermark-TTL'd dedup state replayed over the ts-ordered
-    range files, with the TTL spanning the whole stream so the kept set
-    equals the batch first-occurrence oracle (row_number() = 1 per key
-    by ts). State ∝ distinct keys in the horizon, not stream length."""
-    from scotty_window_processor_spark.streaming.dedup import stream_dedup_exact
-
-    def build(stream):
-        return stream_dedup_exact(stream, ["user_id", "event_type"], ts="ts")
-
-    def project(events):
-        return events.select("user_id", "ts", "event_type", "event_id")
-
-    return _replay_events_stream(
-        spark, sf_dir, windows=None, aggs=None,
-        select_cols=[
-            F.col("user_id"),
-            F.col("event_type"),
-            F.col("event_id").alias("first_event_id"),
-        ],
-        project=project, build=build,
-    )
-
-
 def q_stream_cep_funnel(spark, sf_dir):
     """Streaming replay of the same funnel through the stateful CEP
     operator (streaming/cep.py): per-key tail state carries partial
@@ -1925,16 +1464,10 @@ def q_stream_cep_unbounded_retry(spark, sf_dir):
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    # ORDER MATTERS: the driver's correctness harness walks this dict in
-    # insertion order and CORRECTNESS_r04 recorded exactly the first 50
-    # entries — whatever the limit is (entry cap or wall-clock budget),
-    # the tail is what gets dropped. The three phased streaming gates
-    # (kill-mid-stream restart ×2, live window add — the operationally
-    # critical exactly-once evidence) therefore sit right after the core
-    # kernel gates, and the two gates whose coverage is most redundant
-    # (multimodal resize/features: same mapInPandas plumbing contract as
-    # the decode/frame_sample gates that DO have driver rows, plus
-    # pytest seam tests) sit last.
+    # Every gate has an oracle_sql() entry of the same name. The
+    # correctness record keeps only the first 50 entries of this dict
+    # (CORRECTNESS_r06.json has exactly 50), so it stays at 50 or fewer
+    # and every gate is recorded; tests/test_imports.py pins both.
     return {
         "tumbling_1h": q_tumbling_1h,
         "sliding_1h_15m": q_sliding_1h_15m,
@@ -1960,32 +1493,14 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "revenue_cube": q_revenue_cube,
         "interval_join_1h": q_interval_join_1h,
         "top_purchase_users": q_top_purchase_users,
-        "dedup_exact": q_dedup_exact,
-        "dedup_ngram_jaccard": q_dedup_ngram_jaccard,
-        "dedup_minhash_lsh": q_dedup_minhash_lsh,
-        "dedup_simhash": q_dedup_simhash,
-        "dedup_cluster_canonical": q_dedup_cluster_canonical,
-        "dedup_incremental": q_dedup_incremental,
         "asof_view_purchase": q_asof_view_purchase,
         "asof_tolerance": q_asof_tolerance,
         "stream_asof_view_purchase": q_stream_asof_view_purchase,
-        "chunk_documents": q_chunk_documents,
-        "text_quality": q_text_quality,
-        "token_count": q_token_count,
-        "language_id": q_language_id,
-        "doc_fingerprint": q_fingerprint,
-        "ann_cosine_topk": q_ann_cosine_topk,
-        "ann_cosine_lsh": q_ann_cosine_lsh,
-        "ann_cosine_ivf": q_ann_cosine_ivf,
-        "embedding_near_dup": q_embedding_near_dup,
-        "multimodal_decode": q_multimodal_decode,
-        "frame_sample": q_frame_sample,
         "stream_tumbling_1h": q_stream_tumbling_1h,
         "stream_session_30m": q_stream_session_30m,
         "stream_quantile_6h": q_stream_quantile_6h,
         "stream_payload_6h": q_stream_payload_6h,
         "cep_funnel": q_cep_funnel,
-        "stream_dedup_exact": q_stream_dedup_exact,
         "stream_cep_funnel": q_stream_cep_funnel,
         "cep_retry_funnel": q_cep_retry_funnel,
         "stream_cep_retry_funnel": q_stream_cep_retry_funnel,
@@ -1998,19 +1513,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "stream_count_tumbling_25": q_stream_count_tumbling_25,
         "stream_distinct_6h": q_stream_distinct_6h,
         "stream_cep_retry_funnel_capture": q_stream_cep_retry_funnel_capture,
-        "dataset_split": q_dataset_split,
-        "stratified_sample": q_stratified_sample,
-        "mixture_by_lang": q_mixture_by_lang,
-        "stratified_sample_exact": q_stratified_sample_exact,
-        "pack_documents": q_pack_documents,
-        "weighted_sample": q_weighted_sample,
-        "decontaminate": q_decontaminate,
-        "pii_scrub": q_pii_scrub,
-        "repetition_signals": q_repetition_signals,
-        "global_shuffle": q_global_shuffle,
         "transcript_audit": q_transcript_audit,
-        "multimodal_resize": q_multimodal_resize,
-        "multimodal_features": q_multimodal_features,
     }
 
 
@@ -2261,299 +1764,6 @@ WITH per_user AS (
 SELECT user_id, total_value, n, rnk FROM ranked WHERE rnk <= 20
 """
 
-_DEDUP_EXACT = """
-SELECT md5(regexp_replace(lower(trim(text)), '\\s+', ' ', 'g')) AS content_hash,
-       min(doc_id) AS keep_id,
-       count(*) AS dupes
-FROM documents
-GROUP BY content_hash
-"""
-
-_NGRAM_JACCARD = """
-WITH docs AS (
-  SELECT doc_id AS id,
-         list_distinct([
-           array_to_string(words[i:i+2], ' ')
-           FOR i IN range(1, greatest(len(words) - 2, 1) + 1)
-         ]) AS shingles
-  FROM (
-    SELECT doc_id,
-           string_split(regexp_replace(lower(trim(text)), '\\s+', ' ', 'g'), ' ') AS words
-    FROM documents
-  )
-), expl AS (
-  SELECT id, len(shingles) AS n_sh, unnest(shingles) AS sh FROM docs
-), freq AS (
-  SELECT sh, count(*) AS df FROM expl GROUP BY sh
-), kept AS (
-  SELECT e.id, e.n_sh, e.sh FROM expl e JOIN freq USING (sh) WHERE df <= 50
-), pairs AS (
-  SELECT a.id AS id_a, b.id AS id_b, a.n_sh AS n_a, b.n_sh AS n_b, count(*) AS inter
-  FROM kept a JOIN kept b USING (sh)
-  WHERE a.id < b.id
-  GROUP BY 1, 2, 3, 4
-)
-SELECT id_a, id_b,
-       round(inter * 1.0 / (n_a + n_b - inter), 6) AS jaccard
-FROM pairs
-WHERE inter * 1.0 / (n_a + n_b - inter) >= 0.35
-"""
-
-_TEXT_QUALITY = """
-WITH t AS (
-  SELECT doc_id, text,
-         length(text) AS n_chars,
-         len(string_split_regex(lower(trim(text)), '\\s+')) AS n_words,
-         len(list_filter(string_split_regex(lower(trim(text)), '\\s+'),
-             w -> w IN ('the','and','of','to','a','in','is','it','that','for'))) AS stop,
-         length(text) - length(regexp_replace(text, '[0-9]', '', 'g')) AS n_digits,
-         length(text) - length(regexp_replace(text, '[^\\w\\s]', '', 'g')) AS n_punct
-  FROM documents
-)
-SELECT doc_id, n_chars, n_words,
-       round((n_chars - n_words + 1) * 1.0 / n_words, 4) AS avg_word_len,
-       round(stop * 1.0 / n_words, 4) AS stopword_ratio,
-       round(n_digits * 1.0 / n_chars, 4) AS digit_ratio,
-       round(n_punct * 1.0 / n_chars, 4) AS punct_ratio,
-       CASE WHEN n_words >= 10
-             AND (n_chars - n_words + 1) * 1.0 / n_words >= 2
-             AND (n_chars - n_words + 1) * 1.0 / n_words <= 12
-             AND n_digits * 1.0 / n_chars < 0.3
-        THEN 1 ELSE 0 END AS passes_quality
-FROM t
-"""
-
-_TOKEN_COUNT = """
-SELECT doc_id,
-       len(string_split_regex(lower(trim(text)), '\\s+')) AS ws_tokens,
-       len(regexp_extract_all(text, '[A-Za-z]+|[0-9]+|[^A-Za-z0-9 ]')) AS regex_tokens,
-       CAST(ceil(len(regexp_extract_all(text, '[A-Za-z]+|[0-9]+|[^A-Za-z0-9 ]')) * 1.3) AS BIGINT) AS est_bpe_tokens
-FROM documents
-"""
-
-_LANGUAGE_ID = """
-WITH w AS (
-  SELECT doc_id, string_split_regex(lower(trim(text)), '\\s+') AS words FROM documents
-), s AS (
-  SELECT doc_id,
-    len(list_filter(words, x -> x IN ('the','and','of','to','a','in','is','it','that','for'))) AS score_en,
-    len(list_filter(words, x -> x IN ('der','die','und','das','ist','ein','nicht','mit','ich','auf'))) AS score_de,
-    len(list_filter(words, x -> x IN ('le','la','et','les','des','est','un','une','dans','que'))) AS score_fr
-  FROM w
-)
-SELECT doc_id, score_en, score_de, score_fr,
-       CASE WHEN score_fr > greatest(score_en, score_de) THEN 'fr'
-            WHEN score_de > score_en THEN 'de'
-            WHEN score_en > 0 THEN 'en'
-            ELSE 'und' END AS pred_lang
-FROM s
-"""
-
-# --- portable-hash oracles -------------------------------------------------
-# Every hash below is md5-based (plans.portable_hash.md5_60) so DuckDB can
-# reproduce it bit-exactly: Spark conv(substring(md5(x),1,15),16,10) ==
-# DuckDB ('0x' || left(md5(x),15))::BIGINT.
-
-
-def _md5_60_sql(expr: str) -> str:
-    from scotty_window_processor_spark.plans.portable_hash import md5_60_sql
-
-    return md5_60_sql(expr)  # single source of truth for the hash formula
-
-
-_FINGERPRINT = f"""
-WITH w AS (
-  SELECT doc_id, string_split_regex(lower(trim(text)), '\\s+') AS words FROM documents
-), g AS (
-  SELECT doc_id,
-         [{_md5_60_sql("array_to_string(words[i:i+4], ' ')")}
-          FOR i IN range(1, greatest(len(words) - 4, 1) + 1)] AS grams
-  FROM w
-)
-SELECT doc_id,
-       list_aggregate(grams, 'min') AS fp_min,
-       list_aggregate(grams, 'max') AS fp_max,
-       len(grams) AS n_grams
-FROM g
-"""
-
-
-def _simhash_sql() -> str:
-    """60-bit simhash + 4×15-bit-quarter bucketing, generated column-wise
-    (60 vote aggregates → one simhash expression), mirroring
-    plans.dedup.simhash/dedup_simhash exactly."""
-    votes = ",\n         ".join(
-        f"sum(CASE WHEN (wh >> {b}) & 1 = 1 THEN 1 ELSE -1 END) AS v{b}" for b in range(60)
-    )
-    bits = " + ".join(f"(CASE WHEN v{b} > 0 THEN {1 << b} ELSE 0 END)" for b in range(60))
-    return f"""
-WITH w AS (
-  SELECT doc_id AS id, unnest(string_split_regex(lower(trim(text)), '\\s+')) AS word
-  FROM documents
-), h AS (
-  SELECT id, {_md5_60_sql('word')} AS wh FROM w
-), v AS (
-  SELECT id,
-         {votes}
-  FROM h GROUP BY id
-), s AS (
-  SELECT id, {bits} AS simhash FROM v
-), bkt AS (
-  SELECT id, simhash, t.tbl, (simhash >> (t.tbl * 15)) & 32767 AS bucket
-  FROM s, (SELECT unnest(range(4)) AS tbl) t
-), pairs AS (
-  SELECT DISTINCT a.id AS id_a, b.id AS id_b,
-         bit_count(xor(a.simhash, b.simhash)) AS hamming
-  FROM bkt a JOIN bkt b ON a.tbl = b.tbl AND a.bucket = b.bucket AND a.id < b.id
-)
-SELECT id_a, id_b, hamming FROM pairs WHERE hamming <= 3
-"""
-
-
-def _dataset_split_sql() -> str:
-    """Oracle for q_dataset_split: the CASE over cumulative integer
-    thresholds is emitted by the SAME helper the operator's docstring
-    pins (plans.sampling.split_thresholds_sql), so the two can never
-    drift — identical salt, identical md5-60 bucket, identical
-    threshold rounding."""
-    from scotty_window_processor_spark.plans.sampling import split_thresholds_sql
-
-    case = split_thresholds_sql("doc_id", _SPLITS)
-    return f"""
-SELECT {case} AS split, lang,
-       count(*) AS n_docs, sum(n_chars) AS sum_chars
-FROM documents GROUP BY 1, 2
-"""
-
-
-def _decontaminate_sql() -> str:
-    """Oracle for q_decontaminate: the split CASE comes from the SAME
-    helper the operator pins (plans.sampling.split_thresholds_sql), and
-    the trigram shingles are the string twins of the xxhash64 keys the
-    Spark side joins on (distinct-set cardinalities are 1:1 up to 64-bit
-    collisions, as in the ngram-Jaccard gate)."""
-    from scotty_window_processor_spark.plans.sampling import split_thresholds_sql
-
-    case = split_thresholds_sql("doc_id", _SPLITS)
-    return f"""
-WITH assigned AS (
-  SELECT doc_id, text, {case} AS split FROM documents
-), sh AS (
-  SELECT doc_id, split,
-         list_distinct([
-           array_to_string(words[i:i+2], ' ')
-           FOR i IN range(1, greatest(len(words) - 2, 1) + 1)
-         ]) AS shingles
-  FROM (
-    SELECT doc_id, split,
-           string_split(regexp_replace(lower(trim(text)), '\\s+', ' ', 'g'), ' ') AS words
-    FROM assigned
-  )
-), ev AS (
-  SELECT DISTINCT unnest(shingles) AS s FROM sh WHERE split = 'test'
-), expl AS (
-  SELECT doc_id, len(shingles) AS n_ngrams, unnest(shingles) AS sh
-  FROM sh WHERE split = 'train'
-), m AS (
-  SELECT e.doc_id, e.n_ngrams, count(v.s) AS n_matched
-  FROM expl e LEFT JOIN ev v ON e.sh = v.s
-  GROUP BY 1, 2
-)
-SELECT doc_id, CAST(n_ngrams AS BIGINT) AS n_ngrams,
-       CAST(n_matched AS BIGINT) AS n_matched,
-       round(n_matched * 1.0 / n_ngrams, 6) AS contamination,
-       (n_matched * 1.0 / n_ngrams) >= {_DECON_THRESHOLD} AS contaminated
-FROM m
-"""
-
-
-# the PII-injection concat, shared textually by the pii_scrub oracle; the
-# Spark twin is _augmented_docs (same arms, same lpad widths, same order)
-_AUG_TEXT_SQL = """text
-  || CASE WHEN doc_id % 5 = 0 THEN ' contact user' || CAST(doc_id AS VARCHAR) || '@example.com' ELSE '' END
-  || CASE WHEN doc_id % 7 = 0 THEN ' from 10.' || CAST(doc_id % 200 AS VARCHAR) || '.0.' || CAST(doc_id % 250 AS VARCHAR) ELSE '' END
-  || CASE WHEN doc_id % 11 = 0 THEN ' call 555-' || lpad(CAST(doc_id % 1000 AS VARCHAR), 3, '0') || '-0199' ELSE '' END
-  || CASE WHEN doc_id % 13 = 0 THEN ' ssn 123-45-' || lpad(CAST(doc_id % 10000 AS VARCHAR), 4, '0') ELSE '' END"""
-
-
-def _pii_scrub_sql() -> str:
-    """Oracle for q_pii_scrub: patterns interpolated from the SAME
-    PII_PATTERNS tuple the operator compiles (restricted to syntax with
-    identical Java-regex/RE2 semantics), counts on the original text,
-    redaction applied in the same declaration order."""
-    from scotty_window_processor_spark.plans.hygiene import PII_PATTERNS
-
-    counts = ",\n       ".join(
-        f"CAST(len(regexp_extract_all(text, '{pat}')) AS BIGINT) AS n_{name}"
-        for name, pat, _ in PII_PATTERNS
-    )
-    clean = "text"
-    for _, pat, token in PII_PATTERNS:
-        clean = f"regexp_replace({clean}, '{pat}', '{token}', 'g')"
-    return f"""
-WITH aug AS (
-  SELECT doc_id, {_AUG_TEXT_SQL} AS text FROM documents
-)
-SELECT doc_id,
-       {counts},
-       {clean} AS clean_text
-FROM aug
-"""
-
-
-_REPETITION_SIGNALS = """
-WITH w AS (
-  SELECT doc_id,
-         unnest(string_split(regexp_replace(lower(trim(text)), '\\s+', ' ', 'g'), ' ')) AS tok
-  FROM documents
-), wc AS (
-  SELECT doc_id, tok, count(*) AS cnt FROM w GROUP BY 1, 2
-), wr AS (
-  SELECT *, row_number() OVER (PARTITION BY doc_id ORDER BY cnt DESC, tok ASC) AS rk FROM wc
-), ws AS (
-  SELECT doc_id, CAST(sum(cnt) AS BIGINT) AS n_words,
-         CAST(count(*) AS BIGINT) AS n_distinct_words,
-         max(CASE WHEN rk = 1 THEN tok END) AS top_word,
-         max(CASE WHEN rk = 1 THEN cnt END) AS topc
-  FROM wr GROUP BY 1
-), b AS (
-  SELECT doc_id,
-         unnest([array_to_string(words[i:i+1], ' ') FOR i IN range(1, len(words))]) AS tok
-  FROM (
-    SELECT doc_id,
-           string_split(regexp_replace(lower(trim(text)), '\\s+', ' ', 'g'), ' ') AS words
-    FROM documents
-  )
-), bc AS (
-  SELECT doc_id, tok, count(*) AS cnt FROM b GROUP BY 1, 2
-), br AS (
-  SELECT *, row_number() OVER (PARTITION BY doc_id ORDER BY cnt DESC, tok ASC) AS rk FROM bc
-), bs AS (
-  SELECT doc_id, sum(cnt) AS bi_total,
-         max(CASE WHEN rk = 1 THEN tok END) AS top_bigram,
-         max(CASE WHEN rk = 1 THEN cnt END) AS bc_top
-  FROM br GROUP BY 1
-)
-SELECT ws.doc_id, n_words, n_distinct_words,
-       round(1 - n_distinct_words * 1.0 / n_words, 6) AS dup_word_frac,
-       top_word, round(topc * 1.0 / n_words, 6) AS top_word_frac,
-       top_bigram,
-       coalesce(round(bc_top * 1.0 / bi_total, 6), 0.0) AS top_bigram_frac
-FROM ws LEFT JOIN bs USING (doc_id)
-"""
-
-
-_STREAM_DEDUP_EXACT = """
-SELECT user_id, event_type, event_id AS first_event_id
-FROM (
-  SELECT user_id, event_type, event_id,
-         row_number() OVER (PARTITION BY user_id, event_type
-                            ORDER BY ts, event_id) AS rn
-  FROM events
-)
-WHERE rn = 1
-"""
-
 
 _TRANSCRIPT_AUDIT = """
 WITH t AS (
@@ -2576,365 +1786,6 @@ FROM t GROUP BY user_id
 """
 
 
-def _global_shuffle_sql() -> str:
-    """Oracle for q_global_shuffle: the identical md5-60 order key
-    (plans.portable_hash contract), shard = key mod n_shards, pos =
-    rank within shard by (key, doc_id)."""
-    key = _md5_60_sql("'shuffle-v1' || cast(doc_id as varchar)")
-    return f"""
-SELECT doc_id,
-       CAST(({key}) % {_SHUF_SHARDS} AS INTEGER) AS shard,
-       CAST(row_number() OVER (
-            PARTITION BY ({key}) % {_SHUF_SHARDS}
-            ORDER BY ({key}), doc_id) AS BIGINT) AS pos
-FROM documents
-"""
-
-
-def _stratified_sample_sql() -> str:
-    """Oracle for q_stratified_sample: per-stratum keep-rate by exact
-    integer division (DuckDB ``//`` == Spark ``div``), same salt and
-    md5-60 bucket as plans.sampling.stratified_sample_cap."""
-    from scotty_window_processor_spark.plans.sampling import DENOM
-
-    salted = "'sample-v1' || cast(doc_id as varchar)"
-    bucket = f"(({_md5_60_sql(salted)}) % {DENOM})"
-    return f"""
-WITH sizes AS (
-  SELECT lang, source, count(*) AS sz FROM documents GROUP BY 1, 2
-)
-SELECT d.lang, d.source,
-       count(*) AS n_kept, sum(d.n_chars) AS sum_chars
-FROM documents d JOIN sizes s USING (lang, source)
-WHERE {bucket} < least({DENOM}, {_SAMPLE_CAP * DENOM} // s.sz)
-GROUP BY 1, 2
-"""
-
-
-def _mixture_by_lang_sql() -> str:
-    """Oracle for q_mixture_by_lang: kept-row membership SQL is emitted
-    by the SAME helper the operator pins (plans.sampling.
-    mixture_kept_sql) — identical salt, bucket, and 64-bit integer
-    threshold arithmetic — then aggregated per lang."""
-    from scotty_window_processor_spark.plans.sampling import mixture_kept_sql
-
-    kept = mixture_kept_sql("documents", "lang", _MIX_WEIGHTS, "doc_id")
-    return f"""
-SELECT lang, count(*) AS n_kept, sum(n_chars) AS sum_chars
-FROM ({kept}) kept GROUP BY 1
-"""
-
-
-def _stratified_sample_exact_sql() -> str:
-    """Oracle for q_stratified_sample_exact: the same stable total order
-    (md5-60 bucket, doc_id) ranked per (lang, source) — row_number is
-    deterministic because doc_id is unique within a stratum."""
-    from scotty_window_processor_spark.plans.sampling import DENOM
-
-    salted = "'sample-v1' || cast(doc_id as varchar)"
-    bucket = f"(({_md5_60_sql(salted)}) % {DENOM})"
-    return f"""
-SELECT lang, source, doc_id, sample_rank, n_chars FROM (
-  SELECT lang, source, doc_id, n_chars,
-         row_number() OVER (PARTITION BY lang, source
-                            ORDER BY {bucket}, doc_id) AS sample_rank
-  FROM documents
-) ranked WHERE sample_rank <= {_EXACT_K}
-"""
-
-
-def _pack_documents_sql() -> str:
-    """Oracle for q_pack_documents: the layout SQL is emitted by the
-    SAME helper the operator pins (plans.packing.pack_sequences_sql) —
-    identical shard hash, layout order, and chunk arithmetic."""
-    from scotty_window_processor_spark.plans.packing import pack_sequences_sql
-
-    laid = pack_sequences_sql(
-        "documents", "doc_id", "n_chars", _PACK_CTX, n_shards=_PACK_SHARDS
-    )
-    return f"""
-SELECT doc_id, pack_shard, pack_start, pack_seq, pack_cross
-FROM ({laid}) packed
-"""
-
-
-def _weighted_sample_sql() -> str:
-    """Oracle for q_weighted_sample: identical integer-millionths weight
-    (DuckDB ``//`` == Spark ``div`` on the non-negative operands) over
-    the identical md5-60 bucket."""
-    from scotty_window_processor_spark.plans.sampling import DENOM
-
-    salted = "'wsample-v1' || cast(doc_id as varchar)"
-    bucket = f"(({_md5_60_sql(salted)}) % {DENOM})"
-    w = f"least({DENOM}, (n_chars * {DENOM}) // {_WSAMPLE_SCALE})"
-    return f"""
-SELECT lang, source, count(*) AS n_kept, sum(n_chars) AS sum_chars
-FROM documents WHERE {bucket} < {w}
-GROUP BY 1, 2
-"""
-
-
-def _gram_chain_sql(arr: str, i: str, n: int, a: int, p: int) -> str:
-    """The portable polynomial shingle chain (plans.dedup._chain_step) as
-    SQL: NULL (past-the-end) words are skipped, all intermediates < 2^62."""
-    x = "0"
-    for k in range(n):
-        e = f"{arr}[{i}+{k}]"
-        x = f"(CASE WHEN {e} IS NULL THEN {x} ELSE (({x}) * {a} % {p} + {e}) % {p} END)"
-    return x
-
-
-def _minhash_sig_ctes(k: int, n: int) -> str:
-    """The shared CTE chain computing per-doc MinHash signatures in SQL —
-    identical shingle-key chains and (a,b) hash family constants as
-    plans.dedup.minhash_signatures. Yields CTEs w/docs/expl/sig where
-    sig is (id, h0..h{k-1})."""
-    from scotty_window_processor_spark.plans.dedup import CHAIN_A1, CHAIN_A2, PACK
-    from scotty_window_processor_spark.plans.portable_hash import MINHASH_P, minhash_params
-
-    params = minhash_params(k)
-    mins = ",\n         ".join(
-        f"min((hm * {a} + {b}) % {MINHASH_P}) AS h{i}" for i, (a, b) in enumerate(params)
-    )
-    gram = (
-        f"({_gram_chain_sql('wh', 'i', n, CHAIN_A1, MINHASH_P)}) * {PACK} "
-        f"+ ({_gram_chain_sql('wh', 'i', n, CHAIN_A2, MINHASH_P)})"
-    )
-    return f"""w AS (
-  SELECT doc_id AS id,
-         [{_md5_60_sql('x')} % {MINHASH_P}
-          FOR x IN string_split(regexp_replace(lower(trim(text)), '\\s+', ' ', 'g'), ' ')] AS wh
-  FROM documents
-), docs AS (
-  SELECT id,
-         list_distinct([
-           {gram}
-           FOR i IN range(1, greatest(len(wh) - {n} + 1, 1) + 1)
-         ]) AS sh
-  FROM w
-), expl AS (
-  SELECT id, unnest(sh) % {MINHASH_P} AS hm FROM docs
-), sig AS (
-  SELECT id,
-         {mins}
-  FROM expl GROUP BY id
-)"""
-
-
-def _band_selects_sql(k: int, bands: int, src: str = "sig", extra: str = "") -> str:
-    """UNION ALL of one SELECT per band producing (id[, extra], band,
-    bucket) — the SQL twin of plans.dedup._band_buckets (bucket is the
-    comma-joined value string; the Spark side xxhash64s the same string,
-    collision structure identical)."""
-    rows = k // bands
-    return "\n  UNION ALL\n".join(
-        "  SELECT id, {extra}{b} AS band, concat_ws(',', {cols}) AS bucket FROM {src}".format(
-            b=b,
-            extra=extra,
-            src=src,
-            cols=", ".join(f"h{b * rows + r}" for r in range(rows)),
-        )
-        for b in range(bands)
-    )
-
-
-def _minhash_lsh_sql(k: int = 32, bands: int = 8, threshold: float = 0.35, n: int = 3) -> str:
-    """Full MinHash+LSH+verify pipeline in SQL with the same shingle-key
-    chains and (a,b) hash family constants as plans.dedup."""
-    return f"""
-WITH {_minhash_sig_ctes(k, n)}, bkt AS (
-{_band_selects_sql(k, bands)}
-), cand AS (
-  SELECT DISTINCT a.id AS id_a, b.id AS id_b
-  FROM bkt a JOIN bkt b USING (band, bucket)
-  WHERE a.id < b.id
-), verify AS (
-  SELECT c.id_a, c.id_b,
-         len(list_intersect(da.sh, db.sh)) AS inter,
-         len(da.sh) + len(db.sh) - len(list_intersect(da.sh, db.sh)) AS uni
-  FROM cand c JOIN docs da ON c.id_a = da.id JOIN docs db ON c.id_b = db.id
-)
-SELECT id_a, id_b, round(inter * 1.0 / uni, 6) AS jaccard
-FROM verify WHERE inter * 1.0 / uni >= {threshold}
-"""
-
-
-_ANN_TOPK = """
-WITH c AS (
-  SELECT vec_id AS neighbor_id, embedding::DOUBLE[] AS cvec FROM embeddings
-), q AS (
-  SELECT vec_id AS query_id, embedding::DOUBLE[] AS qvec FROM embeddings WHERE vec_id < 5
-), scored AS (
-  SELECT query_id, neighbor_id,
-         round(list_inner_product(cvec, qvec)
-               / (sqrt(list_inner_product(cvec, cvec)) * sqrt(list_inner_product(qvec, qvec))),
-               6) AS cos
-  FROM c, q WHERE neighbor_id <> query_id
-), ranked AS (
-  SELECT query_id, neighbor_id,
-         row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, neighbor_id) AS "rank"
-  FROM scored
-)
-SELECT query_id, neighbor_id, "rank" FROM ranked WHERE "rank" <= 10
-"""
-
-
-def _ann_lsh_sql(k: int = 10, dim: int = 64, planes_per_table: int = 10, tables: int = 6) -> str:
-    """Random-hyperplane LSH + exact rescoring in SQL, embedding the same
-    deterministic hyperplane constants as plans.similarity._hyperplane."""
-    from scotty_window_processor_spark.plans.similarity import _hyperplane
-
-    sig_terms = []
-    for t in range(tables):
-        bits = " + ".join(
-            f"(CASE WHEN list_inner_product(v, {_hyperplane(dim, t * planes_per_table + p)!r}"
-            f"::DOUBLE[]) > 0 THEN {1 << p} ELSE 0 END)"
-            for p in range(planes_per_table)
-        )
-        sig_terms.append(f"SELECT id, v, {t} AS tbl, {bits} AS bucket FROM vecs")
-    buckets = "\n  UNION ALL\n  ".join(sig_terms)
-    return f"""
-WITH vecs AS (
-  SELECT vec_id AS id, embedding::DOUBLE[] AS v FROM embeddings
-), buckets AS (
-  {buckets}
-), qb AS (
-  SELECT * FROM buckets WHERE id < 5
-), cand AS (
-  SELECT DISTINCT q.id AS query_id, c.id AS neighbor_id
-  FROM buckets c JOIN qb q ON c.tbl = q.tbl AND c.bucket = q.bucket
-  WHERE c.id <> q.id
-), scored AS (
-  SELECT cand.query_id, cand.neighbor_id,
-         round(list_inner_product(cv.v, qv.v)
-               / (sqrt(list_inner_product(cv.v, cv.v)) * sqrt(list_inner_product(qv.v, qv.v))),
-               6) AS cos
-  FROM cand JOIN vecs cv ON cand.neighbor_id = cv.id JOIN vecs qv ON cand.query_id = qv.id
-), ranked AS (
-  SELECT query_id, neighbor_id,
-         row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, neighbor_id) AS "rank"
-  FROM scored
-)
-SELECT query_id, neighbor_id, "rank" FROM ranked WHERE "rank" <= {k}
-"""
-
-
-def _near_dup_sql(threshold: float = 0.2, dim: int = 64, planes_per_table: int = 10,
-                  tables: int = 6, max_bucket_size: int = 128) -> str:
-    """embedding_near_dup replay: same hyperplanes, all-pairs-in-bucket
-    candidates restricted to buckets at or under the density cap (the
-    same deterministic exclusion the Spark side applies), exact cosine
-    verify."""
-    from scotty_window_processor_spark.plans.similarity import _hyperplane
-
-    sig_terms = []
-    for t in range(tables):
-        bits = " + ".join(
-            f"(CASE WHEN list_inner_product(v, {_hyperplane(dim, t * planes_per_table + p)!r}"
-            f"::DOUBLE[]) > 0 THEN {1 << p} ELSE 0 END)"
-            for p in range(planes_per_table)
-        )
-        sig_terms.append(f"SELECT id, {t} AS tbl, {bits} AS bucket FROM vecs")
-    buckets = "\n  UNION ALL\n  ".join(sig_terms)
-    return f"""
-WITH vecs AS (
-  SELECT vec_id AS id, embedding::DOUBLE[] AS v FROM embeddings
-), buckets AS (
-  {buckets}
-), kept AS (
-  SELECT tbl, bucket FROM buckets
-  GROUP BY tbl, bucket HAVING count(*) <= {max_bucket_size}
-), cand AS (
-  SELECT DISTINCT a.id AS id_a, b.id AS id_b
-  FROM buckets a
-  JOIN kept k ON a.tbl = k.tbl AND a.bucket = k.bucket
-  JOIN buckets b ON a.tbl = b.tbl AND a.bucket = b.bucket
-  WHERE a.id < b.id
-), scored AS (
-  SELECT cand.id_a, cand.id_b,
-         round(list_inner_product(va.v, vb.v)
-               / (sqrt(list_inner_product(va.v, va.v)) * sqrt(list_inner_product(vb.v, vb.v))),
-               6) AS cos
-  FROM cand JOIN vecs va ON cand.id_a = va.id JOIN vecs vb ON cand.id_b = vb.id
-)
-SELECT id_a, id_b, cos FROM scored WHERE cos >= {threshold}
-"""
-
-
-_FRAME_SAMPLE = f"""
-WITH t AS (
-  SELECT doc_id,
-         octet_length(encode(text)) AS n,
-         CASE ({_md5_60_sql('doc_id::VARCHAR')} % 3) + 1
-              WHEN 1 THEN 'image/png' WHEN 2 THEN 'audio/wav' ELSE 'video/mp4' END AS media
-  FROM documents
-)
-SELECT doc_id, unnest(range(0, 1 + n % 120, 10)) AS frame_idx
-FROM t WHERE media = 'video/mp4'
-"""
-
-
-_MULTIMODAL = f"""
-WITH t AS (
-  SELECT doc_id,
-         octet_length(encode(text)) AS n,
-         CASE ({_md5_60_sql('doc_id::VARCHAR')} % 3) + 1
-              WHEN 1 THEN 'image/png' WHEN 2 THEN 'audio/wav' ELSE 'video/mp4' END AS media
-  FROM documents
-)
-SELECT doc_id,
-       n AS byte_len,
-       CASE WHEN media = 'image/png' THEN 64 + n % 640
-            WHEN media = 'video/mp4' THEN 320 END AS width,
-       CASE WHEN media = 'image/png' THEN 64 + (n * 7) % 480
-            WHEN media = 'video/mp4' THEN 240 END AS height,
-       CASE WHEN media = 'video/mp4' THEN 1 + n % 120 END AS n_frames,
-       CASE media WHEN 'image/png' THEN 'png-stub'
-                  WHEN 'audio/wav' THEN 'pcm-stub'
-                  ELSE 'h264-stub' END AS codec
-FROM t
-"""
-
-# resize stub: payload[:max(16, n//4)] at the target dims; documents are
-# ASCII (verified across all SFs), so byte truncation == char truncation
-# and DuckDB's VARCHAR md5 reproduces Spark's binary md5 exactly
-_MULTIMODAL_RESIZE = f"""
-WITH t AS (
-  SELECT doc_id, text,
-         octet_length(encode(text)) AS n,
-         CASE ({_md5_60_sql('doc_id::VARCHAR')} % 3) + 1
-              WHEN 1 THEN 'image/png' WHEN 2 THEN 'audio/wav' ELSE 'video/mp4' END AS media
-  FROM documents
-)
-SELECT doc_id,
-       224 AS width, 224 AS height,
-       md5(substr(text, 1, greatest(16, n // 4))) AS resized_md5
-FROM t WHERE media = 'image/png'
-"""
-
-_MULTIMODAL_FEATURES = f"""
-WITH t AS (
-  SELECT doc_id,
-         octet_length(encode(text)) AS n,
-         CASE ({_md5_60_sql('doc_id::VARCHAR')} % 3) + 1
-              WHEN 1 THEN 'image/png' WHEN 2 THEN 'audio/wav' ELSE 'video/mp4' END AS media
-  FROM documents
-), d AS (
-  SELECT doc_id, media, n,
-         COALESCE(CASE WHEN media = 'image/png' THEN 64 + n % 640
-                       WHEN media = 'video/mp4' THEN 320 END, 0) AS w0,
-         COALESCE(CASE WHEN media = 'image/png' THEN 64 + (n * 7) % 480
-                       WHEN media = 'video/mp4' THEN 240 END, 0) AS h0,
-         COALESCE(CASE WHEN media = 'video/mp4' THEN 1 + n % 120 END, 0) AS nf0
-  FROM t
-)
-SELECT doc_id, media AS media_type,
-       array_to_string(list_transform(range(16), j ->
-         ((n*(j+1) + w0*(j+2) + h0*(j+3) + nf0*(j+4)) % 997)::VARCHAR), ',') AS features_csv
-FROM d
-"""
-
-
 _STREAM_JOIN_PAIRS = """
 SELECT e.user_id AS user_id, e.event_id AS err_id,
        epoch_ms(p.ts) AS pur_ts_ms, round(p.value, 2) AS pur_value
@@ -2942,53 +1793,6 @@ FROM (SELECT user_id, event_id, ts FROM events WHERE event_type = 'error') e
 JOIN (SELECT user_id, ts, value FROM events WHERE event_type = 'purchase') p
   ON e.user_id = p.user_id AND p.ts > e.ts
      AND p.ts <= e.ts + INTERVAL '1 hour'
-"""
-
-
-def _ann_ivf_sql(k: int = 10, n_centroids: int = 16, n_probe: int = 2) -> str:
-    """IVF replay: identical centroid set (corpus head), assignment
-    (round-6 cosine, ties to smallest cid) and probe selection as
-    plans.similarity.ann_cosine_ivf."""
-    cos = (
-        "round(list_inner_product({v}, cv)"
-        " / (sqrt(list_inner_product({v}, {v})) * sqrt(list_inner_product(cv, cv))), 6)"
-    )
-    return f"""
-WITH cent AS (
-  SELECT vec_id AS cid, embedding::DOUBLE[] AS cv FROM embeddings WHERE vec_id < {n_centroids}
-), corp AS (
-  SELECT vec_id AS neighbor_id, embedding::DOUBLE[] AS cvec FROM embeddings
-), assign AS (
-  SELECT neighbor_id, cid,
-         row_number() OVER (PARTITION BY neighbor_id
-                            ORDER BY {cos.format(v='cvec')} DESC, cid) AS rn
-  FROM corp, cent
-), a1 AS (
-  SELECT neighbor_id, cid FROM assign WHERE rn = 1
-), q AS (
-  SELECT vec_id AS query_id, embedding::DOUBLE[] AS qvec FROM embeddings WHERE vec_id < 5
-), probe AS (
-  SELECT query_id, cid,
-         row_number() OVER (PARTITION BY query_id
-                            ORDER BY {cos.format(v='qvec')} DESC, cid) AS rn
-  FROM q, cent
-), p1 AS (
-  SELECT query_id, cid FROM probe WHERE rn <= {n_probe}
-), scored AS (
-  SELECT p1.query_id, a1.neighbor_id,
-         round(list_inner_product(c.cvec, qq.qvec)
-               / (sqrt(list_inner_product(c.cvec, c.cvec))
-                  * sqrt(list_inner_product(qq.qvec, qq.qvec))), 6) AS cos
-  FROM p1 JOIN a1 USING (cid)
-       JOIN corp c ON c.neighbor_id = a1.neighbor_id
-       JOIN q qq ON qq.query_id = p1.query_id
-  WHERE a1.neighbor_id <> p1.query_id
-), ranked AS (
-  SELECT query_id, neighbor_id,
-         row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, neighbor_id) AS "rank"
-  FROM scored
-)
-SELECT query_id, neighbor_id, "rank" FROM ranked WHERE "rank" <= {k}
 """
 
 
@@ -3143,66 +1947,6 @@ WHERE s.event_type = 'view' AND p.event_type = 'purchase'
 """
 
 
-_INCR_NEW_MOD = 4  # doc_id % 4 == 0 → "new batch", else "existing corpus"
-
-
-def _incremental_sql(k: int = 32, bands: int = 8, threshold: float = 0.35, n: int = 3) -> str:
-    """Oracle for q_dedup_incremental: identical signature CTEs, band
-    split, new/old orientation, and INTEGER agreement cut (matching
-    components >= ceil(threshold*k)) as plans.dedup.dedup_incremental."""
-    min_match = -(-int(threshold * k * 1_000_000) // 1_000_000)
-    agree = " + ".join(
-        f"(CASE WHEN sa.h{i} = sb.h{i} THEN 1 ELSE 0 END)" for i in range(k)
-    )
-    return f"""
-WITH {_minhash_sig_ctes(k, n)}, tagged AS (
-  SELECT *, CASE WHEN id % {_INCR_NEW_MOD} = 0 THEN 1 ELSE 0 END AS is_new FROM sig
-), bkt AS (
-{_band_selects_sql(k, bands, src="tagged", extra="is_new, ")}
-), cand AS (
-  SELECT DISTINCT a.id AS id_new, b.id AS id_match,
-         CASE WHEN b.is_new = 1 THEN 'batch' ELSE 'index' END AS match_src
-  FROM bkt a JOIN bkt b USING (band, bucket)
-  WHERE a.is_new = 1
-    AND (b.is_new = 0 OR a.id < b.id)
-), ver AS (
-  SELECT c.id_new, c.id_match, c.match_src,
-         ({agree}) AS mc
-  FROM cand c JOIN sig sa ON c.id_new = sa.id JOIN sig sb ON c.id_match = sb.id
-)
-SELECT id_new, id_match, match_src, round(mc * 1.0 / {k}, 6) AS est_jaccard
-FROM ver WHERE mc >= {min_match}
-"""
-
-
-def _chunk_documents_sql(cw: int = _CHUNK_W, ov: int = _CHUNK_OV) -> str:
-    """Oracle for q_chunk_documents: identical normalized split, identical
-    integer ceil-div chunk count and offsets (DuckDB // is integer
-    division; list slicing is 1-based inclusive and clamps at len, same
-    as Spark's slice(start, length) on a shorter tail)."""
-    st = cw - ov
-    return f"""
-WITH w AS (
-  SELECT doc_id,
-         string_split(regexp_replace(lower(trim(text)), '\\s+', ' ', 'g'), ' ') AS words
-  FROM documents
-), m AS (
-  SELECT doc_id, words, len(words) AS n,
-         greatest(1, (len(words) - {ov} + {st - 1}) // {st}) AS n_chunks
-  FROM w
-), e AS (
-  SELECT doc_id, words, n, n_chunks,
-         unnest(range(n_chunks)) AS chunk_idx
-  FROM m
-)
-SELECT doc_id, chunk_idx, n_chunks,
-       chunk_idx * {st} AS chunk_start_word,
-       least({cw}, n - chunk_idx * {st}) AS chunk_n_words,
-       array_to_string(words[chunk_idx * {st} + 1 : chunk_idx * {st} + {cw}], ' ') AS chunk_text
-FROM e
-"""
-
-
 _ASOF_TOLERANCE = f"""
 WITH views AS (
   SELECT user_id, ts AS view_ts, max(event_id) AS view_id
@@ -3221,35 +1965,6 @@ SELECT purchase_id, user_id, purchase_ts,
        CASE WHEN lag_ms <= {_ASOF_TOL_MS} THEN view_id ELSE -1 END AS view_id,
        CASE WHEN lag_ms <= {_ASOF_TOL_MS} THEN lag_ms ELSE -1 END AS lag_ms
 FROM matched
-"""
-
-
-def _cluster_canonical_sql() -> str:
-    """Connected components over the bit-exact MinHash pair SQL via a
-    recursive min-label CTE (reach(id, label): label is reachable from
-    id; min per id = component representative), then the same
-    assignment/size/canonical projection as plans.dedup."""
-    return f"""
-WITH RECURSIVE pairs AS ({_minhash_lsh_sql()}),
-edges AS (
-  SELECT id_a AS src, id_b AS dst FROM pairs
-  UNION
-  SELECT id_b, id_a FROM pairs
-),
-reach(id, label) AS (
-  SELECT src, src FROM edges
-  UNION
-  SELECT e.src, r.label FROM reach r JOIN edges e ON e.dst = r.id
-),
-cc AS (SELECT id, min(label) AS label FROM reach GROUP BY id),
-assigned AS (
-  SELECT d.doc_id, coalesce(cc.label, d.doc_id) AS cluster_id
-  FROM documents d LEFT JOIN cc ON d.doc_id = cc.id
-),
-sizes AS (SELECT cluster_id, count(*) AS cluster_size FROM assigned GROUP BY cluster_id)
-SELECT a.doc_id, a.cluster_id, s.cluster_size,
-       CASE WHEN a.doc_id = a.cluster_id THEN 1 ELSE 0 END AS is_canonical
-FROM assigned a JOIN sizes s USING (cluster_id)
 """
 
 
@@ -3296,39 +2011,10 @@ def oracle_sql() -> dict[str, str]:
         "revenue_cube": _REVENUE_CUBE,
         "interval_join_1h": _INTERVAL_JOIN_1H,
         "top_purchase_users": _TOP_PURCHASE_USERS,
-        "dedup_exact": _DEDUP_EXACT,
-        "dedup_ngram_jaccard": _NGRAM_JACCARD,
-        "dedup_minhash_lsh": _minhash_lsh_sql(),
-        "dedup_simhash": _simhash_sql(),
-        "dedup_cluster_canonical": _cluster_canonical_sql(),
-        "dedup_incremental": _incremental_sql(),
         "asof_view_purchase": _ASOF_VIEW_PURCHASE,
         "asof_tolerance": _ASOF_TOLERANCE,
         "stream_asof_view_purchase": _ASOF_VIEW_PURCHASE,
-        "dataset_split": _dataset_split_sql(),
-        "stratified_sample": _stratified_sample_sql(),
-        "mixture_by_lang": _mixture_by_lang_sql(),
-        "stratified_sample_exact": _stratified_sample_exact_sql(),
-        "pack_documents": _pack_documents_sql(),
-        "weighted_sample": _weighted_sample_sql(),
-        "decontaminate": _decontaminate_sql(),
-        "pii_scrub": _pii_scrub_sql(),
-        "repetition_signals": _REPETITION_SIGNALS,
-        "global_shuffle": _global_shuffle_sql(),
         "transcript_audit": _TRANSCRIPT_AUDIT,
-        "chunk_documents": _chunk_documents_sql(),
-        "text_quality": _TEXT_QUALITY,
-        "token_count": _TOKEN_COUNT,
-        "language_id": _LANGUAGE_ID,
-        "doc_fingerprint": _FINGERPRINT,
-        "ann_cosine_topk": _ANN_TOPK,
-        "ann_cosine_lsh": _ann_lsh_sql(),
-        "ann_cosine_ivf": _ann_ivf_sql(),
-        "embedding_near_dup": _near_dup_sql(),
-        "multimodal_decode": _MULTIMODAL,
-        "multimodal_resize": _MULTIMODAL_RESIZE,
-        "multimodal_features": _MULTIMODAL_FEATURES,
-        "frame_sample": _FRAME_SAMPLE,
         # the streaming replays must emit EXACTLY the batch oracle rows
         # (sentinel-flushed final watermark covers every window)
         "stream_tumbling_1h": _TUMBLING_1H,
@@ -3336,7 +2022,6 @@ def oracle_sql() -> dict[str, str]:
         "stream_quantile_6h": _QUANTILE_KERNEL,
         "stream_payload_6h": _PAYLOAD_KERNEL,
         "cep_funnel": _CEP_FUNNEL,
-        "stream_dedup_exact": _STREAM_DEDUP_EXACT,
         "stream_cep_funnel": _CEP_FUNNEL,
         "cep_retry_funnel": _CEP_RETRY_FUNNEL,
         "stream_cep_retry_funnel": _CEP_RETRY_FUNNEL,

@@ -10,7 +10,7 @@ surface. This harness exists to:
 - dump .explain("formatted") for selected queries into plans/r06/.
 
 Usage:
-  python bench_extra.py --queries dedup_minhash_lsh,sliding_1h_15m \
+  python bench_extra.py --queries session_30m,sliding_1h_15m \
       --repeat 3 [--noop] [--explain plans/r06 --suffix _before]
   python bench_extra.py --all --repeat 1
 Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf1.0), SPARK_GRAFT_CPUS.
@@ -55,7 +55,7 @@ def main():
         names = [n for n in args.queries.split(",") if n]
 
     # same warmup as bench.py: parquet footers + python worker pool
-    for t in ("events", "documents", "embeddings", "lineitem"):
+    for t in ("events", "lineitem"):
         spark.read.parquet(f"{SF_DIR}/{t}.parquet").count()
     (
         spark.range(int(CPUS) * 1000)

@@ -9,10 +9,9 @@ shuffle at scale: chunking 100 TB is a pure map stage whose parallelism
 is the scan's. (On tiny inputs with fewer scan splits than cluster slots
 — the degenerate local case — ``spread`` inserts one repartition so the
 regex+split projection does not run single-task; at real scale it is a
-metadata no-op, see plans.dedup.spread.) The chunk count and every
-offset are integer arithmetic over the word count, so any SQL engine
-re-derives the exact same layout row for row (the correctness gate's
-DuckDB oracle does).
+metadata no-op.) The chunk count and every offset are integer arithmetic
+over the word count, so any SQL engine re-derives the exact same layout
+row for row.
 
 Layout: chunks start at 0, stride, 2·stride, ... with
 stride = chunk_words − overlap_words; the count
@@ -26,7 +25,29 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .dedup import normalized_text, spread
+
+def normalized_text(col):
+    """Canonical word form: lowercase, trimmed, collapsed whitespace."""
+    return F.regexp_replace(F.lower(F.trim(col)), r"\s+", " ")
+
+
+def spread(df: DataFrame) -> DataFrame:
+    """Repartition iff the input has fewer partitions than the cluster has
+    slots. A CPU-heavy per-row projection otherwise runs at the SCAN's
+    parallelism, and a small parquet file is a single unsplittable row
+    group → one task doing all the work. At real scale the file index
+    alone proves there are >= slots scan splits, so the common path never
+    converts the plan to an RDD; the checks are driver-side metadata, not
+    a job."""
+    target = df.sparkSession.sparkContext.defaultParallelism
+    try:
+        if len(df.inputFiles()) >= target:
+            return df
+    except Exception:
+        pass
+    if df.rdd.getNumPartitions() >= target:
+        return df
+    return df.repartition(target)
 
 
 def chunk_documents(
@@ -38,8 +59,7 @@ def chunk_documents(
 ) -> DataFrame:
     """One output row per (doc, chunk): (doc_id, chunk_idx, n_chunks,
     chunk_start_word, chunk_n_words, chunk_text). Words are the
-    repo-standard normalized whitespace split (same chain as the dedup
-    oracles, so parity is already pinned)."""
+    whitespace split of :func:`normalized_text`."""
     if overlap_words >= chunk_words:
         raise ValueError(
             f"overlap_words ({overlap_words}) must be < chunk_words ({chunk_words})"
@@ -71,9 +91,9 @@ def chunk_documents(
         "n_chunks",
         # outer ≡ inner: n_chunks >= 1 by the greatest() floor (NULL text
         # included), so the sequence is never null/empty; the outer form
-        # keeps InferFiltersFromGenerate from re-evaluating the
-        # normalize+split chain in a pushed size()>0 filter (plans.dedup.
-        # minhash_signatures documents the trap)
+        # keeps InferFiltersFromGenerate from pushing a size()>0 filter
+        # below the projection, which would re-evaluate the
+        # normalize+split chain once more per row
         F.explode_outer(F.sequence(F.lit(0), F.col("n_chunks") - 1)).alias("chunk_idx"),
     )
     start = F.col("chunk_idx") * F.lit(stride)

@@ -36,7 +36,7 @@ def attach_binary_payload(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Deterministic stand-in binary column (utf-8 bytes of the text) +
     media metadata — lets the full pipeline run end-to-end without real
     media files. The media-type assignment uses the portable md5-60 hash
-    so the whole stage is reproducible in the DuckDB oracle."""
+    so the whole stage is reproducible in plain SQL."""
     from .portable_hash import md5_60
 
     return df.withColumn("payload", F.encode(F.col(text_col), "utf-8")).withColumn(
@@ -60,8 +60,8 @@ def _fake_decode(payload: bytes, media_type: str):
 
 
 # -- opportunistic real-codec seam -----------------------------------------
-# The deterministic stubs above stay the DEFAULT (they are what the DuckDB
-# oracles recompute); auto_codec()/auto_resizer() return real-library-backed
+# The deterministic stubs above stay the DEFAULT (their output is a pure
+# function of the payload, so tests can recompute it); auto_codec()/auto_resizer() return real-library-backed
 # implementations WHEN the libraries exist on the machine — the documented
 # one-function swap, made concrete. This container has neither PIL nor
 # soundfile (installs forbidden), so here they fall back to the stubs; the
@@ -208,7 +208,7 @@ def resize_images(
 def _fake_features(payload: bytes, media_type: str, dim: int):
     """STUB: deterministic integer feature vector derived from the decoded
     metadata — the seam where a CNN / fbank extractor runs on a real
-    cluster. Integer (mod-997) features keep the gate float-free."""
+    cluster. Integer (mod-997) features keep the output float-free."""
     w, h, nf, _ = _fake_decode(payload, media_type)
     n, w0, h0, nf0 = len(payload), w or 0, h or 0, nf or 0
     return [

@@ -18,8 +18,8 @@ content-addressed (salt, id), so a re-run, a repartition, or a different
 cluster size yields byte-identical packing — the reproducibility
 property a training-data pipeline needs from its batch layout.
 
-No reference equivalent (Scotty has no relational surface); this plane
-belongs to the LLM-pipeline brief alongside dedup/sampling/text.
+No reference equivalent (Scotty has no relational surface): a library
+module outside the Scotty core, with no gate in ``__spark_entry__``.
 """
 
 from __future__ import annotations

@@ -1,7 +1,7 @@
-"""Portable 60-bit content hash + a portable universal hash family.
+"""Portable 60-bit content hash.
 
-The correctness gate cross-checks every operator against DuckDB, so any
-hash that determines OUTPUT rows must be computable bit-identically in
+An operator whose output rows must be re-derivable in DuckDB needs every
+hash that determines those rows to be computable bit-identically in
 both engines. xxhash64 is Spark-only; md5 is in both, and both can parse
 hex → integer:
 
@@ -11,21 +11,13 @@ hex → integer:
 15 hex chars = 60 bits — always fits a signed 64-bit int (the full 16
 chars would overflow Spark's ``cast('long')`` for values ≥ 2^63).
 
-The k-member hash family for MinHash is plain modular arithmetic over the
-Mersenne prime 2^31−1 (values < 2^31, products < 2^62: no signed-64
-overflow in either engine — DuckDB *errors* on overflow rather than
-wrapping, so staying under 63 bits is load-bearing).
-
-Hot paths that never face an oracle (e.g. the n-gram Jaccard shingle join,
-where the oracle joins on the shingle *strings*) keep xxhash64 — it is
-~10× cheaper and only the join key, not the output, depends on it.
+Hot paths where only a join or exchange key, not the output, depends on
+the hash keep xxhash64 — it is ~10× cheaper.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
-
-MINHASH_P = 2_147_483_647  # 2^31 − 1 (prime)
 
 
 def md5_60(col):
@@ -37,19 +29,3 @@ def md5_60_sql(expr: str) -> str:
     """The identical 60-bit hash as DuckDB SQL over ``expr``."""
     return f"(('0x' || left(md5({expr}), 15))::BIGINT)"
 
-
-def minhash_params(k: int, seed: int = 0x5EED) -> list[tuple[int, int]]:
-    """Deterministic (a, b) pairs for the family h_i(x) = (a·x + b) mod P.
-
-    Pure-Python LCG so the same constants can be embedded verbatim in the
-    DuckDB oracle SQL; a is never 0 (that would collapse the hash).
-    """
-    params = []
-    state = seed & 0x7FFFFFFF
-    for _ in range(k):
-        state = (1103515245 * state + 12345) % MINHASH_P
-        a = state or 1
-        state = (1103515245 * state + 12345) % MINHASH_P
-        b = state
-        params.append((a, b))
-    return params

@@ -17,10 +17,11 @@ and its rebalancing sample:
   stratum) joined back as a broadcast — the data side never shuffles;
 - **auditable** — the same arithmetic runs as plain SQL in any engine
   with md5, so split membership can be re-derived independently of
-  Spark (the correctness gates hold Spark to exactly that SQL).
+  Spark (``tests/test_r06_optimizations.py`` holds the mixture sample to
+  exactly that SQL).
 
-No reference equivalent (Scotty has no relational surface); this plane
-belongs to the LLM-pipeline brief alongside dedup/similarity/text.
+No reference equivalent (Scotty has no relational surface): a library
+module outside the Scotty core, with no gate in ``__spark_entry__``.
 """
 
 from __future__ import annotations

@@ -233,11 +233,9 @@ def presplit_session_aggregate(
     # in the sf0.01 plan). The frame is one row per (key, bucket, island)
     # — already aggregated, ≤ session count ≪ input rows, and in the
     # routed production path the presplit input is only the hot keys.
-    from .dedup import materialize
-
-    subs = materialize(subs.withColumn(
+    subs = subs.withColumn(
         "_edge", (F.col("_isl") == 1) | (F.col("_isl") == n_isl)
-    ))
+    ).localCheckpoint(eager=True)
 
     out_cols = lambda: [  # noqa: E731 - tiny local shape helper
         F.col(key),

@@ -104,8 +104,9 @@ def sliding_aggregate_twolevel(
     stage1 = df.groupBy(F.col(key), b.alias("b")).agg(
         *[c.alias(n) for n, c in partials.items()]
     )
-    # outer ≡ inner (non-empty literal-bounded sequence); avoids the
-    # InferFiltersFromGenerate duplicate-evaluation trap (plans.dedup)
+    # outer ≡ inner (non-empty literal-bounded sequence); a plain explode
+    # lets InferFiltersFromGenerate push a size(arr) > 0 filter that
+    # evaluates the computed array a second time per row
     expanded = stage1.select(
         F.col(key),
         (_epoch_ms(F.col("b.start"))).alias("_b_start"),

@@ -7,19 +7,6 @@ chosen so per-query WORK SHAPES scale linearly instead of degenerating:
 
 - events: user_id/event_id shifted per copy (K x keys, same per-key window
   density — how event data actually grows), ts unchanged.
-- documents: doc_id shifted; copy i>0 RENAMES every word by appending
-  'q<i>' — a 1:1 map of the word space, so intra-copy shingle sets,
-  Jaccard values, and simhash vote structure are preserved exactly while
-  cross-copy word/shingle overlap is zero. (Naive replication would give
-  every doc K-1 exact twins and quadratic dedup candidates; injecting a
-  shared marker TOKEN is equally wrong — one token voting once per word
-  gap collapses every simhash in the copy to the marker's bit pattern,
-  which blew dedup_simhash up to 112 M "near-dup" pairs when tried.)
-- embeddings: vec_id shifted; copy i's vectors are np.roll'ed by 6*i
-  coordinates — a permutation, so intra-copy pairwise cosines are EXACTLY
-  preserved while cross-copy cosines are generically low (no artificial
-  near-dup/tie mass). Copy 0 is untouched: the ANN gates' query side
-  (vec_id < 5) and IVF centroid seed (vec_id < 16) keep their meaning.
 - lineitem/orders/customer: order/cust keys shifted per copy; nationkey
   untouched so the dimension joins keep their selectivity.
 - region/nation/supplier/part: copied verbatim (dimensions don't scale).
@@ -93,42 +80,6 @@ def main():
             "event_type", "value", "props",
         ),
         "events", 32,
-    )
-
-    docs = src("documents")
-    d_span = docs.agg((F.max("doc_id") + 1).alias("d")).collect()[0]["d"]
-    marked = F.when(
-        F.col("_c") == 0, F.col("text")
-    ).otherwise(
-        # per-copy word renaming: w -> w || 'q<i>' (1:1, structure-
-        # preserving; see module docstring for why not a marker token)
-        F.regexp_replace(
-            F.col("text"), r"(\S+)",
-            F.concat(F.lit("$1q"), F.col("_c").cast("string")),
-        )
-    )
-    write(
-        copies(docs).select(
-            shift("doc_id", d_span), marked.alias("text"), "lang", "source",
-            F.length(marked).alias("n_chars"),
-        ),
-        "documents", 8,
-    )
-
-    emb = src("embeddings")
-    v_span = emb.agg((F.max("vec_id") + 1).alias("v")).collect()[0]["v"]
-    dim = len(emb.select("embedding").first()["embedding"])
-    rolled = F.when(F.col("_c") == 0, F.col("embedding")).otherwise(
-        # np.roll by 6*_c as a slice+concat (pure Catalyst): permutations
-        # preserve intra-copy dot products exactly
-        F.concat(
-            F.slice(F.col("embedding"), dim + 1 - (F.col("_c") * 6) % dim, (F.col("_c") * 6) % dim),
-            F.slice(F.col("embedding"), 1, dim - (F.col("_c") * 6) % dim),
-        )
-    )
-    write(
-        copies(emb).select(shift("vec_id", v_span), rolled.alias("embedding"), "label"),
-        "embeddings", 8,
     )
 
     li, orders, cust = src("lineitem"), src("orders"), src("customer")

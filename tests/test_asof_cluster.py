@@ -1,10 +1,9 @@
-"""Tests for the as-of join and dedup cluster canonicalization operators.
+"""Tests for the batch as-of join operator.
 
-Reference parity note: Scotty has no join and no dedup operator of any
-kind (SURVEY.md §2.3 marks Joins/Set-ops absent) — these are the
-training-pipeline extensions; semantics are pinned against
-pandas.merge_asof-style backward-inclusive matching and plain
-graph connectivity.
+Reference parity note: Scotty has no join operator of any kind
+(SURVEY.md §2.3 marks Joins/Set-ops absent) — the as-of join is an
+extension; its semantics are pinned against pandas.merge_asof-style
+backward-inclusive matching.
 """
 
 import datetime as dt
@@ -198,44 +197,3 @@ def test_asof_bad_direction_raises(spark):
     with pytest.raises(ValueError):
         _asof(spark, [(1, _ts(1), "L")], [(1, _ts(1), 1.0)], direction="nearest")
 
-
-# ------------------------------------------- connected components / clusters
-
-
-def _cc(spark, pairs):
-    from scotty_window_processor_spark.plans.dedup import connected_components
-
-    df = spark.createDataFrame(pairs, "id_a long, id_b long")
-    return {r.id: r.label for r in connected_components(df).collect()}
-
-
-def test_cc_transitive_chain(spark):
-    assert _cc(spark, [(1, 2), (2, 3), (10, 11)]) == {1: 1, 2: 1, 3: 1, 10: 10, 11: 10}
-
-
-def test_cc_long_path_converges(spark):
-    # path of 17 nodes — diameter 16; pointer jumping must close it well
-    # inside max_iter=25 (would also catch O(diameter) regressions)
-    pairs = [(i, i + 1) for i in range(100, 116)]
-    labels = _cc(spark, pairs)
-    assert set(labels.values()) == {100}
-    assert len(labels) == 17
-
-
-def test_cc_duplicate_and_reversed_edges(spark):
-    assert _cc(spark, [(2, 1), (1, 2), (2, 3), (3, 1)]) == {1: 1, 2: 1, 3: 1}
-
-
-def test_cluster_canonical_assignment(spark):
-    from scotty_window_processor_spark.plans.dedup import dedup_cluster_canonical
-
-    docs = spark.createDataFrame([(i,) for i in range(6)], "doc_id long")
-    pairs = spark.createDataFrame([(0, 3), (3, 5)], "id_a long, id_b long")
-    rows = {r.doc_id: r for r in dedup_cluster_canonical(docs, pairs).collect()}
-    assert {i: rows[i].cluster_id for i in range(6)} == {0: 0, 1: 1, 2: 2, 3: 0, 4: 4, 5: 0}
-    assert rows[0].cluster_size == 3 and rows[0].is_canonical == 1
-    assert rows[3].cluster_size == 3 and rows[3].is_canonical == 0
-    assert rows[1].cluster_size == 1 and rows[1].is_canonical == 1
-    # keep-set = exactly one doc per cluster
-    keep = [i for i, r in rows.items() if r.is_canonical == 1]
-    assert sorted(keep) == [0, 1, 2, 4]

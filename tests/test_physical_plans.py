@@ -75,40 +75,6 @@ def test_catalyst_tier_uses_builtin_window_aggregate(spark):
     assert "HashAggregate" in plan
 
 
-def test_ngram_jaccard_plan_shape(spark):
-    """The df-cap is a BROADCAST anti-join (hot shingles only — never a
-    second shuffle of the exploded side) and the candidate generator is a
-    hash self-join on the 8-byte shingle key: no cartesian product
-    anywhere."""
-    from scotty_window_processor_spark.plans.dedup import dedup_ngram_jaccard
-
-    docs = spark.read.parquet(f"{SF}/documents.parquet")
-    plan = plan_of(dedup_ngram_jaccard(docs, threshold=0.35, max_shingle_df=50))
-    assert "CartesianProduct" not in plan
-    assert "BroadcastHashJoin" in plan and "LeftAnti" in plan, plan[:2000]
-
-
-def test_minhash_lsh_plan_has_no_cartesian(spark):
-    from scotty_window_processor_spark.plans.dedup import dedup_minhash_lsh
-
-    docs = spark.read.parquet(f"{SF}/documents.parquet")
-    plan = plan_of(dedup_minhash_lsh(docs, verify_threshold=0.35))
-    assert "CartesianProduct" not in plan
-
-
-def test_shingle_producer_not_reinlined(spark):
-    """let_ guard: the word-hash transform must appear ONCE in the
-    projection, not once per gram reference (CollapseProject inlining —
-    the 300x regression class)."""
-    from scotty_window_processor_spark.plans.dedup import portable_shingle_docs
-
-    docs = spark.read.parquet(f"{SF}/documents.parquet")
-    plan = plan_of(portable_shingle_docs(docs, "doc_id", "text"))
-    # the md5 of the word appears exactly once (inside the single bound
-    # lambda), not replicated per chain step reference
-    assert plan.count("md5") == 1, f"word-hash producer inlined {plan.count('md5')}x"
-
-
 def test_many_windows_route_to_shared_shuffle_tier(spark):
     """Cost-based tier choice: >3 concurrent time windows with standard
     aggregates must compile to the shared-shuffle vectorized tier — ONE
@@ -199,43 +165,6 @@ def test_quantified_cep_is_one_exchange_one_sort(spark):
     assert "Join" not in plan and "Union" not in plan
     # payload pruning: only the needed columns reach the scan
     assert "ReadSchema" in plan and "props" not in plan.split("ReadSchema")[1][:400]
-
-
-def test_near_dup_bucket_cap_is_broadcast_anti_join(spark):
-    """max_bucket_size prunes hot buckets with a BROADCAST anti-join —
-    the big bucket table must not shuffle for the cap.
-
-    Since r6 the candidate stage (bucket assignment → cap → self-join →
-    distinct) is materialized eagerly inside embedding_near_dup, so the
-    final query plan starts from the checkpointed pair RDD; the cap's
-    join strategy is asserted on the candidate-generation subplan, built
-    here exactly as embedding_near_dup builds it."""
-    from pyspark.sql import functions as F
-
-    from scotty_window_processor_spark.plans.dedup import materialize
-    from scotty_window_processor_spark.plans.similarity import (
-        signed_projection_buckets,
-    )
-
-    emb = spark.read.parquet(f"{SF}/embeddings.parquet")
-    buckets = materialize(
-        signed_projection_buckets(emb, "vec_id", "embedding", 64, 10, 6)
-    )
-    hot = (
-        buckets.groupBy("tbl", "bucket")
-        .count()
-        .where(F.col("count") > 50)
-        .select("tbl", "bucket")
-    )
-    capped = buckets.join(F.broadcast(hot), ["tbl", "bucket"], "left_anti")
-    plan = plan_of(capped)
-    assert "BroadcastHashJoin" in plan and "LeftAnti" in plan, plan
-    # the final near-dup plan must NOT re-run the projection UDF: it reads
-    # the materialized candidates (the 4×-ArrowEvalPython regression shape)
-    from scotty_window_processor_spark.plans.similarity import embedding_near_dup
-
-    final = plan_of(embedding_near_dup(emb, max_bucket_size=50))
-    assert "Scan ExistingRDD" in final, final
 
 
 def test_unbounded_plus_cep_is_one_exchange_one_sort(spark):

@@ -96,66 +96,6 @@ def test_catalyst_quantile_matches_kernel(spark):
 
 
 # --------------------------------------------------------------------------
-# packed simhash counters == per-bit vote reference
-
-
-def test_simhash_packed_matches_reference(spark):
-    from scotty_window_processor_spark.plans.dedup import (
-        SIMHASH_BITS,
-        normalized_text,
-        simhash,
-    )
-    from scotty_window_processor_spark.plans.portable_hash import md5_60
-
-    words = ["alpha", "beta", "Gamma", "delta", "x1", "xx", "yy", "zz"]
-    rng = random.Random(5)
-    docs = [
-        (i, " ".join(rng.choice(words) for _ in range(rng.randrange(1, 40))))
-        for i in range(60)
-    ]
-    df = spark.createDataFrame(docs, "doc_id long, text string")
-    got = {r["id"]: r["simhash"] for r in simhash(df).collect()}
-
-    # slow reference: md5-60 word hashes (via the engine's own expression,
-    # so the hash family itself is not under test), ±1 vote per bit
-    hashed = df.select(
-        F.col("doc_id"),
-        F.explode(F.split(normalized_text(F.col("text")), " ")).alias("w"),
-    ).select("doc_id", md5_60(F.col("w")).alias("wh"))
-    by_doc = {}
-    for r in hashed.collect():
-        by_doc.setdefault(r["doc_id"], []).append(r["wh"])
-    for doc_id, whs in by_doc.items():
-        sim = 0
-        for b in range(SIMHASH_BITS):
-            votes = sum(1 if (wh >> b) & 1 else -1 for wh in whs)
-            if votes > 0:
-                sim |= 1 << b
-        assert got[doc_id] == sim, f"doc {doc_id}"
-    assert len(got) == len(by_doc)
-
-
-# --------------------------------------------------------------------------
-# embedding_near_dup: broadcast-matmul verify == join-plan verify, bit-exact
-
-
-def test_near_dup_broadcast_verify_bit_exact(spark):
-    from scotty_window_processor_spark.plans.similarity import embedding_near_dup
-
-    rng = random.Random(3)
-    rows = [
-        (i, [rng.gauss(0, 1) for _ in range(16)]) for i in range(300)
-    ]
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    kw = dict(threshold=0.2, dim=16, planes_per_table=4, tables=3)
-    fast = embedding_near_dup(df, **kw)  # broadcast path (fits the bound)
-    slow = embedding_near_dup(df, max_broadcast_bytes=0, **kw)  # join path
-    a = sorted(map(tuple, fast.collect()))
-    b = sorted(map(tuple, slow.collect()))
-    assert a == b and len(a) > 0
-
-
-# --------------------------------------------------------------------------
 # mixture thresholds: literal-CASE plan == oracle SQL membership
 
 
