@@ -154,13 +154,24 @@ def q_routed_session_30m(spark, sf_dir):
 
 
 def q_count_tumbling_25(spark, sf_dir):
+    """Count-measure TUMBLING windows (size 25) through the engine: each
+    key's rows in (ts, event_id) order, and only full windows fire."""
     _utc(spark)
-    from scotty_window_processor_spark.plans.windowed import count_tumbling_aggregate
+    from scotty_window_processor_spark.functions import SumAggregation
+    from scotty_window_processor_spark.operators import TumblingWindow, WindowMeasure
+    from scotty_window_processor_spark.plans.scotty_batch import scotty_window_aggregate
 
-    return count_tumbling_aggregate(
-        _events(spark, sf_dir), "user_id", "ts", 25,
-        {"sum_value": F.round(F.sum("value"), 2)},
-        tiebreak="event_id",
+    out = scotty_window_aggregate(
+        _events(spark, sf_dir), key="user_id", ts="ts", value="value",
+        windows=[TumblingWindow(WindowMeasure.COUNT, 25)],
+        aggs=[("sum_value", "double", SumAggregation)],
+        arrival_order="event_id",
+    )
+    return out.select(
+        "user_id",
+        F.col("w_start").alias("c_start"),
+        F.col("w_end").alias("c_end"),
+        F.round("sum_value", 2).alias("sum_value"),
     )
 
 
@@ -351,8 +362,8 @@ def q_scotty_global_kernel(spark, sf_dir):
 
 def q_count_sliding_50_25(spark, sf_dir):
     """Count-measure SLIDING windows (size 50, slide 25) through the
-    kernel (count slices + positional trigger semantics, incl. the
-    reference's partial-tail emission when start+size <= total+2)."""
+    engine (count slices + positional trigger semantics). Only full
+    windows fire: a window fires once its end count has arrived."""
     _utc(spark)
     from scotty_window_processor_spark.functions import CountAggregation, SumAggregation
     from scotty_window_processor_spark.operators import SlidingWindow, WindowMeasure
@@ -416,32 +427,7 @@ def q_salted_tumbling(spark, sf_dir):
 
 
 # --------------------------------------------------------------------------
-# relational coverage (TPC-H-ish tables)
-
-
-def q_pricing_summary(spark, sf_dir):
-    from scotty_window_processor_spark.plans.relational import load, pricing_summary
-
-    return pricing_summary(load(spark, sf_dir, "lineitem"))
-
-
-def q_revenue_by_nation(spark, sf_dir):
-    from scotty_window_processor_spark.plans.relational import load, revenue_by_nation
-
-    return revenue_by_nation(
-        load(spark, sf_dir, "orders"), load(spark, sf_dir, "customer"), load(spark, sf_dir, "nation")
-    )
-
-
-def q_revenue_cube(spark, sf_dir):
-    """CUBE(nation, order year): all four grouping sets in one hash
-    aggregate — one fact scan, one exchange (see plans.relational
-    .revenue_cube). Oracle: DuckDB native CUBE with the same sentinels."""
-    from scotty_window_processor_spark.plans.relational import load, revenue_cube
-
-    return revenue_cube(
-        load(spark, sf_dir, "orders"), load(spark, sf_dir, "customer"), load(spark, sf_dir, "nation")
-    )
+# joins and the transcript audit over `events`
 
 
 def q_interval_join_1h(spark, sf_dir):
@@ -449,16 +435,6 @@ def q_interval_join_1h(spark, sf_dir):
     from scotty_window_processor_spark.plans.relational import interval_self_join
 
     return interval_self_join(_events(spark, sf_dir), SIZE_H)
-
-
-def q_top_purchase_users(spark, sf_dir):
-    from scotty_window_processor_spark.plans.relational import top_event_users
-
-    return top_event_users(_events(spark, sf_dir), 20)
-
-
-# --------------------------------------------------------------------------
-# as-of joins and the transcript audit over `events`
 
 
 def q_asof_view_purchase(spark, sf_dir):
@@ -1488,11 +1464,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "count_sliding_50_25": q_count_sliding_50_25,
         "ordered_rollup": q_ordered_rollup,
         "salted_tumbling": q_salted_tumbling,
-        "pricing_summary": q_pricing_summary,
-        "revenue_by_nation": q_revenue_by_nation,
-        "revenue_cube": q_revenue_cube,
         "interval_join_1h": q_interval_join_1h,
-        "top_purchase_users": q_top_purchase_users,
         "asof_view_purchase": q_asof_view_purchase,
         "asof_tolerance": q_asof_tolerance,
         "stream_asof_view_purchase": q_stream_asof_view_purchase,
@@ -1712,37 +1684,6 @@ FROM events
 GROUP BY user_id, time_bucket(INTERVAL '6 hours', ts)
 """
 
-_PRICING_SUMMARY = """
-SELECT l_returnflag, l_linestatus,
-       round(sum(l_quantity), 2) AS sum_qty,
-       round(sum(l_extendedprice), 2) AS sum_base_price,
-       round(sum(l_extendedprice * (1 - l_discount)), 2) AS sum_disc_price,
-       count(*) AS count_order
-FROM lineitem
-WHERE l_shipdate <= DATE '1998-09-02'
-GROUP BY l_returnflag, l_linestatus
-ORDER BY l_returnflag, l_linestatus
-"""
-
-_REVENUE_BY_NATION = """
-SELECT n_name,
-       round(sum(o_totalprice), 2) AS revenue,
-       count(*) AS n_orders
-FROM orders JOIN customer ON o_custkey = c_custkey
-            JOIN nation ON c_nationkey = n_nationkey
-GROUP BY n_name
-"""
-
-_REVENUE_CUBE = """
-SELECT coalesce(n_name, 'ALL') AS nation,
-       coalesce(year(o_orderdate), -1) AS o_year,
-       round(sum(o_totalprice), 2) AS revenue,
-       count(*) AS n_orders
-FROM orders JOIN customer ON o_custkey = c_custkey
-            JOIN nation ON c_nationkey = n_nationkey
-GROUP BY CUBE (n_name, year(o_orderdate))
-"""
-
 _INTERVAL_JOIN_1H = """
 SELECT e.user_id AS user_id, e.event_id AS err_id,
        count(p.ts) AS n_purchases,
@@ -1752,16 +1693,6 @@ LEFT JOIN (SELECT user_id, ts, value FROM events WHERE event_type = 'purchase') 
   ON e.user_id = p.user_id AND p.ts > e.ts
      AND p.ts <= e.ts + INTERVAL '1 hour'
 GROUP BY e.user_id, e.event_id
-"""
-
-_TOP_PURCHASE_USERS = """
-WITH per_user AS (
-  SELECT user_id, round(sum(value), 2) AS total_value, count(*) AS n
-  FROM events WHERE event_type = 'purchase' GROUP BY user_id
-), ranked AS (
-  SELECT *, row_number() OVER (ORDER BY total_value DESC, user_id) AS rnk FROM per_user
-)
-SELECT user_id, total_value, n, rnk FROM ranked WHERE rnk <= 20
 """
 
 
@@ -2006,11 +1937,7 @@ def oracle_sql() -> dict[str, str]:
         "count_sliding_50_25": _COUNT_SLIDING_50_25,
         "ordered_rollup": _ORDERED_ROLLUP,
         "salted_tumbling": _TUMBLING_1H,
-        "pricing_summary": _PRICING_SUMMARY,
-        "revenue_by_nation": _REVENUE_BY_NATION,
-        "revenue_cube": _REVENUE_CUBE,
         "interval_join_1h": _INTERVAL_JOIN_1H,
-        "top_purchase_users": _TOP_PURCHASE_USERS,
         "asof_view_purchase": _ASOF_VIEW_PURCHASE,
         "asof_tolerance": _ASOF_TOLERANCE,
         "stream_asof_view_purchase": _ASOF_VIEW_PURCHASE,

@@ -348,8 +348,7 @@ def main():
 
     # warm the JVM/codegen and the parquet footers once so the first timed
     # query doesn't absorb session startup (~4-5s on this box)
-    for t in ("events", "lineitem"):
-        spark.read.parquet(f"{SF_DIR}/{t}.parquet").count()
+    spark.read.parquet(f"{SF_DIR}/events.parquet").count()
     # ...and the Python worker pool + Arrow codec path: the first
     # pandas-tier query otherwise pays ~4 s of interpreter fork/startup
     # that belongs to the session, not the operator being measured

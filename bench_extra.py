@@ -55,8 +55,7 @@ def main():
         names = [n for n in args.queries.split(",") if n]
 
     # same warmup as bench.py: parquet footers + python worker pool
-    for t in ("events", "lineitem"):
-        spark.read.parquet(f"{SF_DIR}/{t}.parquet").count()
+    spark.read.parquet(f"{SF_DIR}/events.parquet").count()
     (
         spark.range(int(CPUS) * 1000)
         .withColumn("g", F.col("id") % int(CPUS))

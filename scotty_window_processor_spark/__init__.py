@@ -15,9 +15,9 @@ Apache Spark:
 - ``streaming``          — Structured Streaming stateful operator
   (applyInPandasWithState), exactly-once sink, stream-stream join.
 - ``plans``              — batch DataFrame/Catalyst implementations of the
-  same windowed aggregations, plus batch CEP, as-of join and relational
-  queries, and four ungated data-prep modules (sampling, packing,
-  chunking, multimodal plumbing).
+  same windowed aggregations, plus batch CEP, as-of join, the interval
+  self-join and a turn-order audit, and three ungated data-prep modules
+  (packing, chunking, multimodal plumbing).
 - ``sources``            — deterministic transcript synthesizer and readers.
 
 Nothing in this package is a code port: the reference is single-threaded

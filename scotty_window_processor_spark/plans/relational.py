@@ -1,80 +1,19 @@
-"""Relational coverage queries over the TPC-H-ish test tables.
+"""Relational queries over ``events`` that the windowing engine leans on.
 
-The reference has no relational layer at all (SURVEY.md §2.3) — these
-queries demonstrate the engine-side coverage Spark gives for free and pin
-the physical plans we want at 100 TB:
+The reference has no relational layer at all (SURVEY.md §2.3). Two
+queries stay here:
 
-- scans with pushed filters + pruned columns (check .explain:
-  PushedFilters / ReadSchema),
-- broadcast hash joins for dimension tables (nation/region/customer),
-- partial+final hash aggregation,
-- a ts-range interval self-join (the batch shape of the stream-stream
-  "stateful join" in streaming/join.py).
+- ``interval_self_join``: a ts-range interval self-join, the batch shape
+  (and the DuckDB-gated oracle) of the stream-stream "stateful join" in
+  streaming/join.py;
+- ``transcript_integrity_audit``: a per-key check that turn order is
+  stable before windows trust it.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-
-def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
-
-
-def pricing_summary(lineitem: DataFrame) -> DataFrame:
-    """TPC-H Q1-shaped scan + filter + partial/final aggregation."""
-    return (
-        lineitem.where(F.col("l_shipdate") <= F.lit("1998-09-02"))
-        .groupBy("l_returnflag", "l_linestatus")
-        .agg(
-            F.round(F.sum("l_quantity"), 2).alias("sum_qty"),
-            F.round(F.sum("l_extendedprice"), 2).alias("sum_base_price"),
-            F.round(F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2).alias("sum_disc_price"),
-            F.count(F.lit(1)).alias("count_order"),
-        )
-        .orderBy("l_returnflag", "l_linestatus")
-    )
-
-
-def revenue_by_nation(orders: DataFrame, customer: DataFrame, nation: DataFrame) -> DataFrame:
-    """Fact-dim joins: nation and customer are broadcast (dims are tiny at
-    every SF; the fact side never shuffles for the join)."""
-    return (
-        orders.join(F.broadcast(customer), orders["o_custkey"] == customer["c_custkey"])
-        .join(F.broadcast(nation), customer["c_nationkey"] == nation["n_nationkey"])
-        .groupBy("n_name")
-        .agg(
-            F.round(F.sum("o_totalprice"), 2).alias("revenue"),
-            F.count(F.lit(1)).alias("n_orders"),
-        )
-    )
-
-
-def revenue_cube(orders: DataFrame, customer: DataFrame, nation: DataFrame) -> DataFrame:
-    """Multi-dimensional rollup: revenue by CUBE(nation, order year) — all
-    four grouping sets ((n,y), (n), (y), ()) in ONE pass. Spark's cube()
-    expands grouping sets inside the same hash aggregate (map-side
-    partials per set, one exchange on the grouping-set id + keys), so the
-    fact table is scanned and shuffled once, not once per set. Subtotal
-    rows carry explicit sentinels ('ALL' / -1) instead of NULLs so the
-    output is unambiguous when a real group key could be NULL."""
-    return (
-        orders.join(F.broadcast(customer), orders["o_custkey"] == customer["c_custkey"])
-        .join(F.broadcast(nation), customer["c_nationkey"] == nation["n_nationkey"])
-        .select("n_name", F.year("o_orderdate").alias("o_year"), "o_totalprice")
-        .cube("n_name", "o_year")
-        .agg(
-            F.round(F.sum("o_totalprice"), 2).alias("revenue"),
-            F.count(F.lit(1)).alias("n_orders"),
-        )
-        .select(
-            F.coalesce("n_name", F.lit("ALL")).alias("nation"),
-            F.coalesce("o_year", F.lit(-1)).alias("o_year"),
-            "revenue",
-            "n_orders",
-        )
-    )
 
 
 def interval_self_join(events: DataFrame, window_ms: int = 3_600_000) -> DataFrame:
@@ -104,19 +43,6 @@ def interval_self_join(events: DataFrame, window_ms: int = 3_600_000) -> DataFra
             F.round(F.coalesce(F.sum("pur_value"), F.lit(0.0)), 2).alias("purchase_value"),
         )
     )
-
-
-def top_event_users(events: DataFrame, k: int = 20) -> DataFrame:
-    """Rank/limit shape: top-k users by purchase value (window function)."""
-    from pyspark.sql.window import Window as W
-
-    per_user = events.where(F.col("event_type") == "purchase").groupBy("user_id").agg(
-        F.round(F.sum("value"), 2).alias("total_value"), F.count(F.lit(1)).alias("n")
-    )
-    ranked = per_user.withColumn(
-        "rnk", F.row_number().over(W.orderBy(F.col("total_value").desc(), F.col("user_id")))
-    )
-    return ranked.where(F.col("rnk") <= k).select("user_id", "total_value", "n", "rnk")
 
 
 def transcript_integrity_audit(

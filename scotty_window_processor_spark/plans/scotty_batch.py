@@ -80,11 +80,14 @@ def scotty_window_aggregate(
     3. **pure-Python kernel**: exact Scotty slice semantics for anything
        else (custom lift/combine/lower functions, out-of-order replays).
 
-    All tiers emit the same schema and provably identical rows (see
-    tests/test_scotty_batch_spark.py); the tier split is per window
-    family, results are unioned. ``force_kernel=True`` pins tier 3 —
-    used by parity tests and oracle-gated queries that must exercise the
-    slicing kernel itself rather than a faster equivalent plan.
+    All tiers emit the same schema and, with one known exception, the
+    same rows (see tests/test_scotty_batch_spark.py). The exception: the
+    kernel drops session elements when a session window shares one
+    operator with a count window and a fixed time window (ROADMAP open
+    item 1). The tier split is per window family, results are unioned.
+    ``force_kernel=True`` pins tier 3 — used by parity tests and
+    oracle-gated queries that must exercise the slicing kernel itself
+    rather than a faster equivalent plan.
 
     Output: (key, window_id, measure, w_start, w_end, <one column per agg>).
     Time windows report epoch-ms bounds; count windows report ordinal bounds.

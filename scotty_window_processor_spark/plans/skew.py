@@ -26,7 +26,7 @@ from typing import Dict, Optional, Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..operators.windows import SessionWindow, Window, WindowMeasure
+from ..operators.windows import SessionWindow, WindowMeasure
 
 
 def with_salt(
@@ -347,12 +347,3 @@ def routed_session_aggregate(
             hot, key, ts, gap_ms, partials, finals, bucket_ms=bucket_ms
         )
     )
-
-
-def assert_saltable(windows: Sequence[Window]) -> None:
-    for w in windows:
-        if isinstance(w, SessionWindow):
-            raise ValueError(
-                "session windows cannot be salted: the gap predicate is global "
-                "per key; route session queries through the unsalted path"
-            )

@@ -14,8 +14,9 @@ Segment math (rows pre-sorted by key, ts):
   lexsort by (key, w_start), reduceat over group boundaries;
 - sessions: boundaries where the key changes or the ts gap exceeds `gap`
   (gaps-and-islands), reduceat over island boundaries;
-- count tumbling: positional index within key // n, kernel flush
-  semantics (windows with end <= key_total+1).
+- count tumbling: positional index within key // n; as in the kernel, a
+  window fires only once its end count has arrived (end <= the key's
+  total, divergence #7), so only full windows are emitted.
 
 Scale: the partition count is `plans.adaptive_buckets` (~one Arrow batch
 of rows per task); each partition is independent, so the stage

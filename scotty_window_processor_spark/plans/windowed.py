@@ -1,4 +1,4 @@
-"""Catalyst-native windowed aggregation (tumbling / sliding / session / count).
+"""Catalyst-native windowed aggregation (tumbling / sliding / session).
 
 These are the idiomatic-Spark expressions of the reference's window
 semantics (core/.../windowType/{Tumbling,Sliding,Session}Window.java) for
@@ -8,9 +8,12 @@ before the shuffle, AQE-coalesced partitions) and scale linearly.
 
 The slicing kernel (plans.scotty_batch / streaming.processor) exists for
 what these CANNOT do: share one slice store across many concurrent
-windows, count-measure windows, and multi-gap session sets. For a single
-window definition the built-ins are the fastest plan Spark can produce,
-so the engine routes single-window queries here.
+windows, count-measure windows, and multi-gap session sets. The batch
+planner (``scotty_batch.scotty_window_aggregate``) sends a time-measure
+window family here when ``prefer_catalyst`` is set and every aggregate
+has a Catalyst equivalent, unless the query has three or more time
+families and the whole mix is vectorizable; then the shared-shuffle
+vectorized tier takes them all.
 
 All window bounds are emitted as epoch milliseconds (BIGINT) so results
 hash-compare exactly against ANSI-SQL oracles.
@@ -22,7 +25,6 @@ from typing import Dict
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window as W
 
 from ..operators.windows import SessionWindow, SlidingWindow, Window, WindowMeasure
 
@@ -124,34 +126,3 @@ def sliding_aggregate_twolevel(
             *[F.col(n) for n in finals],
         )
     )
-
-
-def count_tumbling_aggregate(df: DataFrame, key: str, ts: str, n: int, aggs: Dict[str, Column],
-                             tiebreak: str, complete_only: bool = True) -> DataFrame:
-    """Count-measure tumbling windows: every `n` records per key in event-time
-    order. No Spark built-in exists; expressed as row_number bucketing —
-    a single shuffle by key, no Python. Scotty emits only windows whose
-    end count the watermark passed, i.e. complete groups
-    (WindowManager.java:105-119) — `complete_only` mirrors that.
-
-    `tiebreak` must be a deterministic unique column (same-ts ordering
-    must match the SQL oracle exactly)."""
-    rn = F.row_number().over(W.partitionBy(key).orderBy(ts, tiebreak)) - 1
-    with_bucket = (
-        df.withColumn("rn", rn)
-        .withColumn("c_start", (F.col("rn") - F.col("rn") % n).cast("long"))
-    )
-    out = (
-        with_bucket.groupBy(key, "c_start")
-        .agg(F.count(F.lit(1)).alias("_n"), *[c.alias(nm) for nm, c in aggs.items()])
-        .select(
-            F.col(key),
-            F.col("c_start"),
-            (F.col("c_start") + n).alias("c_end"),
-            F.col("_n"),
-            *[F.col(nm) for nm in aggs],
-        )
-    )
-    if complete_only:
-        out = out.where(F.col("_n") == n)
-    return out.drop("_n")

@@ -2,14 +2,10 @@
 factor K (sf0.1 -> sf1.0 with K=10) for SCALE-VALIDATION benchmarking.
 
 The brief forbids external data, so larger scales are synthesized from the
-sf0.1 tables themselves: K copies with copy-shifted keys. The shifts are
-chosen so per-query WORK SHAPES scale linearly instead of degenerating:
-
-- events: user_id/event_id shifted per copy (K x keys, same per-key window
-  density — how event data actually grows), ts unchanged.
-- lineitem/orders/customer: order/cust keys shifted per copy; nationkey
-  untouched so the dimension joins keep their selectivity.
-- region/nation/supplier/part: copied verbatim (dimensions don't scale).
+sf0.1 events table itself: K copies with user_id/event_id shifted per copy
+and ts unchanged. That gives K x keys at the same per-key window density
+(how event data actually grows), so per-query WORK SHAPES scale linearly
+instead of degenerating.
 
 Usage:
     python scripts/make_scaled_data.py [--src /root/testdata/sf0.1] \
@@ -68,9 +64,7 @@ def main():
         n = spark.read.parquet(f"{args.dst}/{name}.parquet").count()
         print(f"{name}: {n:,} rows", flush=True)
 
-    src = lambda t: spark.read.parquet(f"{args.src}/{t}.parquet")
-
-    ev = src("events")
+    ev = spark.read.parquet(f"{args.src}/events.parquet")
     spans = ev.agg(
         (F.max("user_id") + 1).alias("u"), (F.max("event_id") + 1).alias("e")
     ).collect()[0]
@@ -81,35 +75,6 @@ def main():
         ),
         "events", 32,
     )
-
-    li, orders, cust = src("lineitem"), src("orders"), src("customer")
-    ok_span = orders.agg((F.max("o_orderkey") + 1).alias("k")).collect()[0]["k"]
-    ck_span = cust.agg((F.max("c_custkey") + 1).alias("k")).collect()[0]["k"]
-    write(
-        copies(li).select(
-            shift("l_orderkey", ok_span), "l_partkey", "l_suppkey", "l_linenumber",
-            "l_quantity", "l_extendedprice", "l_discount", "l_tax",
-            "l_returnflag", "l_linestatus", "l_shipdate",
-        ),
-        "lineitem", 32,
-    )
-    write(
-        copies(orders).select(
-            shift("o_orderkey", ok_span), shift("o_custkey", ck_span),
-            "o_orderstatus", "o_totalprice", "o_orderdate", "o_orderpriority",
-        ),
-        "orders", 16,
-    )
-    write(
-        copies(cust).select(
-            shift("c_custkey", ck_span), "c_name", "c_nationkey", "c_acctbal",
-            "c_mktsegment",
-        ),
-        "customer", 8,
-    )
-
-    for t in ("region", "nation", "supplier", "part"):
-        write(src(t), t, 1)
 
     print(f"scaled x{K} dataset at {args.dst}")
     spark.stop()

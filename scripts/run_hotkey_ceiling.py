@@ -1,8 +1,9 @@
 """Session hot-key ceiling measurement.
 
-Sessions route UNSALTED by design (gap semantics are global per key,
-plans/skew.py assert_saltable), so one pathological conv_id serializes its
-session work on a single task. This script quantifies that ceiling:
+Sessions route UNSALTED by design (gap semantics are global per key; see
+the session rule in the plans/skew.py module docstring), so one
+pathological conv_id serializes its session work on a single task. This
+script quantifies that ceiling:
 
   A. uniform run    — n_convs × turns_per_conv, no hot key
   B. hot run        — same + ONE conv at hot_factor × median turns

@@ -4,7 +4,6 @@ semantics (bit-exact where floats are involved), so a future change that
 reintroduces a divergence fails here rather than at the oracle gate.
 """
 
-import math
 import random
 
 import pytest
@@ -93,37 +92,6 @@ def test_catalyst_quantile_matches_kernel(spark):
         force_kernel=True,
     )
     assert sorted(map(tuple, cat.collect())) == sorted(map(tuple, ker.collect()))
-
-
-# --------------------------------------------------------------------------
-# mixture thresholds: literal-CASE plan == oracle SQL membership
-
-
-def test_mixture_case_matches_oracle_sql(spark):
-    import duckdb
-
-    from scotty_window_processor_spark.plans.sampling import (
-        downsample_to_mixture,
-        mixture_kept_sql,
-    )
-
-    rng = random.Random(7)
-    langs = ["en", "zh", "es", "de", "fr", "other"]
-    rows = [(i, rng.choice(langs)) for i in range(2000)]
-    df = spark.createDataFrame(rows, "doc_id long, lang string")
-    W = {"en": 0.4, "zh": 0.15, "es": 0.15, "de": 0.15, "fr": 0.15}
-    kept = sorted(
-        r[0] for r in downsample_to_mixture(df, "lang", W, "doc_id").select("doc_id").collect()
-    )
-    con = duckdb.connect()
-    con.register("documents", df.toPandas())
-    okept = sorted(
-        r[0]
-        for r in con.execute(
-            f"SELECT doc_id FROM ({mixture_kept_sql('documents', 'lang', W, 'doc_id')})"
-        ).fetchall()
-    )
-    assert kept == okept and 0 < len(kept) < 2000
 
 
 # --------------------------------------------------------------------------
