@@ -277,10 +277,11 @@ def q_scotty_histq_kernel(spark, sf_dir):
 
 
 def q_scotty_distinct_kernel(spark, sf_dir):
-    """BOUNDED-STATE approximate distinct count (linear counting over the
-    portable md5-60 hash) through the kernel's record path: occupied-
-    position sets merge by union across slices, estimate −m·ln((m−occ)/m)
-    — exactly reproducible in SQL from count(DISTINCT md5_60(props) % m).
+    """BOUNDED-STATE approximate distinct count (linear counting, position
+    ``int(md5(str(v)).hexdigest()[:15], 16) % m``) through the kernel's
+    record path: occupied-position sets merge by union across slices,
+    estimate −m·ln((m−occ)/m) — exactly reproducible in SQL from the
+    oracle's count(DISTINCT ('0x' || left(md5(props), 15))::BIGINT % 1024).
     The O(m)-bit partial replaces O(distinct) exact state at 10^12-turn
     scale."""
     _utc(spark)
@@ -1209,8 +1210,9 @@ def q_cep_funnel(spark, sf_dir):
     """CEP sequence detection (MATCH_RECOGNIZE core): view → click →
     purchase on strictly consecutive per-user events ordered by
     (ts, event_id), overlapping matches allowed, whole run within 7 days.
-    One exchange + one sort feed the whole lead() family; predicate and
-    span bound are whole-stage codegen (plans/cep.py)."""
+    The {1,1} case of the quantified matcher: one exchange + one sort
+    feed the whole lead() family; predicate and span bound are
+    whole-stage codegen (plans/cep.py)."""
     _utc(spark)
     from scotty_window_processor_spark.plans.cep import match_pattern
 
@@ -1228,10 +1230,11 @@ def q_cep_funnel(spark, sf_dir):
 
 def q_stream_cep_funnel(spark, sf_dir):
     """Streaming replay of the same funnel through the stateful CEP
-    operator (streaming/cep.py): per-key tail state carries partial
-    matches across micro-batches; each match is emitted exactly once when
-    its last row is finalized by the watermark. Gated against the same
-    lead()-based DuckDB oracle as the batch query."""
+    operator (streaming/cep.py, the bounded-pattern handler on {1,1}
+    steps): per-key state carries undecided starts across micro-batches;
+    each match is emitted exactly once when its last row is finalized by
+    the watermark. Gated against the same lead()-based DuckDB oracle as
+    the batch query."""
     from scotty_window_processor_spark.streaming.cep import cep_stream
 
     def build(stream):

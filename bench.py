@@ -334,6 +334,34 @@ def streaming_probe(spark, n_convs: int = 300, turns_per_conv: int = 100, n_file
         shutil.rmtree(ckpt, ignore_errors=True)
 
 
+def warm_up(spark, sf_dir: str = SF_DIR):
+    """Start what belongs to the session, not to the first query timed:
+    the JVM/codegen and the parquet footers, then both Python window
+    tiers (the Python worker pool, the package import in the workers and
+    the first ``mapInArrow``/``mapInPandas``), each run once on a tiny
+    frame. Without the tier runs, the first Python-tier gate in
+    ``queries()`` order carries about 1 s of session start."""
+    from pyspark.sql import functions as F
+
+    from scotty_window_processor_spark.functions import SumAggregation
+    from scotty_window_processor_spark.operators import TumblingWindow, WindowMeasure
+    from scotty_window_processor_spark.plans.scotty_batch import scotty_window_aggregate
+
+    spark.read.parquet(f"{sf_dir}/events.parquet").count()
+    tiny = spark.range(int(CPUS) * 100).select(
+        (F.col("id") % int(CPUS)).alias("k"),
+        F.col("id").cast("timestamp").alias("ts"),
+        F.col("id").cast("double").alias("v"),
+    )
+    for force_kernel in (False, True):  # vectorized mapInArrow, kernel mapInPandas
+        scotty_window_aggregate(
+            tiny, key="k", ts="ts", value="v",
+            windows=[TumblingWindow(WindowMeasure.COUNT, 10)],
+            aggs=[("s", "double", SumAggregation)],
+            force_kernel=force_kernel,
+        ).count()
+
+
 def main():
     spark = build_spark(CPUS)
     spark.sparkContext.setLogLevel("ERROR")
@@ -346,21 +374,7 @@ def main():
     # micro-batch scheduling floor is measured by streaming_probe instead)
     headline = [name for name in qs if not name.startswith("stream_")]
 
-    # warm the JVM/codegen and the parquet footers once so the first timed
-    # query doesn't absorb session startup (~4-5s on this box)
-    spark.read.parquet(f"{SF_DIR}/events.parquet").count()
-    # ...and the Python worker pool + Arrow codec path: the first
-    # pandas-tier query otherwise pays ~4 s of interpreter fork/startup
-    # that belongs to the session, not the operator being measured
-    from pyspark.sql import functions as F
-
-    (
-        spark.range(int(CPUS) * 1000)
-        .withColumn("g", F.col("id") % int(CPUS))
-        .groupBy("g")
-        .applyInPandas(lambda p: p, "id long, g long")
-        .count()
-    )
+    warm_up(spark)
 
     timings = {}
     for name in headline:

@@ -40,13 +40,12 @@ def main():
     ap.add_argument("--suffix", default="")
     args = ap.parse_args()
 
-    from bench import build_spark
+    from bench import build_spark, warm_up
 
     spark = build_spark(CPUS)
     spark.sparkContext.setLogLevel("ERROR")
 
     import __spark_entry__ as entrymod
-    from pyspark.sql import functions as F
 
     qs = entrymod.queries()
     if args.all:
@@ -54,15 +53,7 @@ def main():
     else:
         names = [n for n in args.queries.split(",") if n]
 
-    # same warmup as bench.py: parquet footers + python worker pool
-    spark.read.parquet(f"{SF_DIR}/events.parquet").count()
-    (
-        spark.range(int(CPUS) * 1000)
-        .withColumn("g", F.col("id") % int(CPUS))
-        .groupBy("g")
-        .applyInPandas(lambda p: p, "id long, g long")
-        .count()
-    )
+    warm_up(spark, SF_DIR)
 
     out = {}
     for name in names:

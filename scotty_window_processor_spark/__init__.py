@@ -16,8 +16,7 @@ Apache Spark:
   (applyInPandasWithState), exactly-once sink, stream-stream join.
 - ``plans``              — batch DataFrame/Catalyst implementations of the
   same windowed aggregations, plus batch CEP, as-of join, the interval
-  self-join and a turn-order audit, and three ungated data-prep modules
-  (packing, chunking, multimodal plumbing).
+  self-join and a turn-order audit.
 - ``sources``            — deterministic transcript synthesizer and readers.
 
 Nothing in this package is a code port: the reference is single-threaded

@@ -256,21 +256,22 @@ class HistogramQuantileAggregation(QuantileAggregation):
 
 class LinearCountingAggregation(AggregateFunction[Any, set, float]):
     """BOUNDED-STATE approximate distinct count (linear counting): each
-    element hashes to one of ``m`` positions via the portable md5-60
-    family; the partial is the set of occupied positions (≤ m entries
+    element ``v`` hashes to the position
+    ``int(md5(str(v)).hexdigest()[:15], 16) % m`` (the first 60 bits of
+    its md5); the partial is the set of occupied positions (≤ m entries
     regardless of stream length — exact distinct-count state is
     O(distinct values)). Merge = set union (commutative, idempotent), so
     the sketch is order-insensitive and deterministic: the estimate
-    −m·ln((m−occupied)/m) is bit-reproducible in SQL from
-    count(DISTINCT md5_60(x) % m). Not invertible (union loses
-    multiplicity); the kernel recomputes on out-of-order removal like the
-    reference's non-invertible path.
+    −m·ln((m−occupied)/m) is bit-reproducible in SQL from the count of
+    distinct ``('0x' || left(md5(x), 15))::BIGINT % m``. Not invertible
+    (union loses multiplicity); the kernel recomputes on out-of-order
+    removal like the reference's non-invertible path.
 
     Saturation: a fully occupied sketch (occupied ≥ m) clamps to
     ``float(m)`` — the estimate formula hits ln(0) there, so any SQL
     replay must carry the matching ``CASE WHEN occ >= m THEN m`` clamp
     (the gate oracle does); below saturation the estimate is
-    bit-reproducible from ``count(DISTINCT md5_60(x) % m)``.
+    bit-reproducible from that same count of distinct positions.
 
     Record-mode aggregate: reads ``col`` from each element dict."""
 

@@ -3,8 +3,8 @@
 Everything here is declarative DataFrame/SQL first: Catalyst gets to push
 filters into the parquet scan, prune columns, broadcast small join sides,
 and keep the hot path inside whole-stage codegen. Python only appears in
-the per-key window tiers behind ``scotty_batch`` and the multimodal
-stubs — always Arrow-batched, never per row.
+the per-key window tiers behind ``scotty_batch`` — always
+Arrow-batched, never per row.
 """
 
 from pyspark.sql import functions as F

@@ -3,17 +3,22 @@
 The north-star engine description is "structured-streaming / CEP"; the
 reference itself has no pattern operator (its CEP story is the windowing
 kernel), so this plane is Spark-native by construction. Semantics are the
-MATCH_RECOGNIZE core:
+MATCH_RECOGNIZE core, per key ordered by ``(ts, tiebreak)``:
 
-    PATTERN (S0 S1 ... S{L-1})           -- L strictly consecutive rows
+    PATTERN (S0{m0,n0} ... Sk{mk,nk})    -- strictly consecutive rows
     AFTER MATCH SKIP TO NEXT ROW         -- overlapping matches allowed
 
-per key, ordered by ``(ts, tiebreak)``; a row sequence matches when row
-``i`` of the run satisfies ``steps[i]`` and (optionally) the whole run
-spans at most ``within_ms``.
+with an optional ``within_ms`` bound on the span of a whole match.
+
+One matcher serves every bounded pattern: ``match_pattern_quantified``
+enumerates the pattern's fixed-length expansions and compiles them into
+one lead() family. ``match_pattern`` (PATTERN (S0 S1 ... S{L-1})) is its
+{1,1} case — one expansion of length L — projected to per-step capture
+columns. Unbounded possessive repetition (``MID+``/``MID*``) is
+``match_pattern_plus``, a single gaps-and-islands pass.
 
 100 TB plan shape: ONE exchange (hash partition by key) + one sort feed
-the whole lead() family — every per-step column rides the same window
+every window function — each per-step column rides the same window
 frame, the predicate conjunction is whole-stage codegen, and the
 projection is pruned to ``step_cols ∪ capture ∪ {ts, tiebreak}`` before
 the shuffle, so payload columns never cross it. No joins, no state.
@@ -43,7 +48,8 @@ def match_pattern(
     capture: Sequence[str] = (),
 ) -> DataFrame:
     """Detect every contiguous run of ``len(steps)`` rows matching the
-    step predicates, per ``key``, ordered by ``(ts, tiebreak)``.
+    step predicates, per ``key``, ordered by ``(ts, tiebreak)``: the
+    ``(pred, 1, 1)`` case of ``match_pattern_quantified``.
 
     ``steps[i]`` is a callable receiving a dict of that step's columns
     (``step_cols`` plus ``ts``) and returning a boolean Column, e.g.
@@ -53,46 +59,32 @@ def match_pattern(
 
     Returns one row per match: ``key``, ``w_start``/``w_end`` (epoch-ms
     of the first/last matched row) and ``s{i}_{col}`` for every capture
-    column at every step.
-    """
+    column at every step."""
     if not steps:
         raise ValueError("match_pattern needs at least one step")
-    L = len(steps)
-    needed = list(dict.fromkeys(list(step_cols) + list(capture) + [ts]))
-    order = [F.col(ts)] + ([F.col(tiebreak)] if tiebreak else [])
-    w = Window.partitionBy(key).orderBy(*order)
+    m = match_pattern_quantified(
+        df, key=key, ts=ts, steps=[(s, 1, 1) for s in steps],
+        step_cols=step_cols, within_ms=within_ms, tiebreak=tiebreak,
+        capture=capture,
+    )
+    return fixed_captures(m, key, len(steps), capture)
 
-    proj_cols = list(dict.fromkeys(needed + ([tiebreak] if tiebreak else [])))
-    sel = df.select(key, *proj_cols)
-    step_view: list[Dict[str, Column]] = [{c: F.col(c) for c in needed}]
-    lead_cols = []
-    for j in range(1, L):
-        view = {}
-        for c in needed:
-            name = f"_s{j}_{c}"
-            lead_cols.append(F.lead(c, j).over(w).alias(name))
-            view[c] = F.col(name)
-        step_view.append(view)
-    if lead_cols:
-        sel = sel.select("*", *lead_cols)
 
-    pred = steps[0](step_view[0])
-    for j in range(1, L):
-        pred = pred & steps[j](step_view[j])
-    first_ms = _epoch_ms(F.col(ts))
-    last_ms = _epoch_ms(step_view[L - 1][ts]) if L > 1 else first_ms
-    if within_ms is not None:
-        pred = pred & (last_ms - first_ms <= F.lit(within_ms))
-
-    out_cols = [
-        F.col(key),
-        first_ms.alias("w_start"),
-        last_ms.alias("w_end"),
-    ]
-    for j in range(L):
-        for c in capture:
-            out_cols.append(step_view[j][c].alias(f"s{j}_{c}"))
-    return sel.where(pred).select(*out_cols)
+def fixed_captures(
+    matches: DataFrame, key: str, n_steps: int, capture: Sequence[str]
+) -> DataFrame:
+    """Project a {1,1}-pattern match to the fixed matcher's columns: key,
+    w_start, w_end and ``s{j}_{c}`` = ``s_{c}[j]`` (every step consumes
+    exactly one row, so array position j is step j). Stateless, so it
+    serves the batch matcher and the streaming match stream alike."""
+    return matches.select(
+        key, "w_start", "w_end",
+        *[
+            F.col(f"s_{c}")[j].alias(f"s{j}_{c}")
+            for j in range(n_steps)
+            for c in capture
+        ],
+    )
 
 
 # unbounded (possessive) repetition ----------------------------------------
@@ -241,25 +233,25 @@ def match_pattern_quantified(
     contiguous rows, AFTER MATCH SKIP TO NEXT ROW. Per start row the
     first expansion in priority order (greedy by default) that matches
     wins; a lookahead running past the key's last row fails that
-    expansion (lead() null), exactly like the fixed-length matcher.
+    expansion (lead() null).
 
     Returns one row per match: ``key``, ``w_start``/``w_end`` (epoch-ms
     of the first/last matched row), ``match_len``, and ``s{i}_n`` — how
-    many rows step i consumed (0 for skipped optional steps). Per-step
-    FIXED column captures (the fixed matcher's ``s{j}_{c}``) stay
-    unsupported — positions are ambiguous across expansions — but
+    many rows step i consumed (0 for skipped optional steps).
     ``capture=[cols]`` emits ``s_{c}`` as an ARRAY holding column c of
     every consumed row in match order (length ``match_len``): the values
     already ride the lead() family the matcher builds, so captures cost
-    zero extra shuffles/joins. ``match_pattern_quantified_rows`` explodes
-    that to MATCH_RECOGNIZE-MEASURES-style one-row-per-consumed-row with
-    step attribution.
+    zero extra shuffles/joins. Per-step columns are ambiguous across
+    expansions; for an all-{1,1} pattern ``fixed_captures`` projects them
+    (``match_pattern``), and ``match_pattern_quantified_rows`` explodes
+    the arrays to MATCH_RECOGNIZE-MEASURES-style one row per consumed row
+    with step attribution.
 
-    Plan shape is the fixed matcher's: ONE exchange + one sort feed a
-    single lead() family sized by the LONGEST expansion; every
-    expansion's predicate is a conjunction over the same lead columns,
-    chained into one CASE (Catalyst CSE dedups the shared conjuncts), so
-    the whole pattern stays in whole-stage codegen with no joins."""
+    Plan shape: ONE exchange + one sort feed a single lead() family
+    sized by the LONGEST expansion; every expansion's predicate is a
+    conjunction over the same lead columns, chained into one CASE
+    (Catalyst CSE dedups the shared conjuncts), so the whole pattern
+    stays in whole-stage codegen with no joins."""
     expansions = expand_quantified(steps, greedy)
     L_max = max(len(flat) for _, flat in expansions)
     needed = list(dict.fromkeys(list(step_cols) + list(capture) + [ts]))

@@ -66,66 +66,6 @@ def with_salt(
     return df.withColumn("_salt", salt)
 
 
-def detect_hot_keys(
-    df: DataFrame,
-    key: str,
-    factor: float = 10.0,
-    max_exact_rows: int = 10_000_000,
-    sample_rows: int = 2_000_000,
-    margin: float = 0.5,
-    hot_share: float = 0.001,
-) -> list:
-    """Keys with > factor × median row count.
-
-    Inputs up to ``max_exact_rows`` get an exact per-key count; larger
-    inputs are SAMPLED by default (an exact per-key count is itself a
-    full shuffle of the 100 TB input — the thing this module exists to
-    avoid). The sample targets ``sample_rows`` rows; keys whose sample
-    count exceeds ``margin × factor × median_sample`` are flagged.
-
-    False-negative bound: a truly hot key (true count c > factor×median)
-    has expected sample count f·c ≥ f·factor·median; flagging at the
-    ``margin`` fraction of that means missing it requires its Binomial
-    sample count to fall below margin× its mean — by a Chernoff bound
-    P[miss] ≤ exp(−(1−margin)²·f·c / 2), e.g. ≤ e⁻²⁵ ≈ 1e-11 for a key
-    with 400 expected sample rows at margin 0.5. The cost of the
-    margin is extra flagged warm-but-not-hot keys, which only adds
-    harmless salting. When the typical key has ≲1 expected sample row
-    the sample median is biased high (absent keys don't vote) and the
-    median test is unreliable; in that regime (sample median < 5) the
-    detector switches to an absolute criterion — any key holding more
-    than ``hot_share`` of ALL rows is flagged, since a fixed share of a
-    100 TB input is a straggler no matter what the median is.
-
-    ``df.count()`` for the size probe is metadata-only on parquet scans;
-    on derived inputs it is one scan with no shuffle."""
-    n = df.count()
-    if n == 0:
-        return []
-    if n <= max_exact_rows:
-        counts = df.groupBy(key).count()
-        median = counts.approxQuantile("count", [0.5], 0.01)[0]
-        return [
-            r[0]
-            for r in counts.where(F.col("count") > factor * median).select(key).collect()
-        ]
-    f = min(1.0, sample_rows / n)
-    counts = df.sample(fraction=f, seed=13).groupBy(key).count()
-    # the sample can come back empty right at the max_exact_rows boundary
-    # with a tiny fraction — approxQuantile then returns [], so indexing
-    # [0] first would raise before any `or 0.0` fallback could run
-    q = counts.approxQuantile("count", [0.5], 0.01)
-    median = q[0] if q else 0.0
-    if median >= 5:
-        thresh = margin * factor * median
-    else:
-        thresh = hot_share * n * f
-    return [
-        r[0]
-        for r in counts.where(F.col("count") > F.lit(thresh)).select(key).collect()
-    ]
-
-
 def salted_window_aggregate(
     df: DataFrame,
     key: str,

@@ -1,21 +1,33 @@
 """Streaming CEP: contiguous sequence-pattern detection on a keyed stream.
 
-Streaming twin of ``plans.cep.match_pattern`` (same semantics: PATTERN
-(S0..S{L-1}) over strictly consecutive rows per key ordered by
+Streaming twins of the batch matchers in ``plans.cep``, with the same
+semantics (strictly consecutive rows per key ordered by
 ``(ts, tiebreak)``, AFTER MATCH SKIP TO NEXT ROW, optional ``within_ms``
-span bound). A match is emitted exactly once — in the micro-batch whose
-event-time watermark finalizes the match's LAST row.
+span bound). A start row is decided exactly once — in the micro-batch
+whose event-time watermark finalizes the rows that decide it — so each
+match is emitted exactly once, and the emissions equal the batch result
+on the finalized rows.
 
-State per key is bounded: the unfinalized row buffer (rows newer than the
-watermark, the same horizon the slicing operator keeps) plus a tail of at
-most ``L-1`` finalized rows so matches can span finalization boundaries.
-With ``within_ms`` set, tail rows older than ``watermark - within_ms``
-are pruned — any future match through them would violate the span bound
-anyway — an event-time timer fires once the bound expires the whole
-tail, so idle keys drain to empty and their state entry is removed.
-Without ``within_ms`` a tail row stays matchable forever (contiguity has
-no time bound), so the state floor is the bounded L−1-row tail per
-ever-seen key.
+Two stateful handlers share one state protocol (``_pattern_handler``):
+
+- ``make_cep_quant_handler`` serves every bounded pattern:
+  ``cep_stream_quantified`` (``S{m,n}`` steps) and ``cep_stream``, the
+  fixed-length PATTERN (S0 .. S{L-1}), which is its single {1,1}
+  expansion.
+- ``make_cep_plus_handler`` serves possessive unbounded repetition
+  (``cep_stream_plus``).
+
+State per key: the unfinalized row buffer (rows at or above the
+watermark, the horizon the slicing operator keeps) plus the finalized
+rows from the first undecided start on. A bounded start is undecided
+only while an expansion's lookahead runs past the key's last finalized
+row, so this tail holds fewer rows than the longest expansion. With
+``within_ms`` set, a start whose span bound the watermark has passed is
+refuted (any future row would violate it), and an event-time timer at
+``first start + within_ms`` drains an idle key's tail and removes its
+state entry. Without ``within_ms`` nothing is refuted by time and no
+timer is set for the tail: for a fixed pattern the tail is at most L−1
+rows per ever-seen key, kept until the key's next rows decide it.
 """
 
 from __future__ import annotations
@@ -23,10 +35,10 @@ from __future__ import annotations
 import pickle
 from typing import Any, Callable, Iterator, Optional, Sequence, Tuple
 
+import numpy as np
 import pandas as pd
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
@@ -46,8 +58,6 @@ def _pred_bool(p: StepPredicateP, seq: pd.DataFrame):
     quantified CASE chain skips null predicates). A bare
     ``np.asarray(..., dtype=bool)`` would instead turn NaN into True and
     raise on pd.NA, diverging batch vs streaming."""
-    import numpy as np
-
     out = p(seq)
     if isinstance(out, np.ndarray) and out.dtype == bool:
         return out
@@ -55,166 +65,32 @@ def _pred_bool(p: StepPredicateP, seq: pd.DataFrame):
     return s.mask(s.isna(), False).to_numpy(dtype=bool)
 
 
-def _out_schema(key: str, key_type, L: int, capture: Sequence[str], src: T.StructType) -> T.StructType:
-    fields = [
-        T.StructField(key, key_type, True),
-        T.StructField("w_start", T.LongType(), False),
-        T.StructField("w_end", T.LongType(), False),
-    ]
-    for j in range(L):
-        for c in capture:
-            fields.append(T.StructField(f"s{j}_{c}", src[c].dataType, True))
-    return T.StructType(fields)
-
-
-def make_cep_handler(
-    key_name: str,
+def _pattern_handler(
     ts_col: str,
-    steps: Sequence[StepPredicateP],
-    cols: Sequence[str],
+    keep: Sequence[str],
     within_ms: Optional[int],
     tiebreak: Optional[str],
-    capture: Sequence[str],
     out_fields: Sequence[str],
+    decide,
 ):
-    """Pure function of config — shippable to executors via --py-files."""
-    L = len(steps)
-    sort_cols = ["_ts_ms"] + ([tiebreak] if tiebreak else [])
-    keep = list(dict.fromkeys(list(cols) + list(capture) + ([tiebreak] if tiebreak else [])))
-
-    def handler(
-        key: Tuple[Any], pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        if state.exists:
-            buf, tail = pickle.loads(state.get[0])
-        else:
-            buf, tail = None, None
-
-        new_parts = []
-        for pdf in pdfs:
-            if pdf.empty:
-                continue
-            part = pdf[list(dict.fromkeys(keep + [ts_col]))].copy()
-            part["_ts_ms"] = (
-                part[ts_col].to_numpy().astype("datetime64[ms]").astype("int64")
-            )
-            if ts_col not in keep:
-                # ts stays available when a predicate or capture names it
-                # (batch parity: match_pattern always exposes ts)
-                part = part.drop(columns=[ts_col])
-            new_parts.append(part)
-        if new_parts:
-            buf = pd.concat(([buf] if buf is not None else []) + new_parts, ignore_index=True)
-
-        wm = state.getCurrentWatermarkMs()
-        rows = []
-        if wm > 0 and buf is not None and len(buf):
-            final_mask = buf["_ts_ms"].to_numpy() < wm
-            newly = buf[final_mask].sort_values(sort_cols, kind="mergesort")
-            buf = buf[~final_mask].reset_index(drop=True)
-            if len(newly):
-                seq = pd.concat(
-                    ([tail] if tail is not None else []) + [newly], ignore_index=True
-                )
-                n = len(seq)
-                n_tail = n - len(newly)
-                if n >= L:
-                    import numpy as np
-
-                    ok = np.ones(n - L + 1, dtype=bool)
-                    bools = [_pred_bool(s, seq) for s in steps]
-                    for j in range(L):
-                        ok &= bools[j][j : j + n - L + 1]
-                    ts_ms = seq["_ts_ms"].to_numpy()
-                    if within_ms is not None:
-                        ok &= ts_ms[L - 1 :] - ts_ms[: n - L + 1] <= within_ms
-                    # emit only matches whose END row is newly finalized:
-                    # earlier matches were emitted when THEIR end finalized
-                    ok &= np.arange(n - L + 1) + L - 1 >= n_tail
-                    for i in np.nonzero(ok)[0].tolist():
-                        r = [key[0], int(ts_ms[i]), int(ts_ms[i + L - 1])]
-                        for j in range(L):
-                            for c in capture:
-                                r.append(seq[c].iloc[i + j])
-                        rows.append(r)
-                tail = seq.iloc[max(0, n - (L - 1)) :].reset_index(drop=True)
-        if wm > 0 and tail is not None and within_ms is not None and len(tail):
-            # outside the buf block: a timer-fired wake (empty buf) must
-            # still prune, or tail-only state would re-arm forever
-            tail = tail[tail["_ts_ms"].to_numpy() >= wm - within_ms].reset_index(drop=True)
-
-        has_buf = buf is not None and len(buf) > 0
-        has_tail = tail is not None and len(tail) > 0
-        if not has_buf and not has_tail:
-            if state.exists:
-                state.remove()
-        else:
-            state.update((pickle.dumps((buf if has_buf else None, tail if has_tail else None)),))
-            if has_buf:
-                # wake when the watermark next advances so buffered rows
-                # finalize even if this key sees no further data
-                state.setTimeoutTimestamp(max(int(buf["_ts_ms"].min()), wm + 1))
-            elif within_ms is not None:
-                # tail-only state with a span bound: wake once the bound
-                # expires every tail row, so the prune above drains the
-                # tail and the NEXT invocation removes the state —
-                # without this, an idle key's tail entry would live
-                # forever (the processor handler sets a timeout whenever
-                # state is kept, streaming/processor.py, for the same
-                # reason). Without within_ms the tail is semantically
-                # live indefinitely (contiguity has no time bound) and
-                # stays as bounded O(L-1)-row state.
-                state.setTimeoutTimestamp(
-                    max(int(tail["_ts_ms"].max()) + within_ms + 1, wm + 1)
-                )
-
-        if rows:
-            yield pd.DataFrame(rows, columns=list(out_fields))
-
-    return handler
-
-
-def make_cep_quant_handler(
-    key_name: str,
-    ts_col: str,
-    steps: Sequence,
-    cols: Sequence[str],
-    within_ms: int,
-    tiebreak: Optional[str],
-    out_fields: Sequence[str],
-    expansions: Sequence,
-    capture: Sequence[str] = (),
-):
-    """Stateful handler for bounded-quantifier patterns (pure function of
+    """The state protocol of both stateful matchers (pure function of
     config — shippable via --py-files).
 
-    Decision protocol (the reason ``within_ms`` is mandatory here): an
-    expansion's verdict on finalized rows is immutable, but a start row
-    cannot be DECIDED until every higher-priority expansion is decided —
-    and an expansion needing rows beyond the key's current end is
-    undecidable until either those rows arrive or the watermark passes
-    ``start_ts + within_ms`` (any future row would then violate the span
-    bound, refuting the expansion — future rows are never late past the
-    watermark). Each start is therefore decided exactly once, emitting at
-    most one match; state keeps the unfinalized buffer plus finalized
-    rows from the FIRST undecided start onward, which the span bound
-    caps at the rows inside one ``within_ms`` horizon per key.
-
-    ``capture`` columns are emitted as per-match ARRAYS (column value of
-    every consumed row in match order) — the streaming twin of the batch
-    matcher's ``s_{c}`` capture arrays; the rows are already in the
-    key's finalized sequence, so captures cost no extra state."""
+    State is ``(buf, seq, decided)``: ``buf`` the unfinalized rows,
+    ``seq`` the finalized rows (sorted by ``(ts, tiebreak)``) from the
+    first undecided start on, ``decided`` a flag per ``seq`` row for
+    starts already decided. Each call finalizes the buffered rows below
+    the watermark, then ``decide(key, seq, ts_ms, decided, time_refut)``
+    returns the output rows of the newly decided matches and the mask of
+    starts that are still undecided; ``time_refut`` marks the starts
+    whose span bound the watermark has passed (none without
+    ``within_ms``)."""
     sort_cols = ["_ts_ms"] + ([tiebreak] if tiebreak else [])
-    keep = list(
-        dict.fromkeys(list(cols) + list(capture) + ([tiebreak] if tiebreak else []))
-    )
-    n_steps = len(steps)
+    keep = list(dict.fromkeys(list(keep) + ([tiebreak] if tiebreak else [])))
 
     def handler(
         key: Tuple[Any], pdfs: Iterator[pd.DataFrame], state: GroupState
     ) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
         if state.exists:
             buf, seq, decided = pickle.loads(state.get[0])
         else:
@@ -229,6 +105,8 @@ def make_cep_quant_handler(
                 part[ts_col].to_numpy().astype("datetime64[ms]").astype("int64")
             )
             if ts_col not in keep:
+                # ts stays available when a predicate or capture names it
+                # (batch parity: the batch matchers always expose ts)
                 part = part.drop(columns=[ts_col])
             new_parts.append(part)
         if new_parts:
@@ -251,74 +129,35 @@ def make_cep_quant_handler(
                             np.zeros(len(newly), dtype=bool),
                         ]
                     )
-            if seq is not None and len(seq):
+            if seq is not None:
                 n = len(seq)
                 ts_ms = seq["_ts_ms"].to_numpy()
-                bools = [_pred_bool(p, seq) for p, _, _ in steps]
-                time_refut = wm - ts_ms > within_ms
-                done = decided.copy()
-                undecided = np.zeros(n, dtype=bool)
-                chosen = np.full(n, -1, dtype=np.int64)
-                for e_idx, (counts, flat) in enumerate(expansions):
-                    L = len(flat)
-                    evaluable = np.zeros(n, dtype=bool)
-                    ok = np.zeros(n, dtype=bool)
-                    if n >= L:
-                        evaluable[: n - L + 1] = True
-                        m = np.ones(n - L + 1, dtype=bool)
-                        for j, s_idx in enumerate(flat):
-                            m &= bools[s_idx][j : j + n - L + 1]
-                        m &= ts_ms[L - 1 :] - ts_ms[: n - L + 1] <= within_ms
-                        ok[: n - L + 1] = m
-                    # cannot evaluate AND cannot refute by time: the start
-                    # must wait (higher-priority expansions block lower) —
-                    # but a row whose FIRST-step predicate is already false
-                    # can never start this expansion regardless of
-                    # lookahead, so it neither blocks nor pins state
-                    start_ok = bools[flat[0]] if L else np.ones(n, dtype=bool)
-                    blocked = ~done & ~evaluable & ~time_refut & start_ok
-                    undecided |= blocked
-                    done |= blocked
-                    newly_matched = ~done & evaluable & ok
-                    chosen[newly_matched] = e_idx
-                    done |= newly_matched
-                for i in np.nonzero(chosen >= 0)[0].tolist():
-                    counts, flat = expansions[chosen[i]]
-                    L = len(flat)
-                    rows.append(
-                        [key[0], int(ts_ms[i]), int(ts_ms[i + L - 1]), L, *counts]
-                        + [seq[c].iloc[i : i + L].tolist() for c in capture]
-                    )
-                decided = ~undecided
+                if within_ms is None:
+                    time_refut = np.zeros(n, dtype=bool)
+                else:
+                    time_refut = wm - ts_ms > within_ms
+                rows, undecided = decide(key[0], seq, ts_ms, decided, time_refut)
                 first_undec = int(np.argmax(undecided)) if undecided.any() else n
-                if first_undec > 0:
+                if first_undec < n:
                     seq = seq.iloc[first_undec:].reset_index(drop=True)
-                    decided = decided[first_undec:]
-                if not len(seq):
+                    decided = ~undecided[first_undec:]
+                else:
                     seq, decided = None, None
 
         has_buf = buf is not None and len(buf) > 0
-        has_seq = seq is not None and len(seq) > 0
-        if not has_buf and not has_seq:
+        if not has_buf and seq is None:
             if state.exists:
                 state.remove()
         else:
-            state.update(
-                (
-                    pickle.dumps(
-                        (
-                            buf if has_buf else None,
-                            seq if has_seq else None,
-                            decided if has_seq else None,
-                        )
-                    ),
-                )
-            )
+            state.update((pickle.dumps((buf if has_buf else None, seq, decided)),))
             if has_buf:
+                # wake when the watermark next advances so buffered rows
+                # finalize even if this key sees no further data
                 state.setTimeoutTimestamp(max(int(buf["_ts_ms"].min()), wm + 1))
-            else:
+            elif within_ms is not None:
                 # only undecided starts remain: they resolve by time once
-                # the watermark passes first start + within_ms
+                # the watermark passes first start + within_ms. Without a
+                # span bound they wait for the key's next rows.
                 state.setTimeoutTimestamp(
                     max(int(seq["_ts_ms"].iloc[0]) + within_ms + 1, wm + 1)
                 )
@@ -327,6 +166,166 @@ def make_cep_quant_handler(
             yield pd.DataFrame(rows, columns=list(out_fields))
 
     return handler
+
+
+def _pattern_stream(
+    stream_df: DataFrame,
+    key: str,
+    ts: str,
+    cols: Sequence[str],
+    watermark_delay: str,
+    fields: Sequence[T.StructField],
+    handler,
+) -> DataFrame:
+    """Prune to ``cols`` + key + ts, set the watermark, and run a
+    ``_pattern_handler`` per key in append mode with event-time timers;
+    ``fields`` is the handler's output schema."""
+    from .processor import apply_state_store_defaults
+
+    apply_state_store_defaults(stream_df.sparkSession)
+    needed = list(dict.fromkeys(list(cols) + [key, ts]))
+    return (
+        stream_df.select(*needed)
+        .withWatermark(ts, watermark_delay)
+        .groupBy(key)
+        .applyInPandasWithState(
+            handler,
+            outputStructType=T.StructType(list(fields)),
+            stateStructType=STATE_SCHEMA,
+            outputMode="append",
+            timeoutConf=GroupStateTimeout.EventTimeTimeout,
+        )
+    )
+
+
+def make_cep_quant_handler(
+    key_name: str,
+    ts_col: str,
+    steps: Sequence,
+    cols: Sequence[str],
+    within_ms: Optional[int],
+    tiebreak: Optional[str],
+    out_fields: Sequence[str],
+    expansions: Sequence,
+    capture: Sequence[str] = (),
+):
+    """Stateful handler for bounded-quantifier patterns, the fixed-length
+    pattern included as its {1,1} case (pure function of config —
+    shippable via --py-files).
+
+    Decision protocol: an expansion's verdict on finalized rows is
+    immutable, but a start row cannot be DECIDED until every
+    higher-priority expansion is decided — and an expansion needing rows
+    beyond the key's current end is undecidable until either those rows
+    arrive or, with ``within_ms``, the watermark passes
+    ``start_ts + within_ms`` (any future row would then violate the span
+    bound, refuting the expansion — future rows are never late past the
+    watermark). Each start is therefore decided exactly once, emitting at
+    most one match. Without ``within_ms`` a start waits for its lookahead
+    rows; that is decidable only when a missing lookahead means no match,
+    i.e. for a single expansion (``cep_stream``).
+
+    ``capture`` columns are emitted as per-match ARRAYS (column value of
+    every consumed row in match order) — the streaming twin of the batch
+    matcher's ``s_{c}`` capture arrays; the rows are already in the
+    key's finalized sequence, so captures cost no extra state."""
+
+    def decide(k, seq, ts_ms, decided, time_refut):
+        n = len(seq)
+        bools = [_pred_bool(p, seq) for p, _, _ in steps]
+        done = decided.copy()
+        undecided = np.zeros(n, dtype=bool)
+        chosen = np.full(n, -1, dtype=np.int64)
+        for e_idx, (counts, flat) in enumerate(expansions):
+            L = len(flat)
+            evaluable = np.zeros(n, dtype=bool)
+            ok = np.zeros(n, dtype=bool)
+            if n >= L:
+                evaluable[: n - L + 1] = True
+                m = np.ones(n - L + 1, dtype=bool)
+                for j, s_idx in enumerate(flat):
+                    m &= bools[s_idx][j : j + n - L + 1]
+                if within_ms is not None:
+                    m &= ts_ms[L - 1 :] - ts_ms[: n - L + 1] <= within_ms
+                ok[: n - L + 1] = m
+            # cannot evaluate AND cannot refute by time: the start must
+            # wait (higher-priority expansions block lower) — but a row
+            # whose FIRST-step predicate is already false can never start
+            # this expansion regardless of lookahead, so it neither blocks
+            # nor pins state
+            blocked = ~done & ~evaluable & ~time_refut & bools[flat[0]]
+            undecided |= blocked
+            done |= blocked
+            newly_matched = ~done & evaluable & ok
+            chosen[newly_matched] = e_idx
+            done |= newly_matched
+        rows = []
+        for i in np.nonzero(chosen >= 0)[0].tolist():
+            counts, flat = expansions[chosen[i]]
+            L = len(flat)
+            rows.append(
+                [k, int(ts_ms[i]), int(ts_ms[i + L - 1]), L, *counts]
+                + [seq[c].iloc[i : i + L].tolist() for c in capture]
+            )
+        return rows, undecided
+
+    return _pattern_handler(
+        ts_col, list(cols) + list(capture), within_ms, tiebreak, out_fields, decide
+    )
+
+
+def _quantified_stream(
+    stream_df, key, ts, steps, step_cols, within_ms, tiebreak, greedy,
+    watermark_delay, capture,
+) -> DataFrame:
+    from ..plans.cep import expand_quantified
+
+    expansions = expand_quantified(steps, greedy)
+    fields = (
+        [
+            T.StructField(key, stream_df.schema[key].dataType, True),
+            T.StructField("w_start", T.LongType(), False),
+            T.StructField("w_end", T.LongType(), False),
+            T.StructField("match_len", T.LongType(), False),
+        ]
+        + [T.StructField(f"s{i}_n", T.LongType(), False) for i in range(len(steps))]
+        + [
+            T.StructField(f"s_{c}", T.ArrayType(stream_df.schema[c].dataType), True)
+            for c in capture
+        ]
+    )
+    handler = make_cep_quant_handler(
+        key, ts, steps, step_cols, within_ms, tiebreak,
+        [f.name for f in fields], expansions, capture=capture,
+    )
+    cols = list(step_cols) + list(capture) + ([tiebreak] if tiebreak else [])
+    return _pattern_stream(stream_df, key, ts, cols, watermark_delay, fields, handler)
+
+
+def cep_stream(
+    stream_df: DataFrame,
+    key: str,
+    ts: str,
+    steps: Sequence[StepPredicateP],
+    step_cols: Sequence[str],
+    within_ms: Optional[int] = None,
+    tiebreak: Optional[str] = None,
+    capture: Sequence[str] = (),
+    watermark_delay: str = "30 seconds",
+) -> DataFrame:
+    """Streaming contiguous-pattern matcher; returns the match stream
+    (append mode) with ``plans.cep.match_pattern``'s columns. It runs the
+    bounded-pattern handler on ``(step, 1, 1)`` steps — one expansion, so
+    ``within_ms`` is optional — and projects the capture arrays to
+    ``s{j}_{c}``. Emissions over any replayed prefix equal the batch
+    ``match_pattern`` result on the finalized rows."""
+    from ..plans.cep import fixed_captures
+
+    m = _quantified_stream(
+        stream_df, key, ts, [(s, 1, 1) for s in steps], step_cols, within_ms,
+        tiebreak, True, watermark_delay, capture,
+    )
+    return fixed_captures(m, key, len(steps), capture)
 
 
 def cep_stream_quantified(
@@ -355,47 +354,9 @@ def cep_stream_quantified(
             "cep_stream_quantified requires within_ms: unbounded quantified "
             "patterns are undecidable at the stream tail (see docstring)"
         )
-    from ..plans.cep import expand_quantified
-
-    expansions = expand_quantified(steps, greedy)
-    needed = list(
-        dict.fromkeys(
-            list(step_cols) + list(capture)
-            + ([tiebreak] if tiebreak else []) + [key, ts]
-        )
-    )
-    pruned = stream_df.select(*needed)
-    fields = (
-        [
-            T.StructField(key, stream_df.schema[key].dataType, True),
-            T.StructField("w_start", T.LongType(), False),
-            T.StructField("w_end", T.LongType(), False),
-            T.StructField("match_len", T.LongType(), False),
-        ]
-        + [T.StructField(f"s{i}_n", T.LongType(), False) for i in range(len(steps))]
-        + [
-            T.StructField(f"s_{c}", T.ArrayType(stream_df.schema[c].dataType), True)
-            for c in capture
-        ]
-    )
-    schema = T.StructType(fields)
-    handler = make_cep_quant_handler(
-        key, ts, steps, step_cols, within_ms, tiebreak,
-        [f.name for f in fields], expansions, capture=capture,
-    )
-    from .processor import apply_state_store_defaults
-
-    apply_state_store_defaults(stream_df.sparkSession)
-    return (
-        pruned.withWatermark(ts, watermark_delay)
-        .groupBy(key)
-        .applyInPandasWithState(
-            handler,
-            outputStructType=schema,
-            stateStructType=STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.EventTimeTimeout,
-        )
+    return _quantified_stream(
+        stream_df, key, ts, steps, step_cols, within_ms, tiebreak, greedy,
+        watermark_delay, capture,
     )
 
 
@@ -449,120 +410,40 @@ def make_cep_plus_handler(
     watermark, rows are never late past it) would violate the span
     bound, refuting the start. So every start is decided exactly once
     and state is bounded by one ``within_ms`` horizon per key."""
-    sort_cols = ["_ts_ms"] + ([tiebreak] if tiebreak else [])
-    keep = list(dict.fromkeys(list(cols) + ([tiebreak] if tiebreak else [])))
 
-    def handler(
-        key: Tuple[Any], pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        if state.exists:
-            buf, seq, decided = pickle.loads(state.get[0])
+    def decide(k, seq, ts_ms, decided, time_refut):
+        n = len(seq)
+        pre_f = _pred_bool(pre, seq)
+        mid_f = _pred_bool(plus, seq)
+        post_f = _pred_bool(post, seq)
+        nm = np.nonzero(~mid_f)[0]
+        # first finalized non-mid index after each row (n if none)
+        if len(nm):
+            j_idx = np.searchsorted(nm, np.arange(n) + 1)
+            has_j = j_idx < len(nm)
+            j = np.where(has_j, nm[np.minimum(j_idx, len(nm) - 1)], n)
         else:
-            buf, seq, decided = None, None, None
+            has_j = np.zeros(n, dtype=bool)
+            j = np.full(n, n, dtype=np.int64)
 
-        new_parts = []
-        for pdf in pdfs:
-            if pdf.empty:
-                continue
-            part = pdf[list(dict.fromkeys(keep + [ts_col]))].copy()
-            part["_ts_ms"] = (
-                part[ts_col].to_numpy().astype("datetime64[ms]").astype("int64")
-            )
-            if ts_col not in keep:
-                part = part.drop(columns=[ts_col])
-            new_parts.append(part)
-        if new_parts:
-            buf = pd.concat(([buf] if buf is not None else []) + new_parts, ignore_index=True)
-
-        wm = state.getCurrentWatermarkMs()
+        active = ~decided
+        # non-pre rows decide (no match) immediately
+        undecided = active & ~has_j & pre_f & ~time_refut
+        cand = active & pre_f & has_j
         rows = []
-        if wm > 0:
-            if buf is not None and len(buf):
-                final_mask = buf["_ts_ms"].to_numpy() < wm
-                newly = buf[final_mask].sort_values(sort_cols, kind="mergesort")
-                buf = buf[~final_mask].reset_index(drop=True)
-                if len(newly):
-                    seq = pd.concat(
-                        ([seq] if seq is not None else []) + [newly], ignore_index=True
-                    )
-                    decided = np.concatenate(
-                        [
-                            decided if decided is not None else np.zeros(0, dtype=bool),
-                            np.zeros(len(newly), dtype=bool),
-                        ]
-                    )
-            if seq is not None and len(seq):
-                n = len(seq)
-                ts_ms = seq["_ts_ms"].to_numpy()
-                pre_f = _pred_bool(pre, seq)
-                mid_f = _pred_bool(plus, seq)
-                post_f = _pred_bool(post, seq)
-                nm = np.nonzero(~mid_f)[0]
-                # first finalized non-mid index after each row (n if none)
-                if len(nm):
-                    j_idx = np.searchsorted(nm, np.arange(n) + 1)
-                    has_j = j_idx < len(nm)
-                    j = np.where(has_j, nm[np.minimum(j_idx, len(nm) - 1)], n)
-                else:
-                    has_j = np.zeros(n, dtype=bool)
-                    j = np.full(n, n, dtype=np.int64)
-                time_refut = wm - ts_ms > within_ms
-
-                active = ~decided
-                # non-pre rows decide (no match) immediately
-                undecided = active & ~has_j & pre_f & ~time_refut
-                cand = active & pre_f & has_j
-                if cand.any():
-                    jj = j[cand]
-                    k = jj - np.nonzero(cand)[0] - 1
-                    ok = (
-                        (k >= min_repeats)
-                        & post_f[jj]
-                        & (ts_ms[jj] - ts_ms[cand] <= within_ms)
-                    )
-                    midx = np.nonzero(cand)[0][ok]
-                    for i in midx.tolist():
-                        rows.append(
-                            [key[0], int(ts_ms[i]), int(ts_ms[j[i]]), int(j[i] - i - 1)]
-                        )
-                decided = ~undecided
-                first_undec = int(np.argmax(undecided)) if undecided.any() else n
-                if first_undec > 0:
-                    seq = seq.iloc[first_undec:].reset_index(drop=True)
-                    decided = decided[first_undec:]
-                if not len(seq):
-                    seq, decided = None, None
-
-        has_buf = buf is not None and len(buf) > 0
-        has_seq = seq is not None and len(seq) > 0
-        if not has_buf and not has_seq:
-            if state.exists:
-                state.remove()
-        else:
-            state.update(
-                (
-                    pickle.dumps(
-                        (
-                            buf if has_buf else None,
-                            seq if has_seq else None,
-                            decided if has_seq else None,
-                        )
-                    ),
-                )
+        if cand.any():
+            jj = j[cand]
+            k_mid = jj - np.nonzero(cand)[0] - 1
+            ok = (
+                (k_mid >= min_repeats)
+                & post_f[jj]
+                & (ts_ms[jj] - ts_ms[cand] <= within_ms)
             )
-            if has_buf:
-                state.setTimeoutTimestamp(max(int(buf["_ts_ms"].min()), wm + 1))
-            else:
-                state.setTimeoutTimestamp(
-                    max(int(seq["_ts_ms"].iloc[0]) + within_ms + 1, wm + 1)
-                )
+            for i in np.nonzero(cand)[0][ok].tolist():
+                rows.append([k, int(ts_ms[i]), int(ts_ms[j[i]]), int(j[i] - i - 1)])
+        return rows, undecided
 
-        if rows:
-            yield pd.DataFrame(rows, columns=list(out_fields))
-
-    return handler
+    return _pattern_handler(ts_col, cols, within_ms, tiebreak, out_fields, decide)
 
 
 def cep_stream_plus(
@@ -585,69 +466,15 @@ def cep_stream_plus(
     per decided start, equal to the batch match_pattern_plus result."""
     if within_ms is None:
         raise ValueError("cep_stream_plus requires within_ms (tail decidability)")
-    needed = list(
-        dict.fromkeys(list(step_cols) + ([tiebreak] if tiebreak else []) + [key, ts])
-    )
-    pruned = stream_df.select(*needed)
     fields = [
         T.StructField(key, stream_df.schema[key].dataType, True),
         T.StructField("w_start", T.LongType(), False),
         T.StructField("w_end", T.LongType(), False),
         T.StructField("n_mid", T.LongType(), False),
     ]
-    schema = T.StructType(fields)
     handler = make_cep_plus_handler(
         key, ts, pre, plus, post, step_cols, within_ms, tiebreak, min_repeats,
         [f.name for f in fields],
     )
-    from .processor import apply_state_store_defaults
-
-    apply_state_store_defaults(stream_df.sparkSession)
-    return (
-        pruned.withWatermark(ts, watermark_delay)
-        .groupBy(key)
-        .applyInPandasWithState(
-            handler,
-            outputStructType=schema,
-            stateStructType=STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.EventTimeTimeout,
-        )
-    )
-
-
-def cep_stream(
-    stream_df: DataFrame,
-    key: str,
-    ts: str,
-    steps: Sequence[StepPredicateP],
-    step_cols: Sequence[str],
-    within_ms: Optional[int] = None,
-    tiebreak: Optional[str] = None,
-    capture: Sequence[str] = (),
-    watermark_delay: str = "30 seconds",
-) -> DataFrame:
-    """Streaming contiguous-pattern matcher; returns the match stream
-    (append mode). Emissions over any replayed prefix equal the batch
-    ``match_pattern`` result on the finalized rows."""
-    needed = list(dict.fromkeys(list(step_cols) + list(capture) + ([tiebreak] if tiebreak else []) + [key, ts]))
-    pruned = stream_df.select(*needed)
-    schema = _out_schema(key, stream_df.schema[key].dataType, len(steps), capture, stream_df.schema)
-    handler = make_cep_handler(
-        key, ts, steps, step_cols, within_ms, tiebreak, capture,
-        [f.name for f in schema.fields],
-    )
-    from .processor import apply_state_store_defaults
-
-    apply_state_store_defaults(stream_df.sparkSession)
-    return (
-        pruned.withWatermark(ts, watermark_delay)
-        .groupBy(key)
-        .applyInPandasWithState(
-            handler,
-            outputStructType=schema,
-            stateStructType=STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.EventTimeTimeout,
-        )
-    )
+    cols = list(step_cols) + ([tiebreak] if tiebreak else [])
+    return _pattern_stream(stream_df, key, ts, cols, watermark_delay, fields, handler)

@@ -124,24 +124,35 @@ def test_many_windows_tier_matches_catalyst_rows(spark):
     assert canon(fast) == canon(slow)
 
 
-def test_quantified_cep_is_one_exchange_one_sort(spark):
+@pytest.mark.parametrize("fixed", [False, True], ids=["quantified", "fixed"])
+def test_quantified_cep_is_one_exchange_one_sort(spark, fixed):
     """match_pattern_quantified compiles the whole expansion family (CASE
     over the longest lead() span) into ONE window-function pass: one hash
     exchange on the key + one sort feed every expansion's predicate — no
     joins, no per-expansion subplans, whole-stage codegen around the
-    CASE."""
-    from scotty_window_processor_spark.plans.cep import match_pattern_quantified
+    CASE. ``match_pattern`` (the cep_funnel gate's matcher) is its {1,1}
+    case plus a capture projection and keeps the same plan."""
+    from scotty_window_processor_spark.plans.cep import (
+        match_pattern,
+        match_pattern_quantified,
+    )
 
     ev = spark.read.parquet(f"{SF}/events.parquet")
-    out = match_pattern_quantified(
-        ev, key="user_id", ts="ts",
-        steps=[
-            (lambda c: c["event_type"] == "view", 1, 1),
-            (lambda c: c["event_type"] == "click", 1, 3),
-            (lambda c: c["event_type"] == "purchase", 1, 1),
-        ],
-        step_cols=["event_type"], within_ms=7 * 86_400_000, tiebreak="event_id",
+    view = lambda c: c["event_type"] == "view"  # noqa: E731
+    click = lambda c: c["event_type"] == "click"  # noqa: E731
+    purchase = lambda c: c["event_type"] == "purchase"  # noqa: E731
+    common = dict(
+        key="user_id", ts="ts", step_cols=["event_type"],
+        within_ms=7 * 86_400_000, tiebreak="event_id",
     )
+    if fixed:
+        out = match_pattern(
+            ev, steps=[view, click, purchase], capture=["event_id"], **common
+        )
+    else:
+        out = match_pattern_quantified(
+            ev, steps=[(view, 1, 1), (click, 1, 3), (purchase, 1, 1)], **common
+        )
     plan = plan_of(out)
     assert plan.count("Exchange") == 1, plan
     assert plan.count("Sort") == 1, plan

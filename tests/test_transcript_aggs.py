@@ -142,8 +142,9 @@ def test_histogram_quantile_bounded_state():
 def test_linear_counting_bounded_state():
     """LinearCountingAggregation: union-mergeable occupied-position set,
     bounded by m; estimate within the linear-counting error of the true
-    cardinality; saturation floors at m; portable-hash positions match
-    the SQL formula count(DISTINCT md5_60 % m)."""
+    cardinality; saturation floors at m; positions are
+    int(md5(str(v)).hexdigest()[:15], 16) % m, the SQL oracle's
+    ('0x' || left(md5(v), 15))::BIGINT % m."""
     import hashlib
     import math as _math
 
@@ -164,7 +165,7 @@ def test_linear_counting_bounded_state():
     for v in vals[120:]:
         h2 = f.combine(h2, f.lift({"v": v}))
     assert f.combine(f.clone(h1), h2) == p
-    # positions follow the portable md5-60 convention
+    # positions are the first 15 hex digits (60 bits) of the md5, mod m
     pos = int(hashlib.md5(b"k0").hexdigest()[:15], 16) % 1024
     assert pos in p
     assert f.lower(set()) is None
