@@ -58,6 +58,11 @@ tests/test_property_sharing.py + test_tumbling.py):
    watermark (its lower bound is `end > lastWatermark`) — see
    SlidingWindow.trigger_windows; pinned in
    tests/test_property_sharing.py::
+   test_split_watermark_emits_each_window_once;
+9. a late row that pulls a session start back past its slice's own start
+   drops the session edge and adds one at the new start, instead of
+   moving the edge in place into an inverted slice — see
+   _apply_slice_edge_mods; pinned by an explicit example of
    test_split_watermark_emits_each_window_once.
 """
 
@@ -692,7 +697,26 @@ class SlicingWindowOperator:
                 if index == -1:
                     return
                 s = self.store[index]
-                if s.type.movable:
+                if mod.post <= s.t_start:
+                    # divergence fix #9: the reference moves the edge in
+                    # place even when an out-of-order element pulls the
+                    # session start back past the slice's own start
+                    # (e.g. fixed edge 54, session edge 55, late row 52),
+                    # leaving a slice [54, 52) and unsorted starts — window
+                    # assembly then drops slices depending on what eviction
+                    # has already cut. [post, pre) holds no element (any
+                    # would already be in the session), so drop the edge
+                    # at pre and add one at post instead.
+                    if s.type.movable:
+                        self.store.merge_at(index)
+                    elif isinstance(s.type, Flexible):
+                        s.type.count -= 1
+                    index = self.store.find_index_by_ts(mod.post)
+                    if index == -1:
+                        return
+                    if self.store[index].t_start != mod.post:
+                        self._split_slice(index, mod.post)
+                elif s.type.movable:
                     nxt = self.store[index + 1]
                     s.t_end = mod.post
                     nxt.t_start = mod.post

@@ -7,6 +7,9 @@ the per-key window tiers behind ``scotty_batch`` — always
 Arrow-batched, never per row.
 """
 
+import functools
+
+import numpy as np
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -67,22 +70,35 @@ def adaptive_buckets(df) -> int:
     return int(min(max(lo, want), _BUCKET_CAP))
 
 
-def key_sorted_exchange(df, key: str, ts: str, value, arrival_order=None):
+def key_exchange(df, key: str, ts: str, value, arrival_order=None):
     """The one exchange of both Python batch tiers: every row of a key in
-    one partition, sorted by (key, ts[, arrival_order]), so a partition
-    function cuts keys at value changes and never sorts in Python.
+    one partition, in no particular order. Each tier holds its whole
+    partition in memory anyway, so it orders the rows itself with
+    ``partition_order`` instead of asking Spark for a sort.
 
     In value mode only the key, event time, value and tie break cross the
     shuffle and the Arrow boundary (never the payload columns). The
     partition count comes from ``adaptive_buckets``; an explicit
     ``repartition(n, key)`` has the REPARTITION_BY_NUM origin, which AQE
     does not coalesce by shuffle bytes (tiny for pruned columns) onto one
-    CPU-bound Python worker. The sort runs in Tungsten (parallel,
-    spill-safe)."""
-    order = [ts] + ([arrival_order] if arrival_order else [])
+    CPU-bound Python worker."""
     if value is not None:
-        df = df.select(*dict.fromkeys([key, ts, value, *order]))
-    return df.repartition(adaptive_buckets(df), F.col(key)).sortWithinPartitions(key, *order)
+        df = df.select(*dict.fromkeys([key, ts, value] + ([arrival_order] if arrival_order else [])))
+    return df.repartition(adaptive_buckets(df), F.col(key))
+
+
+def partition_order(key_codes, ts_ms, arrival=None):
+    """Row order of one ``key_exchange`` partition: grouped by key code,
+    then by event time, then by the optional arrival column. The sort is
+    stable, so rows tied on every column keep the order they arrived in."""
+    return np.lexsort((ts_ms, key_codes) if arrival is None else (arrival, ts_ms, key_codes))
+
+
+@functools.lru_cache(maxsize=None)
+def _ddl_type(ddl: str):
+    """A DDL type string parsed once per process (each parse is a JVM
+    round trip)."""
+    return T._parse_datatype_string(ddl)
 
 
 def window_output_schema(key: str, key_type, aggs):
@@ -97,5 +113,5 @@ def window_output_schema(key: str, key_type, aggs):
             T.StructField("w_start", T.LongType(), False),
             T.StructField("w_end", T.LongType(), False),
         ]
-        + [T.StructField(name, T._parse_datatype_string(ddl), True) for name, ddl, _ in aggs]
+        + [T.StructField(name, _ddl_type(ddl), True) for name, ddl, _ in aggs]
     )

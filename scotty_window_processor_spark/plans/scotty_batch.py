@@ -1,13 +1,13 @@
 """Kernel-backed multi-window shared aggregation over a batch DataFrame.
 
 This is the batch entry point into the slicing engine: one exchange by key
-(`plans.key_sorted_exchange`: `repartition(key)` + a Tungsten sort by key
-and ts, the same exchange the vectorized tier reads), then a
-`mapInPandas` over each partition runs every key's sorted run through the
-general stream-slicing kernel. All concurrent window definitions — any
-mix of tumbling / sliding / session, time- or count-measured — share a
-single slice store per key, the reference's headline aggregate-sharing
-property (LazyAggregateStore.aggregate,
+(`plans.key_exchange`: `repartition(key)`, the same exchange the
+vectorized tier reads), then a `mapInPandas` over each partition orders
+it by key and ts (`plans.partition_order`) and runs every key's sorted
+run through the general stream-slicing kernel. All concurrent window
+definitions — any mix of tumbling / sliding / session, time- or
+count-measured — share a single slice store per key, the reference's
+headline aggregate-sharing property (LazyAggregateStore.aggregate,
 /root/reference/slicing/.../LazyAggregateStore.java:81-99), which Spark's
 built-in `F.window` cannot express (it duplicates rows per overlapping
 window instead).
@@ -33,7 +33,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions import AggSpec, QuantileAggregation
-from . import key_sorted_exchange, window_output_schema
+from . import key_exchange, partition_order, window_output_schema
 from ..operators.kernel import (
     NAMED_LIFTS,
     bulk_lift_kinds,
@@ -94,29 +94,29 @@ def scotty_window_aggregate(
     The result's ``tiers`` attribute maps each window_id to the tier that
     computes it: "catalyst", "vectorized" or "kernel".
     """
-    catalyst_exprs = _catalyst_aggs(aggs, value) if value is not None else None
-    if force_kernel:
-        prefer_catalyst = False
+    # Catalyst needs a value column and built-in aggregates; the Column
+    # expressions themselves are built only once that tier is chosen
+    catalyst = (prefer_catalyst and not force_kernel and value is not None
+                and all(_catalyst_builtin(factory()) for _, _, factory in aggs))
     # cost-based tier choice: the Catalyst tier fans out one
     # scan+shuffle+groupBy(F.window) subplan PER window family — the
     # bucket-per-window pattern slicing exists to beat. Fine for 1-2
     # concurrent windows (each subplan is whole-stage codegen), but from
     # 3 families on the shared-shuffle vectorized tier (ONE exchange,
-    # every family reduced from the same sorted Arrow batches) wins and
+    # every family reduced from the same Arrow batches) wins and
     # keeps winning as the window count grows (reference benchmark shape:
     # 1-1000 concurrent windows, random_tumbling_benchmark.json).
     # Break-even re-measured in r6 on the 440k-turn transcripts shape:
     # 3 families = 1.9/1.2 s (cold/warm) shared vs 3.6/1.9 s for the
     # 3-subplan Catalyst union, so the cutover moved from >3 to >=3.
     if (
-        prefer_catalyst
-        and catalyst_exprs is not None
-        and value is not None
+        catalyst
         and sum(1 for w in windows if w.measure == WindowMeasure.TIME) >= 3
         and _fast_path_eligible(list(windows), list(aggs))
     ):
-        prefer_catalyst = False
-    if prefer_catalyst and catalyst_exprs is not None:
+        catalyst = False
+    if catalyst:
+        catalyst_exprs = _catalyst_aggs(aggs, value)
         time_windows = [w for w in windows if w.measure == WindowMeasure.TIME
                         and isinstance(w, (TumblingWindow, SlidingWindow, SessionWindow))]
         rest = [w for w in windows if w not in time_windows]
@@ -160,24 +160,28 @@ def scotty_window_aggregate(
     out_cols = [f.name for f in out_schema.fields[1:]]
 
     def run(pdfs):
-        # one partition of the key-sorted exchange (thousands of keys, not
-        # one: per-group Arrow + pandas dispatch dominates when keys are
-        # small). Columns are extracted ONCE per partition and sliced per
-        # key — a zero-copy numpy view in value mode, list slices of
-        # already-boxed values in record mode.
+        # one partition of the key exchange (thousands of keys, not one:
+        # per-group Arrow + pandas dispatch dominates when keys are
+        # small), ordered once by key and ts. Columns are extracted ONCE
+        # per partition and sliced per key — a zero-copy numpy view in
+        # value mode, list slices of already-boxed values in record mode.
         parts = [p for p in pdfs if not p.empty]
         if not parts:
             return
         pdf = parts[0] if len(parts) == 1 else pd.concat(parts, ignore_index=True)
-        keys = pdf[key].to_numpy()
+        codes = pd.factorize(pdf[key])[0]
         ts_all = pdf[ts].to_numpy().astype("datetime64[ms]").astype("int64")
+        order = partition_order(
+            codes, ts_all, pdf[arrival_order].to_numpy() if arrival_order else None)
+        pdf, codes, ts_all = pdf.take(order), codes[order], ts_all[order]
+        keys = pdf[key].to_numpy()
         if value is not None:
             vals_all = pdf[value].to_numpy()
         else:
             cols_all = {c: pdf[c].tolist() for c in pdf.columns}
 
-        changes = np.nonzero(keys[1:] != keys[:-1])[0] + 1
-        bounds = np.concatenate([[0], changes, [len(keys)]])
+        changes = np.nonzero(codes[1:] != codes[:-1])[0] + 1
+        bounds = np.concatenate([[0], changes, [len(codes)]])
         outs = []
         for s, e in zip(bounds[:-1].tolist(), bounds[1:].tolist()):
             ts_ms = ts_all[s:e]
@@ -194,7 +198,7 @@ def scotty_window_aggregate(
         if outs:
             yield pd.concat(outs, ignore_index=True)
 
-    out = key_sorted_exchange(df, key, ts, value, arrival_order).mapInPandas(run, out_schema)
+    out = key_exchange(df, key, ts, value, arrival_order).mapInPandas(run, out_schema)
     out.tiers = {w.window_id: "kernel" for w in window_defs}
     return out
 
@@ -246,19 +250,24 @@ _CATALYST_REDUCTIONS = {
 }
 
 
-def _catalyst_aggs(aggs: Sequence[AggSpec], value: str):
-    """Map standard aggregate functions to Catalyst expressions by output
-    name, or None if any function has no built-in equivalent. Matched by
+def _catalyst_builtin(fn) -> bool:
+    """Whether an aggregate function has a Catalyst built-in. Matched by
     exact type, as ``NAMED_LIFTS`` is: a subclass with its own lift (or
     the sketch partial of ``HistogramQuantileAggregation``) is not the
     built-in."""
+    return type(fn) in NAMED_LIFTS or type(fn) is QuantileAggregation
+
+
+def _catalyst_aggs(aggs: Sequence[AggSpec], value: str):
+    """Catalyst expressions by output name for aggregates that all pass
+    ``_catalyst_builtin``."""
     out = {}
     for name, ddl, factory in aggs:
         fn = factory()
         kind = NAMED_LIFTS.get(type(fn))
         if kind is not None:
             expr = _CATALYST_REDUCTIONS[kind](value)
-        elif type(fn) is QuantileAggregation:
+        else:
             # exact discrete quantile, pure JVM (guide §4: built-ins over
             # Python): the kernel's lower() returns the smallest v whose
             # cumulative count reaches max(1, ceil(q·total)) over the
@@ -274,8 +283,6 @@ def _catalyst_aggs(aggs: Sequence[AggSpec], value: str):
                     F.ceil(F.count(value) * F.lit(float(fn.q))),
                 ).cast("int"),
             )
-        else:
-            return None
         out[name] = expr.cast(ddl)
     return out
 
@@ -285,10 +292,10 @@ def _fast_path_eligible(windows: Sequence[Window], aggs: Sequence[AggSpec]) -> b
     semantics and every aggregate is a numpy segment reduction.
 
     In one-shot batch mode (sorted input + single flushing watermark) the
-    window definitions decouple: fixed time windows are interval sums over
-    the shared edge grid, sessions are gaps-and-islands, count windows are
-    positional — slice *sharing* only matters for incremental streaming
-    state, so each family reduces independently over one sorted array."""
+    window definitions decouple: fixed time windows combine ranges of the
+    shared gcd slices, sessions are gaps-and-islands, count windows are
+    positional — each family reduces independently over one ordered
+    array."""
     for w in windows:
         if isinstance(w, SessionWindow):
             if w.measure != WindowMeasure.TIME:

@@ -53,6 +53,27 @@ def _out_schema(stream: DataFrame, key: str, ts: str, left_cols, right_cols) -> 
     return T.StructType(fields)
 
 
+def _concat_rows(frames):
+    """The frames' rows in order. A column that is all-NA in a frame first
+    takes the dtype of the first frame where it is not, when that dtype
+    can hold NA. That is the dtype pandas picks today by ignoring all-NA
+    columns, a rule it deprecates; so the buffer's dtypes stay as they are
+    under a pandas upgrade."""
+    if len(frames) == 1:
+        return frames[0]
+    ref = {}
+    for f in frames:
+        for c in f.columns:
+            if c not in ref and not f[c].isna().all():
+                ref[c] = f[c].dtype
+    frames = [
+        f.astype({c: ref[c] for c in f.columns if c in ref and f[c].dtype != ref[c]
+                  and ref[c].kind not in "iub" and f[c].isna().all()})
+        for f in frames
+    ]
+    return pd.concat(frames, ignore_index=True)
+
+
 def _make_handler(
     ts: str,
     side: str,
@@ -78,8 +99,7 @@ def _make_handler(
 
         parts = [p for p in pdfs if not p.empty]
         if parts:
-            new = parts[0] if len(parts) == 1 else pd.concat(parts, ignore_index=True)
-            buf = new if buf is None else pd.concat([buf, new], ignore_index=True)
+            buf = _concat_rows(parts if buf is None else [buf, *parts])
 
         wm = state.getCurrentWatermarkMs()
         rows = []
@@ -99,7 +119,7 @@ def _make_handler(
                     # event time, so an in-batch late-but-older right can
                     # never shadow it (and an equal-ts higher-tiebreak
                     # arrival legitimately beats it)
-                    fin = pd.concat([last_r, fin], ignore_index=True)
+                    fin = _concat_rows([last_r, fin])
                 else:
                     fin = fin.reset_index(drop=True)
                 # right-before-left at equal ts (inclusive); stable sort +

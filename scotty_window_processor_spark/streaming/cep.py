@@ -199,7 +199,6 @@ def _pattern_stream(
 
 
 def make_cep_quant_handler(
-    key_name: str,
     ts_col: str,
     steps: Sequence,
     cols: Sequence[str],
@@ -295,7 +294,7 @@ def _quantified_stream(
         ]
     )
     handler = make_cep_quant_handler(
-        key, ts, steps, step_cols, within_ms, tiebreak,
+        ts, steps, step_cols, within_ms, tiebreak,
         [f.name for f in fields], expansions, capture=capture,
     )
     cols = list(step_cols) + list(capture) + ([tiebreak] if tiebreak else [])
@@ -388,7 +387,6 @@ def cep_stream_quantified_rows(
 
 
 def make_cep_plus_handler(
-    key_name: str,
     ts_col: str,
     pre,
     plus,
@@ -473,7 +471,7 @@ def cep_stream_plus(
         T.StructField("n_mid", T.LongType(), False),
     ]
     handler = make_cep_plus_handler(
-        key, ts, pre, plus, post, step_cols, within_ms, tiebreak, min_repeats,
+        ts, pre, plus, post, step_cols, within_ms, tiebreak, min_repeats,
         [f.name for f in fields],
     )
     cols = list(step_cols) + ([tiebreak] if tiebreak else [])

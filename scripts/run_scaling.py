@@ -151,8 +151,8 @@ def main():
 Flagship job: 12 CONCURRENT windows in one shared pass (8 tumbling 1m–2h,
 2 sliding, 2 session gaps; turn count + tool-call sum) over deterministic
 synthesized transcripts ({low['turns']:,} turns incl. hot-key skew),
-through the engine's Arrow/numpy tier (repartition + Tungsten sort →
-mapInArrow segment reductions — no per-row Python, per BASELINE.json
+through the engine's Arrow/numpy tier (repartition →
+mapInArrow, numpy ordering and slice reductions — no per-row Python, per BASELINE.json
 input_hint). This mirrors the reference's concurrent-windows benchmark
 (random_tumbling_benchmark.json, 1→1000 windows).
 
@@ -178,8 +178,8 @@ hardware ceiling is ≈ {hw_ceiling:.2f} efficiency.
 Reference baseline context (BASELINE.md): Scotty sustains 1.7–2.0M
 tuples/s on ONE core for integer-sum windows, in-process, no shuffle, no
 serialization, int payloads. This engine's figure covers a full Spark
-pipeline (parquet scan → hash repartition → Tungsten sort → Arrow IPC →
-vectorized window assembly → count) on string-keyed conversation rows.
+pipeline (parquet scan → hash repartition → Arrow IPC → numpy ordering
+→ vectorized window assembly → count) on string-keyed conversation rows.
 
 Generated by scripts/run_scaling.py on {time.strftime('%Y-%m-%d %H:%M:%S')}.
 """

@@ -400,7 +400,7 @@ def test_quant_nonstart_rows_do_not_pin_state():
 
     steps = _steps_np(PAT_RETRY)
     handler = make_cep_quant_handler(
-        "user_id", "ts", steps, ["event_type"], 600_000, None,
+        "ts", steps, ["event_type"], 600_000, None,
         ["user_id", "w_start", "w_end", "match_len", "s0_n", "s1_n", "s2_n"],
         expand_quantified(steps, greedy=True),
     )

@@ -19,7 +19,7 @@ reference defines. This suite previously exposed two real reference bugs
 import pytest
 
 hypothesis = pytest.importorskip("hypothesis")
-from hypothesis import given, settings, strategies as st
+from hypothesis import example, given, settings, strategies as st
 
 from scotty_window_processor_spark.functions import CountAggregation, SumAggregation
 from scotty_window_processor_spark.operators import (
@@ -147,6 +147,15 @@ def test_sharing_invariant_fixed_windows_with_disorder(specs, raw):
     disorder=st.booleans(),
     split=st.floats(0.0, 1.0),
     delay=st.integers(0, 60),
+)
+# a late row pulling a session start back past a fixed edge (edges 54 and
+# 55, row 52) once left an inverted slice [54, 52) in the store
+@example(
+    specs=[("tumbling", 2), ("session", 4)],
+    raw=[(1, 1, False)] * 13 + [(1, 12, False), (1, 15, False), (1, 15, False), (1, 4, True)],
+    disorder=True,
+    split=1.0,
+    delay=0,
 )
 def test_split_watermark_emits_each_window_once(specs, raw, disorder, split, delay):
     specs = list(dict.fromkeys(specs))

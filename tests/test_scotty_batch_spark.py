@@ -243,22 +243,59 @@ def test_subclass_with_own_lift_is_not_planned_as_catalyst_builtin(spark):
     assert planned.tiers == {1: "kernel"}
 
 
+def _assert_one_key_exchange_and_no_sort(out, python_op):
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("Exchange hashpartitioning(") == 1
+    assert "Exchange hashpartitioning(conv_id" in plan
+    assert python_op in plan
+    assert "FlatMapGroupsInPandas" not in plan
+    assert "Sort [" not in plan
+
+
 def test_kernel_tier_plan_is_one_key_exchange_into_map_in_pandas(spark, transcripts):
     """The kernel tier reads the vectorized tier's exchange: one hash
-    exchange on the key, sorted within partitions, then ``mapInPandas``
-    — no bucket column, no grouped ``applyInPandas``."""
+    exchange on the key and no sort (the partition function orders its
+    rows), then ``mapInPandas`` — no bucket column, no grouped
+    ``applyInPandas``."""
     out = scotty_window_aggregate(
         transcripts, key="conv_id", ts="ts", value="turn_idx",
         windows=[TumblingWindow(WindowMeasure.TIME, 600_000, window_id=1)],
         aggs=[("n", "long", CountAggregation)],
         force_kernel=True,
     )
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert plan.count("Exchange hashpartitioning(") == 1
-    assert "Exchange hashpartitioning(conv_id" in plan
-    assert "MapInPandas" in plan
-    assert "FlatMapGroupsInPandas" not in plan
-    assert "Sort [conv_id" in plan
+    _assert_one_key_exchange_and_no_sort(out, "MapInPandas")
+
+
+def test_vectorized_tier_plan_is_one_key_exchange_into_map_in_arrow(spark, transcripts):
+    """The vectorized tier's plan: one hash exchange on the key, no sort,
+    then ``mapInArrow``."""
+    out = scotty_window_aggregate(
+        transcripts, key="conv_id", ts="ts", value="turn_idx",
+        windows=[TumblingWindow(WindowMeasure.COUNT, 7, window_id=1)],
+        aggs=[("n", "long", CountAggregation)],
+    )
+    assert out.tiers == {1: "vectorized"}
+    _assert_one_key_exchange_and_no_sort(out, "MapInArrow")
+
+
+def test_vectorized_route_builds_no_catalyst_expressions(spark, transcripts, monkeypatch):
+    """With three time families the planner takes the vectorized tier
+    without building the Catalyst tier's Column expressions."""
+    from scotty_window_processor_spark.plans import scotty_batch
+
+    def refuse(*args):
+        raise AssertionError("_catalyst_aggs called on the vectorized route")
+
+    monkeypatch.setattr(scotty_batch, "_catalyst_aggs", refuse)
+    out = scotty_window_aggregate(
+        transcripts, key="conv_id", ts="ts", value="turn_idx",
+        windows=[TumblingWindow(WindowMeasure.TIME, 600_000, window_id=1),
+                 SlidingWindow(WindowMeasure.TIME, 600_000, 300_000, window_id=2),
+                 SessionWindow(WindowMeasure.TIME, 120_000, window_id=3)],
+        aggs=[("n", "long", CountAggregation), ("s", "double", SumAggregation)],
+    )
+    assert out.tiers == {1: "vectorized", 2: "vectorized", 3: "vectorized"}
+    assert out.count() > 0
 
 
 def test_result_reports_tier_per_window(spark, transcripts):
