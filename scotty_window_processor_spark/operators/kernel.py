@@ -63,7 +63,19 @@ tests/test_property_sharing.py + test_tumbling.py):
    drops the session edge and adds one at the new start, instead of
    moving the edge in place into an inverted slice — see
    _apply_slice_edge_mods; pinned by an explicit example of
-   test_split_watermark_emits_each_window_once.
+   test_split_watermark_emits_each_window_once;
+10. a late row always lands in a slice that its windows contain. The
+   slicer's first edges start at the grid edge at or below
+   ``te − max_lateness`` instead of above it (see _next_fixed_edge), and
+   a row below the first slice gets empty slices of its own instead of
+   joining that slice (see _prepend_slices; not for count windows).
+   Pinned by explicit examples of tests/test_stream_property.py::
+   test_stream_emits_kernel_rows_once;
+11. a late row exactly one gap before a session pulls the session start
+   back to it, as a row one gap after the session's end extends it; the
+   reference (WindowContext.java) leaves the start in place while the
+   row's slice joins the session — see SessionContext.update_context;
+   pinned by an explicit example of the same test.
 """
 
 from __future__ import annotations
@@ -566,8 +578,14 @@ class SlicingWindowOperator:
         # makes the edge hugely negative; the caller's while-loop then walks
         # edges up from max(te - max_lateness, prev_edge), appending only
         # edges >= 0. wrap64 reproduces this observable behaviour exactly.
+        # Divergence fix #10, first half: the walk starts AT the grid edge
+        # at or below te - max_lateness, not above it. The reference
+        # starts above it, so a key's first element, or one after a gap
+        # longer than the lateness, leaves no edge there; a later row
+        # within the lateness but below the first new edge then joins a
+        # slice that spans a window start and falls out of that window.
         current_min = JLONG_MAX if self._min_next_edge_ts == JLONG_MIN else self._min_next_edge_ts
-        t_c = max(te - self.max_lateness, current_min)
+        t_c = max(self._first_slice_start(te - self.max_lateness) - 1, current_min)
         edge = JLONG_MAX
         for w in self.context_free:
             if w.measure == WindowMeasure.TIME:
@@ -666,6 +684,9 @@ class SlicingWindowOperator:
                 ctx.update_context(ts, mods)
             return
 
+        if ts < self.store[0].t_start and not self.has_count_measure:
+            self._prepend_slices(ts)
+
         # out-of-order: session surgery first, then indexed insert
         for ctx in self.contexts:
             mods = []
@@ -685,6 +706,26 @@ class SlicingWindowOperator:
                 record = self.store[index].drop_last_element()
                 self.store[index + 1].prepend_element(record)
                 index += 1
+
+    def _prepend_slices(self, ts: int) -> None:
+        """Divergence fix #10, second half: empty slices below the first
+        one, from the largest fixed time edge at or below ``ts`` (0 with
+        no fixed time window) up to the first slice, split at every fixed
+        time edge. The reference adds a row below the first slice to that
+        slice, whose windows do not contain it. Count-measure operators
+        keep the reference's insert: their slices hold positional record
+        runs."""
+        first = self.store[0]
+        grids = [w for w in self.context_free if w.measure == WindowMeasure.TIME]
+        edge, edges = self._first_slice_start(ts), []
+        while edge < first.t_start:
+            edges.append(edge)
+            edge = min((wrap64(w.assign_next_window_start(edge)) for w in grids),
+                       default=first.t_start)
+        self.store.slices[0:0] = [
+            self._new_slice(a, b, first.c_start, first.c_start, Fixed())
+            for a, b in zip(edges, edges[1:] + [first.t_start])
+        ]
 
     def _apply_slice_edge_mods(self, mods: List) -> None:
         """Mirror session boundary changes as slice surgery.

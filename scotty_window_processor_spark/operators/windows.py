@@ -227,7 +227,11 @@ class SessionContext:
             gap = self.gap
             if s.start - gap > position:
                 self._add_new_window(idx, position, position)
-            elif s.start > position and s.start - gap < position:
+            elif s.start > position and s.start - gap <= position:
+                # kernel divergence fix #11: a row exactly one gap before
+                # the session joins it, as a row one gap after its end
+                # does (below); the reference's `<` left the session
+                # start in place while the row's slice joined it
                 self._shift_start(s, position)
                 if idx > 0:
                     pre = self.active_windows[idx - 1]

@@ -14,15 +14,6 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 
-def shuffle_partitions(spark) -> int:
-    """``spark.sql.shuffle.partitions`` as an int, tolerating non-numeric
-    values (e.g. ``"auto"`` under Databricks auto-optimized shuffle)."""
-    try:
-        return int(spark.conf.get("spark.sql.shuffle.partitions", "64"))
-    except ValueError:
-        return spark.sparkContext.defaultParallelism or 64
-
-
 _BUCKET_CAP = 32768  # stage task-count ceiling
 
 
@@ -48,12 +39,14 @@ def adaptive_buckets(df) -> int:
     column per row (string-keyed parquet transcripts measure 13.8 B/row
     across 3 columns). Precision is not needed — the wall-time curve is
     flat within 2× of the optimum — so the estimate only has to land the
-    right order of magnitude. Clamped to [max(shuffle.partitions,
-    defaultParallelism), 32768]; at 100 TB the cap keeps the stage under
-    ~32k tasks.
+    right order of magnitude. Clamped to [defaultParallelism, 32768]: the
+    floor gives every core a task, and spark.sql.shuffle.partitions plays
+    no part (at Spark's default of 200, a 400k-row query ran 200 tasks of
+    ~2k rows: 1.33 s against 0.68 s at 4 tasks); at 100 TB the cap keeps
+    the stage under ~32k tasks.
     """
     spark = df.sparkSession
-    lo = max(shuffle_partitions(spark), spark.sparkContext.defaultParallelism or 1)
+    lo = spark.sparkContext.defaultParallelism or 1
     try:
         size = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
     except Exception:

@@ -3,7 +3,7 @@
 Pipeline shape (the Spark-native equivalent of the reference's
 KeyedScottyWindowOperator, flink-connector/.../KeyedScottyWindowOperator.java:15-88):
 
-    readStream → withWatermark("ts", delay)
+    readStream → max event-time stamp (mapInArrow) → withWatermark("ts", delay)
       → groupBy(conv_id).applyInPandasWithState(handler)
       → exactly-once sink (streaming.sink)
 
@@ -20,20 +20,26 @@ Spark's watermark (`GroupState.getCurrentWatermarkMs`) replaces Flink's
 `ctx.timerService().currentWatermark()`; an event-time timer wakes keys
 with no new rows, and state removal cleans up idle keys.
 
-Key-local frontier. Scotty emits a window as soon as the watermark passes
-its end. `getCurrentWatermarkMs()` is the watermark the PREVIOUS
-micro-batch set, so firing only there makes every window a file closes
-wait for the next micro-batch. With the query's watermark delay `d`
+Frontier. Scotty emits a window as soon as the watermark passes its end.
+`getCurrentWatermarkMs()` is the watermark the PREVIOUS micro-batch set,
+so firing only there makes every window a file closes wait for the next
+micro-batch, which carries no data. With the query's watermark delay `d`
 known, a key fires in the batch that carries its rows, at
 
-    frontier = max(W, m − d)
+    frontier = max(W, s − d)
 
-where `W` is Spark's current watermark and `m` the key's max event time
-after this batch's rows (the kernel's `_max_event_time`). Spark's next
-watermark is the max event time over ALL keys minus `d`, so it is at
-least `m − d`: the frontier never runs ahead of the watermark Spark
-itself sets after this batch, and a timer-only call (no rows, `m`
-unchanged) fires at `W` as before.
+where `W` is Spark's current watermark and `s` a lower bound on this
+micro-batch's max event time over ALL keys. The map-side stamp pass
+(`_stamp_max_event_time`) appends to every row the running max event
+time its task had read by then; the handler takes `s` as the max of the
+stamps on the key's rows and the key's own max event time (the kernel's
+`_max_event_time`, which covers its earlier batches). Every stamped row
+reaches `withWatermark`, and the query has one input, so Spark's next
+watermark is the batch's max event time minus `d`, at least `s − d`: the
+frontier never runs ahead of the watermark Spark itself sets after this
+batch. A key with no rows in the batch (a timer-only call) fires at
+`max(W, key max − d)`; frames without the stamp column (handler tests,
+the benchmark's handler probe) use the key's own max event time for `s`.
 
 Late-row contract. Once a key has fired at frontier `f` (kept as the
 kernel's `last_watermark`), a row with `ts > f` can only fall into windows
@@ -43,11 +49,12 @@ session. A row with `ts ≤ f` may fall into one that has. So the handler
 drops every later row with `ts_ms ≤ f` (Spark's own `ts <= watermark`
 rule, at the kernel's ms grain) and counts it in the `late_rows`
 accumulator, instead of folding it into a slice whose windows were
-already emitted. Such a row lies at or below a watermark Spark has set
-(`W`), or trails its own key's max event time, hence the stream's, by at
-least `d`; either way Spark's watermark contract already says it "may or
-may not be aggregated". A key that has not fired yet drops nothing: its
-kernel is seeded at its earliest row only when it first fires.
+already emitted. Such a row arrives in a later micro-batch, which runs
+under a watermark of at least `f`, and trails a max event time the
+stream had already seen by at least `d`; Spark's watermark contract
+already says it "may or may not be aggregated". A key that has not fired
+yet drops nothing: its kernel is seeded at its earliest row only when it
+first fires.
 
 Why Spark does not drop these rows itself: Spark 4.1 runs with
 `spark.sql.streaming.statefulOperator.allowMultiple=true`, whose
@@ -82,10 +89,14 @@ from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from ..functions import AggSpec
 from ..operators.kernel import bulk_lift_kinds, feed_sorted, lower_windows, new_operator
-from ..operators.windows import Window, WindowMeasure
+from ..operators.windows import JLONG_MIN, Window, WindowMeasure
 from ..plans import window_output_schema
 
 STATE_SCHEMA = "kernel binary"  # pickle fallback (custom fns / count windows)
+
+# internal long column: the running max event time (ms) of the rows the
+# map task had read up to and including the row's Arrow batch
+STAMP_COL = "_scotty_seen_max_ms"
 
 ROCKSDB_PROVIDER = (
     "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
@@ -167,9 +178,11 @@ def make_handler(
     touches — the live mid-stream addWindow path (streaming.registry).
 
     `watermark_delay_ms` is the query's watermark delay: given, each key
-    fires at its key-local frontier (module docstring); None fires at
-    Spark's watermark only. `late_rows` is an accumulator that receives
-    the number of rows dropped by the late-row contract."""
+    fires at the frontier (module docstring), from the max event-time
+    stamp when its frames carry `STAMP_COL` and from its own max event
+    time otherwise; None fires at Spark's watermark only. `late_rows` is
+    an accumulator that receives the number of rows dropped by the
+    late-row contract."""
     from .state_codec import decode_op, encode_op
 
     window_defs = list(windows)
@@ -233,8 +246,11 @@ def make_handler(
         # send a later chunk's earlier timestamps through the out-of-order
         # surgery the single sort avoids.
         parts = [p for p in pdfs if not p.empty]
+        stamp = JLONG_MIN
         if parts:
             pdf = parts[0] if len(parts) == 1 else pd.concat(parts, ignore_index=True)
+            if STAMP_COL in pdf.columns:
+                stamp = int(pdf[STAMP_COL].max())
             pdf = pdf.sort_values(ts_col, kind="mergesort")
             ts_ms = pdf[ts_col].to_numpy().astype("datetime64[ms]").astype("int64")
             if op.last_watermark != -1:
@@ -250,13 +266,13 @@ def make_handler(
                 if value_col is not None:
                     data = pdf[value_col].to_numpy()
                 else:
-                    data = {c: pdf[c].tolist() for c in pdf.columns}
+                    data = {c: pdf[c].tolist() for c in pdf.columns if c != STAMP_COL}
                 feed_sorted(op, data, ts_ms, feed_kinds)
 
         wm = state.getCurrentWatermarkMs()
         frontier = wm
         if watermark_delay_ms is not None:
-            frontier = max(wm, op._max_event_time - watermark_delay_ms)
+            frontier = max(wm, max(op._max_event_time, stamp) - watermark_delay_ms)
         rows = []
         if frontier > 0:
             if op.last_watermark == -1 and not op.store.is_empty:
@@ -278,13 +294,38 @@ def make_handler(
                 state.update(encode_op(op, feed_kinds))
             else:
                 state.update((pickle.dumps(op),))
-            # wake when the watermark passes the next possible emission
-            state.setTimeoutTimestamp(max(nxt if nxt is not None else wm + 1, wm + 1))
+            # wake when the watermark reaches the next possible emission:
+            # Spark times a key out once the watermark EXCEEDS its timestamp
+            state.setTimeoutTimestamp(max(nxt - 1 if nxt is not None else wm + 1, wm + 1))
 
         if rows:
             yield pd.DataFrame(rows, columns=out_fields)
 
     return handler
+
+
+def _stamp_max_event_time(df: DataFrame, ts: str) -> DataFrame:
+    """Append ``STAMP_COL``: per map task, the running max of ``ts`` in ms
+    over the rows read so far, the current Arrow batch included. Nothing
+    is buffered. Every stamped row reaches ``withWatermark``, so a stamp
+    never exceeds the batch's max event time that Spark's next watermark
+    is computed from (module docstring)."""
+
+    def stamp(batches):
+        import pyarrow as pa
+        import pyarrow.compute as pc
+
+        seen = JLONG_MIN
+        for b in batches:
+            top = pc.max(b.column(ts)).value
+            if top is not None:
+                # Spark ships timestamps as µs; ms as EventTimeWatermarkExec
+                # takes them (floor, so never above Spark's value)
+                seen = max(seen, top // 1000)
+            yield b.append_column(STAMP_COL, pa.repeat(pa.scalar(seen, pa.int64()), b.num_rows))
+
+    schema = T.StructType(df.schema.fields + [T.StructField(STAMP_COL, T.LongType(), False)])
+    return df.mapInArrow(stamp, schema)
 
 
 def scotty_stream(
@@ -335,7 +376,8 @@ def scotty_stream(
         else STATE_SCHEMA
     )
     result = (
-        stream_df.withWatermark(ts, watermark_delay)
+        _stamp_max_event_time(stream_df, ts)
+        .withWatermark(ts, watermark_delay)
         .groupBy(key)
         .applyInPandasWithState(
             handler,

@@ -136,7 +136,7 @@ def test_sharing_invariant_fixed_windows_with_disorder(specs, raw):
     _run_property(specs, raw, disorder=True)
 
 
-# Early firing (streaming.processor's key-local frontier): a kernel fired
+# Early firing (streaming.processor's frontier): a kernel fired
 # at a frontier b and later at W >= b, with only rows above b fed in
 # between (the stream handler drops the rest as late), must emit exactly
 # the windows one firing at W emits over the same rows — each once.

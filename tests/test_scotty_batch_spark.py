@@ -278,6 +278,25 @@ def test_vectorized_tier_plan_is_one_key_exchange_into_map_in_arrow(spark, trans
     _assert_one_key_exchange_and_no_sort(out, "MapInArrow")
 
 
+def test_buckets_floor_at_default_parallelism_not_shuffle_partitions(spark, transcripts):
+    """Under Spark's default of 200 shuffle partitions a small query gets
+    max(defaultParallelism, ceil(rows_est / 65536)) buckets, not 200
+    tasks of a few rows each."""
+    from scotty_window_processor_spark.plans import adaptive_buckets
+
+    df = transcripts.select("conv_id", "ts", "turn_idx")
+    size = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+    rows_est = size // (4 * 4)  # ~4 bytes per column, at least 4 columns
+    old = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "200")
+    try:
+        n = adaptive_buckets(df)
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", old)
+    assert n == max(spark.sparkContext.defaultParallelism, -(-rows_est // 65536))
+    assert n < 200
+
+
 def test_vectorized_route_builds_no_catalyst_expressions(spark, transcripts, monkeypatch):
     """With three time families the planner takes the vectorized tier
     without building the Catalyst tier's Column expressions."""

@@ -1,11 +1,12 @@
-"""Key-local frontier of the stream operator (streaming.processor): a key
-fires the windows its own rows close in the call that carries them, drops
-and counts rows below the frontier it fired at, and still fires its tail
-windows at Spark's watermark on a timer-only call.
+"""Frontier of the stream operator (streaming.processor): a key fires, in
+the call that carries its rows, every window that its own rows or the
+micro-batch's max event-time stamp close; it drops and counts rows below
+the frontier it fired at, and still fires its tail windows at Spark's
+watermark on a timer-only call.
 
 The handler tests drive ``make_handler`` with a fake GroupState, like
 tests/test_stream_asof.py; the Spark tests pin the late-row accumulator
-on a real query."""
+and the batch each window is emitted in on a real query."""
 
 import os
 
@@ -31,7 +32,11 @@ from scotty_window_processor_spark.operators import (
     WindowMeasure,
 )
 from scotty_window_processor_spark.operators.kernel import MIN_BULK_CUSTOM, lower_windows, new_operator
-from scotty_window_processor_spark.streaming.processor import make_handler, typed_state_eligible
+from scotty_window_processor_spark.streaming.processor import (
+    STAMP_COL,
+    make_handler,
+    typed_state_eligible,
+)
 
 from spark_fixtures import get_spark
 
@@ -99,14 +104,17 @@ def _relative(rows):
             else (int(w), int(s), int(e), int(n)) for w, m, s, e, n in rows]
 
 
-def _call(handler, state, offsets_ms, key="a"):
+def _call(handler, state, offsets_ms, key="a", stamp_ms=None):
     """One handler call with the key's rows at BASE + offsets (value 1.0
-    each); returns the emitted rows as (window_id, w_start, w_end, n)."""
+    each), stamped with BASE + ``stamp_ms`` when given; returns the emitted
+    rows as (window_id, w_start, w_end, n)."""
     parts = []
     if offsets_ms:
         ts = BASE + np.asarray(offsets_ms, dtype="int64")
         parts.append(pd.DataFrame({"ts": pd.to_datetime(ts, unit="ms"),
                                    "value": np.ones(len(ts))}))
+        if stamp_ms is not None:
+            parts[0][STAMP_COL] = BASE + stamp_ms
     cols = ["window_id", "measure", "w_start", "w_end", "n"]
     return _relative(r for pdf in handler((key,), iter(parts), state)
                      for r in pdf[cols].itertuples(index=False))
@@ -120,6 +128,40 @@ def test_windows_closed_by_own_rows_emit_in_that_call():
 
     # without the delay the key waits for Spark's watermark (still 0)
     assert _call(_handler(delay_ms=None), FakeGroupState(), rows) == []
+
+
+def test_stamp_fires_windows_other_keys_close_in_that_call():
+    """The key's own rows (0-40 s) close nothing at its key-local frontier
+    (10 s); the batch's stamp (200 s) bounds Spark's next watermark from
+    below at 170 s, so the same call fires every window below that."""
+    rows = list(range(0, 41 * SEC, 10 * SEC))
+    late = Counter()
+    handler, st = _handler(late_rows=late), FakeGroupState()
+    fired = _call(handler, st, rows, stamp_ms=200 * SEC)
+    assert sorted(fired) == [(1, 0, MIN, 5), (3, 0, 100 * SEC, 5)]
+
+    # next batch: Spark's watermark is now 170 s, but its late-row filter
+    # still used the watermark before the first batch (0), so a row at
+    # 150 s reaches the handler although the key fired at 170 s
+    st.wm = BASE + 170 * SEC
+    assert _call(handler, st, [150 * SEC, 180 * SEC], stamp_ms=180 * SEC) == []
+    assert late.value == 1
+
+    st.wm = BASE + FLUSH
+    tail = sorted(_call(handler, st, []))
+    assert tail == [(1, 3 * MIN, 4 * MIN, 1), (2, 0, 5 * MIN, 6), (3, 3 * MIN, 4 * MIN, 1)]
+    assert late.value == 1
+
+
+def test_frames_without_stamp_keep_key_local_frontier():
+    """No stamp column (the benchmark's handler probe), or a stamp below
+    the key's own max (an earlier Arrow batch of the task): the key fires
+    at its own max event time minus the delay."""
+    rows = list(range(0, 151 * SEC, 10 * SEC))
+    own = [(1, 0, MIN, 6), (1, MIN, 2 * MIN, 6)]
+    assert sorted(_call(_handler(), FakeGroupState(), rows)) == own
+    assert sorted(_call(_handler(), FakeGroupState(), rows, stamp_ms=100 * SEC)) == own
+    assert _call(_handler(), FakeGroupState(), rows[:5]) == []
 
 
 def test_back_to_back_row_below_frontier_is_dropped_and_counted():
@@ -354,3 +396,43 @@ def test_benchmark_shaped_stream_drops_nothing(spark, tmp_path):
     got_closed = got[got["w_end"] < final_wm]
     key = lambda df: sorted(map(tuple, df.astype({"total": float}).values.tolist()))
     assert key(got_closed) == key(closed)
+
+
+def test_windows_fire_in_the_batch_whose_rows_close_them(spark, tmp_path):
+    """One file holds keys a and b. a's rows (0-40 s) close nothing by
+    their own max; only b's rows (to 190 s) push the watermark (160 s)
+    past a's minute and session. a's windows still go out in the data
+    batch: the no-data batch that runs under the new watermark emits
+    nothing, and the rows equal the batch path over the same file."""
+    from scotty_window_processor_spark.plans.scotty_batch import scotty_window_aggregate
+    from scotty_window_processor_spark.streaming.processor import scotty_stream
+    from scotty_window_processor_spark.streaming.sink import write_stream_exactly_once
+
+    src, out_dir = str(tmp_path / "src"), str(tmp_path / "out")
+    _write_files([pd.concat([_rows("a", range(0, 41 * SEC, 10 * SEC)),
+                             _rows("b", range(0, 191 * SEC, 10 * SEC))])], src)
+    stream = spark.readStream.schema("k string, ts timestamp, value double").parquet(src)
+    result = scotty_stream(stream, key="k", ts="ts", value="value", windows=TIME_WINDOWS,
+                           aggs=AGGS, watermark_delay="30 seconds", lateness_ms=DELAY)
+    sink, writer = write_stream_exactly_once(result, out_dir, str(tmp_path / "ckpt"))
+    q = writer.start()
+    q.processAllAvailable()
+    progress = list(q.recentProgress)
+    q.stop()
+
+    (data_batch,) = [p["batchId"] for p in progress if p["numInputRows"]]
+    lineage = {m["batch_id"]: m for m in sink.lineage()}
+    assert lineage[data_batch + 1]["rows"] == 0  # the no-data batch
+    out = spark.read.parquet(out_dir).toPandas()
+    a = out[out["k"] == "a"]
+    assert set(a["batch_id"]) == {data_batch}
+    assert sorted(_relative(a[["window_id", "measure", "w_start", "w_end", "n"]]
+                            .itertuples(index=False))) == [(1, 0, MIN, 5), (3, 0, 100 * SEC, 5)]
+
+    final_wm = BASE + 160 * SEC
+    cols = ["k", "window_id", "w_start", "w_end", "n", "total"]
+    batch = scotty_window_aggregate(spark.read.parquet(src), key="k", ts="ts", value="value",
+                                    windows=TIME_WINDOWS, aggs=AGGS, lateness_ms=DELAY).toPandas()
+    key = lambda df: sorted(map(tuple, df[cols].astype({"total": float}).values.tolist()))
+    assert (out["w_end"] < final_wm).all()
+    assert key(out) == key(batch[batch["w_end"] < final_wm])
