@@ -86,19 +86,13 @@ def q_tumbling_1h(spark, sf_dir):
 
 
 def q_sliding_1h_15m(spark, sf_dir):
-    """Two-level sliding plan (r6): rows reduce once per 15-min bucket,
-    only bucket partials expand ×4 into the overlapping windows — same
-    emitted windows and aggregates as the one-level Expand plan (size
-    tiles the slide, so every window is a whole-bucket union; output
-    verified identical against the unchanged oracle at every SF).
-    Rounding applies at the final combine, like presplit_session_30m."""
     _utc(spark)
-    from scotty_window_processor_spark.plans.windowed import sliding_aggregate_twolevel
+    from scotty_window_processor_spark.operators import SlidingWindow, WindowMeasure
+    from scotty_window_processor_spark.plans.windowed import window_aggregate
 
-    return sliding_aggregate_twolevel(
-        _events(spark, sf_dir), "user_id", "ts", 3_600_000, 900_000,
-        partials={"n": F.count(F.lit(1)), "sum_value": F.sum("value")},
-        finals={"n": F.sum("n"), "sum_value": F.round(F.sum("sum_value"), 2)},
+    return window_aggregate(
+        _events(spark, sf_dir), "user_id", "ts", SlidingWindow(WindowMeasure.TIME, 3_600_000, 900_000),
+        {"n": F.count(F.lit(1)), "sum_value": F.round(F.sum("value"), 2)},
     )
 
 
@@ -110,46 +104,6 @@ def q_session_30m(spark, sf_dir):
     return window_aggregate(
         _events(spark, sf_dir), "user_id", "ts", SessionWindow(WindowMeasure.TIME, 30 * 60_000),
         {"n": F.count(F.lit(1)), "sum_value": F.round(F.sum("value"), 2)},
-    )
-
-
-def q_presplit_session_30m(spark, sf_dir):
-    """The session pre-split escape hatch (plans/skew.py::
-    presplit_session_aggregate — intra-key parallelism for conv_ids past
-    the single-task floor, BENCH/presplit_session.md) must emit EXACTLY
-    the sessions of the unsalted path, so it shares session_30m's
-    oracle. Day buckets; rounding applied at the final combine so the
-    two-level sum matches the oracle's single-pass round."""
-    _utc(spark)
-    from scotty_window_processor_spark.plans.skew import presplit_session_aggregate
-
-    return presplit_session_aggregate(
-        _events(spark, sf_dir), "user_id", "ts", 30 * 60_000,
-        partials={"n": F.count(F.lit(1)), "sum_value": F.sum("value")},
-        finals={
-            "n": F.sum("n"),
-            "sum_value": F.round(F.sum("sum_value"), 2),
-        },
-    )
-
-
-def q_routed_session_30m(spark, sf_dir):
-    """Cost-based session routing (plans/skew.py::
-    routed_session_aggregate): auto-detected hot keys go through the
-    presplit hatch, the rest through the one-pass path, and the union
-    must equal the plain session result — so it shares session_30m's
-    oracle. min_hot_rows is set below the sf0.01 max per-key count so
-    BOTH arms execute in the gate (at larger sf more keys route hot;
-    parity is arm-independent)."""
-    _utc(spark)
-    from scotty_window_processor_spark.plans.skew import routed_session_aggregate
-
-    return routed_session_aggregate(
-        _events(spark, sf_dir), "user_id", "ts", 30 * 60_000,
-        aggs={"n": F.count(F.lit(1)), "sum_value": F.round(F.sum("value"), 2)},
-        partials={"n": F.count(F.lit(1)), "sum_value": F.sum("value")},
-        finals={"n": F.sum("n"), "sum_value": F.round(F.sum("sum_value"), 2)},
-        min_hot_rows=80,
     )
 
 
@@ -390,37 +344,31 @@ def q_ordered_rollup(spark, sf_dir):
     (ts, event_id) order — the RoleTextRollup shape ('per-turn text
     equality under stable turn_idx ordering'), pure Catalyst."""
     _utc(spark)
-    e = _events(spark, sf_dir)
-    w = F.window(F.col("ts"), "6 hours")
-    return (
-        e.groupBy("user_id", w.alias("w"))
-        .agg(
-            F.array_join(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("ts", "event_id", "event_type"))),
-                    lambda s: s["event_type"],
-                ),
-                ":",
-            ).alias("event_seq"),
-            F.count(F.lit(1)).alias("n"),
-        )
-        .select(
-            "user_id",
-            F.unix_millis(F.col("w.start").cast("timestamp")).alias("w_start"),
-            F.unix_millis(F.col("w.end").cast("timestamp")).alias("w_end"),
-            "event_seq",
-            "n",
-        )
+    from scotty_window_processor_spark.operators import TumblingWindow, WindowMeasure
+    from scotty_window_processor_spark.plans.windowed import window_aggregate
+
+    event_seq = F.array_join(
+        F.transform(
+            F.array_sort(F.collect_list(F.struct("ts", "event_id", "event_type"))),
+            lambda s: s["event_type"],
+        ),
+        ":",
+    )
+    return window_aggregate(
+        _events(spark, sf_dir), "user_id", "ts", TumblingWindow(WindowMeasure.TIME, 6 * SIZE_H),
+        {"event_seq": event_seq, "n": F.count(F.lit(1))},
     )
 
 
 def q_salted_tumbling(spark, sf_dir):
-    """Skew-safe two-level (salt partial → final) tumbling aggregation."""
+    """Skew-safe two-level tumbling aggregation: the Catalyst window plan
+    per (key, salt) partial, then one combine per (key, window)."""
     _utc(spark)
+    from scotty_window_processor_spark.operators import TumblingWindow, WindowMeasure
     from scotty_window_processor_spark.plans.skew import salted_window_aggregate
 
     return salted_window_aggregate(
-        _events(spark, sf_dir), "user_id", "ts", "1 hour",
+        _events(spark, sf_dir), "user_id", "ts", TumblingWindow(WindowMeasure.TIME, 3_600_000),
         partials={"pn": F.count(F.lit(1)), "ps": F.sum("value")},
         finals={"n": F.sum("pn"), "sum_value": F.round(F.sum("ps"), 2)},
         n_salts=8,
@@ -1451,8 +1399,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "tumbling_1h": q_tumbling_1h,
         "sliding_1h_15m": q_sliding_1h_15m,
         "session_30m": q_session_30m,
-        "presplit_session_30m": q_presplit_session_30m,
-        "routed_session_30m": q_routed_session_30m,
         "count_tumbling_25": q_count_tumbling_25,
         "scotty_multiwindow": q_scotty_multiwindow,
         "scotty_session_kernel": q_scotty_session_kernel,
@@ -1927,8 +1873,6 @@ def oracle_sql() -> dict[str, str]:
         "tumbling_1h": _TUMBLING_1H,
         "sliding_1h_15m": _SLIDING_1H_15M,
         "session_30m": _SESSION_30M,
-        "presplit_session_30m": _SESSION_30M,
-        "routed_session_30m": _SESSION_30M,
         "count_tumbling_25": _COUNT_TUMBLING_25,
         "scotty_multiwindow": _MULTIWINDOW,
         "scotty_session_kernel": _SESSION_KERNEL,

@@ -7,11 +7,11 @@ surface. This harness exists to:
   configuration as bench.py (build+count methodology identical);
 - optionally time through the noop sink (guide §1.4) so the computation
   of EVERY column is measured, not the count-pruned subtree;
-- dump .explain("formatted") for selected queries into plans/r06/.
+- dump .explain("formatted") for selected queries into a directory.
 
 Usage:
   python bench_extra.py --queries session_30m,sliding_1h_15m \
-      --repeat 3 [--noop] [--explain plans/r06 --suffix _before]
+      --repeat 3 [--noop] [--explain /tmp/scotty_plans --suffix _before]
   python bench_extra.py --all --repeat 1
 Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf1.0), SPARK_GRAFT_CPUS.
 """

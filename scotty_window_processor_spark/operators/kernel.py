@@ -490,7 +490,7 @@ class SlicingWindowOperator:
         self.has_time_measure = False
         self.max_fixed_window_size = 0
         self.max_lateness = max_lateness
-        self.last_watermark = -1
+        self.last_watermark = JLONG_MIN  # unset: no watermark processed or seeded yet
         self.last_count = 0
         self.current_count = 0
         # stream-slicer state
@@ -904,7 +904,7 @@ class SlicingWindowOperator:
         the lateness bound — correct for an always-on stream, wrong for a
         bounded batch flushed by one final watermark. Seeding with 0 would
         instead enumerate every window instance since the epoch."""
-        if self.last_watermark == -1:
+        if self.last_watermark == JLONG_MIN:
             self.last_watermark = watermark_ts
 
     # -- watermark path --------------------------------------------------------
@@ -913,7 +913,7 @@ class SlicingWindowOperator:
 
         Parity: WindowManager.processWatermark (WindowManager.java:40-79)
         including first-watermark initialisation and slice eviction."""
-        if self.last_watermark == -1:
+        if self.last_watermark == JLONG_MIN:
             self.last_watermark = max(0, watermark_ts - self.max_lateness)
 
         if self.store.is_empty:

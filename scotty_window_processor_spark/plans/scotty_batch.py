@@ -17,9 +17,10 @@ Scale notes:
   O(slices × functions), not O(rows);
 - the vectorized tier (thousands of keys per Arrow batch, numpy segment
   reductions, zero per-key Python) lives in `plans.vectorized_multi`;
-- hot-key skew is handled upstream by `plans.skew.salted_window_aggregate`
-  (salting is legal for associative/commutative functions; sessions route
-  unsalted).
+- a hot key lands in one partition of the key exchange. For one fixed
+  time window and associative/commutative functions, the separate
+  Catalyst plan `plans.skew.salted_window_aggregate` splits it over
+  salts; sessions always run unsalted.
 """
 
 from __future__ import annotations
@@ -225,8 +226,9 @@ def scotty_global_aggregate(
     lift/combine/lower functions) routes through a constant key: exact
     reference semantics, single-group by construction — like the
     reference's own global operator, which is a single ProcessFunction
-    instance. At scale, invertible functions should instead go through the
-    salted two-level plan (plans.skew).
+    instance. Associative/commutative functions over one fixed time window
+    can instead go through the salted two-level plan (plans.skew), which
+    spreads the single group over salts.
 
     Output: (window_id, measure, w_start, w_end, <one column per agg>).
     """

@@ -28,8 +28,9 @@ Segment math (rows ordered by key, ts):
 Scale: the partition count is `plans.adaptive_buckets` (~one Arrow batch
 of rows per task); each partition is independent, so the stage
 parallelizes across executors/Python workers with no skew sensitivity
-beyond the hash (a single hot key still lands in one partition — route
-truly hot keys through plans.skew salting first).
+beyond the hash. A single hot key still lands in one partition; salting
+(`plans.skew`) is a separate Catalyst plan for one fixed time window, not
+a step before this tier.
 
 Emission parity with the slicing kernel is pinned by
 tests/test_scotty_batch_spark.py (same rows as the kernel tier) and, for

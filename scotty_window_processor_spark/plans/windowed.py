@@ -13,7 +13,9 @@ planner (``scotty_batch.scotty_window_aggregate``) sends a time-measure
 window family here when ``prefer_catalyst`` is set and every aggregate
 has a Catalyst equivalent, unless the query has three or more time
 families and the whole mix is vectorizable; then the shared-shuffle
-vectorized tier takes them all.
+vectorized tier takes them all. ``window_aggregate`` is the package's one
+Catalyst window plan: the salted two-level plan (``plans.skew``) runs its
+first stage through it.
 
 All window bounds are emitted as epoch milliseconds (BIGINT) so results
 hash-compare exactly against ANSI-SQL oracles.
@@ -21,7 +23,7 @@ hash-compare exactly against ANSI-SQL oracles.
 
 from __future__ import annotations
 
-from typing import Dict
+from typing import Dict, Sequence, Union
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -35,7 +37,9 @@ def _epoch_ms(col: Column) -> Column:
     return F.unix_millis(col.cast("timestamp"))
 
 
-def window_aggregate(df: DataFrame, key: str, ts: str, w: Window, aggs: Dict[str, Column]) -> DataFrame:
+def window_aggregate(
+    df: DataFrame, key: Union[str, Sequence[str]], ts: str, w: Window, aggs: Dict[str, Column]
+) -> DataFrame:
     """Per-key windows of one time-measure definition as one Catalyst plan.
 
     - tumbling: ``F.window(size)``, epoch-aligned;
@@ -47,7 +51,8 @@ def window_aggregate(df: DataFrame, key: str, ts: str, w: Window, aggs: Dict[str
       last event ts + gap, matching the reference's SessionWindow trigger
       (SessionWindow.java:118-133).
 
-    Emits ``key, w_start, w_end, *aggs`` with epoch-ms bounds."""
+    ``key`` is one column name or a list of them. Emits ``key, w_start,
+    w_end, *aggs`` with epoch-ms bounds."""
     if w.measure != WindowMeasure.TIME:
         raise ValueError("Catalyst window plans cover time-measure windows only")
     if isinstance(w, SessionWindow):
@@ -56,73 +61,14 @@ def window_aggregate(df: DataFrame, key: str, ts: str, w: Window, aggs: Dict[str
         win = F.window(F.col(ts), f"{w.size} milliseconds", f"{w.slide} milliseconds")
     else:
         win = F.window(F.col(ts), f"{w.size} milliseconds")
+    keys = [key] if isinstance(key, str) else list(key)
     return (
-        df.groupBy(F.col(key), win.alias("w"))
+        df.groupBy(*keys, win.alias("w"))
         .agg(*[c.alias(n) for n, c in aggs.items()])
         .select(
-            F.col(key),
+            *keys,
             _epoch_ms(F.col("w.start")).alias("w_start"),
             _epoch_ms(F.col("w.end")).alias("w_end"),
             *[F.col(n) for n in aggs],
-        )
-    )
-
-
-def sliding_aggregate_twolevel(
-    df: DataFrame,
-    key: str,
-    ts: str,
-    size_ms: int,
-    slide_ms: int,
-    partials: Dict[str, Column],
-    finals: Dict[str, Column],
-) -> DataFrame:
-    """Two-level sliding aggregation for ``size % slide == 0`` (the slice
-    property): rows are first reduced per (key, slide-grain tumbling
-    bucket) — ONE pass over the raw rows, map-side partial aggregation,
-    no row duplication — and only the ~rows/bucket-factor smaller bucket
-    partials are expanded into the size/slide overlapping windows and
-    combined (guide §2.3 "aggregate before you shuffle").
-
-    The one-level ``window_aggregate`` expands every RAW row size/slide
-    times before the first aggregate (Catalyst Expand), so both the
-    expand work and the per-map-partition partial-aggregate hash table
-    scale with rows × overlap. Here they scale with rows (stage 1) +
-    buckets × overlap (stage 2) — the slicing argument from the
-    reference, expressed as two Catalyst aggregates.
-
-    Window membership is derived from the bucket exactly as F.window
-    does: a slide-grain bucket starting at b belongs to the windows
-    starting at b − i·slide for i in 0..size/slide−1 (size tiles the
-    slide, so every containing window is a whole-bucket union).
-    ``partials``/``finals`` follow the salted_window_aggregate contract
-    (count → partial count + final sum)."""
-    if size_ms % slide_ms != 0:
-        raise ValueError(
-            f"two-level sliding needs size % slide == 0 (got {size_ms} % {slide_ms})"
-        )
-    k = size_ms // slide_ms
-    b = F.window(F.col(ts), f"{slide_ms} milliseconds")
-    stage1 = df.groupBy(F.col(key), b.alias("b")).agg(
-        *[c.alias(n) for n, c in partials.items()]
-    )
-    # outer ≡ inner (non-empty literal-bounded sequence); a plain explode
-    # lets InferFiltersFromGenerate push a size(arr) > 0 filter that
-    # evaluates the computed array a second time per row
-    expanded = stage1.select(
-        F.col(key),
-        (_epoch_ms(F.col("b.start"))).alias("_b_start"),
-        *[F.col(n) for n in partials],
-    ).withColumn("_i", F.explode_outer(F.sequence(F.lit(0), F.lit(int(k - 1)))))
-    w_start = F.col("_b_start") - F.col("_i") * F.lit(int(slide_ms))
-    return (
-        expanded.withColumn("w_start", w_start)
-        .groupBy(key, "w_start")
-        .agg(*[c.alias(n) for n, c in finals.items()])
-        .select(
-            F.col(key),
-            F.col("w_start"),
-            (F.col("w_start") + F.lit(int(size_ms))).alias("w_end"),
-            *[F.col(n) for n in finals],
         )
     )

@@ -16,7 +16,7 @@ LoadGeneratorSource.java:10-87, wall-clock timestamps, non-reproducible);
 this source is the deterministic, distributed replacement.
 
 Skew: a configurable number of "hot" conversations get ``hot_factor``×
-more turns than the median — exercised by the salted-repartition path.
+more turns than the median, so one key dominates its partition.
 Disorder: a deterministic ~``disorder_pct``% of turns have their ts pulled
 back by up to ``max_disorder_ms`` (bounded out-of-order), plus a small
 fraction of beyond-lateness stragglers when ``straggler_pct`` > 0.

@@ -253,7 +253,7 @@ def make_handler(
                 stamp = int(pdf[STAMP_COL].max())
             pdf = pdf.sort_values(ts_col, kind="mergesort")
             ts_ms = pdf[ts_col].to_numpy().astype("datetime64[ms]").astype("int64")
-            if op.last_watermark != -1:
+            if op.last_watermark != JLONG_MIN:
                 # late-row contract (module docstring): a row at or below
                 # the frontier the key fired at may fall into an emitted
                 # window, so it is dropped and counted
@@ -275,7 +275,7 @@ def make_handler(
             frontier = max(wm, max(op._max_event_time, stamp) - watermark_delay_ms)
         rows = []
         if frontier > 0:
-            if op.last_watermark == -1 and not op.store.is_empty:
+            if op.last_watermark == JLONG_MIN and not op.store.is_empty:
                 # first firing: enumerate windows from the key's earliest row
                 op.seed_watermark(min(s.t_first for s in op.store.slices) - 1)
             rows = [[key[0], *r[:4], emit_ms, *r[4:]]

@@ -154,8 +154,6 @@ def test_stream_state_shrinks_to_active_keys(spark, tmp_path):
     from scotty_window_processor_spark.streaming.processor import scotty_stream
 
     rows = []
-    # start at 1h, not 0: ts=0 would make seed_watermark(ts-1) collide
-    # with the kernel's -1 "unset" sentinel (epoch-zero test artifact)
     for k in range(8):          # wave A (hours 1-2)
         for j in range(10):
             rows.append((k, HOUR + j * 360_000))

@@ -33,38 +33,45 @@ def _events(spark, n=4000, keys=23, seed=11):
 
 
 # --------------------------------------------------------------------------
-# two-level sliding == one-level Expand plan
+# salted two-level plan == the one Catalyst window plan
 
 
-def test_sliding_twolevel_matches_onelevel(spark):
-    from scotty_window_processor_spark.operators import SlidingWindow, WindowMeasure
-    from scotty_window_processor_spark.plans.windowed import (
-        sliding_aggregate_twolevel,
-        window_aggregate,
+@pytest.mark.parametrize("hot_keys", [None, [0, 5, 7]], ids=["all_salted", "hot_list"])
+@pytest.mark.parametrize("window", ["tumbling", "sliding"])
+def test_salted_matches_window_aggregate(spark, window, hot_keys):
+    from scotty_window_processor_spark.operators import (
+        SessionWindow,
+        SlidingWindow,
+        TumblingWindow,
+        WindowMeasure,
     )
+    from scotty_window_processor_spark.plans.skew import salted_window_aggregate
+    from scotty_window_processor_spark.plans.windowed import window_aggregate
 
+    w = {
+        "tumbling": TumblingWindow(WindowMeasure.TIME, 3_600_000),
+        "sliding": SlidingWindow(WindowMeasure.TIME, 3_600_000, 900_000),
+    }[window]
     df = _events(spark)
-    one = window_aggregate(
-        df, "user_id", "ts", SlidingWindow(WindowMeasure.TIME, 3_600_000, 900_000),
-        {"n": F.count(F.lit(1)), "sum_value": F.round(F.sum("value"), 2)},
+    plain = window_aggregate(
+        df, "user_id", "ts", w, {"n": F.count(F.lit(1)), "sum_value": F.sum("value")}
     )
-    two = sliding_aggregate_twolevel(
-        df, "user_id", "ts", 3_600_000, 900_000,
-        partials={"n": F.count(F.lit(1)), "sum_value": F.sum("value")},
-        finals={"n": F.sum("n"), "sum_value": F.round(F.sum("sum_value"), 2)},
+    salted = salted_window_aggregate(
+        df, "user_id", "ts", w,
+        partials={"pn": F.count(F.lit(1)), "ps": F.sum("value")},
+        finals={"n": F.sum("pn"), "sum_value": F.sum("ps")},
+        n_salts=4, hot_keys=hot_keys,
     )
-    a = sorted(map(tuple, one.collect()))
-    b = sorted(map(tuple, two.collect()))
-    assert a == b
+    assert salted.columns == plain.columns
+    a = sorted(map(tuple, plain.collect()))
+    b = sorted(map(tuple, salted.collect()))
+    assert [r[:4] for r in a] == [r[:4] for r in b]
+    assert [r[4] for r in b] == pytest.approx([r[4] for r in a], rel=1e-12)
 
-
-def test_sliding_twolevel_rejects_misaligned(spark):
-    from scotty_window_processor_spark.plans.windowed import sliding_aggregate_twolevel
-
-    with pytest.raises(ValueError, match="size % slide"):
-        sliding_aggregate_twolevel(
-            _events(spark, n=10), "user_id", "ts", 3_600_000, 700_000,
-            partials={"n": F.count(F.lit(1))}, finals={"n": F.sum("n")},
+    with pytest.raises(ValueError, match="sessions"):
+        salted_window_aggregate(
+            df, "user_id", "ts", SessionWindow(WindowMeasure.TIME, 1_800_000),
+            partials={"pn": F.count(F.lit(1))}, finals={"n": F.sum("pn")},
         )
 
 

@@ -191,11 +191,9 @@ def test_stream_emits_kernel_rows_once(stream, specs):
     assert emitted == kernel_rows(keys, ts, values, windows, final)
 
 
-@pytest.mark.xfail(strict=True, reason=(
-    "a key whose first event time is 0 is seeded at watermark -1, which the "
-    "kernel reads as its 'unset' sentinel: its first firing starts from the "
-    "frontier minus the lateness and skips every window that ends before"))
 def test_key_starting_at_epoch_zero_emits_its_windows():
+    """A key seeded at watermark 0 − 1 = -1 still counts as seeded, so it
+    emits the same windows as the same rows shifted to BASE."""
     windows = make_windows([("tumbling", 60), ("session", 30)])
     offsets = np.arange(0, 200 * SEC, 10 * SEC, dtype="int64")
     keys = np.asarray(["a"] * len(offsets))

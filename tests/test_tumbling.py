@@ -198,7 +198,7 @@ def test_dynamic_add_finer_grid_cuts_edges():
     cached next-edge horizon is invalidated on add_window (it pointed at
     the old grid's next edge, so every finer edge before that would be
     skipped and the new window's instances would cover no slice)."""
-    base = 36_000_000  # hour 10: keep seed_watermark(min-1) off the -1 sentinel
+    base = 36_000_000  # hour 10
     op = SlicingWindowOperator(max_lateness=1_000)
     op.add_aggregation(PyReduce(lambda a, b: a + b))
     op.add_window(TumblingWindow(WindowMeasure.TIME, 3_600_000, window_id=1))
