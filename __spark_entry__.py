@@ -130,10 +130,10 @@ def q_count_tumbling_25(spark, sf_dir):
 
 
 def q_scotty_multiwindow(spark, sf_dir):
-    """Two concurrent tumbling windows through ONE kernel pass (shared
-    slices) — the reference's aggregate-sharing headline. force_kernel
-    pins tier 3: with two families and standard aggregates the planner
-    would run them as two Catalyst subplans."""
+    """Two concurrent tumbling windows through ONE pass of the batch
+    slicer (shared slices) — the reference's aggregate-sharing headline.
+    prefer_catalyst=False keeps it there: with two families and standard
+    aggregates the planner would run them as two Catalyst subplans."""
     _utc(spark)
     from scotty_window_processor_spark.functions import CountAggregation, SumAggregation
     from scotty_window_processor_spark.operators import TumblingWindow, WindowMeasure
@@ -146,7 +146,7 @@ def q_scotty_multiwindow(spark, sf_dir):
             TumblingWindow(WindowMeasure.TIME, 6 * SIZE_H, window_id=2),
         ],
         aggs=[("n", "long", CountAggregation), ("sum_value", "double", SumAggregation)],
-        force_kernel=True,
+        prefer_catalyst=False,
     )
     return out.select(
         "user_id", "window_id", "w_start", "w_end", "n", F.round("sum_value", 2).alias("sum_value")
@@ -154,10 +154,10 @@ def q_scotty_multiwindow(spark, sf_dir):
 
 
 def q_scotty_session_kernel(spark, sf_dir):
-    """Session windows through the slicing kernel itself (force_kernel pins
-    tier 3: SessionContext surgery + slice split/merge + clone-before-merge
-    for the mutable quantile partial — not the Catalyst or vectorized
-    equivalents)."""
+    """Session windows through the batch slicer (gaps-and-islands; the
+    exact quantile's value→count partial lifted once per session), not
+    Catalyst's F.session_window: prefer_catalyst=False, since every
+    aggregate here has a built-in."""
     _utc(spark)
     from scotty_window_processor_spark.functions import (
         CountAggregation,
@@ -175,7 +175,7 @@ def q_scotty_session_kernel(spark, sf_dir):
             ("sum_value", "double", SumAggregation),
             ("median_value", "double", QuantileAggregation),
         ],
-        force_kernel=True,
+        prefer_catalyst=False,
     )
     return out.select(
         "user_id", "w_start", "w_end", "n",
@@ -186,8 +186,9 @@ def q_scotty_session_kernel(spark, sf_dir):
 
 def q_scotty_quantile_kernel(spark, sf_dir):
     """Custom lift/combine/lower aggregate (exact median over a value→count
-    histogram, QuantileWindowFunction analogue) — exercises the pure-Python
-    kernel tier inside the oracle gate."""
+    histogram, QuantileWindowFunction analogue) through the batch slicer
+    (one partial per shared slice, cloned before combining), not its
+    Catalyst expression: prefer_catalyst=False."""
     _utc(spark)
     from scotty_window_processor_spark.functions import CountAggregation, QuantileAggregation
     from scotty_window_processor_spark.operators import TumblingWindow, WindowMeasure
@@ -197,14 +198,14 @@ def q_scotty_quantile_kernel(spark, sf_dir):
         _events(spark, sf_dir), key="user_id", ts="ts", value="value",
         windows=[TumblingWindow(WindowMeasure.TIME, 6 * SIZE_H)],
         aggs=[("n", "long", CountAggregation), ("median_value", "double", QuantileAggregation)],
-        force_kernel=True,
+        prefer_catalyst=False,
     )
     return out.select("user_id", "w_start", "w_end", "n", F.round("median_value", 2).alias("median_value"))
 
 
 def q_scotty_histq_kernel(spark, sf_dir):
     """BOUNDED-STATE histogram quantile (bin width 0.25) through the
-    slicing kernel — the O(range/width) partial that replaces the exact
+    batch slicer — the O(range/width) partial that replaces the exact
     O(distinct-values) quantile at 10^12-turn scale. Deterministic binning
     (binary width ⇒ identical IEEE floor in Python/numpy/DuckDB) makes the
     approximate answer exactly oracle-reproducible."""
@@ -223,7 +224,6 @@ def q_scotty_histq_kernel(spark, sf_dir):
             ("n", "long", CountAggregation),
             ("p50_bin", "double", HistogramQuantileAggregation),
         ],
-        force_kernel=True,
     )
     return out.select(
         "user_id", "w_start", "w_end", "n", F.round("p50_bin", 2).alias("p50_bin")
@@ -232,8 +232,8 @@ def q_scotty_histq_kernel(spark, sf_dir):
 
 def q_scotty_distinct_kernel(spark, sf_dir):
     """BOUNDED-STATE approximate distinct count (linear counting, position
-    ``int(md5(str(v)).hexdigest()[:15], 16) % m``) through the kernel's
-    record path: occupied-position sets merge by union across slices,
+    ``int(md5(str(v)).hexdigest()[:15], 16) % m``) through the batch
+    slicer's record mode: occupied-position sets merge by union across slices,
     estimate −m·ln((m−occ)/m) — exactly reproducible in SQL from the
     oracle's count(DISTINCT ('0x' || left(md5(props), 15))::BIGINT % 1024).
     The O(m)-bit partial replaces O(distinct) exact state at 10^12-turn
@@ -254,7 +254,6 @@ def q_scotty_distinct_kernel(spark, sf_dir):
             ("n", "long", CountAggregation),
             ("distinct_est", "double", LinearCountingAggregation),
         ],
-        force_kernel=True,
     )
     return out.select(
         "user_id", "w_start", "w_end", "n", F.round("distinct_est", 2).alias("distinct_est")
@@ -263,8 +262,8 @@ def q_scotty_distinct_kernel(spark, sf_dir):
 
 def q_scotty_payload_kernel(spark, sf_dir):
     """The north-star transcript payload aggregates (tool-call tally +
-    per-role ordered text rollup) through the slicing KERNEL tier
-    (value=None record path, custom lift/combine/lower), oracle-gated.
+    per-role ordered text rollup) through the batch slicer's record mode
+    (value=None, bulk record lifts per shared slice), oracle-gated.
     The events table is projected into the transcript shape: event_type
     plays role/tool, event_id is the stable turn order."""
     _utc(spark)
@@ -292,15 +291,15 @@ def q_scotty_payload_kernel(spark, sf_dir):
             ("tool_tally", "string", ToolTallyString),
             ("role_rollup", "string", RoleTextRollupString),
         ],
-        force_kernel=True,
     )
     return out.select("user_id", "w_start", "w_end", "n", "tool_tally", "role_rollup")
 
 
 def q_scotty_global_kernel(spark, sf_dir):
     """Global (non-keyed) operator — GlobalScottyWindowOperator analogue —
-    with a custom quantile aggregate, so the single-kernel path itself is
-    oracle-gated."""
+    with the exact quantile, through the batch slicer over one constant
+    key rather than the quantile's Catalyst expression
+    (prefer_catalyst=False)."""
     _utc(spark)
     from scotty_window_processor_spark.functions import CountAggregation, QuantileAggregation
     from scotty_window_processor_spark.operators import TumblingWindow, WindowMeasure
@@ -310,7 +309,7 @@ def q_scotty_global_kernel(spark, sf_dir):
         _events(spark, sf_dir), ts="ts", value="value",
         windows=[TumblingWindow(WindowMeasure.TIME, 6 * SIZE_H)],
         aggs=[("n", "long", CountAggregation), ("median_value", "double", QuantileAggregation)],
-        force_kernel=True,
+        prefer_catalyst=False,
     )
     return out.select("w_start", "w_end", "n", F.round("median_value", 2).alias("median_value"))
 

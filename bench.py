@@ -336,11 +336,11 @@ def streaming_probe(spark, n_convs: int = 300, turns_per_conv: int = 100, n_file
 
 def warm_up(spark, sf_dir: str = SF_DIR):
     """Start what belongs to the session, not to the first query timed:
-    the JVM/codegen and the parquet footers, then both Python window
-    tiers (the Python worker pool, the package import in the workers and
-    the first ``mapInArrow``/``mapInPandas``), each run once on a tiny
-    frame. Without the tier runs, the first Python-tier gate in
-    ``queries()`` order carries about 1 s of session start."""
+    the JVM/codegen and the parquet footers, then the batch slicer (the
+    Python worker pool, the package import in the workers and the first
+    ``mapInArrow``), run once on a tiny frame. Without that run, the first
+    slicer gate in ``queries()`` order carries about 1 s of session
+    start."""
     from pyspark.sql import functions as F
 
     from scotty_window_processor_spark.functions import SumAggregation
@@ -353,13 +353,11 @@ def warm_up(spark, sf_dir: str = SF_DIR):
         F.col("id").cast("timestamp").alias("ts"),
         F.col("id").cast("double").alias("v"),
     )
-    for force_kernel in (False, True):  # vectorized mapInArrow, kernel mapInPandas
-        scotty_window_aggregate(
-            tiny, key="k", ts="ts", value="v",
-            windows=[TumblingWindow(WindowMeasure.COUNT, 10)],
-            aggs=[("s", "double", SumAggregation)],
-            force_kernel=force_kernel,
-        ).count()
+    scotty_window_aggregate(
+        tiny, key="k", ts="ts", value="v",
+        windows=[TumblingWindow(WindowMeasure.COUNT, 10)],
+        aggs=[("s", "double", SumAggregation)],
+    ).count()
 
 
 def main():

@@ -1,18 +1,20 @@
-"""Pure-Python per-key general stream-slicing kernel.
+"""Pure-Python per-key general stream-slicing kernel: the stream's operator.
 
-This is the semantics core of the engine: it partitions one key's stream
-into non-overlapping slices, keeps one partial aggregate per slice per
-aggregate function, and on watermark advance assembles every triggered
-window instance by combining the partial aggregates of the slices it
-covers — sharing every slice across all concurrent windows ("general
-stream slicing", ICDE'18 / EDBT'19).
+It partitions one key's stream into non-overlapping slices, keeps one
+partial aggregate per slice per aggregate function, and on watermark
+advance assembles every triggered window instance by combining the
+partial aggregates of the slices it covers — sharing every slice across
+all concurrent windows ("general stream slicing", ICDE'18 / EDBT'19).
+Out-of-order rows, watermarks and state carried between micro-batches
+need it. Batch does not run it: sorted input flushed by one watermark is
+solved in closed form by ``plans.vectorized_multi``, and
+``plans.scotty_batch._kernel_run`` runs the kernel over a flushed key
+only as the reference that tests compare with.
 
-It has **no Spark dependency**: the Spark layers
-(``streaming.processor`` for Structured Streaming state,
-``plans.scotty_batch`` for batch ``mapInPandas``) drive one kernel per
-key through ``new_operator`` and ``feed_sorted`` at the end of this
-module. Running kernel-only keeps the ported reference unit suites
-sub-second under ``pytest``.
+It has **no Spark dependency**: ``streaming.processor`` drives one
+kernel per key through ``new_operator`` and ``feed_sorted`` at the end
+of this module. Running kernel-only keeps the ported reference unit
+suites sub-second under ``pytest``.
 
 Behaviour parity targets (reference, /root/reference — semantics only, the
 implementation below is new):
@@ -75,7 +77,13 @@ tests/test_property_sharing.py + test_tumbling.py):
    back to it, as a row one gap after the session's end extends it; the
    reference (WindowContext.java) leaves the start in place while the
    row's slice joins the session — see SessionContext.update_context;
-   pinned by an explicit example of the same test.
+   pinned by an explicit example of the same test;
+12. a session removed by a merge deletes only its start edge. The
+   reference also deletes at its end, so removing a one-row session
+   dropped the edge at its start even when another session window's
+   session starts there too, and that window lost its sessions on both
+   sides of the edge — see SessionContext._remove_window; pinned by an
+   explicit example of the same test.
 """
 
 from __future__ import annotations
@@ -448,23 +456,23 @@ NAMED_LIFTS = {
 }
 
 
+def lift_kind(fn: AggregateFunction, value_mode: bool = True):
+    """A function's segment lift: the reduction name from ``NAMED_LIFTS``
+    for a standard aggregate over a value array, else the function's own
+    ``bulk_lift_values`` (value mode) or ``bulk_lift_records`` (record
+    mode, columnar dicts) callable, else None."""
+    if value_mode:
+        return NAMED_LIFTS.get(type(fn)) or fn.bulk_lift_values
+    return fn.bulk_lift_records
+
+
 def bulk_lift_kinds(fns: Sequence[AggregateFunction], value_mode: bool = True) -> Optional[list]:
-    """Per-function segment lift for ``process_in_order_bulk``: the
-    reduction name from ``NAMED_LIFTS`` for a standard aggregate over a
-    value array, else the function's own ``bulk_lift_values`` (value mode)
-    or ``bulk_lift_records`` (record mode, columnar dicts) callable. None
-    if any function has neither: the caller feeds element by element.
-    All-names (no callable) is the numpy-reducible surface that the
-    vectorized batch tier and the typed stream state cover."""
-    kinds = []
-    for fn in fns:
-        kind = NAMED_LIFTS.get(type(fn)) if value_mode else None
-        if kind is None:
-            kind = fn.bulk_lift_values if value_mode else fn.bulk_lift_records
-        if kind is None:
-            return None
-        kinds.append(kind)
-    return kinds
+    """Per-function ``lift_kind`` for ``process_in_order_bulk``, or None
+    if any function has none: the caller feeds element by element.
+    All-names (no callable) is the numpy-reducible surface that the typed
+    stream state covers."""
+    kinds = [lift_kind(fn, value_mode) for fn in fns]
+    return None if any(k is None for k in kinds) else kinds
 
 
 class SlicingWindowOperator:

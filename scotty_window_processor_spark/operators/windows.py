@@ -169,9 +169,10 @@ class SessionContext:
         return w
 
     def _remove_window(self, i: int) -> None:
+        # kernel divergence fix #12: a session owns one slice edge, at its
+        # start (its end moves with no modification), so only that goes
         w = self.active_windows[i]
         self._mods.append(DeleteModification(w.start))
-        self._mods.append(DeleteModification(w.end))
         del self.active_windows[i]
 
     def _shift_start(self, w: ActiveWindow, position: int) -> None:

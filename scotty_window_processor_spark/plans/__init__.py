@@ -3,7 +3,7 @@
 Everything here is declarative DataFrame/SQL first: Catalyst gets to push
 filters into the parquet scan, prune columns, broadcast small join sides,
 and keep the hot path inside whole-stage codegen. Python only appears in
-the per-key window tiers behind ``scotty_batch`` — always
+the batch slicer behind ``scotty_batch`` (``vectorized_multi``) —
 Arrow-batched, never per row.
 """
 
@@ -18,7 +18,7 @@ _BUCKET_CAP = 32768  # stage task-count ceiling
 
 
 def adaptive_buckets(df) -> int:
-    """Bucket count for the Python-tier shuffle, sized so each task carries
+    """Bucket count for the batch slicer's shuffle, sized so each task carries
     roughly one TARGET UNIT of rows — max(spark.sql.execution.arrow
     .maxRecordsPerBatch, 65536) — instead of inheriting
     spark.sql.shuffle.partitions. Under a small maxRecordsPerBatch config
@@ -27,7 +27,7 @@ def adaptive_buckets(df) -> int:
     exploding the task count); at the bench's 262144-row batches it is
     one batch per task.
 
-    Why: the Python tiers are CPU/Arrow-bound, not shuffle-byte-bound —
+    Why: the slicer is CPU/Arrow-bound, not shuffle-byte-bound —
     the right task size is ~one Arrow batch, far SMALLER than AQE's
     64 MB byte advisory. Measured on the 64M-turn flagship at local[16]:
     32 buckets (the old cpus×2 formula) = 49.7 s; 256 buckets (= rows /
@@ -64,8 +64,8 @@ def adaptive_buckets(df) -> int:
 
 
 def key_exchange(df, key: str, ts: str, value, arrival_order=None):
-    """The one exchange of both Python batch tiers: every row of a key in
-    one partition, in no particular order. Each tier holds its whole
+    """The one exchange of the batch slicer: every row of a key in one
+    partition, in no particular order. The slicer holds its whole
     partition in memory anyway, so it orders the rows itself with
     ``partition_order`` instead of asking Spark for a sort.
 
@@ -95,7 +95,7 @@ def _ddl_type(ddl: str):
 
 
 def window_output_schema(key: str, key_type, aggs):
-    """Rows of every batch tier: (key, window_id, measure, w_start, w_end,
+    """Rows of both batch tiers: (key, window_id, measure, w_start, w_end,
     one column per ``AggSpec`` with its DDL type). The stream inserts
     ``emit_ts`` after ``w_end``."""
     return T.StructType(

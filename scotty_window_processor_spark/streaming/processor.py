@@ -10,9 +10,10 @@ KeyedScottyWindowOperator, flink-connector/.../KeyedScottyWindowOperator.java:15
 Per micro-batch, each key's new rows arrive as one Arrow batch; the handler
 restores the key's kernel from the Spark state store, drops late rows
 (below), feeds the rest in event-time order, fires the kernel at the
-key's frontier and emits the triggered windows. Building and feeding the
-kernel is shared with the batch kernel tier (`kernel.new_operator`,
-`kernel.feed_sorted`): rows before the key's event-time frontier take the
+key's frontier and emits the triggered windows. The kernel is built and
+fed by `kernel.new_operator` and `kernel.feed_sorted` (which the batch
+reference `scotty_batch._kernel_run` also calls): rows before the key's
+event-time frontier take the
 exact per-element path, the in-order rest the segment bulk path — in
 value mode and in record mode (value=None: dict-of-columns rows, custom
 ``bulk_lift_records`` lifts) alike.

@@ -76,7 +76,7 @@ def test_salted_matches_window_aggregate(spark, window, hot_keys):
 
 
 # --------------------------------------------------------------------------
-# Catalyst exact-quantile expression == kernel-tier quantile
+# Catalyst exact-quantile expression == the slicer's quantile
 
 
 def test_catalyst_quantile_matches_kernel(spark):
@@ -96,7 +96,7 @@ def test_catalyst_quantile_matches_kernel(spark):
     )
     ker = scotty_window_aggregate(
         df, key="user_id", ts="ts", value="value", windows=windows, aggs=aggs,
-        force_kernel=True,
+        prefer_catalyst=False,
     )
     assert sorted(map(tuple, cat.collect())) == sorted(map(tuple, ker.collect()))
 

@@ -1,5 +1,6 @@
-"""Spark-parity tests: the kernel-backed batch operator and the numpy fast
-path must agree with each other and with Catalyst built-in window plans.
+"""Spark-parity tests: the batch slicer (the shared-slice numpy tier) must
+agree with Catalyst built-in window plans and, for window mixes the
+kernel gets right, with the slicing kernel run per key in the test process.
 """
 
 import pytest
@@ -17,7 +18,11 @@ from scotty_window_processor_spark.operators import (
     TumblingWindow,
     WindowMeasure,
 )
-from scotty_window_processor_spark.plans.scotty_batch import scotty_window_aggregate
+from scotty_window_processor_spark.plans.scotty_batch import (
+    _final_watermark,
+    _kernel_run,
+    scotty_window_aggregate,
+)
 from scotty_window_processor_spark.plans.windowed import window_aggregate
 from scotty_window_processor_spark.sources import synthesize_transcripts
 
@@ -25,7 +30,7 @@ from spark_fixtures import get_spark
 
 
 def _turns():
-    """The Catalyst side's aggregate in every kernel-vs-Catalyst test."""
+    """The Catalyst side's aggregate in every slicer-vs-Catalyst test."""
     return {"turns": F.count(F.lit(1)).cast("double")}
 
 
@@ -59,7 +64,7 @@ def test_tumbling_kernel_matches_catalyst(spark, transcripts):
         key="conv_id", ts="ts", value="one",
         windows=[TumblingWindow(WindowMeasure.TIME, size_ms)],
         aggs=[("turns", "double", CountAggregation)],
-        force_kernel=True,
+        prefer_catalyst=False,
     ).select("conv_id", "w_start", "w_end", "turns")
 
     catalyst = window_aggregate(
@@ -74,7 +79,7 @@ def test_sliding_kernel_matches_catalyst(spark, transcripts):
         key="conv_id", ts="ts", value="one",
         windows=[SlidingWindow(WindowMeasure.TIME, 600_000, 200_000)],
         aggs=[("turns", "double", CountAggregation)],
-        force_kernel=True,
+        prefer_catalyst=False,
     ).select("conv_id", "w_start", "w_end", "turns")
 
     catalyst = window_aggregate(
@@ -84,7 +89,7 @@ def test_sliding_kernel_matches_catalyst(spark, transcripts):
 
 
 def test_multiwindow_sharing_matches_two_catalyst_runs(spark, transcripts):
-    """Two concurrent tumbling windows in ONE kernel pass (shared slices)
+    """Two concurrent tumbling windows in ONE slicer pass (shared slices)
     must equal two separate Catalyst window aggregations."""
     df = transcripts.withColumn("one", F.lit(1.0))
     shared = scotty_window_aggregate(
@@ -94,7 +99,7 @@ def test_multiwindow_sharing_matches_two_catalyst_runs(spark, transcripts):
             TumblingWindow(WindowMeasure.TIME, 1_800_000, window_id=2),
         ],
         aggs=[("turns", "double", CountAggregation)],
-        force_kernel=True,
+        prefer_catalyst=False,
     )
     small = shared.where(F.col("window_id") == 1).select("conv_id", "w_start", "w_end", "turns")
     large = shared.where(F.col("window_id") == 2).select("conv_id", "w_start", "w_end", "turns")
@@ -107,15 +112,14 @@ def test_multiwindow_sharing_matches_two_catalyst_runs(spark, transcripts):
 
 def test_session_kernel_matches_catalyst(spark, transcripts):
     gap_ms = 120_000
-    # force_kernel pins the pure-Python slicing kernel (tier 3); without it
-    # session+Count routes to F.session_window and this would compare
-    # Catalyst to Catalyst
+    # without prefer_catalyst=False session+Count routes to
+    # F.session_window and this would compare Catalyst to Catalyst
     kernel = scotty_window_aggregate(
         transcripts.withColumn("one", F.lit(1.0)),
         key="conv_id", ts="ts", value="one",
         windows=[SessionWindow(WindowMeasure.TIME, gap_ms)],
         aggs=[("turns", "double", CountAggregation)],
-        force_kernel=True,
+        prefer_catalyst=False,
     ).select("conv_id", "w_start", "w_end", "turns")
 
     catalyst = window_aggregate(
@@ -124,67 +128,65 @@ def test_session_kernel_matches_catalyst(spark, transcripts):
     assert _normalize(kernel, ["turns"]) == _normalize(catalyst, ["turns"])
 
 
+def _kernel_rows(df, key, ts, value, windows, aggs, arrival_order=None, lateness_ms=1000):
+    """The slicing kernel's rows for ``df``, one ``_kernel_run`` per key in
+    the test process over the key's rows in (ts, arrival) order, as
+    (key, window_id, w_start, w_end, *aggregates). In record mode
+    (``value=None``) each key's rows go in as a dict of column lists."""
+    pdf = df.toPandas()
+    pdf = pdf.sort_values([key, ts] + ([arrival_order] if arrival_order else []), kind="mergesort")
+    rows = []
+    for k, g in pdf.groupby(key, sort=False):
+        ts_ms = g[ts].to_numpy().astype("datetime64[ms]").astype("int64")
+        final_wm = _final_watermark(int(ts_ms[-1]), windows, lateness_ms)
+        data = g[value].to_numpy() if value else {c: g[c].tolist() for c in g.columns}
+        for r in _kernel_run(data, ts_ms, value, windows, aggs, lateness_ms, final_wm):
+            rows.append((k, r[0], r[2], r[3], *r[4:]))
+    return rows
+
+
+def _rounded(rows):
+    return sorted(tuple(round(float(v), 6) if isinstance(v, float) else v for v in r)
+                  for r in rows)
+
+
 def test_fast_path_matches_kernel_path(spark, transcripts):
-    """sum/max via numpy fast path vs forced kernel loop (MaxAggregation is
-    fast-path-eligible; adding a session window forces the kernel)."""
+    """sum/max over a sliding window: the slicer's rows equal the slicing
+    kernel's, run per key in the test process."""
     df = transcripts.withColumn("v", F.col("turn_idx").cast("double"))
-    fast = scotty_window_aggregate(
-        df, key="conv_id", ts="ts", value="v",
-        windows=[SlidingWindow(WindowMeasure.TIME, 600_000, 300_000)],
-        aggs=[("s", "double", SumAggregation), ("mx", "double", MaxAggregation)],
-    ).select("conv_id", "w_start", "w_end", "s", "mx")
-
-    from scotty_window_processor_spark.plans import scotty_batch as sb
-
-    orig = sb._fast_path_eligible
-    sb._fast_path_eligible = lambda *a, **k: False
-    try:
-        slow = scotty_window_aggregate(
-            df, key="conv_id", ts="ts", value="v",
-            windows=[SlidingWindow(WindowMeasure.TIME, 600_000, 300_000)],
-            aggs=[("s", "double", SumAggregation), ("mx", "double", MaxAggregation)],
-        ).select("conv_id", "w_start", "w_end", "s", "mx")
-        assert _normalize(fast, ["s", "mx"]) == _normalize(slow, ["s", "mx"])
-    finally:
-        sb._fast_path_eligible = orig
+    args = dict(key="conv_id", ts="ts", value="v",
+                windows=[SlidingWindow(WindowMeasure.TIME, 600_000, 300_000, window_id=1)],
+                aggs=[("s", "double", SumAggregation), ("mx", "double", MaxAggregation)])
+    out = scotty_window_aggregate(df, **args, prefer_catalyst=False)
+    assert out.tiers == {1: "vectorized"}
+    got = [tuple(r) for r in out.select("conv_id", "window_id", "w_start", "w_end", "s", "mx")
+           .collect()]
+    assert got and _rounded(got) == _rounded(_kernel_rows(df, **args))
 
 
 def test_vectorized_session_and_count_match_kernel(spark, transcripts):
-    """Sessions (gaps-and-islands) and count windows through the numpy path
-    vs the per-element kernel."""
-    from scotty_window_processor_spark.functions import CountAggregation, SumAggregation
-    from scotty_window_processor_spark.plans import scotty_batch as sb
-
+    """Sessions (gaps-and-islands) with a count window, and with a
+    tumbling time window, through the slicer vs the slicing kernel run
+    per key in the test process. Count windows are not mixed with a fixed time
+    window here: the kernel gets that mix wrong (ROADMAP item 1)."""
     df = transcripts.withColumn("v", F.col("turn_idx").cast("double"))
-    args = dict(
-        key="conv_id", ts="ts", value="v",
-        windows=[
-            SessionWindow(WindowMeasure.TIME, 120_000, window_id=1),
-            TumblingWindow(WindowMeasure.COUNT, 7, window_id=2),
-            TumblingWindow(WindowMeasure.TIME, 600_000, window_id=3),
-        ],
-        aggs=[("s", "double", SumAggregation), ("n", "long", CountAggregation)],
-        arrival_order="turn_idx",
-    )
-    fast = scotty_window_aggregate(df, **args).select(
-        "conv_id", "window_id", "w_start", "w_end", "s", "n")
-    assert sb._fast_path_eligible(args["windows"], args["aggs"])
-
-    orig = sb._fast_path_eligible
-    sb._fast_path_eligible = lambda *a, **k: False
-    try:
-        slow = scotty_window_aggregate(df, **args).select(
-            "conv_id", "window_id", "w_start", "w_end", "s", "n")
-        norm = lambda d: sorted(tuple(r) for r in d.collect())
-        assert norm(fast) == norm(slow)
-    finally:
-        sb._fast_path_eligible = orig
+    for other in (TumblingWindow(WindowMeasure.COUNT, 7, window_id=2),
+                  TumblingWindow(WindowMeasure.TIME, 600_000, window_id=2)):
+        args = dict(
+            key="conv_id", ts="ts", value="v",
+            windows=[SessionWindow(WindowMeasure.TIME, 120_000, window_id=1), other],
+            aggs=[("s", "double", SumAggregation), ("n", "long", CountAggregation)],
+            arrival_order="turn_idx",
+        )
+        got = [tuple(r) for r in scotty_window_aggregate(df, **args, prefer_catalyst=False)
+               .select("conv_id", "window_id", "w_start", "w_end", "s", "n").collect()]
+        assert got and _rounded(got) == _rounded(_kernel_rows(df, **args))
 
 
 def test_global_aggregate_catalyst_vs_kernel(spark, transcripts):
     """Non-keyed (GlobalScottyWindowOperator analogue): the Catalyst tier
-    (groupBy(window) only, map-side partials) and the single-kernel tier
-    must produce identical global windows."""
+    (groupBy(window) only, map-side partials) and the slicer over one
+    constant key must produce identical global windows."""
     from scotty_window_processor_spark.plans.scotty_batch import scotty_global_aggregate
 
     df = transcripts.withColumn("v", F.col("turn_idx").cast("double"))
@@ -194,7 +196,7 @@ def test_global_aggregate_catalyst_vs_kernel(spark, transcripts):
         aggs=[("n", "long", CountAggregation), ("s", "double", SumAggregation)],
     )
     fast = scotty_global_aggregate(df, **args).select("w_start", "w_end", "n", "s")
-    slow = scotty_global_aggregate(df, **args, force_kernel=True).select(
+    slow = scotty_global_aggregate(df, **args, prefer_catalyst=False).select(
         "w_start", "w_end", "n", "s")
     norm = lambda d: sorted(tuple(r) for r in d.collect())
     a, b = norm(fast), norm(slow)
@@ -220,7 +222,7 @@ def test_accumulator_reaches_driver_from_map_in_arrow(spark):
 def test_subclass_with_own_lift_is_not_planned_as_catalyst_builtin(spark):
     """A ``SumAggregation`` subclass with its own ``lift`` is not ``sum``:
     the default planner must not map it to ``F.sum`` (it matched by
-    ``isinstance``), so it emits the kernel tier's log sums."""
+    ``isinstance``), so the slicer folds its lift and emits log sums."""
     import math
 
     class LogSum(SumAggregation):
@@ -235,12 +237,11 @@ def test_subclass_with_own_lift_is_not_planned_as_catalyst_builtin(spark):
                 windows=[TumblingWindow(WindowMeasure.TIME, 10_000, window_id=1)],
                 aggs=[("s", "double", LogSum)])
     planned = scotty_window_aggregate(df, **args)
-    kernel = scotty_window_aggregate(df, **args, force_kernel=True)
     norm = lambda d: sorted((r["w_start"], round(r["s"], 9)) for r in d.collect())
     expected = [(0, round(sum(math.log(v) for v in range(1, 20)), 9)),
                 (10_000, round(math.log(20), 9))]
-    assert norm(planned) == norm(kernel) == expected
-    assert planned.tiers == {1: "kernel"}
+    assert norm(planned) == expected
+    assert planned.tiers == {1: "vectorized"}
 
 
 def _assert_one_key_exchange_and_no_sort(out, python_op):
@@ -252,18 +253,25 @@ def _assert_one_key_exchange_and_no_sort(out, python_op):
     assert "Sort [" not in plan
 
 
-def test_kernel_tier_plan_is_one_key_exchange_into_map_in_pandas(spark, transcripts):
-    """The kernel tier reads the vectorized tier's exchange: one hash
-    exchange on the key and no sort (the partition function orders its
-    rows), then ``mapInPandas`` — no bucket column, no grouped
-    ``applyInPandas``."""
-    out = scotty_window_aggregate(
-        transcripts, key="conv_id", ts="ts", value="turn_idx",
-        windows=[TumblingWindow(WindowMeasure.TIME, 600_000, window_id=1)],
-        aggs=[("n", "long", CountAggregation)],
-        force_kernel=True,
-    )
-    _assert_one_key_exchange_and_no_sort(out, "MapInPandas")
+def test_record_mode_plan_is_one_key_exchange_into_map_in_arrow(spark, transcripts):
+    """Record mode (``value=None``, every column crosses the exchange)
+    takes the slicer's plan: one hash exchange on the key, no sort (the
+    partition function orders its rows), then ``mapInArrow``. Its rows
+    equal the slicing kernel's."""
+    from scotty_window_processor_spark.functions import RoleTextRollupString, ToolTallyString
+
+    args = dict(key="conv_id", ts="ts", value=None,
+                windows=[TumblingWindow(WindowMeasure.TIME, 600_000, window_id=1)],
+                aggs=[("n", "long", CountAggregation), ("tools", "string", ToolTallyString),
+                      ("rollup", "string", RoleTextRollupString)],
+                arrival_order="turn_idx")
+    out = scotty_window_aggregate(transcripts, **args)
+    assert out.tiers == {1: "vectorized"}
+    _assert_one_key_exchange_and_no_sort(out, "MapInArrow")
+    assert "MapInPandas" not in out._jdf.queryExecution().executedPlan().toString()
+    got = [tuple(r) for r in out.select("conv_id", "window_id", "w_start", "w_end", "n", "tools",
+                                        "rollup").collect()]
+    assert got and sorted(got) == sorted(_kernel_rows(transcripts, **args))
 
 
 def test_vectorized_tier_plan_is_one_key_exchange_into_map_in_arrow(spark, transcripts):
@@ -335,8 +343,11 @@ def test_result_reports_tier_per_window(spark, transcripts):
     assert mixed.tiers == {1: "catalyst", 2: "vectorized"}
     assert {r["window_id"] for r in mixed.select("window_id").distinct().collect()} == {1, 2}
     assert run(time3).tiers == {1: "vectorized", 3: "vectorized", 4: "vectorized"}
-    assert run([tumbling, count], force_kernel=True).tiers == {1: "kernel", 2: "kernel"}
+    assert run([tumbling, count], prefer_catalyst=False).tiers == {1: "vectorized", 2: "vectorized"}
+    record = scotty_window_aggregate(df, key="conv_id", ts="ts", value=None, windows=[tumbling],
+                                     aggs=[("n", "long", CountAggregation)])
+    assert record.tiers == {1: "vectorized"}
     glob = lambda **kw: scotty_global_aggregate(df, ts="ts", value="v", windows=[tumbling],
                                                 aggs=aggs, **kw).tiers
     assert glob() == {1: "catalyst"}
-    assert glob(force_kernel=True) == {1: "kernel"}
+    assert glob(prefer_catalyst=False) == {1: "vectorized"}

@@ -179,6 +179,12 @@ def streams(draw):
 # (kernel divergence fix #11)
 @example((np.array(["a", "a"]), BASE + np.array([5_000, 0]), np.array([0.0, 1.0]), [1, 1], 1),
          [("session", 5)])
+# a late row that merges two 37 s sessions of a key removes the one-row
+# session at 66 s, whose start edge the 5 s session at 66 s shares; the
+# edge stays (kernel divergence fix #12), so both 5 s sessions emit
+@example((np.array(["a", "a", "a", "a"]), BASE + np.array([0, 7, 66, 44]) * SEC,
+          np.array([0.0, 1.0, 2.0, 3.0]), [3, 1], 1),
+         [("session", 5), ("session", 37)])
 def test_stream_emits_kernel_rows_once(stream, specs):
     keys, ts, values, batch_sizes, arrow_rows = stream
     windows = make_windows(specs)
