@@ -809,9 +809,9 @@ def q_stream_tumbling_restart(spark, sf_dir):
 
 def q_stream_payload_restart(spark, sf_dir):
     """CHECKPOINT-RESTART gate for the NORTH-STAR payload aggregates in
-    RECORD mode: the pickled-kernel state tier (tool tally + ordered role
-    rollup partials, per-slice record buffers) must survive a
-    kill-mid-stream + resume byte-for-byte — committed rows vs the same
+    RECORD mode: the stream's state cell (tool tally + ordered role
+    rollup partials) must survive a kill-mid-stream + resume
+    byte-for-byte — committed rows vs the same
     _PAYLOAD_KERNEL oracle as the batch and single-run streaming gates."""
     from scotty_window_processor_spark.functions import (
         CountAggregation,
@@ -960,10 +960,10 @@ def q_stream_session_30m(spark, sf_dir):
 
 def q_stream_quantile_6h(spark, sf_dir):
     """Streaming replay with a CUSTOM lift/combine/lower aggregate
-    (QuantileAggregation, the QuantileWindowFunction analogue): exercises
-    the pickled-kernel state tier of the streaming operator — typed Arrow
-    state only covers numpy-reducible functions — against the same DuckDB
-    oracle as the batch scotty_quantile_kernel gate."""
+    (QuantileAggregation, the QuantileWindowFunction analogue): its dict
+    partials go through the streaming operator's state cell as they are,
+    gated against the same DuckDB oracle as the batch
+    scotty_quantile_kernel gate."""
     from scotty_window_processor_spark.functions import CountAggregation, QuantileAggregation
     from scotty_window_processor_spark.operators import TumblingWindow, WindowMeasure
 
@@ -984,9 +984,9 @@ def q_stream_quantile_6h(spark, sf_dir):
 def q_stream_payload_6h(spark, sf_dir):
     """Streaming replay of the NORTH-STAR payload aggregates (tool-call
     tally + per-role ordered text rollup) in RECORD mode: full-row
-    elements flow through the stateful slicing operator's pickled-kernel
-    state tier with custom lift/combine/lower functions — the streaming
-    twin of scotty_payload_kernel, gated against the same _PAYLOAD_KERNEL
+    elements flow through the stateful slicing operator with custom
+    lift/combine/lower functions, their partials in its state cell — the
+    streaming twin of scotty_payload_kernel, gated against the same _PAYLOAD_KERNEL
     DuckDB oracle. Rollup order is (ts, turn_idx), so micro-batch
     boundaries cannot reorder the concatenation."""
     from scotty_window_processor_spark.functions import (
@@ -1039,8 +1039,8 @@ def q_stream_sliding_1h_15m(spark, sf_dir):
 
 def q_stream_count_tumbling_25(spark, sf_dir):
     """Streaming replay gate: COUNT-measure tumbling windows (size 25) —
-    per-key positional slice counters must survive micro-batch boundaries
-    in the pickled-kernel state tier; only full windows trigger (the
+    per-key positional slice counters and record buffers must survive
+    micro-batch boundaries in the state cell; only full windows trigger (the
     count edge), matching the oracle's HAVING count(*) = 25."""
     from scotty_window_processor_spark.functions import SumAggregation
     from scotty_window_processor_spark.operators import TumblingWindow, WindowMeasure

@@ -83,7 +83,15 @@ tests/test_property_sharing.py + test_tumbling.py):
    dropped the edge at its start even when another session window's
    session starts there too, and that window lost its sessions on both
    sides of the edge — see SessionContext._remove_window; pinned by an
-   explicit example of the same test.
+   explicit example of the same test;
+13. a session edge that lands on an existing flexible edge (a second
+   session window's session starting at the same ts) adds one to that
+   edge's count. The reference skips the existing edge, so the first of
+   the two sessions to move away merged the edge away and the other
+   session lost its start — see _edge_at; pinned by
+   tests/test_session.py::test_two_session_windows_share_a_start_edge
+   and an explicit example of tests/test_stream_property.py::
+   test_stream_emits_kernel_rows_once.
 """
 
 from __future__ import annotations
@@ -468,9 +476,7 @@ def lift_kind(fn: AggregateFunction, value_mode: bool = True):
 
 def bulk_lift_kinds(fns: Sequence[AggregateFunction], value_mode: bool = True) -> Optional[list]:
     """Per-function ``lift_kind`` for ``process_in_order_bulk``, or None
-    if any function has none: the caller feeds element by element.
-    All-names (no callable) is the numpy-reducible surface that the typed
-    stream state covers."""
+    if any function has none: the caller feeds element by element."""
     kinds = [lift_kind(fn, value_mode) for fn in fns]
     return None if any(k is None for k in kinds) else kinds
 
@@ -492,7 +498,6 @@ class SlicingWindowOperator:
         self.functions: List[AggregateFunction] = []
         self.context_free: List[Window] = []
         self.contexts: List[SessionContext] = []
-        self.registered_window_ids: set = set()
         self.has_fixed_windows = False
         self.has_count_measure = False
         self.has_time_measure = False
@@ -512,7 +517,6 @@ class SlicingWindowOperator:
 
     def add_window(self, window: Window) -> None:
         """Register a window; supports dynamic addition mid-stream."""
-        self.registered_window_ids.add(window.window_id)
         if window.is_context_free:
             self.context_free.append(window)
             self.max_fixed_window_size = max(self.max_fixed_window_size, window.clear_delay())
@@ -763,8 +767,7 @@ class SlicingWindowOperator:
                     index = self.store.find_index_by_ts(mod.post)
                     if index == -1:
                         return
-                    if self.store[index].t_start != mod.post:
-                        self._split_slice(index, mod.post)
+                    self._edge_at(index, mod.post)
                 elif s.type.movable:
                     nxt = self.store[index + 1]
                     s.t_end = mod.post
@@ -772,7 +775,7 @@ class SlicingWindowOperator:
                 else:
                     if isinstance(s.type, Flexible):
                         s.type.count -= 1
-                    self._split_slice(index, mod.post)
+                    self._edge_at(index, mod.post)
             elif isinstance(mod, DeleteModification):
                 index = self.store.find_index_by_end(mod.pre)
                 if index >= 0:
@@ -785,9 +788,19 @@ class SlicingWindowOperator:
                 index = self.store.find_index_by_ts(mod.post)
                 if index == -1:
                     return
-                s = self.store[index]
-                if s.t_start != mod.post and s.t_end != mod.post:
-                    self._split_slice(index, mod.post)
+                self._edge_at(index, mod.post)
+
+    def _edge_at(self, index: int, ts: int) -> None:
+        """A session edge at ``ts``, inside or at the start of slice
+        ``index``. Divergence fix #13: an edge already there that is
+        Flexible gains one reference, so a second session window whose
+        session starts there keeps it when the first one's moves away;
+        the reference skips an existing edge. A Fixed edge is never
+        removed and needs none. Otherwise the slice splits at ``ts``."""
+        if self.store[index].t_start != ts:
+            self._split_slice(index, ts)
+        elif index > 0 and isinstance(self.store[index - 1].type, Flexible):
+            self.store[index - 1].type.count += 1
 
     def _split_slice(self, index: int, ts: int) -> None:
         left = self.store[index]
@@ -1058,8 +1071,9 @@ MIN_BULK_CUSTOM = 64
 def new_operator(windows: Sequence[Window], aggs, max_lateness: int) -> SlicingWindowOperator:
     """One key's operator: every aggregate of ``aggs`` (``AggSpec``
     triples), then every window, in list order. The order is state: the
-    stream's typed codec indexes session contexts by position, so live
-    registry windows go after the base list."""
+    stream's state codec indexes session contexts by position and
+    partials by aggregate, so live registry windows go after the base
+    list."""
     op = SlicingWindowOperator(max_lateness=max_lateness)
     for _, _, factory in aggs:
         op.add_aggregation(factory())

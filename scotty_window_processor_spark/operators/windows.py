@@ -161,12 +161,13 @@ class SessionContext:
         self._mods: List[WindowModification] | None = None
 
     # -- modification-recording primitives ---------------------------------
-    def _add_new_window(self, i: int, start: int, end: int) -> ActiveWindow:
-        w = ActiveWindow(start, end)
-        self.active_windows.insert(i, w)
-        self._mods.append(AddModification(start))
-        self._mods.append(AddModification(end))
-        return w
+    def _add_new_window(self, i: int, position: int) -> None:
+        # one modification: a new session's start and end are both
+        # ``position``, and each one adds a reference to the slice edge
+        # there (kernel divergence fix #13); the reference records the
+        # same edge twice
+        self.active_windows.insert(i, ActiveWindow(position, position))
+        self._mods.append(AddModification(position))
 
     def _remove_window(self, i: int) -> None:
         # kernel divergence fix #12: a session owns one slice edge, at its
@@ -218,16 +219,16 @@ class SessionContext:
         self._mods = mods
         try:
             if not self.active_windows:
-                self._add_new_window(0, position, position)
+                self._add_new_window(0, position)
                 return
             idx = self._get_session(position)
             if idx == -1:
-                self._add_new_window(0, position, position)
+                self._add_new_window(0, position)
                 return
             s = self.active_windows[idx]
             gap = self.gap
             if s.start - gap > position:
-                self._add_new_window(idx, position, position)
+                self._add_new_window(idx, position)
             elif s.start > position and s.start - gap <= position:
                 # kernel divergence fix #11: a row exactly one gap before
                 # the session joins it, as a row one gap after its end
@@ -245,7 +246,7 @@ class SessionContext:
                     if s.end + gap >= nxt.start:
                         self._merge_with_pre(idx + 1)
             elif s.end + gap < position:
-                self._add_new_window(idx + 1, position, position)
+                self._add_new_window(idx + 1, position)
         finally:
             self._mods = None
 

@@ -67,13 +67,13 @@ no-op: in batch `N` a key fires at most at `W_N`, and the late-row filter
 of every later batch uses a watermark of at least `W_N`, so no row at or
 below it reaches the handler.
 
-State encoding: TYPED Arrow structs (streaming.state_codec) whenever the
-function/window mix allows — scalars + array<struct> slices/sessions in
-the state column, no Python object graph in the state store. Custom
-lift/combine/lower functions and count-measure windows (which need raw
-record buffers) keep the single pickled BinaryType cell — the same
-eager/lazy footprint switch as the reference (SliceFactory.java:17-22),
-made explicit by `typed_state_eligible`.
+State encoding: one binary cell per key (`STATE_SCHEMA`), whatever the
+window and aggregate mix. It holds the pickled plain tuples of
+`state_codec.encode_op`: the kernel's scalars, active sessions and slices,
+with each slice's partials and, with a count window, its record buffer.
+The handler rebuilds the operator from the query's windows and decodes
+the state into it, so a restart from a checkpoint with a longer window
+list adds the new windows to every key.
 """
 
 from __future__ import annotations
@@ -90,10 +90,10 @@ from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from ..functions import AggSpec
 from ..operators.kernel import bulk_lift_kinds, feed_sorted, lower_windows, new_operator
-from ..operators.windows import JLONG_MIN, Window, WindowMeasure
+from ..operators.windows import JLONG_MIN, Window
 from ..plans import window_output_schema
 
-STATE_SCHEMA = "kernel binary"  # pickle fallback (custom fns / count windows)
+STATE_SCHEMA = "kernel binary"  # pickle.dumps(state_codec.encode_op(...))
 
 # internal long column: the running max event time (ms) of the rows the
 # map task had read up to and including the row's Arrow batch
@@ -132,34 +132,6 @@ def output_schema(key_name: str, key_type: T.DataType, aggs: Sequence[AggSpec]) 
     return T.StructType(fields[:5] + [T.StructField("emit_ts", T.LongType(), False)] + fields[5:])
 
 
-def typed_state_eligible(windows: Sequence[Window], aggs: Sequence[AggSpec], value_col) -> bool:
-    """Typed (Arrow-struct) state covers time-measure windows with
-    numpy-reducible functions (every segment lift a reduction name) over
-    a value column — the hot path. Count windows (per-slice record
-    buffers) and custom lift/combine/lower partials keep the
-    pickled-kernel state cell, explicitly."""
-    if value_col is None:
-        return False
-    kinds = bulk_lift_kinds([factory() for _, _, factory in aggs])
-    return (
-        kinds is not None
-        and all(isinstance(k, str) for k in kinds)
-        and all(w.measure == WindowMeasure.TIME for w in windows)
-    )
-
-
-def typed_state_schema(n_fns: int) -> T.StructType:
-    from .state_codec import SCALARS_DDL, SESSION_DDL, slice_ddl
-
-    return T.StructType(
-        [
-            T.StructField("scalars", T._parse_datatype_string(SCALARS_DDL)),
-            T.StructField("sessions", T.ArrayType(T._parse_datatype_string(SESSION_DDL))),
-            T.StructField("slices", T.ArrayType(T._parse_datatype_string(slice_ddl(n_fns)))),
-        ]
-    )
-
-
 def make_handler(
     key_name: str,
     ts_col: str,
@@ -189,10 +161,8 @@ def make_handler(
     window_defs = list(windows)
     agg_specs = list(aggs)
 
-    # segment lifts for feed_sorted; with typed state they are all
-    # reduction names, which the state codec encodes partials by
+    # segment lifts for feed_sorted (None: element by element)
     feed_kinds = bulk_lift_kinds([factory() for _, _, factory in agg_specs], value_col is not None)
-    typed = typed_state_eligible(window_defs, agg_specs, value_col)
 
     def handler(
         key: Tuple[Any], pdfs: Iterator[pd.DataFrame], state: GroupState
@@ -213,30 +183,21 @@ def make_handler(
         # registry windows strictly AFTER the base list (new_operator)
         op = new_operator(window_defs + dyn, agg_specs, lateness_ms)
         if state.exists:
-            if typed:
-                scalars, sessions, slices = state.get
-                try:
-                    decode_op(op, feed_kinds, scalars, sessions, slices)
-                except IndexError:
-                    # stale registry cache race: this state was encoded by
-                    # a worker that had already picked up a newly added
-                    # SessionWindow (positional ctx_idx beyond our context
-                    # list). Force a registry refresh (poll 0) and retry
-                    # instead of failing the task for up to poll_interval.
-                    if window_registry is None:
-                        raise
-                    from .registry import read_registry as _rr
-
-                    dyn = [w for w in _rr(window_registry, 0.0)
-                           if w.window_id not in base_ids]
-                    op = new_operator(window_defs + dyn, agg_specs, lateness_ms)
-                    decode_op(op, feed_kinds, scalars, sessions, slices)
-            else:
-                op = pickle.loads(state.get[0])
-                known = op.registered_window_ids
-                for w in dyn:
-                    if w.window_id not in known:
-                        op.add_window(w)
+            encoded = pickle.loads(state.get[0])
+            try:
+                decode_op(op, feed_kinds, *encoded)
+            except IndexError:
+                # stale registry cache race: this state was encoded by
+                # a worker that had already picked up a newly added
+                # SessionWindow (positional ctx_idx beyond our context
+                # list). Force a registry refresh (poll 0) and retry
+                # instead of failing the task for up to poll_interval.
+                if window_registry is None:
+                    raise
+                dyn = [w for w in read_registry(window_registry, 0.0)
+                       if w.window_id not in base_ids]
+                op = new_operator(window_defs + dyn, agg_specs, lateness_ms)
+                decode_op(op, feed_kinds, *encoded)
 
         import time as _time
 
@@ -291,10 +252,8 @@ def make_handler(
             # (and stops the idle key's timer from re-arming forever).
             state.remove()
         else:
-            if typed:
-                state.update(encode_op(op, feed_kinds))
-            else:
-                state.update((pickle.dumps(op),))
+            cell = pickle.dumps(encode_op(op, feed_kinds), protocol=pickle.HIGHEST_PROTOCOL)
+            state.update((cell,))
             # wake when the watermark reaches the next possible emission:
             # Spark times a key out once the watermark EXCEEDS its timestamp
             state.setTimeoutTimestamp(max(nxt - 1 if nxt is not None else wm + 1, wm + 1))
@@ -371,11 +330,6 @@ def scotty_stream(
         watermark_delay_ms=parse_watermark_delay_ms(spark, watermark_delay),
         late_rows=late_rows,
     )
-    state_schema = (
-        typed_state_schema(len(aggs))
-        if typed_state_eligible(windows, aggs, value)
-        else STATE_SCHEMA
-    )
     result = (
         _stamp_max_event_time(stream_df, ts)
         .withWatermark(ts, watermark_delay)
@@ -383,7 +337,7 @@ def scotty_stream(
         .applyInPandasWithState(
             handler,
             outputStructType=schema,
-            stateStructType=state_schema,
+            stateStructType=STATE_SCHEMA,
             outputMode="append",
             timeoutConf=GroupStateTimeout.EventTimeTimeout,
         )

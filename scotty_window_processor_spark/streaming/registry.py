@@ -22,12 +22,11 @@ executors stat the file a moment apart may pick the window up one
 micro-batch apart — the reference's addWindow is equally unsynchronized
 with respect to in-flight elements.
 
-Registry windows must be TIME-measure: the state layout (typed Arrow
-slices, or positional counters in the pickled tier) is fixed at query
-start, and count-measure windows change the required layout (per-slice
-record buffers). The registry is append-only — window REMOVAL would need
-retroactive slice re-merging that neither this engine nor the reference
-defines.
+Registry windows must be TIME-measure: a count window needs every
+slice's record buffer, and slices cut before the add hold none (a kernel
+keeps record buffers only while it has a count window). The registry is
+append-only — window REMOVAL would need retroactive slice re-merging that
+neither this engine nor the reference defines.
 
 At 100 TB scale the poll cost is one `stat` per executor per
 `poll_interval_s` (results are process-cached), not per key and not per

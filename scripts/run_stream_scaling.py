@@ -2,7 +2,7 @@
 
 north_rule asks for throughput scaling between N and 4N executors; the
 batch flagship's evidence lives in BENCH/BASELINE.md. This script measures
-the STREAMING operator (applyInPandasWithState, typed Arrow state,
+the STREAMING operator (applyInPandasWithState, one binary state cell per key,
 vectorized in-order path) the same way: identical file-replay stream at
 local[N] and local[4N] in separate processes, full warmup run, min of
 --repeats, fresh checkpoint per run.

@@ -79,12 +79,14 @@ def test_many_windows_route_to_shared_shuffle_tier(spark):
     plan = plan_of(out)
     assert plan.count("Exchange") == 1, plan
     assert "Union" not in plan
+    assert "MapInArrow" in plan
 
     # 2-3 windows keep the pure-Catalyst tier (whole-stage codegen)
     few = scotty_window_aggregate(ev, key="user_id", ts="ts", value="value",
                                   windows=windows[:2], aggs=aggs)
-    assert "ArrowEvalPython" not in plan_of(few)
-    assert "FlatMapsInPandas" not in plan_of(few)
+    few_plan = plan_of(few)
+    assert "ArrowEvalPython" not in few_plan
+    assert "MapInArrow" not in few_plan  # the batch slicer's node
 
 
 def test_many_windows_tier_matches_catalyst_rows(spark):

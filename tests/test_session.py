@@ -204,6 +204,24 @@ def test_eviction_never_crosses_active_session_start():
     assert sessions == independent, (sessions, independent)
 
 
+def test_two_session_windows_share_a_start_edge():
+    """Divergence fix #13: the late row at 6001 moves both windows'
+    session start to 6001, and the row at 1 then moves only the 6000 ms
+    window's start away. The edge at 6001 keeps one reference for the
+    5000 ms window's session, which must still start there."""
+    from scotty_window_processor_spark.functions import CountAggregation
+
+    op = SlicingWindowOperator()
+    op.add_aggregation(CountAggregation())
+    op.add_window(SessionWindow(WindowMeasure.TIME, 5000, window_id=1))
+    op.add_window(SessionWindow(WindowMeasure.TIME, 6000, window_id=2))
+    for ts in (6002, 6001, 1):
+        op.process_element(1.0, ts)
+    r = [w for w in op.process_watermark(100_000) if w.has_value]
+    got = sorted((w.window_id, w.start, w.end, w.agg_values()[0]) for w in r)
+    assert got == [(1, 1, 5001, 1), (1, 6001, 11002, 2), (2, 1, 12002, 3)]
+
+
 def test_count_measure_session_rejected():
     """Conformance pin: the reference's SessionWindow nominally accepts
     WindowMeasure.Count but its SliceManager always feeds the session

@@ -9,6 +9,7 @@ tests/test_stream_asof.py; the Spark tests pin the late-row accumulator
 and the batch each window is emitted in on a real query."""
 
 import os
+import pickle
 
 import numpy as np
 import pandas as pd
@@ -20,6 +21,7 @@ from pyspark.sql import functions as F
 
 from scotty_window_processor_spark.functions import (
     CountAggregation,
+    QuantileAggregation,
     RoleTextRollupString,
     SumAggregation,
     ToolTallyString,
@@ -32,11 +34,7 @@ from scotty_window_processor_spark.operators import (
     WindowMeasure,
 )
 from scotty_window_processor_spark.operators.kernel import MIN_BULK_CUSTOM, lower_windows, new_operator
-from scotty_window_processor_spark.streaming.processor import (
-    STAMP_COL,
-    make_handler,
-    typed_state_eligible,
-)
+from scotty_window_processor_spark.streaming.processor import STAMP_COL, make_handler
 
 from spark_fixtures import get_spark
 
@@ -168,7 +166,8 @@ def test_back_to_back_row_below_frontier_is_dropped_and_counted():
     late = Counter()
     handler, st = _handler(late_rows=late), FakeGroupState()
     first = _call(handler, st, list(range(0, 151 * SEC, 10 * SEC)))
-    assert st.get[0][0] == 120 * SEC + BASE  # fired at frontier 120 s
+    scalars, _, _ = pickle.loads(st.get[0])
+    assert scalars[0] == 120 * SEC + BASE  # fired at frontier 120 s
 
     # next batch: Spark's watermark is now the first batch's max − delay,
     # but its late-row filter still used the watermark before the first
@@ -208,7 +207,6 @@ def test_session_and_count_mix_takes_pickled_path_and_is_exact():
         SessionWindow(WindowMeasure.TIME, MIN, window_id=1),
         TumblingWindow(WindowMeasure.COUNT, 5, window_id=2),
     ]
-    assert not typed_state_eligible(windows, AGGS, "value")
     rng = np.random.default_rng(7)
     # three sessions of in-order rows with up to 20 s of disorder, cut
     # into batches; the disorder stays under the 30 s delay, so nothing
@@ -224,7 +222,7 @@ def test_session_and_count_mix_takes_pickled_path_and_is_exact():
     emitted = []
     for batch in np.array_split(ts, 8):
         emitted += _call(handler, st, batch.tolist())
-        assert isinstance(st.get[0], bytes)  # pickled kernel cell
+        assert isinstance(st.get[0], bytes)  # the state cell
         st.wm = max(st.wm, BASE + int(batch.max()) - DELAY)
     st.wm = BASE + int(ts.max()) + FLUSH
     emitted += _call(handler, st, [])
@@ -238,6 +236,55 @@ def test_session_and_count_mix_takes_pickled_path_and_is_exact():
     expected = _relative(r[:5] for r in lower_windows(op.process_watermark(int(ordered[-1]) + FLUSH)))
     assert sorted(emitted) == sorted(expected)
     assert {w for w, *_ in emitted} == {1, 2}
+
+
+def test_restart_with_longer_window_list_adds_the_window_to_count_mix():
+    """A query restarted from its checkpoint with one more window: the
+    handler builds the kernel from the new list and restores the key's
+    state into it, whatever the window mix, so the added tumbling window
+    fires from the restart on: every instance after it holds all its rows
+    (the instance the restart cuts holds only part, the rows after the
+    add point)."""
+    windows = [
+        SessionWindow(WindowMeasure.TIME, MIN, window_id=1),
+        TumblingWindow(WindowMeasure.COUNT, 5, window_id=2),
+    ]
+    st = FakeGroupState()
+    _call(_handler(windows), st, list(range(0, 151 * SEC, 10 * SEC)))
+    st.wm = BASE + 120 * SEC
+    restarted = _handler(windows + [TumblingWindow(WindowMeasure.TIME, MIN, window_id=9)])
+    emitted = _call(restarted, st, list(range(160 * SEC, 331 * SEC, 10 * SEC)))
+    st.wm = BASE + FLUSH
+    emitted += _call(restarted, st, [])
+    added = {(s, e): n for w, s, e, n in emitted if w == 9}
+    assert sorted(added) == [(m * MIN, (m + 1) * MIN) for m in (2, 3, 4, 5)]
+    assert [added[(m * MIN, (m + 1) * MIN)] for m in (3, 4, 5)] == [6, 6, 4]
+
+
+def test_registry_window_added_live_fires_for_custom_aggregate(tmp_path):
+    """A registry window added while the query runs reaches a key whose
+    state was written before the add, with a custom aggregate as with the
+    named ones (one state cell for every mix): every instance of the added
+    window after the add holds all its rows."""
+    from scotty_window_processor_spark.streaming.registry import registry_add_window, write_registry
+
+    registry = str(tmp_path / "windows.json")
+    write_registry(registry, [])
+    aggs = [("n", "long", CountAggregation), ("med", "double", QuantileAggregation)]
+    fields = ["k", "window_id", "measure", "w_start", "w_end", "emit_ts", "n", "med"]
+    handler = make_handler("k", "ts", "value", [TumblingWindow(WindowMeasure.TIME, 5 * MIN, window_id=2)],
+                           aggs, DELAY, fields, window_registry=registry, registry_poll_s=0.0,
+                           watermark_delay_ms=DELAY)
+    st = FakeGroupState()
+    _call(handler, st, list(range(0, 151 * SEC, 10 * SEC)))
+    registry_add_window(registry, TumblingWindow(WindowMeasure.TIME, MIN, window_id=9))
+    emitted = _call(handler, st, list(range(160 * SEC, 631 * SEC, 10 * SEC)))
+    st.wm = BASE + FLUSH
+    emitted += _call(handler, st, [])
+    added = {(s, e): n for w, s, e, n in emitted if w == 9}
+    # the add cuts [2 min, 3 min): it holds the rows after the add only
+    assert sorted(added) == [(m * MIN, (m + 1) * MIN) for m in range(2, 11)]
+    assert [added[(m * MIN, (m + 1) * MIN)] for m in range(3, 11)] == [6] * 7 + [4]
 
 
 def test_record_mode_stream_takes_bulk_path_and_matches_batch_kernel_tier(monkeypatch):

@@ -185,6 +185,17 @@ def streams(draw):
 @example((np.array(["a", "a", "a", "a"]), BASE + np.array([0, 7, 66, 44]) * SEC,
           np.array([0.0, 1.0, 2.0, 3.0]), [3, 1], 1),
          [("session", 5), ("session", 37)])
+# two session windows share a start edge (kernel divergence fix #13): a
+# late row moves both sessions' start onto one edge, and a later row moves
+# only one of them away, which merged the edge away while the other
+# session still started there. The two failures of hypothesis seed 131,
+# reduced to their failing key.
+@example((np.array(["a"] * 4), BASE + np.array([6_002, 6_001, 1, 36_997]),
+          np.array([0.0, 1.0, 2.0, 3.0]), [1, 1, 1, 1], 1),
+         [("session", 5), ("session", 6)])
+@example((np.array(["a"] * 5), BASE + np.array([0, 9_108, 7_001, 30_348, 2_000]),
+          np.array([0.0, 1.0, 2.0, 3.0, 4.0]), [1, 1, 1, 2], 1),
+         [("session", 5), ("session", 7)])
 def test_stream_emits_kernel_rows_once(stream, specs):
     keys, ts, values, batch_sizes, arrow_rows = stream
     windows = make_windows(specs)

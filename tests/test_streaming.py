@@ -249,15 +249,13 @@ def test_stream_stream_interval_join(spark, transcript_files, tmp_path):
 
 
 def test_pickle_fallback_for_custom_aggregate(spark, transcript_files, tmp_path):
-    """A custom lift/combine/lower function (exact quantile) is not
-    typed-state eligible — it must route through the pickled-kernel state
-    cell and still match the batch kernel recompute."""
+    """A custom lift/combine/lower function (exact quantile) keeps its
+    partials, dicts of value counts, in the same binary state cell as the
+    named reductions, and the stream still matches the batch path."""
     from scotty_window_processor_spark.functions import QuantileAggregation
-    from scotty_window_processor_spark.streaming.processor import typed_state_eligible
 
     aggs = [("turns", "long", CountAggregation), ("med", "double", QuantileAggregation)]
     windows = [TumblingWindow(WindowMeasure.TIME, 600_000, window_id=1)]
-    assert not typed_state_eligible(windows, aggs, "turn_idx")
 
     src_dir, pdf = transcript_files
     result = scotty_stream(
@@ -292,10 +290,11 @@ def test_pickle_fallback_for_custom_aggregate(spark, transcript_files, tmp_path)
 
 def test_dynamic_window_addition_via_checkpoint_restart(spark, transcript_files, tmp_path):
     """Dynamic window addition, streaming layer: restart the query from the
-    same checkpoint with an EXTENDED window list. The typed state schema
-    depends only on the aggregate functions, so the restored kernel picks
-    up its slices/sessions and the new window starts triggering from the
-    restored watermark — the same visibility semantics as the reference's
+    same checkpoint with an EXTENDED window list. The state cell holds
+    the kernel's state, not its windows: the handler builds the operator
+    from the new list and restores its slices and sessions into it, so
+    the new window starts triggering from the restored watermark — the
+    same visibility semantics as the reference's
     mid-stream addWindowAssigner (new windows only see data from the add
     point; TumblingWindowOperatorTest.java:96-145 is the kernel-level
     port)."""
