@@ -132,8 +132,7 @@ def q_count_tumbling_25(spark, sf_dir):
 def q_scotty_multiwindow(spark, sf_dir):
     """Two concurrent tumbling windows through ONE pass of the batch
     slicer (shared slices) — the reference's aggregate-sharing headline.
-    prefer_catalyst=False keeps it there: with two families and standard
-    aggregates the planner would run them as two Catalyst subplans."""
+    The planner runs every query with more than one window there."""
     _utc(spark)
     from scotty_window_processor_spark.functions import CountAggregation, SumAggregation
     from scotty_window_processor_spark.operators import TumblingWindow, WindowMeasure
@@ -146,7 +145,6 @@ def q_scotty_multiwindow(spark, sf_dir):
             TumblingWindow(WindowMeasure.TIME, 6 * SIZE_H, window_id=2),
         ],
         aggs=[("n", "long", CountAggregation), ("sum_value", "double", SumAggregation)],
-        prefer_catalyst=False,
     )
     return out.select(
         "user_id", "window_id", "w_start", "w_end", "n", F.round("sum_value", 2).alias("sum_value")
@@ -155,9 +153,9 @@ def q_scotty_multiwindow(spark, sf_dir):
 
 def q_scotty_session_kernel(spark, sf_dir):
     """Session windows through the batch slicer (gaps-and-islands; the
-    exact quantile's value→count partial lifted once per session), not
-    Catalyst's F.session_window: prefer_catalyst=False, since every
-    aggregate here has a built-in."""
+    exact quantile's value→count partial lifted once per session), called
+    directly: every aggregate here has a built-in, so the planner would
+    run this lone window as Catalyst's F.session_window."""
     _utc(spark)
     from scotty_window_processor_spark.functions import (
         CountAggregation,
@@ -165,9 +163,9 @@ def q_scotty_session_kernel(spark, sf_dir):
         SumAggregation,
     )
     from scotty_window_processor_spark.operators import SessionWindow, WindowMeasure
-    from scotty_window_processor_spark.plans.scotty_batch import scotty_window_aggregate
+    from scotty_window_processor_spark.plans.vectorized_multi import multikey_window_aggregate
 
-    out = scotty_window_aggregate(
+    out = multikey_window_aggregate(
         _events(spark, sf_dir), key="user_id", ts="ts", value="value",
         windows=[SessionWindow(WindowMeasure.TIME, GAP_30M)],
         aggs=[
@@ -175,7 +173,6 @@ def q_scotty_session_kernel(spark, sf_dir):
             ("sum_value", "double", SumAggregation),
             ("median_value", "double", QuantileAggregation),
         ],
-        prefer_catalyst=False,
     )
     return out.select(
         "user_id", "w_start", "w_end", "n",
@@ -187,18 +184,18 @@ def q_scotty_session_kernel(spark, sf_dir):
 def q_scotty_quantile_kernel(spark, sf_dir):
     """Custom lift/combine/lower aggregate (exact median over a value→count
     histogram, QuantileWindowFunction analogue) through the batch slicer
-    (one partial per shared slice, cloned before combining), not its
-    Catalyst expression: prefer_catalyst=False."""
+    (one partial per shared slice, cloned before combining), called
+    directly: the planner would run this lone window through the
+    quantile's Catalyst expression."""
     _utc(spark)
     from scotty_window_processor_spark.functions import CountAggregation, QuantileAggregation
     from scotty_window_processor_spark.operators import TumblingWindow, WindowMeasure
-    from scotty_window_processor_spark.plans.scotty_batch import scotty_window_aggregate
+    from scotty_window_processor_spark.plans.vectorized_multi import multikey_window_aggregate
 
-    out = scotty_window_aggregate(
+    out = multikey_window_aggregate(
         _events(spark, sf_dir), key="user_id", ts="ts", value="value",
         windows=[TumblingWindow(WindowMeasure.TIME, 6 * SIZE_H)],
         aggs=[("n", "long", CountAggregation), ("median_value", "double", QuantileAggregation)],
-        prefer_catalyst=False,
     )
     return out.select("user_id", "w_start", "w_end", "n", F.round("median_value", 2).alias("median_value"))
 
@@ -298,18 +295,17 @@ def q_scotty_payload_kernel(spark, sf_dir):
 def q_scotty_global_kernel(spark, sf_dir):
     """Global (non-keyed) operator — GlobalScottyWindowOperator analogue —
     with the exact quantile, through the batch slicer over one constant
-    key rather than the quantile's Catalyst expression
-    (prefer_catalyst=False)."""
+    key column, called directly: the global operator would run this lone
+    window through the quantile's Catalyst expression."""
     _utc(spark)
     from scotty_window_processor_spark.functions import CountAggregation, QuantileAggregation
     from scotty_window_processor_spark.operators import TumblingWindow, WindowMeasure
-    from scotty_window_processor_spark.plans.scotty_batch import scotty_global_aggregate
+    from scotty_window_processor_spark.plans.vectorized_multi import multikey_window_aggregate
 
-    out = scotty_global_aggregate(
-        _events(spark, sf_dir), ts="ts", value="value",
+    out = multikey_window_aggregate(
+        _events(spark, sf_dir).withColumn("_g", F.lit(1)), key="_g", ts="ts", value="value",
         windows=[TumblingWindow(WindowMeasure.TIME, 6 * SIZE_H)],
         aggs=[("n", "long", CountAggregation), ("median_value", "double", QuantileAggregation)],
-        prefer_catalyst=False,
     )
     return out.select("w_start", "w_end", "n", F.round("median_value", 2).alias("median_value"))
 

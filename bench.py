@@ -81,13 +81,13 @@ def transcripts_throughput(spark, n_convs: int = 2000, turns_per_conv: int = 200
     return dt, n_turns, n_windows
 
 
-def time_shared_vs_buckets(spark, df, windows, force_slicing=False, verify=False):
+def time_shared_vs_buckets(spark, df, windows, verify=False):
     """Shared methodology for the concurrent-windows comparison (used by
     the bench line below AND scripts/run_window_sweep.py — one
     implementation so the two can't drift): time the same aggregation
-    through (a) the engine (optionally forcing the shared-slice tier past
-    the cost-based chooser) and (b) one Catalyst groupBy(F.window)
-    subplan per window, unioned (bucket-per-window).
+    through (a) the shared-slice tier, called directly so that a lone
+    window runs it too, and (b) one Catalyst groupBy(F.window) subplan
+    per window, unioned (bucket-per-window).
 
     With verify=True the two results are compared per window instance by
     a distributed full-outer join: keys + counts must match exactly,
@@ -98,6 +98,7 @@ def time_shared_vs_buckets(spark, df, windows, force_slicing=False, verify=False
 
     from scotty_window_processor_spark.functions import CountAggregation, SumAggregation
     from scotty_window_processor_spark.plans.scotty_batch import scotty_window_aggregate
+    from scotty_window_processor_spark.plans.vectorized_multi import multikey_window_aggregate
 
     aggs = [("n", "long", CountAggregation), ("sum_value", "double", SumAggregation)]
 
@@ -127,10 +128,8 @@ def time_shared_vs_buckets(spark, df, windows, force_slicing=False, verify=False
         assert bad == 0, f"tier outputs differ on {bad} window instances"
 
     t0 = time.time()
-    shared_df = scotty_window_aggregate(
-        df, key="user_id", ts="ts", value="value", windows=windows, aggs=aggs,
-        prefer_catalyst=not force_slicing,
-    )
+    shared_df = multikey_window_aggregate(df, key="user_id", ts="ts", value="value",
+                                          windows=windows, aggs=aggs)
     shared_build = time.time() - t0
     t0 = time.time()
     n_shared = shared_df.count()
@@ -167,9 +166,8 @@ def time_shared_vs_buckets(spark, df, windows, force_slicing=False, verify=False
 def concurrent_windows_tiers(spark, n_windows: int = 16):
     """Reference benchmark shape (random_tumbling_benchmark.json: 1-1000
     concurrent windows): N tumbling windows over events, timed through
-    (a) the shared-shuffle vectorized tier (the cost-based default past 3
-    families) and (b) the Catalyst tier forced per-family (one unioned
-    groupBy(F.window) subplan each). Returns (tier2_sec, tier1_sec)."""
+    (a) the shared-shuffle vectorized tier and (b) the Catalyst tier per
+    window (one unioned groupBy(F.window) subplan each). Returns (tier2_sec, tier1_sec)."""
     from scotty_window_processor_spark.operators import TumblingWindow, WindowMeasure
 
     ev = spark.read.parquet(f"{SF_DIR}/events.parquet")

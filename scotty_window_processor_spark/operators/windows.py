@@ -16,7 +16,7 @@ from __future__ import annotations
 import bisect
 from dataclasses import dataclass, field
 from enum import Enum
-from typing import List
+from typing import List, Sequence
 
 JLONG_MIN = -(2**63)
 JLONG_MAX = 2**63 - 1
@@ -292,3 +292,18 @@ class SessionWindow(Window):
 
     def create_context(self) -> SessionContext:
         return SessionContext(self.gap, self.measure, self.window_id)
+
+
+def check_window_ids(windows: Sequence[Window]) -> None:
+    """Raise ``ValueError`` when two of ``windows`` share a ``window_id``.
+    The Spark operators tag each output row with its window's id only, so
+    two windows under one id (e.g. both left at the default -1) would emit
+    their rows as one window's."""
+    seen = set()
+    for w in windows:
+        if w.window_id in seen:
+            raise ValueError(
+                f"window_id {w.window_id} is given to more than one window: "
+                "each window needs its own window_id"
+            )
+        seen.add(w.window_id)

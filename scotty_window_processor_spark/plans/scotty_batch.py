@@ -1,14 +1,18 @@
 """Batch windowed aggregation: the batch entry point into the engine.
 
-Each window family takes one of two tiers: a Catalyst subplan
-(`windowed.window_aggregate`), or the batch slicer (`plans.vectorized_multi`):
-one exchange by key, then one `mapInArrow` pass that computes every window
-of every key in closed form from one cut into slices shared by all
-concurrent windows — any mix of tumbling / sliding / session, time- or
-count-measured, with any aggregate. That is the reference's headline
-aggregate-sharing property (slicing/.../LazyAggregateStore.java:81-99),
-which Spark's built-in `F.window` cannot express (it duplicates rows per
-overlapping window instead).
+Each query takes one of two tiers, chosen once for all its windows. A lone
+time window with a value column and built-in aggregates runs as one
+Catalyst subplan (`windowed.window_aggregate`): its slices are its
+windows, so there is nothing to share, and Catalyst aggregates map-side
+before the shuffle. Every other query runs the batch slicer
+(`plans.vectorized_multi`): one exchange by key, then one `mapInArrow`
+pass that computes every window of every key in closed form from one cut
+into slices shared by all concurrent windows — any mix of tumbling /
+sliding / session, time- or count-measured, with any aggregate. That is
+the reference's headline aggregate-sharing property
+(slicing/.../LazyAggregateStore.java:81-99), which Spark's built-in
+`F.window` cannot express (it duplicates rows per overlapping window
+instead).
 
 The slicing kernel (`operators.kernel`) is the stream's operator, not a
 batch tier. `_kernel_run` and `_final_watermark` below run one key through
@@ -36,7 +40,7 @@ from ..operators.kernel import (
     lower_windows,
     new_operator,
 )
-from ..operators.windows import SessionWindow, Window, WindowMeasure
+from ..operators.windows import SessionWindow, Window, WindowMeasure, check_window_ids
 from .vectorized_multi import multikey_window_aggregate
 from .windowed import window_aggregate
 
@@ -60,75 +64,57 @@ def scotty_window_aggregate(
     aggs: Sequence[AggSpec],
     lateness_ms: int = 1000,
     arrival_order: Optional[str] = None,
-    prefer_catalyst: bool = True,
 ) -> DataFrame:
-    """Batch windowed aggregation with a two-tier physical planner:
+    """Batch windowed aggregation over one of two tiers, chosen per query:
 
-    1. **Catalyst built-ins** (prefer_catalyst, standard aggregates, time
-       windows, fewer than three time families): tumbling/sliding →
-       F.window, session → F.session_window. Pure JVM, whole-stage
-       codegen, partial aggregation before the shuffle.
-    2. **the batch slicer** (plans.vectorized_multi) for everything else:
-       count-measure windows, custom lift/combine/lower functions, record
-       mode (``value=None``: each function sees the row's columns), and
-       time families when tier 1 is off or from three of them on.
+    1. **Catalyst built-ins** for a query whose only window is
+       time-measured, with a value column and aggregates that all have a
+       built-in: tumbling/sliding → F.window, session → F.session_window.
+       Pure JVM, whole-stage codegen, partial aggregation before the
+       shuffle.
+    2. **the batch slicer** (plans.vectorized_multi) for every other
+       query, in one pass over all its windows: two or more windows,
+       count-measure windows, custom lift/combine/lower functions and
+       record mode (``value=None``: each function sees the row's columns).
 
     Both tiers emit the same schema and the same rows (see
-    tests/test_scotty_batch_spark.py). The tier split is per window
-    family, results are unioned. ``arrival_order`` names a column that
-    breaks ties on ts. ``lateness_ms`` is the stream's allowed lateness;
-    it cannot change the rows of sorted input flushed by one watermark,
-    and is accepted so that batch and stream calls read alike.
+    tests/test_scotty_batch_spark.py). Each window needs its own
+    ``window_id``. ``arrival_order`` names a column that breaks ties on
+    ts. ``lateness_ms`` is the stream's allowed lateness; it cannot change
+    the rows of sorted input flushed by one watermark, and is accepted so
+    that batch and stream calls read alike.
 
     Output: (key, window_id, measure, w_start, w_end, <one column per agg>).
     Time windows report epoch-ms bounds; count windows report ordinal bounds.
     The result's ``tiers`` attribute maps each window_id to the tier that
     computes it: "catalyst" or "vectorized".
     """
-    # Catalyst needs a value column and built-in aggregates; the Column
-    # expressions themselves are built only once that tier is chosen.
-    # Cost-based tier choice: the Catalyst tier fans out one
-    # scan+shuffle+groupBy(F.window) subplan PER window family — the
-    # bucket-per-window pattern slicing exists to beat. Fine for 1-2
-    # concurrent windows (each subplan is whole-stage codegen), but from
-    # 3 families on the shared-shuffle vectorized tier (ONE exchange,
-    # every family reduced from the same Arrow batches) wins and
-    # keeps winning as the window count grows (reference benchmark shape:
-    # 1-1000 concurrent windows, random_tumbling_benchmark.json).
-    # Break-even re-measured in r6 on the 440k-turn transcripts shape:
-    # 3 families = 1.9/1.2 s (cold/warm) shared vs 3.6/1.9 s for the
-    # 3-subplan Catalyst union, so the cutover moved from >3 to >=3.
-    time_windows = [w for w in windows if w.measure == WindowMeasure.TIME]
-    if (prefer_catalyst and value is not None and len(time_windows) < 3
-            and all(_catalyst_builtin(factory()) for _, _, factory in aggs)):
-        catalyst_exprs = _catalyst_aggs(aggs, value)
-        rest = [w for w in windows if w.measure != WindowMeasure.TIME]
-        parts = [
-            window_aggregate(df, key, ts, w, catalyst_exprs).select(
-                key,
-                F.lit(w.window_id).cast("long").alias("window_id"),
-                F.lit("time").alias("measure"),
-                "w_start", "w_end", *catalyst_exprs,
-            )
-            for w in time_windows
-        ]
-        tiers = {w.window_id: "catalyst" for w in time_windows}
-        if rest:
-            parts.append(
-                scotty_window_aggregate(
-                    df, key, ts, value, rest, aggs, lateness_ms, arrival_order,
-                    prefer_catalyst=False,
-                )
-            )
-            tiers.update(parts[-1].tiers)
-        if parts:
-            out = parts[0]
-            for p in parts[1:]:
-                out = out.unionAll(p)
-            out.tiers = tiers
-            return out
+    return _aggregate(df, key, ts, value, windows, aggs, arrival_order, one_key=False)
 
-    out = multikey_window_aggregate(df, key, ts, value, windows, aggs, arrival_order)
+
+def _aggregate(df, key, ts, value, windows, aggs, arrival_order, one_key):
+    check_window_ids(windows)
+    # The measured break-even is one window: from two windows on, one
+    # slicer pass beat a Catalyst subplan per window on every mix
+    # measured, keyed and global (the global operator's one key needs the
+    # slicer's map-side slice partials for that), while a lone window is
+    # its own slice and Catalyst's map-side partials can win there. The
+    # Column expressions are built only once this tier is chosen.
+    if (len(windows) == 1 and windows[0].measure == WindowMeasure.TIME
+            and value is not None
+            and all(_catalyst_builtin(factory()) for _, _, factory in aggs)):
+        (w,) = windows
+        catalyst_exprs = _catalyst_aggs(aggs, value)
+        out = window_aggregate(df, key, ts, w, catalyst_exprs).select(
+            key,
+            F.lit(w.window_id).cast("long").alias("window_id"),
+            F.lit("time").alias("measure"),
+            "w_start", "w_end", *catalyst_exprs,
+        )
+        out.tiers = {w.window_id: "catalyst"}
+        return out
+
+    out = multikey_window_aggregate(df, key, ts, value, windows, aggs, arrival_order, one_key)
     out.tiers = {w.window_id: "vectorized" for w in windows}
     return out
 
@@ -141,31 +127,30 @@ def scotty_global_aggregate(
     aggs: Sequence[AggSpec],
     lateness_ms: int = 1000,
     arrival_order: Optional[str] = None,
-    prefer_catalyst: bool = True,
 ) -> DataFrame:
     """Non-keyed (global) windowed aggregation — the batch analogue of the
     reference's GlobalScottyWindowOperator (flink-connector/.../
     GlobalScottyWindowOperator.java:15-71), which funnels the whole stream
     through ONE slicing operator.
 
-    Spark-first tiers: with standard aggregates the Catalyst tier groups by
-    the window alone — partial aggregation happens map-side per partition,
-    so no single task ever sees the whole input. The batch slicer (custom
-    lift/combine/lower functions, count windows) routes through a
-    constant key: single-group by construction, like the reference's own
-    global operator, which is a single ProcessFunction instance.
-    Associative/commutative functions over one fixed time window can
-    instead go through the salted two-level plan (plans.skew), which
+    The keyed operator over one constant key, so the tier rule is the
+    same. A lone time window with standard aggregates takes the Catalyst
+    tier, where partial aggregation happens map-side per partition, so no
+    single task ever sees the whole input. Every other query runs the
+    batch slicer over the constant key: single-group by construction, like
+    the reference's own global operator, which is a single ProcessFunction
+    instance. With only tumbling/sliding time windows and count, sum and
+    mean, Catalyst first sums each shared slice map-side, and the one
+    slicer task reads one row per slice; otherwise it reads the whole
+    input. Associative/commutative functions over one fixed time window
+    can instead go through the salted two-level plan (plans.skew), which
     spreads the single group over salts. ``lateness_ms`` is accepted as
     in ``scotty_window_aggregate``.
 
     Output: (window_id, measure, w_start, w_end, <one column per agg>).
     """
     tagged = df.withColumn("_g", F.lit(1))
-    out = scotty_window_aggregate(
-        tagged, "_g", ts, value, windows, aggs, lateness_ms, arrival_order,
-        prefer_catalyst=prefer_catalyst,
-    )
+    out = _aggregate(tagged, "_g", ts, value, windows, aggs, arrival_order, one_key=True)
     result = out.drop("_g")
     result.tiers = out.tiers
     return result

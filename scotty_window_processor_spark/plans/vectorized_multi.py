@@ -43,7 +43,10 @@ of rows per task); each partition is independent, so the stage
 parallelizes across executors/Python workers with no skew sensitivity
 beyond the hash. A single hot key still lands in one partition; salting
 (`plans.skew`) is a separate Catalyst plan for one fixed time window, not
-a step before this tier.
+a step before this tier. When every row has one key (``one_key``, the
+global operator) and the query asks only count/sum/mean over fixed time
+windows, Catalyst sums each shared slice map-side instead, and the one
+task reads one row per slice.
 
 Parity with brute force over generated mixes is pinned without Spark by
 tests/test_vectorized_slicing.py; tests/test_scotty_batch_spark.py checks
@@ -62,10 +65,14 @@ import pyarrow.compute as pc
 from pyspark.sql.pandas.types import to_arrow_schema
 
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 
 from . import key_exchange, partition_order, window_output_schema
 from ..operators.kernel import lift_kind
 from ..operators.windows import SessionWindow, SlidingWindow, WindowMeasure
+
+
+_ROWS = "_slice_rows"  # a slice partial's row count
 
 
 def _reduceat_ranges(ufunc, a, lo, hi):
@@ -78,12 +85,12 @@ def _reduceat_ranges(ufunc, a, lo, hi):
     return ufunc.reduceat(np.append(a, a[:1]), idx)[0::2] if len(lo) else a[:0]
 
 
-def _range_aggs(kinds, csum, lo, hi, extreme, objects):
+def _range_aggs(kinds, csum, ccnt, lo, hi, extreme, objects):
     """One column per aggregate for the row ranges ``[lo, hi)``: count, sum
-    and mean from the row prefix sums ``csum``, min and max from
-    ``extreme(ufunc)``, and ``objects(i)`` for function ``i`` when its kind
-    is not a ``NAMED_LIFTS`` reduction name."""
-    cnts = (hi - lo).astype("int64")
+    and mean from the prefix sums ``ccnt`` of row counts and ``csum`` of
+    values, min and max from ``extreme(ufunc)``, and ``objects(i)`` for
+    function ``i`` when its kind is not a ``NAMED_LIFTS`` reduction name."""
+    cnts = (ccnt[hi] - ccnt[lo]).astype("int64")
     sums = None if csum is None else csum[hi] - csum[lo]
     cols = {"count": lambda: cnts, "sum": lambda: sums, "mean": lambda: sums / cnts,
             "min": lambda: extreme(np.minimum), "max": lambda: extreme(np.maximum)}
@@ -101,15 +108,30 @@ def _family(w, key_codes, lo, w_start, w_end, aggs, measure="time"):
     )
 
 
-def multikey_rows(key_codes, ts_ms, vals, windows, agg_fns_factory):
+def _is_fixed(w) -> bool:
+    return w.measure == WindowMeasure.TIME and not isinstance(w, SessionWindow)
+
+
+def slice_width(windows) -> int:
+    """The width of the slices every fixed (tumbling/sliding time) family
+    shares: the gcd of their sizes and slides; 0 without one."""
+    return math.gcd(*(math.gcd(w.size, w.slide) if isinstance(w, SlidingWindow) else w.size
+                      for w in windows if _is_fixed(w)))
+
+
+def multikey_rows(key_codes, ts_ms, vals, windows, agg_fns_factory, counts=None):
     """All windows for one multi-key Arrow batch.
 
     Inputs ordered by (key, ts), e.g. by ``plans.partition_order``.
     ``vals`` is the value column (value mode) or a dict of column lists
-    (record mode). Returns a list of per-window-family dicts: key_code,
-    window_id, measure, w_start, w_end as numpy columns, and aggs, one
-    column per function (a numpy array for a named reduction, else a list
-    of lowered values). Each family's rows are ordered by (key, w_start).
+    (record mode). ``counts``, if given, is how many rows each input row
+    stands for: the input is then one partial per (key, slice) at the
+    slice's start, ``vals`` holds each slice's sum, and only fixed time
+    windows with count, sum and mean may be asked. Returns a list of
+    per-window-family dicts: key_code, window_id, measure, w_start, w_end
+    as numpy columns, and aggs, one column per function (a numpy array
+    for a named reduction, else a list of lowered values). Each family's
+    rows are ordered by (key, w_start).
     """
     fns = agg_fns_factory()
     record = isinstance(vals, dict)
@@ -119,6 +141,7 @@ def multikey_rows(key_codes, ts_ms, vals, windows, agg_fns_factory):
     fvals = np.asarray(vals, dtype="float64") if named - {"count"} else None
     csum = np.concatenate([[0.0], np.cumsum(fvals)]) if named & {"sum", "mean"} else None
     n = len(key_codes)
+    ccnt = np.arange(n + 1) if counts is None else np.concatenate([[0], np.cumsum(counts)])
     rows = np.arange(n)
     new_key = np.ones(n, dtype=bool)
     new_key[1:] = key_codes[1:] != key_codes[:-1]
@@ -139,13 +162,10 @@ def multikey_rows(key_codes, ts_ms, vals, windows, agg_fns_factory):
         lower = fns[i].lower
         return [lower(lift(i, s, e)) for s, e in zip(lo.tolist(), hi.tolist())]
 
-    fixed = [w for w in windows
-             if w.measure == WindowMeasure.TIME and not isinstance(w, SessionWindow)]
-    if fixed:
+    g = slice_width(windows)
+    if g:
         # the shared slices: one partial per (key, gcd slice), held as the
         # row index where it starts
-        g = math.gcd(*(math.gcd(w.size, w.slide) if isinstance(w, SlidingWindow) else w.size
-                       for w in fixed))
         sl = ts_ms // g
         new_part = new_key.copy()
         new_part[1:] |= sl[1:] != sl[:-1]
@@ -176,7 +196,7 @@ def multikey_rows(key_codes, ts_ms, vals, windows, agg_fns_factory):
             is_new[1:] |= np.diff(ts_ms) > w.gap
             lo = np.flatnonzero(is_new)
             hi = np.append(lo, n)[1:]
-            aggs = _range_aggs(kinds, csum, lo, hi,
+            aggs = _range_aggs(kinds, csum, ccnt, lo, hi,
                                lambda uf: _reduceat_ranges(uf, fvals, lo, hi),
                                lambda i: lowered_ranges(i, lo, hi))
             out.append(_family(w, key_codes, lo, ts_ms[lo], ts_ms[hi - 1] + w.gap, aggs))
@@ -192,7 +212,7 @@ def multikey_rows(key_codes, ts_ms, vals, windows, agg_fns_factory):
             lo = rows[idx_in_key % slide == 0]
             lo = lo[lo + size <= key_end[run[lo]]]
             hi = lo + size
-            aggs = _range_aggs(kinds, csum, lo, hi,
+            aggs = _range_aggs(kinds, csum, ccnt, lo, hi,
                                lambda uf: _reduceat_ranges(uf, fvals, lo, hi),
                                lambda i: lowered_ranges(i, lo, hi))
             w_start = idx_in_key[lo].astype("int64")
@@ -235,7 +255,7 @@ def multikey_rows(key_codes, ts_ms, vals, windows, agg_fns_factory):
                 return _reduceat_ranges(uf, part_extreme[uf], lo_part, hi_part)
 
             lo = part_row_end[lo_part]
-            aggs = _range_aggs(kinds, csum, lo, part_row_end[hi_part], extreme,
+            aggs = _range_aggs(kinds, csum, ccnt, lo, part_row_end[hi_part], extreme,
                                lambda i, lo_part=lo_part, hi_part=hi_part:
                                lowered_part_ranges(i, lo_part, hi_part))
             w_start = start * step
@@ -264,9 +284,11 @@ def multikey_window_aggregate(
     windows: Sequence,
     aggs: Sequence,
     arrival_order: str | None = None,
+    one_key: bool = False,
 ) -> DataFrame:
     """Shared-exchange multi-key windowed aggregation (see module doc);
-    ``value=None`` is record mode."""
+    ``value=None`` is record mode. ``one_key`` says that every row has the
+    same key, as in the global operator."""
     out_schema = window_output_schema(key, df.schema[key].dataType, aggs)
     window_defs = list(windows)
     agg_specs = list(aggs)
@@ -274,6 +296,24 @@ def multikey_window_aggregate(
 
     def make_fns():
         return [factory() for _, _, factory in agg_specs]
+
+    g = slice_width(window_defs)
+    partials = (one_key and value is not None and g and all(map(_is_fixed, window_defs))
+                and {lift_kind(fn) for fn in make_fns()} <= {"count", "sum", "mean"})
+    if partials:
+        # One key goes to one task. Unless Catalyst first sums each slice
+        # map-side, on every core, that task reads the whole input; with
+        # it, one row per slice. With many keys the key exchange spreads
+        # the rows, and there the extra aggregate was measured to cost
+        # more than it saved.
+        ms = F.unix_millis(F.col(ts).cast("timestamp"))
+        exchange = df.groupBy(key, (ms - F.pmod(ms, F.lit(g))).alias(ts)).agg(
+            F.count(F.lit(1)).alias(_ROWS),
+            # a null value makes the sum NaN, as in the slicer's float64 column
+            F.sum(F.coalesce(F.col(value).cast("double"), F.lit(float("nan")))).alias(value),
+        ).coalesce(1)
+    else:
+        exchange = key_exchange(df, key, ts, value, arrival_order)
 
     arrow_out = to_arrow_schema(out_schema)
 
@@ -292,14 +332,16 @@ def multikey_window_aggregate(
         enc = pc.dictionary_encode(tbl.column(key).combine_chunks(), null_encoding="encode")
         key_codes = enc.indices.to_numpy(zero_copy_only=False).astype("int64")
         ts_ms = column(ts).astype("datetime64[ms]").astype("int64")
-        order = partition_order(key_codes, ts_ms, column(arrival_order) if arrival_order else None)
+        order = partition_order(key_codes, ts_ms,
+                                column(arrival_order) if arrival_order and not partials else None)
         key_codes, ts_ms = key_codes[order], ts_ms[order]
         if value is None:
             vals = _record_columns(tbl.take(order), time_zone)
         else:
             vals = column(value)[order]
+        counts = column(_ROWS)[order] if partials else None
 
-        for fam in multikey_rows(key_codes, ts_ms, vals, window_defs, make_fns):
+        for fam in multikey_rows(key_codes, ts_ms, vals, window_defs, make_fns, counts):
             n = len(fam["key_code"])
             if n == 0:
                 continue
@@ -318,4 +360,4 @@ def multikey_window_aggregate(
             ]
             yield from pa.table(arrays, schema=arrow_out).to_batches()
 
-    return key_exchange(df, key, ts, value, arrival_order).mapInArrow(run, out_schema)
+    return exchange.mapInArrow(run, out_schema)

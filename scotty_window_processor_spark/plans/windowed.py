@@ -6,16 +6,16 @@ the batch path: `F.window` / `F.session_window` compile to built-in
 Expand + HashAggregate plans (whole-stage codegen, partial aggregation
 before the shuffle, AQE-coalesced partitions) and scale linearly.
 
-The slicing kernel (plans.scotty_batch / streaming.processor) exists for
-what these CANNOT do: share one slice store across many concurrent
-windows, count-measure windows, and multi-gap session sets. The batch
-planner (``scotty_batch.scotty_window_aggregate``) sends a time-measure
-window family here when ``prefer_catalyst`` is set and every aggregate
-has a Catalyst equivalent, unless the query has three or more time
-families and the whole mix is vectorizable; then the shared-shuffle
-vectorized tier takes them all. ``window_aggregate`` is the package's one
-Catalyst window plan: the salted two-level plan (``plans.skew``) runs its
-first stage through it.
+The batch slicer (plans.vectorized_multi) and the stream's slicing kernel
+(streaming.processor) exist for what these CANNOT do: share one slice
+store across many concurrent windows, count-measure windows, and
+multi-gap session sets. The batch planner
+(``scotty_batch.scotty_window_aggregate``) sends a query here only when
+its one window is time-measured, it has a value column and every
+aggregate has a Catalyst equivalent; every other query runs one slicer
+pass over all its windows.
+``window_aggregate`` is the package's one Catalyst window plan: the
+salted two-level plan (``plans.skew``) runs its first stage through it.
 
 All window bounds are emitted as epoch milliseconds (BIGINT) so results
 hash-compare exactly against ANSI-SQL oracles.

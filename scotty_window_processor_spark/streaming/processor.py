@@ -90,7 +90,7 @@ from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from ..functions import AggSpec
 from ..operators.kernel import bulk_lift_kinds, feed_sorted, lower_windows, new_operator
-from ..operators.windows import JLONG_MIN, Window
+from ..operators.windows import JLONG_MIN, Window, check_window_ids
 from ..plans import window_output_schema
 
 STATE_SCHEMA = "kernel binary"  # pickle.dumps(state_codec.encode_op(...))
@@ -312,7 +312,9 @@ def scotty_stream(
     `registry_add_window(path, w)` adds a window to the RUNNING query
     (the reference's live addWindow, WindowManager.java:124-143), no
     restart or state loss; executors re-stat the file at most every
-    `registry_poll_s` seconds."""
+    `registry_poll_s` seconds. Each of `windows` needs its own
+    `window_id`."""
+    check_window_ids(windows)
     spark = stream_df.sparkSession
     apply_state_store_defaults(spark)
     late_rows = spark.sparkContext.accumulator(0)

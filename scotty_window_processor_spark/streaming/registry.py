@@ -46,6 +46,7 @@ from ..operators.windows import (
     TumblingWindow,
     Window,
     WindowMeasure,
+    check_window_ids,
 )
 
 
@@ -83,6 +84,7 @@ def _validate(windows: Sequence[Window]) -> None:
             )
         if w.window_id < 0:
             raise ValueError("registry windows need an explicit window_id")
+    check_window_ids(windows)
 
 
 def _write_versioned(path: str, windows: Sequence[Window], version: int) -> None:
@@ -145,8 +147,6 @@ def registry_add_window(path: str, window: Window, retries: int = 8) -> None:
                 if attempt:
                     time.sleep(random.uniform(0.01, 0.05) * attempt)
                 version, current = _load_versioned(path)
-                if any(w.window_id == window.window_id for w in current):
-                    raise ValueError(f"window_id {window.window_id} already registered")
                 if _load_versioned(path)[0] != version:
                     continue  # concurrent writer between load and check
                 _write_versioned(path, list(current) + [window], version + 1)

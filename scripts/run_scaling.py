@@ -62,7 +62,7 @@ args = dict(key="conv_id", ts="ts", value="v", windows=windows,
     aggs=[("turns", "long", CountAggregation), ("tool_calls", "double", SumAggregation)])
 
 def go():
-    return scotty_window_aggregate(df, **args, prefer_catalyst=False).count()
+    return scotty_window_aggregate(df, **args).count()
 
 n_windows = go()  # full-size warmup (codegen + python workers)
 times = []

@@ -55,11 +55,8 @@ windows = [
     TumblingWindow(WindowMeasure.TIME, ((i % 20) + 1) * 60_000, window_id=i)
     for i in range(w_count)
 ]
-# force_slicing pins the shared-slice tier even below the cost-based
-# chooser's >3-window crossover, so the curve measures slicing vs buckets
-# at EVERY point; verify compares the outputs per instance by a
-# distributed tolerance join
-r = time_shared_vs_buckets(spark, ev, windows, force_slicing=True, verify=True)
+# verify compares the outputs per instance by a distributed tolerance join
+r = time_shared_vs_buckets(spark, ev, windows, verify=True)
 r["n_rows"] = n_rows
 print("RESULT " + json.dumps(r))
 """

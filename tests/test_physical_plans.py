@@ -58,14 +58,40 @@ def test_catalyst_tier_uses_builtin_window_aggregate(spark):
     assert "HashAggregate" in plan
 
 
+def _two_family_mixes():
+    """Two-family mixes, each a tumbling window next to a window of
+    another family."""
+    from scotty_window_processor_spark.operators import (
+        SessionWindow,
+        SlidingWindow,
+        TumblingWindow,
+        WindowMeasure,
+    )
+
+    tumbling = TumblingWindow(WindowMeasure.TIME, 3_600_000, window_id=0)
+    return {
+        "tumbling+sliding": [tumbling, SlidingWindow(WindowMeasure.TIME, 7_200_000, 1_800_000,
+                                                     window_id=20)],
+        "tumbling+session": [tumbling, SessionWindow(WindowMeasure.TIME, 1_800_000, window_id=21)],
+        "tumbling+count": [tumbling, TumblingWindow(WindowMeasure.COUNT, 10, window_id=22)],
+    }
+
+
 def test_many_windows_route_to_shared_shuffle_tier(spark):
-    """Cost-based tier choice: >3 concurrent time windows with standard
-    aggregates must compile to the shared-shuffle vectorized tier — ONE
-    exchange feeding every window family — not one unioned
-    groupBy(F.window) subplan (scan + shuffle) per family."""
+    """One tier per query: a lone time window with standard aggregates
+    compiles to a pure Catalyst aggregate, and every query with more
+    than one window — 16 tumbling windows, or two windows of different
+    families — to the shared-shuffle vectorized tier: ONE key exchange
+    into ONE ``mapInArrow`` pass, not one unioned groupBy(F.window)
+    subplan (scan + shuffle) per family. The global operator's one key
+    skips the key exchange when the windows are all tumbling/sliding:
+    Catalyst sums slice partials map-side, and one task reads them."""
     from scotty_window_processor_spark.functions import CountAggregation, SumAggregation
     from scotty_window_processor_spark.operators import TumblingWindow, WindowMeasure
-    from scotty_window_processor_spark.plans.scotty_batch import scotty_window_aggregate
+    from scotty_window_processor_spark.plans.scotty_batch import (
+        scotty_global_aggregate,
+        scotty_window_aggregate,
+    )
 
     ev = spark.read.parquet(f"{SF}/events.parquet")
     windows = [
@@ -73,25 +99,34 @@ def test_many_windows_route_to_shared_shuffle_tier(spark):
         for i in range(16)
     ]
     aggs = [("n", "long", CountAggregation), ("sum_value", "double", SumAggregation)]
+    plan_for = lambda ws: plan_of(scotty_window_aggregate(  # noqa: E731
+        ev, key="user_id", ts="ts", value="value", windows=ws, aggs=aggs))
 
-    out = scotty_window_aggregate(ev, key="user_id", ts="ts", value="value",
-                                  windows=windows, aggs=aggs)
-    plan = plan_of(out)
-    assert plan.count("Exchange") == 1, plan
-    assert "Union" not in plan
-    assert "MapInArrow" in plan
+    for name, mix in {"16 tumbling": windows, **_two_family_mixes()}.items():
+        plan = plan_for(mix)
+        assert plan.count("Exchange") == 1, (name, plan)
+        assert "Exchange hashpartitioning(user_id" in plan, (name, plan)
+        assert plan.count("MapInArrow") == 1, (name, plan)
+        assert "Union" not in plan, (name, plan)
+        glob = plan_of(scotty_global_aggregate(ev, ts="ts", value="value", windows=mix,
+                                               aggs=aggs))
+        fixed = name in ("16 tumbling", "tumbling+sliding")
+        assert ("partial_count" in glob and "Coalesce 1" in glob) == fixed, (name, glob)
+        assert glob.count("Exchange") == 1 and glob.count("MapInArrow") == 1, (name, glob)
 
-    # 2-3 windows keep the pure-Catalyst tier (whole-stage codegen)
-    few = scotty_window_aggregate(ev, key="user_id", ts="ts", value="value",
-                                  windows=windows[:2], aggs=aggs)
-    few_plan = plan_of(few)
-    assert "ArrowEvalPython" not in few_plan
-    assert "MapInArrow" not in few_plan  # the batch slicer's node
+    # a lone time window keeps the pure-Catalyst tier (whole-stage codegen)
+    lone = plan_for(windows[:1])
+    assert "HashAggregate" in lone
+    assert "ArrowEvalPython" not in lone
+    assert "MapInArrow" not in lone  # the batch slicer's node
 
 
 def test_many_windows_tier_matches_catalyst_rows(spark):
-    """The tier switch must be invisible in the output: 16-window shared
-    shuffle rows == the same request forced through the Catalyst tier."""
+    """The tier switch must be invisible in the output: the rows of one
+    slicer pass over 5 tumbling windows, and over each two-family mix,
+    equal the union of one lone-window query per window (Catalyst for
+    time windows), keyed and global (slice partials for the fixed
+    mixes)."""
     from scotty_window_processor_spark.functions import CountAggregation, SumAggregation
     from scotty_window_processor_spark.operators import TumblingWindow, WindowMeasure
     from scotty_window_processor_spark.plans import scotty_batch as sb
@@ -102,28 +137,29 @@ def test_many_windows_tier_matches_catalyst_rows(spark):
         for i in range(5)
     ]
     aggs = [("n", "long", CountAggregation), ("sum_value", "double", SumAggregation)]
-
-    fast = sb.scotty_window_aggregate(ev, key="user_id", ts="ts", value="value",
-                                      windows=windows, aggs=aggs)
-    # force the Catalyst union plan for comparison: 3 window families at a
-    # time stay under the threshold
-    parts = [
-        sb.scotty_window_aggregate(ev, key="user_id", ts="ts", value="value",
-                                   windows=[w], aggs=aggs)
-        for w in windows
-    ]
-    slow = parts[0]
-    for p in parts[1:]:
-        slow = slow.unionAll(p)
+    # event_id orders rows of equal ts, which count windows depend on
+    keyed = lambda ws: sb.scotty_window_aggregate(  # noqa: E731
+        ev, key="user_id", ts="ts", value="value", windows=ws, aggs=aggs,
+        arrival_order="event_id")
+    glob = lambda ws: sb.scotty_global_aggregate(  # noqa: E731
+        ev, ts="ts", value="value", windows=ws, aggs=aggs, arrival_order="event_id")
 
     def canon(df):
         return sorted(
-            (r["user_id"], r["window_id"], r["w_start"], r["w_end"], r["n"],
+            (r.asDict().get("user_id"), r["window_id"], r["w_start"], r["w_end"], r["n"],
              round(r["sum_value"], 6))
             for r in df.collect()
         )
 
-    assert canon(fast) == canon(slow)
+    for name, mix in {"5 tumbling": windows, **_two_family_mixes()}.items():
+        for run in (keyed, glob):
+            fast = run(mix)
+            assert set(fast.tiers.values()) == {"vectorized"}, name
+            parts = [run([w]) for w in mix]
+            slow = parts[0]
+            for p in parts[1:]:
+                slow = slow.unionAll(p)
+            assert canon(fast) == canon(slow), name
 
 
 @pytest.mark.parametrize("fixed", [False, True], ids=["quantified", "fixed"])

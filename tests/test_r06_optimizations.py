@@ -86,6 +86,7 @@ def test_catalyst_quantile_matches_kernel(spark):
     )
     from scotty_window_processor_spark.operators import TumblingWindow, WindowMeasure
     from scotty_window_processor_spark.plans.scotty_batch import scotty_window_aggregate
+    from scotty_window_processor_spark.plans.vectorized_multi import multikey_window_aggregate
 
     # duplicate-heavy values so the discrete-quantile tie semantics are hit
     df = _events(spark).withColumn("value", F.round(F.col("value"), 0))
@@ -94,9 +95,8 @@ def test_catalyst_quantile_matches_kernel(spark):
     cat = scotty_window_aggregate(
         df, key="user_id", ts="ts", value="value", windows=windows, aggs=aggs
     )
-    ker = scotty_window_aggregate(
-        df, key="user_id", ts="ts", value="value", windows=windows, aggs=aggs,
-        prefer_catalyst=False,
+    ker = multikey_window_aggregate(
+        df, key="user_id", ts="ts", value="value", windows=windows, aggs=aggs
     )
     assert sorted(map(tuple, cat.collect())) == sorted(map(tuple, ker.collect()))
 

@@ -21,8 +21,10 @@ from scotty_window_processor_spark.operators import (
 from scotty_window_processor_spark.plans.scotty_batch import (
     _final_watermark,
     _kernel_run,
+    scotty_global_aggregate,
     scotty_window_aggregate,
 )
+from scotty_window_processor_spark.plans.vectorized_multi import multikey_window_aggregate
 from scotty_window_processor_spark.plans.windowed import window_aggregate
 from scotty_window_processor_spark.sources import synthesize_transcripts
 
@@ -59,12 +61,11 @@ def _normalize(df, value_cols):
 
 def test_tumbling_kernel_matches_catalyst(spark, transcripts):
     size_ms = 600_000
-    kernel = scotty_window_aggregate(
+    kernel = multikey_window_aggregate(
         transcripts.withColumn("one", F.lit(1.0)),
         key="conv_id", ts="ts", value="one",
         windows=[TumblingWindow(WindowMeasure.TIME, size_ms)],
         aggs=[("turns", "double", CountAggregation)],
-        prefer_catalyst=False,
     ).select("conv_id", "w_start", "w_end", "turns")
 
     catalyst = window_aggregate(
@@ -74,12 +75,11 @@ def test_tumbling_kernel_matches_catalyst(spark, transcripts):
 
 
 def test_sliding_kernel_matches_catalyst(spark, transcripts):
-    kernel = scotty_window_aggregate(
+    kernel = multikey_window_aggregate(
         transcripts.withColumn("one", F.lit(1.0)),
         key="conv_id", ts="ts", value="one",
         windows=[SlidingWindow(WindowMeasure.TIME, 600_000, 200_000)],
         aggs=[("turns", "double", CountAggregation)],
-        prefer_catalyst=False,
     ).select("conv_id", "w_start", "w_end", "turns")
 
     catalyst = window_aggregate(
@@ -99,7 +99,6 @@ def test_multiwindow_sharing_matches_two_catalyst_runs(spark, transcripts):
             TumblingWindow(WindowMeasure.TIME, 1_800_000, window_id=2),
         ],
         aggs=[("turns", "double", CountAggregation)],
-        prefer_catalyst=False,
     )
     small = shared.where(F.col("window_id") == 1).select("conv_id", "w_start", "w_end", "turns")
     large = shared.where(F.col("window_id") == 2).select("conv_id", "w_start", "w_end", "turns")
@@ -112,14 +111,14 @@ def test_multiwindow_sharing_matches_two_catalyst_runs(spark, transcripts):
 
 def test_session_kernel_matches_catalyst(spark, transcripts):
     gap_ms = 120_000
-    # without prefer_catalyst=False session+Count routes to
-    # F.session_window and this would compare Catalyst to Catalyst
-    kernel = scotty_window_aggregate(
+    # the slicer called directly: the planner runs a lone session window
+    # with a built-in aggregate as F.session_window, which would compare
+    # Catalyst to Catalyst
+    kernel = multikey_window_aggregate(
         transcripts.withColumn("one", F.lit(1.0)),
         key="conv_id", ts="ts", value="one",
         windows=[SessionWindow(WindowMeasure.TIME, gap_ms)],
         aggs=[("turns", "double", CountAggregation)],
-        prefer_catalyst=False,
     ).select("conv_id", "w_start", "w_end", "turns")
 
     catalyst = window_aggregate(
@@ -157,8 +156,7 @@ def test_fast_path_matches_kernel_path(spark, transcripts):
     args = dict(key="conv_id", ts="ts", value="v",
                 windows=[SlidingWindow(WindowMeasure.TIME, 600_000, 300_000, window_id=1)],
                 aggs=[("s", "double", SumAggregation), ("mx", "double", MaxAggregation)])
-    out = scotty_window_aggregate(df, **args, prefer_catalyst=False)
-    assert out.tiers == {1: "vectorized"}
+    out = multikey_window_aggregate(df, **args)
     got = [tuple(r) for r in out.select("conv_id", "window_id", "w_start", "w_end", "s", "mx")
            .collect()]
     assert got and _rounded(got) == _rounded(_kernel_rows(df, **args))
@@ -178,7 +176,7 @@ def test_vectorized_session_and_count_match_kernel(spark, transcripts):
             aggs=[("s", "double", SumAggregation), ("n", "long", CountAggregation)],
             arrival_order="turn_idx",
         )
-        got = [tuple(r) for r in scotty_window_aggregate(df, **args, prefer_catalyst=False)
+        got = [tuple(r) for r in scotty_window_aggregate(df, **args)
                .select("conv_id", "window_id", "w_start", "w_end", "s", "n").collect()]
         assert got and _rounded(got) == _rounded(_kernel_rows(df, **args))
 
@@ -187,8 +185,6 @@ def test_global_aggregate_catalyst_vs_kernel(spark, transcripts):
     """Non-keyed (GlobalScottyWindowOperator analogue): the Catalyst tier
     (groupBy(window) only, map-side partials) and the slicer over one
     constant key must produce identical global windows."""
-    from scotty_window_processor_spark.plans.scotty_batch import scotty_global_aggregate
-
     df = transcripts.withColumn("v", F.col("turn_idx").cast("double"))
     args = dict(
         ts="ts", value="v",
@@ -196,7 +192,7 @@ def test_global_aggregate_catalyst_vs_kernel(spark, transcripts):
         aggs=[("n", "long", CountAggregation), ("s", "double", SumAggregation)],
     )
     fast = scotty_global_aggregate(df, **args).select("w_start", "w_end", "n", "s")
-    slow = scotty_global_aggregate(df, **args, prefer_catalyst=False).select(
+    slow = multikey_window_aggregate(df.withColumn("_g", F.lit(1)), key="_g", **args).select(
         "w_start", "w_end", "n", "s")
     norm = lambda d: sorted(tuple(r) for r in d.collect())
     a, b = norm(fast), norm(slow)
@@ -306,7 +302,7 @@ def test_buckets_floor_at_default_parallelism_not_shuffle_partitions(spark, tran
 
 
 def test_vectorized_route_builds_no_catalyst_expressions(spark, transcripts, monkeypatch):
-    """With three time families the planner takes the vectorized tier
+    """With more than one window the planner takes the vectorized tier
     without building the Catalyst tier's Column expressions."""
     from scotty_window_processor_spark.plans import scotty_batch
 
@@ -328,26 +324,39 @@ def test_vectorized_route_builds_no_catalyst_expressions(spark, transcripts, mon
 def test_result_reports_tier_per_window(spark, transcripts):
     """``tiers`` on the result names the tier of every window family, as
     the planner chose it, also for the global operator."""
-    from scotty_window_processor_spark.plans.scotty_batch import scotty_global_aggregate
-
     df = transcripts.withColumn("v", F.col("turn_idx").cast("double"))
     aggs = [("n", "long", CountAggregation), ("s", "double", SumAggregation)]
     tumbling = TumblingWindow(WindowMeasure.TIME, 600_000, window_id=1)
     count = TumblingWindow(WindowMeasure.COUNT, 7, window_id=2)
     time3 = [tumbling, SlidingWindow(WindowMeasure.TIME, 600_000, 300_000, window_id=3),
              SessionWindow(WindowMeasure.TIME, 120_000, window_id=4)]
-    run = lambda windows, **kw: scotty_window_aggregate(
-        df, key="conv_id", ts="ts", value="v", windows=windows, aggs=aggs, **kw)
+    run = lambda windows: scotty_window_aggregate(
+        df, key="conv_id", ts="ts", value="v", windows=windows, aggs=aggs)
 
+    assert run([tumbling]).tiers == {1: "catalyst"}
     mixed = run([tumbling, count])
-    assert mixed.tiers == {1: "catalyst", 2: "vectorized"}
+    assert mixed.tiers == {1: "vectorized", 2: "vectorized"}
     assert {r["window_id"] for r in mixed.select("window_id").distinct().collect()} == {1, 2}
     assert run(time3).tiers == {1: "vectorized", 3: "vectorized", 4: "vectorized"}
-    assert run([tumbling, count], prefer_catalyst=False).tiers == {1: "vectorized", 2: "vectorized"}
     record = scotty_window_aggregate(df, key="conv_id", ts="ts", value=None, windows=[tumbling],
                                      aggs=[("n", "long", CountAggregation)])
     assert record.tiers == {1: "vectorized"}
-    glob = lambda **kw: scotty_global_aggregate(df, ts="ts", value="v", windows=[tumbling],
-                                                aggs=aggs, **kw).tiers
-    assert glob() == {1: "catalyst"}
-    assert glob(prefer_catalyst=False) == {1: "vectorized"}
+    glob = lambda windows: scotty_global_aggregate(df, ts="ts", value="v", windows=windows,
+                                                   aggs=aggs).tiers
+    assert glob([tumbling]) == {1: "catalyst"}
+    assert glob([tumbling, count]) == {1: "vectorized", 2: "vectorized"}
+
+
+def test_repeated_window_ids_are_rejected(spark, transcripts):
+    """Two windows under one ``window_id`` (both left at the default -1
+    here) would emit their rows as one window's: the keyed and the
+    global operator refuse them before building a plan."""
+    windows = [TumblingWindow(WindowMeasure.TIME, 60_000),
+               SessionWindow(WindowMeasure.TIME, 30_000)]
+    aggs = [("n", "long", CountAggregation)]
+    with pytest.raises(ValueError, match="window_id -1"):
+        scotty_window_aggregate(transcripts, key="conv_id", ts="ts", value="turn_idx",
+                                windows=windows, aggs=aggs)
+    with pytest.raises(ValueError, match="window_id -1"):
+        scotty_global_aggregate(transcripts, ts="ts", value="turn_idx", windows=windows,
+                                aggs=aggs)

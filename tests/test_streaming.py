@@ -485,10 +485,13 @@ def test_registry_rejects_count_measure_and_duplicate_ids(tmp_path):
         write_registry(path, [TumblingWindow(WindowMeasure.COUNT, 10, window_id=1)])
     with pytest.raises(ValueError, match="window_id"):
         write_registry(path, [TumblingWindow(WindowMeasure.TIME, 10)])
+    with pytest.raises(ValueError, match="window_id 1 is given to more than one window"):
+        write_registry(path, [TumblingWindow(WindowMeasure.TIME, 600_000, window_id=1),
+                              SessionWindow(WindowMeasure.TIME, 300_000, window_id=1)])
 
     write_registry(path, [TumblingWindow(WindowMeasure.TIME, 600_000, window_id=1)])
     registry_add_window(path, SessionWindow(WindowMeasure.TIME, 300_000, window_id=2))
-    with pytest.raises(ValueError, match="already registered"):
+    with pytest.raises(ValueError, match="window_id 2 is given to more than one window"):
         registry_add_window(path, TumblingWindow(WindowMeasure.TIME, 5, window_id=2))
 
     got = read_registry(path, poll_interval_s=0.0)
@@ -497,6 +500,20 @@ def test_registry_rejects_count_measure_and_duplicate_ids(tmp_path):
     # round-trip covers the sliding spec too
     s = SlidingWindow(WindowMeasure.TIME, 100, 25, window_id=7)
     assert window_from_spec(window_to_spec(s)).slide == 25
+
+
+def test_stream_rejects_repeated_window_ids(spark, transcript_files):
+    """Two windows under one ``window_id`` (both left at the default -1
+    here) would emit their rows as one window's: the stream refuses them
+    before it builds the query."""
+    src_dir, _ = transcript_files
+    with pytest.raises(ValueError, match="window_id -1"):
+        scotty_stream(
+            _read_stream(spark, src_dir), key="conv_id", ts="ts", value="turn_idx",
+            windows=[TumblingWindow(WindowMeasure.TIME, 60_000),
+                     SessionWindow(WindowMeasure.TIME, 30_000)],
+            aggs=AGGS,
+        )
 
 
 def test_stream_metrics_recorder(spark, transcript_files, tmp_path):

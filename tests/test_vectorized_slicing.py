@@ -43,7 +43,7 @@ from scotty_window_processor_spark.operators import (
     WindowMeasure,
 )
 from scotty_window_processor_spark.plans import partition_order
-from scotty_window_processor_spark.plans.vectorized_multi import multikey_rows
+from scotty_window_processor_spark.plans.vectorized_multi import multikey_rows, slice_width
 
 
 def last_value():
@@ -94,11 +94,14 @@ RECORD_AGGS = {
 }
 COPRIME_STEPS = [2, 3, 5, 7, 11, 13]
 
-window_spec = st.one_of(
+fixed_spec = st.one_of(
     st.tuples(st.just("tumbling"), st.sampled_from(COPRIME_STEPS), st.integers(1, 4)),
     st.tuples(st.just("sliding"), st.sampled_from(COPRIME_STEPS), st.integers(2, 6)),
     # any size and slide: mostly size % slide != 0, sometimes slide > size
     st.tuples(st.just("sliding_any"), st.integers(2, 40), st.integers(1, 16)),
+)
+window_spec = st.one_of(
+    fixed_spec,
     st.tuples(st.just("session"), st.integers(1, 30)),
     st.tuples(st.just("count"), st.integers(1, 6)),
     st.tuples(st.just("count_sliding"), st.integers(1, 6), st.integers(1, 6)),
@@ -173,9 +176,15 @@ def _vectorized(rows, windows, fns, order_fn, record=False):
         vals = {c: [r[c] for r in recs] for c in recs[0]}
     else:
         vals = np.array([r[3] for r in rows], dtype="float64")[order]
+    return _windows_of(multikey_rows(key_codes[order], ts_ms[order], vals, windows,
+                                     lambda: [f() for f in fns]), record)
+
+
+def _windows_of(fams, record=False):
+    """{(window_id, measure, key, w_start, w_end): aggregates} of
+    ``multikey_rows``' families, each window emitted once."""
     out = {}
-    for fam in multikey_rows(key_codes[order], ts_ms[order], vals, windows,
-                             lambda: [f() for f in fns]):
+    for fam in fams:
         for i in range(len(fam["key_code"])):
             window = (int(fam["window_id"][i]), fam["measure"], int(fam["key_code"][i]),
                       int(fam["w_start"][i]), int(fam["w_end"][i]))
@@ -211,6 +220,36 @@ def _check(data, order_fn):
 @given(st.data())
 def test_partition_order_then_multikey_rows_equals_brute_force(data):
     _check(data, partition_order)
+
+
+@settings(max_examples=200, deadline=None)
+@given(st.data())
+def test_slice_partials_equal_brute_force(data):
+    """With only fixed time windows and count/sum/mean, the global
+    operator's plan hands the slicer one partial per (key, slice): its row
+    count and value sum at the slice's start. The windows must be those of
+    the rows."""
+    windows = [_window(s, wid) for wid, s in
+               enumerate(data.draw(st.lists(fixed_spec, min_size=1, max_size=4)), start=1)]
+    fns = data.draw(st.lists(st.sampled_from([CountAggregation, SumAggregation, MeanAggregation]),
+                             min_size=1, max_size=3, unique=True))
+    rows = [(k, ts, arrival, v) for arrival, (k, ts, v) in
+            enumerate(data.draw(st.sampled_from([8, 40, 120]).flatmap(rows_spec)))]
+    g = slice_width(windows)
+    parts = {}
+    for k, ts, _, v in rows:
+        part = parts.setdefault((k, ts - ts % g), [0, 0.0])
+        part[0] += 1
+        part[1] += v
+    keys = sorted(parts)
+    got = _windows_of(multikey_rows(
+        np.array([k for k, _ in keys], dtype="int64"), np.array([s for _, s in keys], dtype="int64"),
+        np.array([parts[p][1] for p in keys]), windows, lambda: [f() for f in fns],
+        np.array([parts[p][0] for p in keys], dtype="int64")))
+    want = _brute_force(rows, windows, fns)
+    assert got.keys() == want.keys()
+    for window, aggs in want.items():
+        assert got[window] == pytest.approx(aggs, rel=1e-9, abs=1e-9), window
 
 
 def test_property_needs_the_partition_order():
