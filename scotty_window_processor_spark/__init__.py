@@ -7,8 +7,9 @@ Efficient Window Aggregation for out-of-order Stream Processing", EDBT'19
 "Efficient Window Aggregation with General Stream Slicing") on top of
 Apache Spark:
 
-- ``operators.kernel``   — pure-Python per-key slicing kernel (semantics
-  oracle, mirrors the behaviour pinned by the reference's JUnit suites).
+- ``operators.kernel``   — the stream's per-key window operator (slice
+  partials on the gcd grid, fired by the batch slicer's closed forms; the
+  reference's JUnit suites are ported against it).
 - ``operators.windows``  — tumbling / sliding / session window definitions,
   time- and count-measured.
 - ``functions``          — lift/combine/lower (+invert) aggregate functions.

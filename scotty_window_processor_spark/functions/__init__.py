@@ -59,15 +59,16 @@ class AggregateFunction(Generic[In, P, Out]):
     def clone(self, partial: P) -> P:
         return partial
 
-    # Optional vectorized segment lifts for the in-order bulk path
-    # (SlicingWindowOperator.process_in_order_bulk). By associativity,
-    # combine(p, bulk_lift(segment)) == folding lift_and_combine over the
-    # segment, so a function may implement either (or both) modes:
+    # Optional vectorized segment lifts for the batch slicer and the
+    # stream's operator (vectorized_multi.range_partials). By
+    # associativity, combine(p, bulk_lift(segment)) == folding
+    # lift_and_combine over the segment, so a function may implement
+    # either (or both) modes:
     #   bulk_lift_values(varr, s, e)  — over a numpy value array slice
     #   bulk_lift_records(cols, s, e) — over columnar records
     #                                   (dict of column-name → list)
-    # Left as None (not implemented) here: the planner falls back to the
-    # exact per-element path for functions without one.
+    # Left as None (not implemented) here: a function without one folds
+    # lift / lift_and_combine row by row.
     bulk_lift_values = None
     bulk_lift_records = None
 

@@ -14,10 +14,9 @@ the reference's headline aggregate-sharing property
 `F.window` cannot express (it duplicates rows per overlapping window
 instead).
 
-The slicing kernel (`operators.kernel`) is the stream's operator, not a
-batch tier. `_kernel_run` and `_final_watermark` below run one key through
-it as a flushed batch would: the reference that tests and the benchmark's
-probes compare with.
+The stream's per-key operator (`operators.kernel`) is not a batch tier.
+`_kernel_run` and `_final_watermark` below run one key through it as a
+flushed batch would, for tests and the benchmark's probes.
 
 A hot key lands in one partition of the key exchange. For one fixed time
 window and associative/commutative functions, the separate Catalyst plan
@@ -33,15 +32,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions import AggSpec, QuantileAggregation
-from ..operators.kernel import (
-    NAMED_LIFTS,
-    bulk_lift_kinds,
-    feed_sorted,
-    lower_windows,
-    new_operator,
-)
+from ..operators.kernel import lower_windows, new_operator
 from ..operators.windows import SessionWindow, Window, WindowMeasure, check_window_ids
-from .vectorized_multi import multikey_window_aggregate
+from .vectorized_multi import NAMED_LIFTS, multikey_window_aggregate
 from .windowed import window_aggregate
 
 
@@ -204,12 +197,12 @@ def _catalyst_aggs(aggs: Sequence[AggSpec], value: str):
 
 
 def _kernel_run(data, ts_ms, value, windows, aggs, lateness_ms, final_wm):
-    """One key's sorted run through the slicing kernel, fired by one final
-    watermark (``_final_watermark``): the kernel's rows for a flushed
-    batch, which tests compare with the stream and the batch slicer.
-    ``data`` is the key's payload — a numpy value slice in value mode, a
-    dict of column-list slices in record mode."""
+    """One key's sorted run through the stream's per-key operator, fired by
+    one final watermark (``_final_watermark``): the operator's rows for a
+    flushed batch. ``data`` is the key's payload — a numpy value slice in
+    value mode, a dict of column-list slices in record mode; ``value`` is
+    unused."""
     op = new_operator(windows, aggs, lateness_ms)
     op.seed_watermark(int(ts_ms[0]) - 1)
-    feed_sorted(op, data, ts_ms, bulk_lift_kinds(op.functions, value is not None))
+    op.process_in_order_bulk(data, ts_ms, None)
     return lower_windows(op.process_watermark(final_wm))

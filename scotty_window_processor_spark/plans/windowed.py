@@ -6,9 +6,9 @@ the batch path: `F.window` / `F.session_window` compile to built-in
 Expand + HashAggregate plans (whole-stage codegen, partial aggregation
 before the shuffle, AQE-coalesced partitions) and scale linearly.
 
-The batch slicer (plans.vectorized_multi) and the stream's slicing kernel
-(streaming.processor) exist for what these CANNOT do: share one slice
-store across many concurrent windows, count-measure windows, and
+The batch slicer (plans.vectorized_multi) and the stream's per-key
+operator (streaming.processor) exist for what these CANNOT do: share one
+set of slices across many concurrent windows, count-measure windows, and
 multi-gap session sets. The batch planner
 (``scotty_batch.scotty_window_aggregate``) sends a query here only when
 its one window is time-measured, it has a value column and every

@@ -1,4 +1,4 @@
-"""Structured Streaming stateful operator: the slicing kernel per key.
+"""Structured Streaming stateful operator: the per-key window operator.
 
 Pipeline shape (the Spark-native equivalent of the reference's
 KeyedScottyWindowOperator, flink-connector/.../KeyedScottyWindowOperator.java:15-88):
@@ -8,15 +8,15 @@ KeyedScottyWindowOperator, flink-connector/.../KeyedScottyWindowOperator.java:15
       → exactly-once sink (streaming.sink)
 
 Per micro-batch, each key's new rows arrive as one Arrow batch; the handler
-restores the key's kernel from the Spark state store, drops late rows
-(below), feeds the rest in event-time order, fires the kernel at the
-key's frontier and emits the triggered windows. The kernel is built and
-fed by `kernel.new_operator` and `kernel.feed_sorted` (which the batch
-reference `scotty_batch._kernel_run` also calls): rows before the key's
-event-time frontier take the
-exact per-element path, the in-order rest the segment bulk path — in
-value mode and in record mode (value=None: dict-of-columns rows, custom
-``bulk_lift_records`` lifts) alike.
+restores the key's operator (`operators.kernel`, built by
+`kernel.new_operator`) from the Spark state store, drops late rows
+(below), adds the rest in one call sorted by event time
+(`process_in_order_bulk`), fires the operator at the key's frontier and
+emits the triggered windows — in value mode and in record mode
+(value=None: dict-of-columns rows, custom ``bulk_lift_records`` lifts)
+alike. The operator keeps slice and session partials and fires its
+tumbling, sliding and count windows through the batch slicer's
+`vectorized_multi.multikey_rows`, so stream and batch emit the same rows.
 Spark's watermark (`GroupState.getCurrentWatermarkMs`) replaces Flink's
 `ctx.timerService().currentWatermark()`; an event-time timer wakes keys
 with no new rows, and state removal cleans up idle keys.
@@ -33,8 +33,8 @@ where `W` is Spark's current watermark and `s` a lower bound on this
 micro-batch's max event time over ALL keys. The map-side stamp pass
 (`_stamp_max_event_time`) appends to every row the running max event
 time its task had read by then; the handler takes `s` as the max of the
-stamps on the key's rows and the key's own max event time (the kernel's
-`_max_event_time`, which covers its earlier batches). Every stamped row
+stamps on the key's rows and the key's own max event time (the
+operator's `_max_event_time`, which covers its earlier batches). Every stamped row
 reaches `withWatermark`, and the query has one input, so Spark's next
 watermark is the batch's max event time minus `d`, at least `s − d`: the
 frontier never runs ahead of the watermark Spark itself sets after this
@@ -43,19 +43,19 @@ batch. A key with no rows in the batch (a timer-only call) fires at
 the benchmark's handler probe) use the key's own max event time for `s`.
 
 Late-row contract. Once a key has fired at frontier `f` (kept as the
-kernel's `last_watermark`), a row with `ts > f` can only fall into windows
+operator's `last_watermark`), a row with `ts > f` can only fall into windows
 that have not fired: tumbling and sliding windows fire at `end ≤ f`,
 sessions at `end + gap < f`, and a row above `f` cannot join a fired
 session. A row with `ts ≤ f` may fall into one that has. So the handler
 drops every later row with `ts_ms ≤ f` (Spark's own `ts <= watermark`
-rule, at the kernel's ms grain) and counts it in the `late_rows`
+rule, at the operator's ms grain) and counts it in the `late_rows`
 accumulator, instead of folding it into a slice whose windows were
 already emitted. Such a row arrives in a later micro-batch, which runs
 under a watermark of at least `f`, and trails a max event time the
 stream had already seen by at least `d`; Spark's watermark contract
 already says it "may or may not be aggregated". A key that has not fired
-yet drops nothing: its kernel is seeded at its earliest row only when it
-first fires.
+yet drops nothing: its operator is seeded at its earliest row only when
+it first fires.
 
 Why Spark does not drop these rows itself: Spark 4.1 runs with
 `spark.sql.streaming.statefulOperator.allowMultiple=true`, whose
@@ -69,11 +69,12 @@ below it reaches the handler.
 
 State encoding: one binary cell per key (`STATE_SCHEMA`), whatever the
 window and aggregate mix. It holds the pickled plain tuples of
-`state_codec.encode_op`: the kernel's scalars, active sessions and slices,
-with each slice's partials and, with a count window, its record buffer.
+`state_codec.encode_op`: the operator's fields (with a count window, its
+rows), its open sessions keyed by window_id, and its slice partials.
 The handler rebuilds the operator from the query's windows and decodes
 the state into it, so a restart from a checkpoint with a longer window
-list adds the new windows to every key.
+list adds the new windows to every key. A key's state is removed once
+the operator has quiesced (`kernel.SlicingWindowOperator.quiesced`).
 """
 
 from __future__ import annotations
@@ -89,9 +90,10 @@ from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from ..functions import AggSpec
-from ..operators.kernel import bulk_lift_kinds, feed_sorted, lower_windows, new_operator
+from ..operators.kernel import lower_windows, new_operator
 from ..operators.windows import JLONG_MIN, Window, check_window_ids
 from ..plans import window_output_schema
+from ..plans.vectorized_multi import lift_kind
 
 STATE_SCHEMA = "kernel binary"  # pickle.dumps(state_codec.encode_op(...))
 
@@ -147,8 +149,8 @@ def make_handler(
 ):
     """Build the applyInPandasWithState handler (pure function of config —
     shippable to executors via --py-files). With `window_registry`, the
-    handler also merges the registry file's windows into every kernel it
-    touches — the live mid-stream addWindow path (streaming.registry).
+    handler also merges the registry file's windows into every operator
+    it touches — the live mid-stream addWindow path (streaming.registry).
 
     `watermark_delay_ms` is the query's watermark delay: given, each key
     fires at the frontier (module docstring), from the max event-time
@@ -161,8 +163,8 @@ def make_handler(
     window_defs = list(windows)
     agg_specs = list(aggs)
 
-    # segment lifts for feed_sorted (None: element by element)
-    feed_kinds = bulk_lift_kinds([factory() for _, _, factory in agg_specs], value_col is not None)
+    # each function's segment lift for the operator's ingest
+    kinds = [lift_kind(factory(), value_col is not None) for _, _, factory in agg_specs]
 
     def handler(
         key: Tuple[Any], pdfs: Iterator[pd.DataFrame], state: GroupState
@@ -183,30 +185,15 @@ def make_handler(
         # registry windows strictly AFTER the base list (new_operator)
         op = new_operator(window_defs + dyn, agg_specs, lateness_ms)
         if state.exists:
-            encoded = pickle.loads(state.get[0])
-            try:
-                decode_op(op, feed_kinds, *encoded)
-            except IndexError:
-                # stale registry cache race: this state was encoded by
-                # a worker that had already picked up a newly added
-                # SessionWindow (positional ctx_idx beyond our context
-                # list). Force a registry refresh (poll 0) and retry
-                # instead of failing the task for up to poll_interval.
-                if window_registry is None:
-                    raise
-                dyn = [w for w in read_registry(window_registry, 0.0)
-                       if w.window_id not in base_ids]
-                op = new_operator(window_defs + dyn, agg_specs, lateness_ms)
-                decode_op(op, feed_kinds, *encoded)
+            decode_op(op, kinds, *pickle.loads(state.get[0]))
 
         import time as _time
 
         emit_ms = int(_time.time() * 1000)
         # Materialize the key's WHOLE micro-batch before sorting: Spark
         # delivers a large group as MULTIPLE Arrow chunks in arrival order
-        # (bounded by arrow.maxRecordsPerBatch), so sorting per chunk would
-        # send a later chunk's earlier timestamps through the out-of-order
-        # surgery the single sort avoids.
+        # (bounded by arrow.maxRecordsPerBatch), and the operator takes
+        # one batch sorted by event time.
         parts = [p for p in pdfs if not p.empty]
         stamp = JLONG_MIN
         if parts:
@@ -229,7 +216,7 @@ def make_handler(
                     data = pdf[value_col].to_numpy()
                 else:
                     data = {c: pdf[c].tolist() for c in pdf.columns if c != STAMP_COL}
-                feed_sorted(op, data, ts_ms, feed_kinds)
+                op.process_in_order_bulk(data, ts_ms, kinds)
 
         wm = state.getCurrentWatermarkMs()
         frontier = wm
@@ -243,19 +230,16 @@ def make_handler(
             rows = [[key[0], *r[:4], emit_ms, *r[4:]]
                     for r in lower_windows(op.process_watermark(frontier))]
 
-        nxt = op.next_emission_ts()
-        if (nxt is None and op.store.is_empty and not op.has_count_measure) or op.quiesced(wm):
-            # nothing pending — or the kernel is QUIESCED: only the open
-            # slice remains and it is past every window horizon, so the key
-            # can never emit again without new input. Dropping the state
-            # cell here keeps the store ∝ active keys, not ever-seen keys
-            # (and stops the idle key's timer from re-arming forever).
+        if op.quiesced(wm):
+            # the key can never emit again without new input: dropping the
+            # state cell keeps the store ∝ active keys, not ever-seen keys
             state.remove()
         else:
-            cell = pickle.dumps(encode_op(op, feed_kinds), protocol=pickle.HIGHEST_PROTOCOL)
+            cell = pickle.dumps(encode_op(op, kinds), protocol=pickle.HIGHEST_PROTOCOL)
             state.update((cell,))
             # wake when the watermark reaches the next possible emission:
             # Spark times a key out once the watermark EXCEEDS its timestamp
+            nxt = op.next_emission_ts()
             state.setTimeoutTimestamp(max(nxt - 1 if nxt is not None else wm + 1, wm + 1))
 
         if rows:
@@ -308,7 +292,7 @@ def scotty_stream(
     `.value` on the driver.
 
     `window_registry` names a control file (streaming.registry) whose
-    TIME-measure windows are merged into every key's kernel at runtime —
+    TIME-measure windows are merged into every key's operator at runtime —
     `registry_add_window(path, w)` adds a window to the RUNNING query
     (the reference's live addWindow, WindowManager.java:124-143), no
     restart or state loss; executors re-stat the file at most every
@@ -359,7 +343,7 @@ def scotty_stream_global(
 ) -> DataFrame:
     """Non-keyed streaming aggregation — the GlobalScottyWindowOperator
     analogue (flink-connector/.../GlobalScottyWindowOperator.java:15-71):
-    every element flows through ONE slicing kernel via a constant grouping
+    every element flows through ONE window operator via a constant grouping
     key. Exactly like the reference's operator (a single ProcessFunction
     instance), global state lives on one task; for high-rate global
     windows with associative functions prefer the keyed operator plus a

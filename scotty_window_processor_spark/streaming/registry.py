@@ -22,11 +22,12 @@ executors stat the file a moment apart may pick the window up one
 micro-batch apart — the reference's addWindow is equally unsynchronized
 with respect to in-flight elements.
 
-Registry windows must be TIME-measure: a count window needs every
-slice's record buffer, and slices cut before the add hold none (a kernel
-keeps record buffers only while it has a count window). The registry is
-append-only — window REMOVAL would need retroactive slice re-merging that
-neither this engine nor the reference defines.
+Registry windows must be TIME-measure: a count window needs the key's
+rows, and an operator keeps them only while it has a count window. A
+window whose slices are finer than the ones held fires from the key's
+latest rows on (``kernel.SlicingWindowOperator._refined``). The registry
+is append-only — window REMOVAL is defined neither by this engine nor by
+the reference.
 
 At 100 TB scale the poll cost is one `stat` per executor per
 `poll_interval_s` (results are process-cached), not per key and not per

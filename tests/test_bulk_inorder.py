@@ -1,8 +1,9 @@
-"""Exact-parity check for the vectorized in-order path
-(SlicingWindowOperator.process_in_order_bulk, driven by kernel.feed_sorted
-as the batch kernel tier and the stream drive it) against the per-element
-reference path, across randomized window mixes, disorder, sparse gaps and
-multi-batch feeding.
+"""Batch parity of the window operator's one ingest path: rows fed as
+sorted batches through ``process_in_order_bulk`` (as the stream handler
+feeds each micro-batch) emit exactly what the same rows fed one at a time
+through ``process_element`` emit, across randomized window mixes,
+disorder, sparse gaps, several batches and the numpy, custom value and
+record lifts.
 """
 
 import random
@@ -23,7 +24,8 @@ from scotty_window_processor_spark.operators import (
     TumblingWindow,
     WindowMeasure,
 )
-from scotty_window_processor_spark.operators.kernel import feed_sorted, new_operator
+from scotty_window_processor_spark.operators.kernel import new_operator
+from scotty_window_processor_spark.plans.vectorized_multi import lift_kind
 
 KINDS = ["sum", "count", "min", "max", "mean"]
 FACTORIES = [SumAggregation, CountAggregation, MinAggregation, MaxAggregation, MeanAggregation]
@@ -48,14 +50,7 @@ def _emit(results):
     for w in results:
         if not w.has_value:
             continue
-        vals = tuple(
-            round(v, 9) if isinstance(v, float) else v
-            for v in (
-                w.agg_state.functions[i].lower(w.agg_state.partials[i])
-                if w.agg_state.present[i] else None
-                for i in range(len(w.agg_state.functions))
-            )
-        )
+        vals = tuple(round(v, 9) if isinstance(v, float) else v for v in w.agg_values())
         out.append((w.window_id, w.start, w.end, w.measure.value, vals))
     return sorted(out)
 
@@ -92,7 +87,7 @@ def test_bulk_matches_per_element(mix, seed, sparse):
         b.seed_watermark(int(ts[0]) - 1)
         for v, t in zip(vals.tolist(), ts.tolist()):
             a.process_element(v, t)
-        feed_sorted(b, vals, ts, KINDS)
+        b.process_in_order_bulk(vals, ts, KINDS)
         wm = int(ts.max()) - 30  # watermark trails the batch max
         emitted_a += _emit(a.process_watermark(wm))
         emitted_b += _emit(b.process_watermark(wm))
@@ -110,25 +105,6 @@ from scotty_window_processor_spark.functions import (  # noqa: E402
     RoleTextRollupString,
     ToolTallyString,
 )
-from scotty_window_processor_spark.operators.kernel import bulk_lift_kinds  # noqa: E402
-
-
-def _emit_payload(results):
-    out = []
-    for w in results:
-        if not w.has_value:
-            continue
-        vals = tuple(
-            round(v, 9) if isinstance(v, float) else v
-            for v in (
-                w.agg_state.functions[i].lower(w.agg_state.partials[i])
-                if w.agg_state.present[i] else None
-                for i in range(len(w.agg_state.functions))
-            )
-        )
-        out.append((w.window_id, w.start, w.end, w.measure.value, vals))
-    return sorted(out)
-
 
 @pytest.mark.parametrize("mix", range(len(WINDOW_MIXES)))
 @pytest.mark.parametrize("seed", [11, 42])
@@ -155,16 +131,16 @@ def test_bulk_quantile_matches_per_element(mix, seed):
 
     a, fns_a = new_op()
     b, fns_b = new_op()
-    kinds = bulk_lift_kinds(fns_b, value_mode=True)
-    assert kinds is not None and callable(kinds[1])
+    kinds = [lift_kind(fn) for fn in fns_b]
+    assert callable(kinds[1])
 
     a.seed_watermark(int(ts[0]) - 1)
     b.seed_watermark(int(ts[0]) - 1)
     for v, tt in zip(vals.tolist(), ts.tolist()):
         a.process_element(v, tt)
-    feed_sorted(b, vals, ts, kinds)
+    b.process_in_order_bulk(vals, ts, kinds)
     final = int(ts[-1]) + 10_000
-    assert _emit_payload(a.process_watermark(final)) == _emit_payload(b.process_watermark(final))
+    assert _emit(a.process_watermark(final)) == _emit(b.process_watermark(final))
 
 
 @pytest.mark.parametrize("mix", range(len(WINDOW_MIXES)))
@@ -199,13 +175,13 @@ def test_bulk_records_matches_per_element(mix, seed):
 
     a, fns_a = new_op()
     b, fns_b = new_op()
-    kinds = bulk_lift_kinds(fns_b, value_mode=False)
-    assert kinds is not None and all(callable(k) for k in kinds)
+    kinds = [lift_kind(fn, value_mode=False) for fn in fns_b]
+    assert all(callable(k) for k in kinds)
 
     a.seed_watermark(int(ts[0]) - 1)
     b.seed_watermark(int(ts[0]) - 1)
     for r, tt in zip(rows, ts.tolist()):
         a.process_element(r, tt)
-    feed_sorted(b, cols, ts, kinds)
+    b.process_in_order_bulk(cols, ts, kinds)
     final = int(ts[-1]) + 10_000
-    assert _emit_payload(a.process_watermark(final)) == _emit_payload(b.process_watermark(final))
+    assert _emit(a.process_watermark(final)) == _emit(b.process_watermark(final))

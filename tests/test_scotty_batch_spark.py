@@ -1,6 +1,7 @@
 """Spark-parity tests: the batch slicer (the shared-slice numpy tier) must
-agree with Catalyst built-in window plans and, for window mixes the
-kernel gets right, with the slicing kernel run per key in the test process.
+agree with Catalyst built-in window plans and with the stream's per-key
+operator run per key in the test process, and every tier gives nulls
+SQL's semantics.
 """
 
 import pytest
@@ -10,6 +11,8 @@ from pyspark.sql import functions as F
 from scotty_window_processor_spark.functions import (
     CountAggregation,
     MaxAggregation,
+    MeanAggregation,
+    MinAggregation,
     SumAggregation,
 )
 from scotty_window_processor_spark.operators import (
@@ -163,16 +166,16 @@ def test_fast_path_matches_kernel_path(spark, transcripts):
 
 
 def test_vectorized_session_and_count_match_kernel(spark, transcripts):
-    """Sessions (gaps-and-islands) with a count window, and with a
-    tumbling time window, through the slicer vs the slicing kernel run
-    per key in the test process. Count windows are not mixed with a fixed time
-    window here: the kernel gets that mix wrong (ROADMAP item 1)."""
+    """Sessions (gaps-and-islands) with a count window, with a tumbling
+    time window, and with both, through the slicer vs the stream's
+    operator run per key in the test process."""
     df = transcripts.withColumn("v", F.col("turn_idx").cast("double"))
-    for other in (TumblingWindow(WindowMeasure.COUNT, 7, window_id=2),
-                  TumblingWindow(WindowMeasure.TIME, 600_000, window_id=2)):
+    count = TumblingWindow(WindowMeasure.COUNT, 7, window_id=2)
+    tumbling = TumblingWindow(WindowMeasure.TIME, 600_000, window_id=3)
+    for others in ([count], [tumbling], [count, tumbling]):
         args = dict(
             key="conv_id", ts="ts", value="v",
-            windows=[SessionWindow(WindowMeasure.TIME, 120_000, window_id=1), other],
+            windows=[SessionWindow(WindowMeasure.TIME, 120_000, window_id=1), *others],
             aggs=[("s", "double", SumAggregation), ("n", "long", CountAggregation)],
             arrival_order="turn_idx",
         )
@@ -360,3 +363,61 @@ def test_repeated_window_ids_are_rejected(spark, transcripts):
     with pytest.raises(ValueError, match="window_id -1"):
         scotty_global_aggregate(transcripts, ts="ts", value="turn_idx", windows=windows,
                                 aggs=aggs)
+
+
+NULL_AGGS = [("n", "long", CountAggregation), ("s", "double", SumAggregation),
+             ("avg", "double", MeanAggregation), ("lo", "double", MinAggregation),
+             ("hi", "double", MaxAggregation)]
+# (key, w_start, w_end) -> (n, s, avg, lo, hi) of _null_rows, as SQL gives
+# them: count counts rows, the others skip nulls and are null without a
+# non-null value
+NULL_TUMBLING = {("a", 0, 10_000): (3, 4.0, 2.0, 1.0, 3.0),
+                 ("a", 10_000, 20_000): (2, None, None, None, None),
+                 ("b", 0, 10_000): (1, 4.0, 4.0, 4.0, 4.0),
+                 ("b", 10_000, 20_000): (1, 5.0, 5.0, 5.0, 5.0)}
+NULL_SESSIONS = {("a", 1_000, 8_000): (3, 4.0, 2.0, 1.0, 3.0),
+                 ("a", 11_000, 17_000): (2, None, None, None, None),
+                 ("b", 1_000, 6_000): (1, 4.0, 4.0, 4.0, 4.0),
+                 ("b", 15_000, 20_000): (1, 5.0, 5.0, 5.0, 5.0)}
+
+
+def _null_rows(spark):
+    """Key a: 1.0, null and 3.0, then two nulls 8 s later; key b: 4.0 and
+    5.0."""
+    rows = [("a", 1_000, 1.0), ("a", 2_000, None), ("a", 3_000, 3.0), ("a", 11_000, None),
+            ("a", 12_000, None), ("b", 1_000, 4.0), ("b", 15_000, 5.0)]
+    return spark.createDataFrame(rows, "k string, ms long, value double").select(
+        "k", (F.col("ms") / 1000).cast("timestamp").alias("ts"), "value")
+
+
+def _null_windows(out, window_id):
+    return {(r["k"], r["w_start"], r["w_end"]): tuple(r[c] for c in ("n", "s", "avg", "lo", "hi"))
+            for r in out.where(F.col("window_id") == window_id).collect()}
+
+
+def test_nulls_in_catalyst_tier(spark):
+    out = scotty_window_aggregate(
+        _null_rows(spark), key="k", ts="ts", value="value",
+        windows=[TumblingWindow(WindowMeasure.TIME, 10_000, window_id=1)], aggs=NULL_AGGS)
+    assert out.tiers == {1: "catalyst"}
+    assert _null_windows(out, 1) == NULL_TUMBLING
+
+
+def test_nulls_in_slicer(spark):
+    """The keyed slicer, and the global operator's slice sums that
+    Catalyst computes map-side."""
+    df = _null_rows(spark)
+    out = scotty_window_aggregate(
+        df, key="k", ts="ts", value="value",
+        windows=[TumblingWindow(WindowMeasure.TIME, 10_000, window_id=1),
+                 SessionWindow(WindowMeasure.TIME, 5_000, window_id=2)], aggs=NULL_AGGS)
+    assert out.tiers == {1: "vectorized", 2: "vectorized"}
+    assert _null_windows(out, 1) == NULL_TUMBLING
+    assert _null_windows(out, 2) == NULL_SESSIONS
+
+    glob = scotty_global_aggregate(
+        df, ts="ts", value="value",
+        windows=[TumblingWindow(WindowMeasure.TIME, 10_000, window_id=1),
+                 TumblingWindow(WindowMeasure.TIME, 20_000, window_id=2)], aggs=NULL_AGGS[:3])
+    rows = {(r["window_id"], r["w_start"]): (r["n"], r["s"], r["avg"]) for r in glob.collect()}
+    assert rows == {(1, 0): (4, 8.0, 8.0 / 3), (1, 10_000): (3, 5.0, 5.0), (2, 0): (7, 13.0, 13.0 / 4)}

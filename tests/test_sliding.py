@@ -166,27 +166,16 @@ def test_count_sliding_equals_count_tumbling_when_slide_is_size():
     assert ra == rb
 
 
-# The kernel's slice edges sit on the slide grid only. When the size is not
-# a multiple of the slide, a window's end falls inside a slice, and
-# containment (slice t_last < window end) drops that slice from the window
-# whenever it holds a row at or past the end. Count windows drop the same
-# way. The batch slicer (plans.vectorized_multi) emits the right rows; the
-# stream keeps this defect until the kernel is fixed.
-_NON_TILING_DEFECT = pytest.mark.xfail(
-    strict=True, reason="the kernel loses rows of non-tiling sliding windows")
-
-
 @pytest.mark.parametrize("window, ts, expected", [
-    # the row at 9 sits in slice [8, 12), whose last ts, 11, is not below
-    # the end of [0, 10): the kernel counts 3 rows there
+    # the row at 9 shares the slide-grid slice [8, 12) with rows at or past
+    # the end of [0, 10); the operator slices on the gcd grid (2 ms)
     pytest.param(SlidingWindow(WindowMeasure.TIME, 10, 4), [1, 2, 5, 9, 10, 11, 30, 31, 33, 47],
                  {(0, 10): 4, (4, 14): 4, (8, 18): 3, (24, 34): 3, (28, 38): 3,
                   (32, 42): 1, (40, 50): 1, (44, 54): 1},
-                 marks=_NON_TILING_DEFECT, id="time_10_4"),
-    # the kernel counts 3 elements in [0, 4) and in [3, 7)
+                 id="time_10_4"),
     pytest.param(SlidingWindow(WindowMeasure.COUNT, 4, 3), list(range(10)),
                  {(0, 4): 4, (3, 7): 4, (6, 10): 4},
-                 marks=_NON_TILING_DEFECT, id="count_4_3"),
+                 id="count_4_3"),
 ])
 def test_non_tiling_sliding_window_holds_every_row(window, ts, expected):
     """A sliding window whose size is not a multiple of its slide, alone

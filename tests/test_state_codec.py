@@ -34,12 +34,7 @@ from scotty_window_processor_spark.operators import (
     TumblingWindow,
     WindowMeasure,
 )
-from scotty_window_processor_spark.operators.kernel import (
-    bulk_lift_kinds,
-    feed_sorted,
-    lower_windows,
-    new_operator,
-)
+from scotty_window_processor_spark.operators.kernel import lower_windows, new_operator
 from scotty_window_processor_spark.operators.windows import JLONG_MIN
 from scotty_window_processor_spark.streaming.state_codec import decode_op, encode_op
 
@@ -104,20 +99,19 @@ def fire(op, watermark):
 def run(windows, aggs, stream, roundtrip):
     ts, values, tools, cuts, fires = stream
     record = aggs is AGG_MIXES["records"]
-    kinds = bulk_lift_kinds([factory() for _, _, factory in aggs], not record)
     op = new_operator(windows, aggs, DELAY)
     emitted, frontier, lo = [], JLONG_MIN, 0
     for hi, fires_now in zip(cuts, fires):
         if roundtrip:
-            cell = pickle.dumps(encode_op(op, kinds), protocol=pickle.HIGHEST_PROTOCOL)
+            cell = pickle.dumps(encode_op(op, None), protocol=pickle.HIGHEST_PROTOCOL)
             op = new_operator(windows, aggs, DELAY)
-            decode_op(op, kinds, *pickle.loads(cell))
+            decode_op(op, None, *pickle.loads(cell))
         order = lo + np.argsort(ts[lo:hi], kind="stable")
         if record:
             data = {"value": values[order].tolist(), "tool": [tools[i] for i in order.tolist()]}
         else:
             data = values[order]
-        feed_sorted(op, data, ts[order], kinds)
+        op.process_in_order_bulk(data, ts[order], None)
         frontier = max(frontier, int(ts[lo:hi].max()) - DELAY)
         if fires_now:
             emitted.append(fire(op, frontier))
@@ -129,9 +123,8 @@ def run(windows, aggs, stream, roundtrip):
 @settings(max_examples=200, deadline=None)
 @given(streams(), st.lists(window_spec, min_size=1, max_size=3),
        st.sampled_from(sorted(AGG_MIXES)))
-# the late row at 6.001 s gives both sessions' start edge two references
-# (kernel divergence fix #13); the count must survive the cell, or the
-# row at 1 ms merges the edge away
+# the late row at 6.001 s moves the start of both windows' sessions, and
+# the row at 1 ms joins one of them only
 @example((BASE + np.array([6_002, 6_001, 1]), np.zeros(3), [None] * 3, [1, 2, 3],
           [False] * 3), [("session", WindowMeasure.TIME, 5), ("session", WindowMeasure.TIME, 6)],
          "named")
@@ -145,7 +138,7 @@ def test_decode_refuses_another_aggregate_count():
     windows = [TumblingWindow(WindowMeasure.TIME, 10 * SEC, window_id=1)]
     aggs = AGG_MIXES["quantile"]
     op = new_operator(windows, aggs, DELAY)
-    feed_sorted(op, np.ones(3), BASE + np.arange(3, dtype="int64") * SEC, None)
+    op.process_in_order_bulk(np.ones(3), BASE + np.arange(3, dtype="int64") * SEC, None)
     cell = pickle.dumps(encode_op(op, None))
     with pytest.raises(ValueError, match="2 aggregates per slice, the query has 1"):
         decode_op(new_operator(windows, aggs[:1], DELAY), None, *pickle.loads(cell))
@@ -157,7 +150,7 @@ def test_decode_refuses_a_first_count_window():
     windows = [TumblingWindow(WindowMeasure.TIME, 10 * SEC, window_id=1)]
     aggs = AGG_MIXES["named"]
     op = new_operator(windows, aggs, DELAY)
-    feed_sorted(op, np.ones(3), BASE + np.arange(3, dtype="int64") * SEC, None)
+    op.process_in_order_bulk(np.ones(3), BASE + np.arange(3, dtype="int64") * SEC, None)
     cell = pickle.dumps(encode_op(op, None))
     grown = new_operator(windows + [TumblingWindow(WindowMeasure.COUNT, 5, window_id=2)], aggs, DELAY)
     with pytest.raises(ValueError, match="no record buffers, the query has a count window"):

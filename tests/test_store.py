@@ -1,114 +1,13 @@
-"""Port of the reference slice-store unit tests:
-slicing/src/test/.../test/LazyAggregateStoreTest.java:37-123,
-plus divergence-documentation tests for the two deliberate fixes over the
-reference (see kernel.py module docstring).
-"""
+"""Eviction of the window operator's state: slices and sessions that no
+unfired window covers go, those that one still covers stay."""
 
-from scotty_window_processor_spark.functions import PyReduce, SumAggregation
-from scotty_window_processor_spark.operators.kernel import (
-    Fixed,
-    Slice,
-    SliceStore,
+from scotty_window_processor_spark.functions import SumAggregation
+from scotty_window_processor_spark.operators import (
+    SessionWindow,
     SlicingWindowOperator,
+    TumblingWindow,
+    WindowMeasure,
 )
-from scotty_window_processor_spark.operators import SessionWindow, TumblingWindow, WindowMeasure
-
-SUM = [PyReduce(lambda a, b: a + b)]
-
-
-def make_slice(start, end, keep_records=False):
-    return Slice(SUM, start, end, 0, 0, Fixed(), keep_records)
-
-
-def test_get_slice_by_index():
-    store = SliceStore()
-    slices = [make_slice(0, 10), make_slice(10, 20), make_slice(20, 30), make_slice(40, 50)]
-    for s in slices:
-        store.append(s)
-    for i, s in enumerate(slices):
-        assert store[i] is s
-    assert store[len(store) - 1] is slices[-1]
-
-
-def test_find_slice_by_ts():
-    store = SliceStore()
-    for s in [make_slice(0, 10), make_slice(10, 20), make_slice(20, 30), make_slice(40, 50)]:
-        store.append(s)
-    for i in range(4):
-        s = store[i]
-        assert store.find_index_by_ts(s.t_start) == i
-        assert store.find_index_by_ts(s.t_end - 1) == i
-        assert store.find_index_by_ts(s.t_start + 5) == i
-    assert store.find_index_by_ts(-1) == -1
-
-
-def test_insert_value():
-    store = SliceStore()
-    for s in [make_slice(0, 10), make_slice(10, 20), make_slice(20, 30), make_slice(40, 50)]:
-        store.append(s)
-    store[1].add_element(1, 14)
-    store[2].add_element(2, 22)
-    store[3].add_element(3, 22)
-
-    assert not store[0].agg_state.has_values
-    assert store[1].agg_state.values()[0] == 1
-    assert store[2].agg_state.values()[0] == 2
-    assert store[3].agg_state.values()[0] == 3
-
-
-def test_merge_keeps_record_buffers():
-    """Divergence fix #2: slice merge must merge record buffers so later
-    recomputes (non-invertible functions) see all records. The reference
-    drops the right slice's buffer (AbstractSlice.merge)."""
-    a = make_slice(0, 10, keep_records=True)
-    b = make_slice(10, 20, keep_records=True)
-    a.add_element(1, 5)
-    b.add_element(2, 15)
-    a.merge(b)
-    assert [r[0] for r in a.records] == [5, 15]
-    assert a.agg_state.values()[0] == 3
-    assert a.t_end == 20 and a.t_last == 15
-
-
-def test_same_ts_records_are_retained():
-    """Divergence fix #1: two records with the same timestamp both stay in
-    the buffer (the reference's TreeSet drops one on same-ts compareTo==0),
-    so count-ripple under duplicates stays consistent with the partials."""
-    s = make_slice(0, 10, keep_records=True)
-    s.add_element(1, 5)
-    s.add_element(2, 5)
-    assert len(s.records) == 2
-    assert s.agg_state.values()[0] == 3
-    rec = s.drop_last_element()
-    assert rec[0] == 5
-    assert s.agg_state.values()[0] in (1, 2)  # one of the two removed
-    assert len(s.records) == 1
-
-
-def test_non_invertible_recompute_path():
-    """min/max removal falls back to full recompute from the record buffer
-    (AggregateValueState.java:33-48)."""
-    from scotty_window_processor_spark.functions import MaxAggregation
-
-    s = Slice([MaxAggregation()], 0, 100, 0, 0, Fixed(), True)
-    s.add_element(5, 1)
-    s.add_element(9, 2)
-    s.add_element(3, 3)
-    assert s.agg_state.values()[0] == 9
-    # drop the last-ts record (value 3): max recomputed from buffer
-    s.drop_last_element()
-    assert s.agg_state.values()[0] == 9
-    s.drop_last_element()  # removes value 9 -> recompute finds 5
-    assert s.agg_state.values()[0] == 5
-
-
-def test_invertible_sum_out_of_order_removal():
-    s = Slice([SumAggregation()], 0, 100, 0, 0, Fixed(), True)
-    for v, ts in [(1, 1), (2, 2), (3, 3)]:
-        s.add_element(v, ts)
-    rec = s.drop_last_element()
-    assert rec == (3, 3)
-    assert s.agg_state.values()[0] == 3
 
 
 def test_eviction_keeps_active_session_reach():

@@ -33,7 +33,7 @@ from scotty_window_processor_spark.operators import (
     TumblingWindow,
     WindowMeasure,
 )
-from scotty_window_processor_spark.operators.kernel import MIN_BULK_CUSTOM, lower_windows, new_operator
+from scotty_window_processor_spark.operators.kernel import lower_windows, new_operator
 from scotty_window_processor_spark.streaming.processor import STAMP_COL, make_handler
 
 from spark_fixtures import get_spark
@@ -288,11 +288,10 @@ def test_registry_window_added_live_fires_for_custom_aggregate(tmp_path):
 
 
 def test_record_mode_stream_takes_bulk_path_and_matches_batch_kernel_tier(monkeypatch):
-    """value=None keys feed dict-of-columns rows through the same driver
-    as the batch kernel tier: the in-order rest of each micro-batch takes
-    the bulk path with the functions' record lifts, the out-of-order
-    prefix goes element by element, and the rows equal one batch kernel
-    run over all rows."""
+    """value=None keys feed dict-of-columns rows to the operator's one
+    ingest path, each micro-batch in one sorted call with the functions'
+    record lifts, also when it starts below the key's max event time, and
+    the rows equal one operator run over all rows."""
     from scotty_window_processor_spark.plans.scotty_batch import _final_watermark, _kernel_run
 
     windows = TIME_WINDOWS + [SlidingWindow(WindowMeasure.TIME, 2 * MIN, 30 * SEC, window_id=4)]
@@ -304,7 +303,7 @@ def test_record_mode_stream_takes_bulk_path_and_matches_batch_kernel_tier(monkey
     # the second batch starts with rows below the first batch's max event
     # time but above the frontier (max − delay) the key fired at
     prefix = first[-1] - np.array([20 * SEC, 10 * SEC, 5 * SEC]) + 1
-    assert len(second) >= MIN_BULK_CUSTOM and prefix.min() > first[-1] - DELAY
+    assert prefix.min() > first[-1] - DELAY
 
     def frame(offs, idx):
         return pd.DataFrame({
@@ -338,8 +337,8 @@ def test_record_mode_stream_takes_bulk_path_and_matches_batch_kernel_tier(monkey
         emitted += [tuple(r) for out in handler(("a",), iter([pdf]), st)
                     for r in out.drop(columns=["k", "emit_ts"]).itertuples(index=False)]
     assert late.value == 0
-    # the first batch in full, then the second batch's in-order rest
-    assert bulk_rows == [120, 120]
+    # each micro-batch in full, the second one's earlier rows included
+    assert bulk_rows == [120, 123]
 
     rows = pd.concat(batches).sort_values("ts", kind="mergesort")
     ts_ms = rows["ts"].to_numpy().astype("datetime64[ms]").astype("int64")
@@ -483,3 +482,30 @@ def test_windows_fire_in_the_batch_whose_rows_close_them(spark, tmp_path):
     key = lambda df: sorted(map(tuple, df[cols].astype({"total": float}).values.tolist()))
     assert (out["w_end"] < final_wm).all()
     assert key(out) == key(batch[batch["w_end"] < final_wm])
+
+
+def test_nulls_in_stream(spark, tmp_path):
+    """Count counts rows; sum, mean, min and max skip nulls and are null
+    for a window without a non-null value, as in SQL. Key z's row closes
+    the other keys' windows in the same micro-batch."""
+    from test_scotty_batch_spark import NULL_AGGS, NULL_TUMBLING
+
+    from scotty_window_processor_spark.streaming.processor import scotty_stream
+
+    rows = [("a", 1_000, 1.0), ("a", 2_000, None), ("a", 3_000, 3.0), ("a", 11_000, None),
+            ("a", 12_000, None), ("b", 1_000, 4.0), ("b", 15_000, 5.0), ("z", 10 * MIN, 1.0)]
+    pdf = pd.DataFrame(rows, columns=["k", "ms", "value"])
+    pdf["ts"] = pd.to_datetime(BASE + pdf.pop("ms"), unit="ms")
+    src = str(tmp_path / "src")
+    _write_files([pdf[["k", "ts", "value"]]], src)
+    stream = spark.readStream.schema("k string, ts timestamp, value double").parquet(src)
+    result = scotty_stream(stream, key="k", ts="ts", value="value",
+                           windows=[TumblingWindow(WindowMeasure.TIME, 10 * SEC, window_id=1)],
+                           aggs=NULL_AGGS, watermark_delay="30 seconds", lateness_ms=DELAY)
+    q = (result.writeStream.format("memory").queryName("stream_nulls")
+         .option("checkpointLocation", str(tmp_path / "ckpt")).outputMode("append").start())
+    q.processAllAvailable()
+    q.stop()
+    got = {(r["k"], r["w_start"] - BASE, r["w_end"] - BASE): tuple(r[c] for c in ("n", "s", "avg", "lo", "hi"))
+           for r in spark.table("stream_nulls").where(F.col("k") != "z").collect()}
+    assert got == NULL_TUMBLING

@@ -1,9 +1,12 @@
-"""Generated parity of the stream operator against the batch kernel run,
-without Spark: keyed rows with bounded disorder are cut into micro-batches
-in arrival order and driven through ``processor.make_handler`` under a
-model of Spark's micro-batch rules. The union of emitted rows must equal
-``scotty_batch._kernel_run`` over each key's rows, window for window, with
-nothing emitted twice and no row dropped as late.
+"""Generated parity of the stream operator against brute force, without
+Spark: keyed rows with bounded disorder are cut into micro-batches in
+arrival order and driven through ``processor.make_handler`` under a model
+of Spark's micro-batch rules. The union of emitted rows must equal the
+windows that ``tests/test_vectorized_slicing._brute_force`` recomputes one
+at a time from each key's rows, with nothing emitted twice and no row
+dropped as late. The windows are tumbling and sliding time windows (also
+with a size that is not a multiple of the slide), sessions, and count
+tumbling and sliding windows.
 
 The model (one map task per micro-batch, one input stream):
 
@@ -18,8 +21,8 @@ The model (one map task per micro-batch, one input stream):
   raises the watermark past every window (``scotty_batch._final_watermark``).
 
 The rows emitted by the end of the no-data batch must be exactly the
-kernel run's rows at watermark ``W_end``: a key must not fire ahead of
-the watermark Spark sets, nor leave a window that watermark closed for a
+windows a firing at ``W_end`` closes: a key must not fire ahead of the
+watermark Spark sets, nor leave a window that watermark closed for a
 later batch.
 
 Rows arrive at most ``d − 1`` ms after a row with a larger event time, so
@@ -40,10 +43,12 @@ from scotty_window_processor_spark.operators import (
     TumblingWindow,
     WindowMeasure,
 )
-from scotty_window_processor_spark.plans.scotty_batch import _final_watermark, _kernel_run
+from scotty_window_processor_spark.functions import CountAggregation, SumAggregation
+from scotty_window_processor_spark.plans.scotty_batch import _final_watermark
 from scotty_window_processor_spark.streaming.processor import STAMP_COL, make_handler
 
 from test_stream_frontier import AGGS, BASE, DELAY, SEC, Counter, FakeGroupState
+from test_vectorized_slicing import _brute_force
 
 FIELDS = ["k", "window_id", "measure", "w_start", "w_end", "emit_ts", "n", "total"]
 ROW = ["window_id", "measure", "w_start", "w_end", "n", "total"]
@@ -98,22 +103,36 @@ def run_stream(keys, ts, values, batch_sizes, arrow_rows, windows):
     return closed, emitted, dupes, late.value, wm
 
 
-def kernel_rows(keys, ts, values, windows, final):
-    """``_kernel_run`` per key over its rows in event-time order, fired by
-    one watermark."""
+def brute_rows(keys, ts, values, windows, frontier):
+    """The windows of each key's rows (``_brute_force``) that a firing at
+    ``frontier`` closes: tumbling and sliding time windows ending at or
+    below it, sessions whose end (last ts + gap) lies below it, and count
+    windows whose rows all lie at or below it."""
+    rows = [(k, t, arrival, v) for arrival, (k, t, v) in
+            enumerate(zip(keys.tolist(), ts.tolist(), values.tolist()))]
+    by_id = {w.window_id: w for w in windows}
     out = {}
-    for key in sorted(set(keys)):
-        sel = np.flatnonzero(keys == key)
-        order = sel[np.argsort(ts[sel], kind="stable")]
-        for r in _kernel_run(values[order], ts[order], "value", windows, AGGS, DELAY, final):
-            out[(key, *r[:4])] = (int(r[4]), float(r[5]))
+    for (wid, measure, key, start, end), (n, total) in _brute_force(
+            rows, windows, [CountAggregation, SumAggregation]).items():
+        if measure == "count":
+            closed = end <= sum(t <= frontier for k, t, _, _ in rows if k == key)
+        elif isinstance(by_id[wid], SessionWindow):
+            closed = end < frontier
+        else:
+            closed = end <= frontier
+        if closed:
+            out[(key, wid, measure, start, end)] = (int(n), float(total))
     return out
 
 
 window_spec = st.one_of(
     st.tuples(st.just("tumbling"), st.integers(5, 90)),
     st.tuples(st.just("sliding"), st.integers(10, 90), st.integers(2, 9)),
+    # any size and slide in seconds: mostly size % slide != 0
+    st.tuples(st.just("sliding_any"), st.integers(5, 90), st.integers(2, 40)),
     st.tuples(st.just("session"), st.integers(5, 60)),
+    st.tuples(st.just("count"), st.integers(1, 6)),
+    st.tuples(st.just("count_sliding"), st.integers(1, 6), st.integers(1, 6)),
 )
 
 
@@ -125,8 +144,14 @@ def make_windows(specs):
         elif spec[0] == "sliding":
             size = spec[1] * SEC
             out.append(SlidingWindow(WindowMeasure.TIME, size, max(SEC, size // spec[2]), window_id=i))
-        else:
+        elif spec[0] == "sliding_any":
+            out.append(SlidingWindow(WindowMeasure.TIME, spec[1] * SEC, spec[2] * SEC, window_id=i))
+        elif spec[0] == "session":
             out.append(SessionWindow(WindowMeasure.TIME, spec[1] * SEC, window_id=i))
+        elif spec[0] == "count":
+            out.append(TumblingWindow(WindowMeasure.COUNT, spec[1], window_id=i))
+        else:
+            out.append(SlidingWindow(WindowMeasure.COUNT, spec[1], spec[2], window_id=i))
     return out
 
 
@@ -158,12 +183,10 @@ def streams(draw):
 # the watermark exceeds the timer
 @example((np.array(["k0", "k1"]), np.array([BASE, BASE]), np.array([0.0, 1.0]), [1, 2], 1),
          [("session", 30)])
-# late rows below the first slice edge the kernel opened (kernel
-# divergence fix #10): k0's row at 40 s arrives after its first rows
-# (66 s), whose edges started at 42 s; k0's row at 20.002 s arrives after
-# a 50 s jump past its last edge (5 s), which opened edges from 25 s on;
-# a's row at 0 arrives after its first row (5.001 s) opened a session-only
-# store there. Each must land in its own window.
+# late rows below a key's first rows: k0's row at 40 s arrives after its
+# rows at 66 s; k0's row at 20.002 s arrives after a 50 s jump; a's row at
+# 0 arrives after its first row (5.001 s). Each must land in its own
+# window (the old slice-store operator lost them).
 @example((np.array(["k1", "k1", "k0", "k0", "k0"]),
           BASE + np.array([0, 0, 66, 66, 40]) * SEC, np.array([3.0, 4.0, 1.0, 2.0, 0.0]),
           [1, 1, 1, 5], 1),
@@ -176,19 +199,16 @@ def streams(draw):
 @example((np.array(["a", "a"]), BASE + np.array([5_001, 0]), np.array([0.0, 1.0]), [1, 1], 1),
          [("session", 5)])
 # a late row exactly one gap before its key's session joins the session
-# (kernel divergence fix #11)
 @example((np.array(["a", "a"]), BASE + np.array([5_000, 0]), np.array([0.0, 1.0]), [1, 1], 1),
          [("session", 5)])
 # a late row that merges two 37 s sessions of a key removes the one-row
-# session at 66 s, whose start edge the 5 s session at 66 s shares; the
-# edge stays (kernel divergence fix #12), so both 5 s sessions emit
+# session at 66 s, where a 5 s session starts too: both 5 s sessions emit
 @example((np.array(["a", "a", "a", "a"]), BASE + np.array([0, 7, 66, 44]) * SEC,
           np.array([0.0, 1.0, 2.0, 3.0]), [3, 1], 1),
          [("session", 5), ("session", 37)])
-# two session windows share a start edge (kernel divergence fix #13): a
-# late row moves both sessions' start onto one edge, and a later row moves
-# only one of them away, which merged the edge away while the other
-# session still started there. The two failures of hypothesis seed 131,
+# two session windows' sessions start at one ts: a late row moves both
+# starts there, and a later row moves only one of them away. The two
+# failures of hypothesis seed 131 on the old slice-store operator,
 # reduced to their failing key.
 @example((np.array(["a"] * 4), BASE + np.array([6_002, 6_001, 1, 36_997]),
           np.array([0.0, 1.0, 2.0, 3.0]), [1, 1, 1, 1], 1),
@@ -196,6 +216,11 @@ def streams(draw):
 @example((np.array(["a"] * 5), BASE + np.array([0, 9_108, 7_001, 30_348, 2_000]),
           np.array([0.0, 1.0, 2.0, 3.0, 4.0]), [1, 1, 1, 2], 1),
          [("session", 5), ("session", 7)])
+# a count window's row past the frontier keeps its place: the row at 2 ms
+# arrives after the key fired at 0 and goes before the row at 30 s
+@example((np.array(["a", "a", "a"]), BASE + np.array([0, 30_000, 2]), np.array([6.0, 1.0, 0.0]),
+          [1, 1, 1], 1),
+         [("count_sliding", 1, 2)])
 def test_stream_emits_kernel_rows_once(stream, specs):
     keys, ts, values, batch_sizes, arrow_rows = stream
     windows = make_windows(specs)
@@ -203,9 +228,9 @@ def test_stream_emits_kernel_rows_once(stream, specs):
                                                      windows)
     assert late == 0
     assert not dupes, f"emitted twice: {dupes[:3]}"
-    assert closed == kernel_rows(keys, ts, values, windows, w_end)
+    assert closed == brute_rows(keys, ts, values, windows, w_end)
     final = _final_watermark(int(ts.max()), windows, DELAY)
-    assert emitted == kernel_rows(keys, ts, values, windows, final)
+    assert emitted == brute_rows(keys, ts, values, windows, final)
 
 
 def test_key_starting_at_epoch_zero_emits_its_windows():

@@ -516,59 +516,6 @@ def test_stream_rejects_repeated_window_ids(spark, transcript_files):
         )
 
 
-def test_stream_metrics_recorder(spark, transcript_files, tmp_path):
-    """Per-micro-batch metrics land as atomic JSON files: input rows sum
-    to the delivered turns, state-operator rows and watermark progress are
-    present, and (query id, batch id) keys are unique."""
-    import time as _t
-
-    from scotty_window_processor_spark.streaming.metrics import StreamMetricsRecorder
-
-    src_dir, pdf = transcript_files
-    rec = StreamMetricsRecorder(str(tmp_path / "metrics"))
-    spark.streams.addListener(rec)
-    try:
-        result = scotty_stream(
-            _read_stream(spark, src_dir), key="conv_id", ts="ts", value="turn_idx",
-            windows=[TumblingWindow(WindowMeasure.TIME, 600_000, window_id=1)],
-            aggs=[("turns", "long", CountAggregation)],
-            watermark_delay="30 seconds", lateness_ms=30_000,
-        )
-        q = (
-            result.writeStream.format("memory").queryName("metrics_probe")
-            .option("checkpointLocation", str(tmp_path / "ckpt_metrics"))
-            .outputMode("append").start()
-        )
-        q.processAllAvailable()
-        q.stop()
-        # listener callbacks are asynchronous: poll until the recorded
-        # input rows cover everything the query consumed
-        for _ in range(150):
-            if sum(r["numInputRows"] for r in rec.records()) >= len(pdf):
-                break
-            _t.sleep(0.2)
-    finally:
-        spark.streams.removeListener(rec)
-
-    recs = rec.records()
-    assert sum(r["numInputRows"] for r in recs) == len(pdf)
-    assert any(
-        op["numRowsTotal"] > 0 for r in recs for op in r["stateOperators"]
-    ), "no state-operator metrics recorded"
-    assert any((r["eventTime"] or {}).get("watermark") for r in recs)
-    # per state operator: Spark's late-row drops, the update/removal/commit
-    # times and the state store's own metrics are kept
-    ops = [op for r in recs for op in r["stateOperators"]]
-    for op in ops:
-        for k in ("numRowsDroppedByWatermark", "allUpdatesTimeMs", "allRemovalsTimeMs",
-                  "commitTimeMs"):
-            assert isinstance(op[k], int), (k, op)
-        assert isinstance(op["customMetrics"], dict)
-    assert any(op["customMetrics"] for op in ops)
-    keys = [(r["id"], r["batchId"]) for r in recs]
-    assert len(keys) == len(set(keys))
-
-
 def test_multichunk_group_arrival_order(spark, tmp_path):
     """A key whose micro-batch spans MULTIPLE Arrow chunks must behave as
     one sorted batch: chunks arrive in arrival order, so per-chunk

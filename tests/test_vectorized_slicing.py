@@ -7,12 +7,15 @@ The generated mixes cover what the slicing math must get right: fixed
 time families on coprime grids (so the shared slice width drops to 1 ms),
 sliding windows whose size is not a multiple of the slide, sessions and
 count tumbling/sliding windows in the same call, 1-5 keys, timestamps
-near 0 (windows that would start before 0 are not emitted, as in the
-kernel) and tied timestamps broken by an arrival column. Aggregates are
-drawn in value mode (the numpy reductions count, sum, mean, min and max,
+near 0 (windows that would start before 0 are not emitted) and tied
+timestamps broken by an arrival column. Aggregates are drawn in value
+mode (the numpy reductions count, sum, mean, min and max,
 ``QuantileAggregation``'s bulk value lift, and a ``PyReduce`` with no
 bulk lift whose combine depends on order) or in record mode
 (``CountAggregation``, ``ToolTallyString``, ``RoleTextRollupString``).
+When every drawn aggregate is a numpy reduction, values may be null: as
+in SQL, count counts rows, and sum, mean, min and max skip nulls and are
+null for a window without a non-null value.
 """
 
 import math
@@ -43,7 +46,13 @@ from scotty_window_processor_spark.operators import (
     WindowMeasure,
 )
 from scotty_window_processor_spark.plans import partition_order
-from scotty_window_processor_spark.plans.vectorized_multi import multikey_rows, slice_width
+from scotty_window_processor_spark.plans.vectorized_multi import (
+    NAMED_LIFTS,
+    lift_kind,
+    multikey_rows,
+    range_partials,
+    slice_width,
+)
 
 
 def last_value():
@@ -77,13 +86,19 @@ def _rollup(recs):
     return "|".join(f"{role}:{';'.join(texts)}" for role, texts in sorted(by_role.items()))
 
 
+def _skip_nulls(agg):
+    """``agg`` over the non-null values, None without one."""
+    return lambda vals: agg([v for v in vals if v is not None]) if any(
+        v is not None for v in vals) else None
+
+
 # brute-force aggregate of one window's values (value mode) or records
 VALUE_AGGS = {
     CountAggregation: len,
-    SumAggregation: sum,
-    MeanAggregation: lambda v: sum(v) / len(v),
-    MinAggregation: min,
-    MaxAggregation: max,
+    SumAggregation: _skip_nulls(sum),
+    MeanAggregation: _skip_nulls(lambda v: sum(v) / len(v)),
+    MinAggregation: _skip_nulls(min),
+    MaxAggregation: _skip_nulls(max),
     QuantileAggregation: _median,
     last_value: lambda v: v[-1],
 }
@@ -108,11 +123,19 @@ window_spec = st.one_of(
 )
 
 
-def rows_spec(ts_max):
-    """(key, ts, value) in arrival order. Small ts ranges make ties and
-    windows that reach below 0 common."""
-    row = st.tuples(st.integers(0, 4), st.integers(0, ts_max), st.integers(-50, 50))
+def rows_spec(ts_max, nulls=False):
+    """(key, ts, value) in arrival order, values null (None) too if
+    ``nulls``. Small ts ranges make ties and windows that reach below 0
+    common."""
+    value = st.one_of(st.none(), st.integers(-50, 50)) if nulls else st.integers(-50, 50)
+    row = st.tuples(st.integers(0, 4), st.integers(0, ts_max), value)
     return st.lists(row, min_size=1, max_size=80)
+
+
+def _nulls_allowed(fns, record=False):
+    """Nulls are drawn for the numpy reductions only: they skip nulls as
+    SQL does, the other aggregates have no null rule."""
+    return not record and all(f in NAMED_LIFTS for f in fns)
 
 
 def _window(spec, wid):
@@ -153,7 +176,9 @@ def _brute_force(rows, windows, fns, record=False):
                     windows_of_key.append((w, "count", j, j + w.size, run[j:j + w.size]))
             else:
                 step = w.slide if isinstance(w, SlidingWindow) else w.size
-                for ws in range(0, max(ts_all) + 1, step):
+                # from the last start at or below the key's first ts − size
+                first = max(0, (min(ts_all) - w.size) // step * step)
+                for ws in range(first, max(ts_all) + 1, step):
                     members = [r for r in run if ws <= r[0] < ws + w.size]
                     if members:
                         windows_of_key.append((w, "time", ws, ws + w.size, members))
@@ -161,7 +186,7 @@ def _brute_force(rows, windows, fns, record=False):
             if record:
                 vals = [_record(arr, v) for _, arr, v in members]
             else:
-                vals = [float(r[2]) for r in members]
+                vals = [None if r[2] is None else float(r[2]) for r in members]
             out[(w.window_id, measure, key, ws, we)] = tuple(brute[f](vals) for f in fns)
     return out
 
@@ -189,8 +214,21 @@ def _windows_of(fams, record=False):
             window = (int(fam["window_id"][i]), fam["measure"], int(fam["key_code"][i]),
                       int(fam["w_start"][i]), int(fam["w_end"][i]))
             assert window not in out, f"window emitted twice: {window}"
-            out[window] = tuple(col[i] if record else float(col[i]) for col in fam["aggs"])
+            vals = (col[i] if record else float(col[i]) for col in fam["aggs"])
+            # NaN: a numpy reduction over no non-null value, null in SQL
+            out[window] = tuple(None if v != v else v for v in vals)
     return out
+
+
+def _assert_windows(got, want, record=False):
+    assert got.keys() == want.keys()
+    for window, aggs in want.items():
+        if record:
+            assert got[window] == aggs, window
+        else:
+            assert [a is None for a in got[window]] == [a is None for a in aggs], window
+            assert [a for a in got[window] if a is not None] == pytest.approx(
+                [a for a in aggs if a is not None], rel=1e-9, abs=1e-9), window
 
 
 def _check(data, order_fn):
@@ -200,20 +238,16 @@ def _check(data, order_fn):
     brute = RECORD_AGGS if record else VALUE_AGGS
     fns = data.draw(st.lists(st.sampled_from(sorted(brute, key=lambda f: f.__name__)),
                              min_size=1, max_size=5, unique=True), label="aggs")
-    drawn = data.draw(st.sampled_from([8, 40, 120]).flatmap(rows_spec), label="rows")
+    nulls = _nulls_allowed(fns, record)
+    drawn = data.draw(st.sampled_from([8, 40, 120]).flatmap(lambda m: rows_spec(m, nulls)),
+                      label="rows")
     # arrival = position in the generated stream; the exchange delivers
     # the rows in any order
     rows = [(k, ts, arrival, v) for arrival, (k, ts, v) in enumerate(drawn)]
     rows = data.draw(st.permutations(rows), label="delivered")
 
-    got = _vectorized(rows, windows, fns, order_fn, record)
-    want = _brute_force(rows, windows, fns, record)
-    assert got.keys() == want.keys()
-    for window, aggs in want.items():
-        if record:
-            assert got[window] == aggs, window
-        else:
-            assert got[window] == pytest.approx(aggs, rel=1e-9, abs=1e-9), window
+    _assert_windows(_vectorized(rows, windows, fns, order_fn, record),
+                    _brute_force(rows, windows, fns, record), record)
 
 
 @settings(max_examples=300, deadline=None)
@@ -225,31 +259,31 @@ def test_partition_order_then_multikey_rows_equals_brute_force(data):
 @settings(max_examples=200, deadline=None)
 @given(st.data())
 def test_slice_partials_equal_brute_force(data):
-    """With only fixed time windows and count/sum/mean, the global
-    operator's plan hands the slicer one partial per (key, slice): its row
-    count and value sum at the slice's start. The windows must be those of
-    the rows."""
+    """Given one partial per (key, slice) of every aggregate instead of the
+    rows, as the stream's operator and the global operator's Catalyst
+    sums hand them over, the slicer combines them into the windows of the
+    rows."""
     windows = [_window(s, wid) for wid, s in
                enumerate(data.draw(st.lists(fixed_spec, min_size=1, max_size=4)), start=1)]
-    fns = data.draw(st.lists(st.sampled_from([CountAggregation, SumAggregation, MeanAggregation]),
-                             min_size=1, max_size=3, unique=True))
-    rows = [(k, ts, arrival, v) for arrival, (k, ts, v) in
-            enumerate(data.draw(st.sampled_from([8, 40, 120]).flatmap(rows_spec)))]
+    fns = data.draw(st.lists(st.sampled_from(sorted(VALUE_AGGS, key=lambda f: f.__name__)),
+                             min_size=1, max_size=5, unique=True))
+    nulls = _nulls_allowed(fns)
+    rows = [(k, ts, arrival, v) for arrival, (k, ts, v) in enumerate(data.draw(
+        st.sampled_from([8, 40, 120]).flatmap(lambda m: rows_spec(m, nulls))))]
+    key_codes, ts_ms, arrival = (np.array([r[i] for r in rows], dtype="int64") for i in range(3))
+    order = partition_order(key_codes, ts_ms, arrival)
+    key_codes, ts_ms = key_codes[order], ts_ms[order]
+    vals = np.array([r[3] for r in rows], dtype="float64")[order]
     g = slice_width(windows)
-    parts = {}
-    for k, ts, _, v in rows:
-        part = parts.setdefault((k, ts - ts % g), [0, 0.0])
-        part[0] += 1
-        part[1] += v
-    keys = sorted(parts)
-    got = _windows_of(multikey_rows(
-        np.array([k for k, _ in keys], dtype="int64"), np.array([s for _, s in keys], dtype="int64"),
-        np.array([parts[p][1] for p in keys]), windows, lambda: [f() for f in fns],
-        np.array([parts[p][0] for p in keys], dtype="int64")))
-    want = _brute_force(rows, windows, fns)
-    assert got.keys() == want.keys()
-    for window, aggs in want.items():
-        assert got[window] == pytest.approx(aggs, rel=1e-9, abs=1e-9), window
+    new_slice = np.ones(len(rows), dtype=bool)
+    new_slice[1:] = (key_codes[1:] != key_codes[:-1]) | (ts_ms[1:] // g != ts_ms[:-1] // g)
+    lo = np.flatnonzero(new_slice)
+    hi = np.append(lo[1:], len(rows))
+    parts = [range_partials(fn, lift_kind(fn), vals, lo, hi, vals.__getitem__)
+             for fn in (f() for f in fns)]
+    got = _windows_of(multikey_rows(key_codes[lo], ts_ms[lo] // g * g, None, windows,
+                                    lambda: [f() for f in fns], parts))
+    _assert_windows(got, _brute_force(rows, windows, fns))
 
 
 def test_property_needs_the_partition_order():
